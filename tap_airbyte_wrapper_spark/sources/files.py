@@ -17,10 +17,14 @@ the reader used for the driver's TPC-H-ish testdata.
 from __future__ import annotations
 
 import glob
+import json
 import os
 from typing import Any
 
+from py4j.java_gateway import JavaClass
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 try:
     import pyarrow.parquet as _pq
@@ -89,6 +93,53 @@ def conform_to_schema(df: DataFrame, schema) -> DataFrame:
     return df.select(*cols)
 
 
+def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
+    """The schema ``spark.read.parquet(path)`` would infer, read from the
+    file's footer on the driver, with no Spark job.
+
+    Spark's inference task does the same work on an executor: it reads
+    the footer and converts it with ``ParquetToSparkSchemaConverter``
+    through ``ParquetFileFormat.readSchemaFromFooter`` (which prefers the
+    Catalyst schema a Spark writer stores in the footer); the data source
+    then makes every field nullable.  The converter is built from the
+    session conf, so the caller's scoped confs apply to it as they do to
+    inference.  (Inference leaves the converter's case-sensitivity,
+    field-id and variant-annotation flags at their defaults; only a
+    session that sets ``spark.sql.parquet.ignoreVariantAnnotation``
+    would see a difference, on variant columns.)
+
+    Returns None, leaving the read to Spark's inference, when ``path`` is
+    not one plain local file (a directory, glob, or a ``_``/``.`` file
+    that Spark's listing treats as hidden) or its footer cannot be read;
+    errors then surface from Spark exactly as before.
+    """
+    name = os.path.basename(path)
+    if (not os.path.isfile(path) or name.startswith(("_", "."))
+            or any(c in path for c in "{}[]*?\\")):
+        return None
+    # JavaClass by full name: ``spark._jvm.org.apache...`` would pay one
+    # Py4J round-trip per package segment, on every call
+    def jclass(name: str) -> JavaClass:
+        return JavaClass(name, spark._jvm._gateway_client)
+
+    parquet = "org.apache.spark.sql.execution.datasources.parquet."
+    state = spark._jsparkSession.sessionState()
+    hpath = jclass("org.apache.hadoop.fs.Path")(os.path.abspath(path))
+    try:
+        meta = jclass(parquet + "ParquetFooterReader").readFooter(
+            jclass("org.apache.parquet.hadoop.util.HadoopInputFile")
+            .fromPath(hpath, state.newHadoopConf()),
+            jclass("org.apache.parquet.format.converter."
+                   "ParquetMetadataConverter").SKIP_ROW_GROUPS)
+        schema = jclass(parquet + "ParquetFileFormat").readSchemaFromFooter(
+            jclass("org.apache.parquet.hadoop.Footer")(hpath, meta),
+            jclass(parquet + "ParquetToSparkSchemaConverter")(state.conf()),
+        ).asNullable()
+    except Py4JError:
+        return None
+    return StructType.fromJson(json.loads(schema.json()))
+
+
 def load_parquet(
     spark: SparkSession,
     path: str,
@@ -104,6 +155,13 @@ def load_parquet(
     timestamps with an integer-division expression — JVM-side, no precision
     loss (a double division WOULD lose precision at 1e18 ns).
 
+    The schema is resolved when this function returns.  For a single file
+    without ``merge_schema`` it comes from that file's current footer,
+    read on the driver (``_footer_schema``) and pinned on the reader, so
+    planning a scan starts no Spark job.  Directories, globs and
+    ``merge_schema`` reads keep Spark's schema inference, which runs a
+    job inside ``spark.read.parquet``.
+
     ``cursor_after=(column, bookmark)`` applies the incremental predicate
     *before* any conversion: for a nanos column the bookmark is converted to
     an epoch-nanos long and compared against the raw physical column, so the
@@ -112,9 +170,9 @@ def load_parquet(
     push it.
     """
     ns_cols = _nanos_columns(path)
-    # Scope session confs to this read: the parquet→catalyst schema
-    # conversion happens eagerly inside spark.read.parquet, so the confs
-    # can be restored immediately (verified: actions on the returned
+    # Scope session confs to the schema resolution: both routes convert
+    # the footer to a Catalyst schema before the reader returns, so the
+    # confs can be restored immediately (actions on the returned
     # DataFrame still succeed).
     # - nanosAsLong (only when the footer declares nanos): leaking it true
     #   would make a later file whose probe failed read nanos as raw longs
@@ -124,7 +182,7 @@ def load_parquet(
     #   Spark bars from event-time watermarks and numeric casts.  Reading
     #   them as session-tz TIMESTAMP (the session is pinned to UTC
     #   throughout the engine) keeps one uniform timestamp dtype, and the
-    #   conversion happens at schema inference so cursor filters still
+    #   conversion happens at schema resolution so cursor filters still
     #   reach the scan.
     confs = {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"}
     if ns_cols:
@@ -134,7 +192,10 @@ def load_parquet(
         spark.conf.set(k, v)
     try:
         reader = spark.read
-        if merge_schema:
+        schema = None if merge_schema else _footer_schema(spark, path)
+        if schema is not None:
+            reader = reader.schema(schema)
+        elif merge_schema:
             # union the footer schemas across all files (an evolving
             # directory where later files added columns); default reads
             # one file's schema and silently drops the rest

@@ -6,6 +6,9 @@ queues, and consumer threads (tap.py:789-813, 967-999) exist to parallelize
 a single subprocess pipe — Spark's scheduler already parallelizes per
 partition, so the orchestrator is a straight plan-per-stream loop:
 
+catalog = source.discover()          # ONCE per sync (reference: lru_cache,
+                                     # tap.py:705-746); also resolves the
+                                     # ref_streams of foreign-key rules
 for each selected stream:
     DataFrame  = source.read(stream)                # distributed scan
     += cursor predicate when incremental            # pushed into the scan
@@ -13,6 +16,11 @@ for each selected stream:
     sink write                                      # distributed or stdout
     bookmark = max(cursor) observed in the SAME pass
     commit state only after the write succeeded     # at-least-once, §4.3
+
+Planning (discovery and building each stream's DataFrame) starts no Spark
+job for single-file parquet streams: their schemas come from the file
+footers, read on the driver (``sources.files.load_parquet``).  Spark jobs
+start only at the expectation checks and the sink writes.
 
 Also preserved: per-stream metrics ("Synced N streams in X seconds",
 tap.py:899-902) and fail-fast error propagation (tap.py:648-657).
@@ -153,12 +161,13 @@ class Engine:
         """
         from dataclasses import replace as _dc_replace
 
-        catalog = self.discover().configured()
-        if stream not in catalog:
+        catalog = self.discover()
+        configured = catalog.configured()
+        if stream not in configured:
             raise ValueError(
                 f"stream {stream!r} not in the configured catalog "
-                f"(selected: {[e.name for e in catalog]})")
-        entry = catalog.get(stream)
+                f"(selected: {[e.name for e in configured]})")
+        entry = configured.get(stream)
         if not entry.replication_key:
             raise ValueError(
                 f"stream {stream!r} has no cursor column to backfill by")
@@ -167,7 +176,7 @@ class Engine:
             (cur >= F.lit(lo)) & (cur < F.lit(hi)))
         sink = sink or self.config.get("sink") or {"type": "stdout"}
         total = 0
-        self._expectations = self._build_expectations()
+        self._expectations = self._build_expectations(catalog)
         # the write must NEVER track state for a backfill — the stdout
         # sink in particular would REPLACE (and so regress) the forward
         # bookmark and emit it as a Singer STATE message; demoting the
@@ -190,10 +199,10 @@ class Engine:
     def sync(self, out: IO[str] | None = None) -> SyncResult:
         started = time.perf_counter()
         result = SyncResult()
-        catalog = self.discover().configured()
+        catalog = self.discover()
         sink = self.config.get("sink") or {"type": "stdout"}
-        entries = list(catalog)
-        self._expectations = self._build_expectations()
+        entries = list(catalog.configured())
+        self._expectations = self._build_expectations(catalog)
 
         # The reference runs one consumer thread per stream (tap.py:789-791)
         # to overlap I/O on a single pipe; here driver threads submit
@@ -256,16 +265,18 @@ class Engine:
         )
         return counts
 
-    def _build_expectations(self) -> "dict[str, list]":
+    def _build_expectations(self, catalog: Catalog) -> "dict[str, list]":
         """Compile config-declared quality rules per stream; a
         ``foreign_key`` rule's ``ref_stream`` resolves to a read of
         that stream from the same source (key columns only reach the
-        join, so the gate's extra cost is key-projected scans)."""
+        join, so the gate's extra cost is key-projected scans).
+        ``catalog`` is the sync's own discovery, taken before
+        ``configured()`` so a deselected stream can still be a
+        reference."""
         from .operators.quality import Expectation
 
         spec = self.config.get("expectations") or {}
         compiled: dict[str, list] = {}
-        catalog = None
         for stream, rules in spec.items():
             exps = []
             for rule in rules:
@@ -274,8 +285,6 @@ class Engine:
                 kind = kw.pop("kind")
                 ref_stream = kw.pop("ref_stream", None)
                 if ref_stream is not None:
-                    if catalog is None:   # one discovery for ALL rules
-                        catalog = self.discover()
                     if ref_stream not in catalog:
                         raise ValueError(
                             f"expectations[{stream!r}]: foreign_key "

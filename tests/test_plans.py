@@ -506,3 +506,24 @@ def test_chi2_sliced_no_single_task_no_python(plans):
     assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
     assert "Cartesian" not in p
     assert "Exchange SinglePartition" not in p
+
+
+def test_table_memo_sees_rewritten_table(spark, tmp_path):
+    """``_t`` memoizes a table's scan plan; rewriting the table file
+    must yield the new rows, not the stale plan's listing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tap_airbyte_wrapper_spark.plans.queries import _t
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+    first = _t(spark, str(tmp_path), "region")
+    assert _t(spark, str(tmp_path), "region") is first   # memo hit
+    assert sorted(r[0] for r in first.collect()) == [0, 1]
+
+    pq.write_table(pa.table({"r_regionkey": [5, 6, 7],
+                             "r_name": ["a", "b", "c"]}), path)
+    again = _t(spark, str(tmp_path), "region")
+    assert again.columns == ["r_regionkey", "r_name"]
+    assert sorted(r[0] for r in again.collect()) == [5, 6, 7]

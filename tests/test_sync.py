@@ -427,6 +427,38 @@ def test_sync_expectations_foreign_key_ref_stream(spark, sf_dir, tmp_path):
     assert res.stream_counts.get("orders", 0) > 0
 
 
+def test_sync_and_backfill_discover_once(spark, sf_dir, tmp_path):
+    """One discovery plans the sync AND resolves a foreign_key rule's
+    ref_stream, which need not be selected itself."""
+    cfg = {
+        "source": "dataset_dir",
+        "source_config": {"path": sf_dir},
+        "streams": ["orders", "events"],
+        "replication_method": {"events": "INCREMENTAL"},
+        "sink": {"type": "parquet", "path": str(tmp_path / "out"),
+                 "mode": "overwrite"},
+        "expectations": {
+            "orders": [{"column": "o_custkey", "kind": "foreign_key",
+                        "ref_stream": "customer", "ref_col": "c_custkey"}],
+            "events": [{"column": "user_id", "kind": "foreign_key",
+                        "ref_stream": "customer", "ref_col": "c_custkey"}],
+        },
+    }
+    eng = Engine(spark, cfg)
+    calls = []
+    discover = eng.source.discover
+    eng.source.discover = lambda s: calls.append(1) or discover(s)
+
+    res = eng.sync()
+    assert len(calls) == 1
+    assert res.stream_counts["orders"] > 0
+    assert eng._expectations["orders"][0].ref is not None
+
+    calls.clear()
+    n = eng.backfill("events", "2024-01-05 00:00:00", "2024-01-06 00:00:00")
+    assert len(calls) == 1 and n > 0
+
+
 def test_backfill_window_without_moving_bookmark(spark, sf_dir, tmp_path):
     """Backfill patches one historical cursor window; the forward
     bookmark is untouched, so the next incremental sync still resumes
