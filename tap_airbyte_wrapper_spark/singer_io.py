@@ -2,26 +2,30 @@
 
 The reference serializes every Singer message with orjson + sorted-keys
 determinism and applies runtime type coercions in ``default()``
-(tap_airbyte/tap.py:48-80).  Here the same envelope is produced from
-DataFrames:
+(tap_airbyte/tap.py:48-80, 956-959).  Here each message kind has one
+serializer:
 
-* **SCHEMA** — from the stream's StructType via
-  :func:`schema.struct_to_json_schema`.
-* **RECORD** — rows serialized to JSON.  Two paths:
-  - :func:`write_singer_stdout` — driver-side, ordered, golden-test
-    compatible (sorted keys, one message per line), for tap-parity CLI use;
-    streams via ``toLocalIterator`` so the driver never holds the full
-    dataset.
-  - :func:`write_singer_files` — fully distributed: each Spark task writes
-    its partition's RECORD lines (text sink), for 100 TB scale where a
-    single stdout pipe is not the bottleneck we keep.
-* **STATE** — from the BookmarkStore, emitted after records (at-least-once
-  ordering, tap.py:895-898).
+* **SCHEMA** and **STATE** — small driver-side documents, serialized by
+  :func:`singer_message` (``json.dumps`` with sorted keys).
+* **RECORD** — :func:`record_json_expr` only: ``to_json(struct(...))``
+  evaluated on the executors.  Every sink takes its lines from it:
+  :func:`write_singer_stdout` streams them to the driver through
+  ``toLocalIterator`` (one partition resident at a time) for tap-parity
+  CLI use, and :func:`write_singer_files` has each task write its own
+  partition's lines.
+* **Bookmarks** — :func:`render_column` renders a cursor value by the
+  rule that renders a top-level RECORD field, so a sink commits the
+  string its RECORD lines carry.
 
-Type coercions mirror tap.py:48-59: timestamps/dates -> ISO-8601 strings,
-decimals -> float, bytes -> base64 (deliberate divergence from the
-reference's lossy UTF-8 decode — media payloads must round-trip),
-everything unknown -> str.
+RECORD rendering: top-level keys sorted (as ``sort_keys`` does; nested
+struct fields and map entries stay in schema/map order); timestamps and
+``timestamp_ntz`` at any depth -> ``yyyy-MM-ddTHH:mm:ss.ffffff`` in the
+session time zone; dates -> ``yyyy-MM-dd``; top-level decimals -> double
+(nested ones keep their scale, e.g. ``1.50``); binary -> base64
+(deliberate divergence from the reference's lossy UTF-8 decode — media
+payloads must round-trip); NaN / ±Infinity -> the strings ``"NaN"``,
+``"Infinity"``, ``"-Infinity"`` (strict JSON; the reference's orjson
+writes ``null``); null fields kept; non-ASCII written as UTF-8.
 """
 
 from __future__ import annotations
@@ -34,17 +38,29 @@ import sys
 import uuid
 from typing import Any, IO
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from .schema import struct_to_json_schema
 
 __all__ = [
     "coerce_value",
     "singer_message",
+    "render_column",
     "record_json_expr",
     "write_singer_stdout",
     "write_singer_files",
 ]
+
+TS_FORMAT = "yyyy-MM-dd'T'HH:mm:ss.SSSSSS"
+DATE_FORMAT = "yyyy-MM-dd"
+_JSON_OPTIONS = {
+    "timestampFormat": TS_FORMAT,
+    "timestampNTZFormat": TS_FORMAT,
+    "dateFormat": DATE_FORMAT,
+    # the reference's orjson output serializes null-valued fields;
+    # to_json's default would drop them
+    "ignoreNullFields": "false",
+}
 
 
 def coerce_value(obj: Any) -> Any:
@@ -81,88 +97,72 @@ def singer_message(message: dict[str, Any]) -> str:
     return json.dumps(coerce_value(message), sort_keys=True, separators=(",", ":"))
 
 
-def _normalize_columns(df: DataFrame) -> DataFrame:
-    """Rewrite columns so JSON output matches the reference coercions —
-    JVM-side expressions, no Python UDFs."""
-    exprs = []
-    for f_ in df.schema.fields:
-        c = F.col(f_.name)
-        if isinstance(f_.dataType, T.TimestampType):
-            c = F.date_format(c, "yyyy-MM-dd'T'HH:mm:ss.SSSSSS").alias(f_.name)
-        elif isinstance(f_.dataType, T.DateType):
-            c = F.date_format(c, "yyyy-MM-dd").alias(f_.name)
-        elif isinstance(f_.dataType, T.DecimalType):
-            c = c.cast("double").alias(f_.name)
-        elif isinstance(f_.dataType, T.BinaryType):
-            # base64, matching the declared contentEncoding (a bare
-            # string cast would UTF-8-mangle media bytes)
-            c = F.base64(c).alias(f_.name)
-        else:
-            c = c.alias(f_.name)
-        exprs.append(c)
-    return df.select(*exprs)
+def render_column(c: Column, dtype: T.DataType) -> Column:
+    """Render ``c`` the way a top-level RECORD field carries it.  Bookmarks
+    use the same rule: ``render_column(F.max(c), dtype)`` is the largest
+    value the stream's RECORD lines carry.  Timestamps render in the
+    session time zone."""
+    if isinstance(dtype, (T.TimestampType, T.TimestampNTZType)):
+        return F.date_format(c, TS_FORMAT)
+    if isinstance(dtype, T.DateType):
+        return F.date_format(c, DATE_FORMAT)
+    if isinstance(dtype, T.DecimalType):
+        return c.cast("double")
+    return c
 
 
-def record_json_expr(df: DataFrame, stream: str):
+def record_json_expr(df: DataFrame, stream: str) -> Column:
     """Column producing the full Singer RECORD envelope as one JSON string,
     computed executor-side (``to_json(struct(...))``)."""
-    ndf = _normalize_columns(df)
-    # ignoreNullFields=false: the stdout path (json.dumps of row.asDict) and the
-    # reference's orjson output both serialize null-valued fields; to_json's
-    # default would drop them, making the two sinks disagree on the same row.
+    fields = sorted(df.schema.fields, key=lambda f: f.name)
     rec = F.to_json(
-        F.struct(*[F.col(f.name) for f in ndf.schema.fields]),
-        {"ignoreNullFields": "false"},
+        F.struct(*[render_column(F.col(f.name), f.dataType).alias(f.name)
+                   for f in fields]),
+        _JSON_OPTIONS,
     )
-    line = F.concat(
+    return F.concat(
         F.lit('{"record":'),
         rec,
-        F.lit(',"stream":"' + stream + '","type":"RECORD"}'),
-    )
-    return ndf, line.alias("value")
+        F.lit(',"stream":' + json.dumps(stream) + ',"type":"RECORD"}'),
+    ).alias("value")
 
 
 def write_singer_stdout(
     df: DataFrame,
     stream: str,
     key_properties: list[str] | None = None,
-    bookmark_state: dict[str, Any] | None = None,
+    cursor: str | None = None,
     out: IO[str] | None = None,
-) -> int:
-    """Emit SCHEMA + RECORDs + STATE for one stream to a text sink.
+) -> tuple[int, Any]:
+    """Emit SCHEMA + RECORD lines for one stream to a text sink; returns
+    ``(record count, largest rendered cursor or None)``.  STATE is the
+    caller's to write.
 
-    Driver-side but streaming: rows come through ``toLocalIterator`` so only
-    one partition is resident at a time.  Returns the record count.
+    Lines stream through ``toLocalIterator``, so only one partition is
+    resident on the driver.  Count and cursor maximum are taken in the
+    same loop: an ``Observation`` never fires under ``toLocalIterator``.
     """
     out = out or sys.stdout
-    out.write(
-        singer_message(
-            {
-                "type": "SCHEMA",
-                "stream": stream,
-                "schema": struct_to_json_schema(df.schema),
-                "key_properties": key_properties or [],
-            }
-        )
-        + "\n"
-    )
-    n = 0
-    for row in _normalize_columns(df).toLocalIterator():
-        out.write(
-            singer_message(
-                {"type": "RECORD", "stream": stream, "record": row.asDict(recursive=True)}
-            )
-            + "\n"
-        )
+    out.write(singer_message({
+        "type": "SCHEMA", "stream": stream,
+        "schema": struct_to_json_schema(df.schema),
+        "key_properties": key_properties or [],
+    }) + "\n")
+    cols = [record_json_expr(df, stream)]
+    if cursor:
+        cols.append(render_column(F.col(cursor), df.schema[cursor].dataType))
+    n, cursor_max = 0, None
+    for row in df.select(*cols).toLocalIterator():
+        out.write(row[0] + "\n")
         n += 1
-    if bookmark_state is not None:
-        out.write(singer_message({"type": "STATE", "value": bookmark_state}) + "\n")
+        if cursor and row[1] is not None and (
+                cursor_max is None or row[1] > cursor_max):
+            cursor_max = row[1]
     out.flush()
-    return n
+    return n, cursor_max
 
 
 def write_singer_files(df: DataFrame, stream: str, path: str, mode: str = "append") -> None:
     """Distributed Singer RECORD sink: every task writes its own partition
     as JSONL text.  The scale path — no driver funnel, no collect."""
-    ndf, line = record_json_expr(df, stream)
-    ndf.select(line).write.mode(mode).text(path)
+    df.select(record_json_expr(df, stream)).write.mode(mode).text(path)

@@ -13,8 +13,10 @@ for each selected stream:
     DataFrame  = source.read(stream)                # distributed scan
     += cursor predicate when incremental            # pushed into the scan
     += stream maps / flattening                     # Catalyst expressions
-    sink write                                      # distributed or stdout
-    bookmark = max(cursor) observed in the SAME pass
+    sink write                                      # RECORD lines from
+                                                    # record_json_expr
+    bookmark = max(cursor) taken in the SAME pass,  # rendered as the
+                                                    # RECORD lines carry it
     commit state only after the write succeeded     # at-least-once, §4.3
 
 Planning (discovery and building each stream's DataFrame) starts no Spark
@@ -37,7 +39,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .catalog import Catalog, StreamEntry, SyncMode
 from .maps import StreamMapper
-from .singer_io import coerce_value, singer_message, write_singer_files
+from .singer_io import (render_column, singer_message, write_singer_files,
+                        write_singer_stdout)
 from .sources import get_source
 from .state import BookmarkStore
 
@@ -159,8 +162,6 @@ class Engine:
         Beyond-reference: the reference can only replay from a doctored
         state file, which MOVES the real bookmark (tap.py:819-884).
         """
-        from dataclasses import replace as _dc_replace
-
         catalog = self.discover()
         configured = catalog.configured()
         if stream not in configured:
@@ -177,18 +178,13 @@ class Engine:
         sink = sink or self.config.get("sink") or {"type": "stdout"}
         total = 0
         self._expectations = self._build_expectations(catalog)
-        # the write must NEVER track state for a backfill — the stdout
-        # sink in particular would REPLACE (and so regress) the forward
-        # bookmark and emit it as a Singer STATE message; demoting the
-        # entry to FULL_REFRESH for the write turns every cursor/state
-        # path off without touching the real catalog entry
-        w_entry = _dc_replace(entry, sync_mode=SyncMode.FULL_REFRESH)
-        base = window
-        self._check_expectations(entry.name, base)
-        for out_name, df in self.mapper.apply(entry.name, base):
+        self._check_expectations(entry.name, window)
+        # no cursor: a backfill takes no bookmark and emits no STATE
+        # (only _sync_entry sets bookmarks)
+        for out_name, df in self.mapper.apply(entry.name, window):
             pks = (self.mapper.key_properties_override(entry.name)
                    or entry.primary_keys)
-            n, _ = self._write(df, out_name, w_entry, pks, sink, None)
+            n, _ = self._write(df, out_name, None, pks, sink, None)
             total += n
         logger.info("backfilled %d records of %s in [%s, %s)",
                     total, stream, lo, hi)
@@ -240,6 +236,8 @@ class Engine:
         upserts from concurrent streams must not interleave mid-commit)."""
         t0 = time.perf_counter()
         counts: dict[str, int] = {}
+        cursor = (entry.replication_key
+                  if entry.sync_mode == SyncMode.INCREMENTAL else None)
         base = self.stream_df(entry)
         # expectations speak SOURCE column names, so they gate the
         # pre-map frame (a stream map may rename/drop the column); one
@@ -247,16 +245,18 @@ class Engine:
         self._check_expectations(entry.name, base)
         for out_name, df in self.mapper.apply(entry.name, base):
             pks = self.mapper.key_properties_override(entry.name) or entry.primary_keys
-            n, cursor_max = self._write(df, out_name, entry, pks, sink, out)
+            n, cursor_max = self._write(df, out_name, cursor, pks, sink, out)
             counts[out_name] = counts.get(out_name, 0) + n
             # Commit ordering: bookmark only after the sink accepted the
             # batch (at-least-once; reference §4.3).
             with self._state_lock:
-                if entry.sync_mode == SyncMode.INCREMENTAL and entry.replication_key \
-                        and cursor_max is not None:
-                    self.state.set_bookmark(
-                        entry.name, entry.replication_key, coerce_value(cursor_max)
-                    )
+                if cursor_max is not None:
+                    self.state.set_bookmark(entry.name, cursor, cursor_max)
+            if sink.get("type", "stdout") == "stdout":
+                stdout = out or sys.stdout
+                stdout.write(singer_message(
+                    {"type": "STATE", "value": self.state.to_dict()}) + "\n")
+                stdout.flush()
         with self._state_lock:
             if self.config.get("state_path"):
                 self.state.commit(self.config["state_path"])
@@ -326,52 +326,30 @@ class Engine:
         self,
         df: DataFrame,
         stream_name: str,
-        entry: StreamEntry,
+        cursor: str | None,
         pks: list[str],
         sink: dict[str, Any],
         out: IO[str] | None,
     ) -> tuple[int, Any]:
-        """Write one stream; returns (record_count, max cursor value).
+        """Write one stream; returns ``(record_count, cursor_max)``, the
+        largest ``cursor`` value rendered as the stream's RECORD lines
+        carry it (``singer_io.render_column``), or None without a cursor.
 
-        File sinks use the Observation API so count + max(cursor) come from
-        the SAME pass as the write — no second scan of the source.
+        stdout streams SCHEMA and RECORD lines through
+        ``write_singer_stdout``, which counts in its own loop; the caller
+        writes STATE.  Every other sink takes the count and the rendered
+        max(cursor) from an Observation on the SAME pass as the write —
+        no second scan of the source.
         """
         kind = sink.get("type", "stdout")
-        cursor = entry.replication_key if entry.sync_mode == SyncMode.INCREMENTAL else None
-
         if kind == "stdout":
-            # Driver-funnel Singer output (tap parity).  Track max cursor
-            # while iterating — single pass.
-            out = out or sys.stdout
-            stream = out
-            n = 0
-            cursor_max = None
-            from .schema import struct_to_json_schema
-            from .singer_io import _normalize_columns
-
-            stream.write(singer_message({
-                "type": "SCHEMA", "stream": stream_name,
-                "schema": struct_to_json_schema(df.schema),
-                "key_properties": pks or [],
-            }) + "\n")
-            for row in _normalize_columns(df).toLocalIterator():
-                d = row.asDict(recursive=True)
-                stream.write(singer_message(
-                    {"type": "RECORD", "stream": stream_name, "record": d}) + "\n")
-                n += 1
-                if cursor is not None and d.get(cursor) is not None:
-                    v = d[cursor]
-                    cursor_max = v if cursor_max is None or v > cursor_max else cursor_max
-            if cursor is not None and cursor_max is not None:
-                self.state.set_bookmark(entry.name, cursor, cursor_max)
-            stream.write(singer_message(
-                {"type": "STATE", "value": self.state.to_dict()}) + "\n")
-            stream.flush()
-            return n, cursor_max
+            return write_singer_stdout(df, stream_name, pks, cursor, out)
 
         observed = [F.count(F.lit(1)).alias("n")]
         if cursor:
-            observed.append(F.max(F.col(cursor)).alias("cursor_max"))
+            observed.append(render_column(
+                F.max(F.col(cursor)), df.schema[cursor].dataType
+            ).alias("cursor_max"))
         obs = Observation()
         plain = df
         df = df.observe(obs, *observed)

@@ -10,7 +10,7 @@ import os
 import pytest
 
 from tap_airbyte_wrapper_spark.schema import json_schema_to_struct
-from tap_airbyte_wrapper_spark.singer_io import write_singer_stdout
+from tap_airbyte_wrapper_spark.singer_io import singer_message, write_singer_stdout
 
 # excluded from the driver's budgeted run (see pytest.ini): multi-minute tier
 pytestmark = pytest.mark.slow
@@ -37,10 +37,11 @@ def test_kphx_golden_record_parity(spark):
         *[F.col(f.name).cast(f.dataType).alias(f.name) for f in struct.fields])
 
     buf = io.StringIO()
-    n = write_singer_stdout(
+    n, _ = write_singer_stdout(
         df, stream=schema_msg["stream"],
         key_properties=schema_msg.get("key_properties") or [],
-        bookmark_state={}, out=buf)
+        out=buf)
+    buf.write(singer_message({"type": "STATE", "value": {}}) + "\n")
     got = [json.loads(line) for line in buf.getvalue().splitlines()]
 
     # reference discipline: exact message counts (1 SCHEMA + N RECORD + STATE)

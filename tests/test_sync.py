@@ -248,18 +248,17 @@ def test_load_parquet_restores_nanos_conf(spark, sf_dir):
 
 
 def test_binary_columns_serialize_as_base64(spark):
-    """Binary fields must emit base64 (matching the declared
-    contentEncoding), not a lossy UTF-8 decode."""
+    """Binary fields must emit base64 in the RECORD line (matching the
+    declared contentEncoding), not a lossy UTF-8 decode."""
     import base64
     import json
 
-    from tap_airbyte_wrapper_spark.singer_io import _normalize_columns
+    from tap_airbyte_wrapper_spark.singer_io import record_json_expr
 
     payload = bytes(range(256))
     df = spark.createDataFrame([(1, payload)], "id long, content binary")
-    row = _normalize_columns(df).collect()[0]
-    assert base64.b64decode(row.content) == payload
-    json.dumps(row.asDict())  # must be JSON-clean
+    line = df.select(record_json_expr(df, "s")).first()[0]
+    assert base64.b64decode(json.loads(line)["record"]["content"]) == payload
 
 
 def test_sync_binary_files_source_end_to_end(spark, tmp_path):
