@@ -131,23 +131,25 @@ def fit_text_classifier(
     ).persist()
     w = np.zeros(dim, dtype=np.float64)
     b = 0.0
-    for _ in range(n_iter):
-        parts = prepped.mapInPandas(
-            _grad_pass(dim, w, b),
-            schema="pid int, gw array<double>, gb double, n long",
-        ).withColumn("pid", F.spark_partition_id()).collect()
-        parts = sorted(parts, key=lambda r: r["pid"])
-        n = sum(r["n"] for r in parts)
-        if n == 0:
-            raise ValueError("no non-empty training documents")
-        gw = np.zeros(dim, dtype=np.float64)
-        gb = 0.0
-        for r in parts:
-            gw += np.asarray(r["gw"], dtype=np.float64)
-            gb += r["gb"]
-        w -= lr * (gw / n + l2 * w)
-        b -= lr * (gb / n)
-    prepped.unpersist()
+    try:
+        for _ in range(n_iter):
+            parts = prepped.mapInPandas(
+                _grad_pass(dim, w, b),
+                schema="pid int, gw array<double>, gb double, n long",
+            ).withColumn("pid", F.spark_partition_id()).collect()
+            parts = sorted(parts, key=lambda r: r["pid"])
+            n = sum(r["n"] for r in parts)
+            if n == 0:
+                raise ValueError("no non-empty training documents")
+            gw = np.zeros(dim, dtype=np.float64)
+            gb = 0.0
+            for r in parts:
+                gw += np.asarray(r["gw"], dtype=np.float64)
+                gb += r["gb"]
+            w -= lr * (gw / n + l2 * w)
+            b -= lr * (gb / n)
+    finally:
+        prepped.unpersist()
     return TextClassifierModel(w, float(b), dim, salt)
 
 

@@ -529,26 +529,29 @@ def connected_components(
     )
     labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
         "comp", F.col("node"))
-    for _ in range(max_iter):
-        nb_min = (
-            edges.join(labels.withColumnRenamed("node", "dst"), on="dst")
-            .groupBy("src").agg(F.min("comp").alias("nb_comp"))
-            .withColumnRenamed("src", "node")
-        )
-        new_labels = (
-            labels.join(nb_min, on="node", how="left")
-            .select("node",
-                    F.least("comp", F.coalesce("nb_comp", "comp")).alias("comp"))
-            .localCheckpoint(eager=True)
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("comp", "old"), on="node")
-            .filter(F.col("comp") != F.col("old")).limit(1).count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
+    try:
+        for _ in range(max_iter):
+            nb_min = (
+                edges.join(labels.withColumnRenamed("node", "dst"), on="dst")
+                .groupBy("src").agg(F.min("comp").alias("nb_comp"))
+                .withColumnRenamed("src", "node")
+            )
+            new_labels = (
+                labels.join(nb_min, on="node", how="left")
+                .select("node", F.least(
+                    "comp", F.coalesce("nb_comp", "comp")).alias("comp"))
+                .localCheckpoint(eager=True)
+            )
+            changed = (
+                new_labels.join(labels.withColumnRenamed("comp", "old"),
+                                on="node")
+                .filter(F.col("comp") != F.col("old")).limit(1).count()
+            )
+            labels = new_labels
+            if changed == 0:
+                break
+    finally:
+        edges.unpersist()
     return labels.select(F.col("node"), F.col("comp").alias("component"))
 
 
@@ -1435,19 +1438,21 @@ def minhash_index_write(
             F.posexplode("band_hashes").alias("band", "band_hash"))
         .select(F.col(id_col), _posting_key().alias("bkey"))
     )
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}_postings")
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}_sigs")
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}_tombstones")
     ver0 = F.lit(0).cast("long")
-    (postings.withColumn("__ver", ver0)
-        .write.bucketBy(n_buckets, "bkey").sortBy("bkey")
-        .option("path", _os.path.join(path, "postings"))
-        .mode("overwrite").saveAsTable(f"{table_name}_postings"))
-    (sigs.select(id_col, "sig").withColumn("__ver", ver0)
-        .write.bucketBy(n_buckets, id_col).sortBy(id_col)
-        .option("path", _os.path.join(path, "sigs"))
-        .mode("overwrite").saveAsTable(f"{table_name}_sigs"))
-    sigs.unpersist()
+    try:
+        spark.sql(f"DROP TABLE IF EXISTS {table_name}_postings")
+        spark.sql(f"DROP TABLE IF EXISTS {table_name}_sigs")
+        spark.sql(f"DROP TABLE IF EXISTS {table_name}_tombstones")
+        (postings.withColumn("__ver", ver0)
+            .write.bucketBy(n_buckets, "bkey").sortBy("bkey")
+            .option("path", _os.path.join(path, "postings"))
+            .mode("overwrite").saveAsTable(f"{table_name}_postings"))
+        (sigs.select(id_col, "sig").withColumn("__ver", ver0)
+            .write.bucketBy(n_buckets, id_col).sortBy(id_col)
+            .option("path", _os.path.join(path, "sigs"))
+            .mode("overwrite").saveAsTable(f"{table_name}_sigs"))
+    finally:
+        sigs.unpersist()
     from ..fsutil import write_text as _write_text
 
     # Hadoop-FS write: the index path may live on an object store
@@ -1501,17 +1506,19 @@ def minhash_index_append(
         .select(F.col(id_col), _posting_key().alias("bkey"))
     )
     n_buckets = meta["n_buckets"]
-    (stamp_version(postings, tombs, id_col)
-        .select(id_col, "bkey", "__ver")
-        .write.bucketBy(n_buckets, "bkey").sortBy("bkey")
-        .option("path", _os.path.join(path, "postings"))
-        .mode("append").saveAsTable(f"{table_name}_postings"))
-    (stamp_version(sigs.select(id_col, "sig"), tombs, id_col)
-        .select(id_col, "sig", "__ver")
-        .write.bucketBy(n_buckets, id_col).sortBy(id_col)
-        .option("path", _os.path.join(path, "sigs"))
-        .mode("append").saveAsTable(f"{table_name}_sigs"))
-    sigs.unpersist()
+    try:
+        (stamp_version(postings, tombs, id_col)
+            .select(id_col, "bkey", "__ver")
+            .write.bucketBy(n_buckets, "bkey").sortBy("bkey")
+            .option("path", _os.path.join(path, "postings"))
+            .mode("append").saveAsTable(f"{table_name}_postings"))
+        (stamp_version(sigs.select(id_col, "sig"), tombs, id_col)
+            .select(id_col, "sig", "__ver")
+            .write.bucketBy(n_buckets, id_col).sortBy(id_col)
+            .option("path", _os.path.join(path, "sigs"))
+            .mode("append").saveAsTable(f"{table_name}_sigs"))
+    finally:
+        sigs.unpersist()
 
 
 def minhash_index_delete(

@@ -44,6 +44,7 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .confutil import MICROS_TIMESTAMPS, scoped_conf
 from .operators.merge import merge_upsert
 
 __all__ = ["merge_snapshot_write", "read_merge_snapshot",
@@ -255,16 +256,8 @@ def write_pruned_layout(
         writer = writer.option("maxRecordsPerFile", max_records_per_file)
     if partition_cols:
         writer = writer.partitionBy(*list(partition_cols))
-    conf_key = "spark.sql.parquet.outputTimestampType"
-    old = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "TIMESTAMP_MICROS")
-    try:
+    with scoped_conf(spark, MICROS_TIMESTAMPS):
         writer.parquet(path)
-    finally:
-        if old is not None:
-            spark.conf.set(conf_key, old)
-        else:
-            spark.conf.unset(conf_key)
 
 
 def zorder_value(
@@ -344,16 +337,8 @@ def write_zorder_layout(
         .sortWithinPartitions("__z")
         .drop("__z")
     )
-    conf_key = "spark.sql.parquet.outputTimestampType"
-    old = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "TIMESTAMP_MICROS")
-    try:
+    with scoped_conf(spark, MICROS_TIMESTAMPS):
         out.write.mode("overwrite").parquet(path)
-    finally:
-        if old is not None:
-            spark.conf.set(conf_key, old)
-        else:
-            spark.conf.unset(conf_key)
 
 
 def compact_parquet(
@@ -394,15 +379,7 @@ def compact_parquet(
                 .sortWithinPartitions(*sort_cols)
     else:
         out = df.coalesce(n)
-    conf_key = "spark.sql.parquet.outputTimestampType"
-    old = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, "TIMESTAMP_MICROS")
-    try:
+    with scoped_conf(spark, MICROS_TIMESTAMPS):
         out.write.mode("overwrite").parquet(dst)
-    finally:
-        if old is not None:
-            spark.conf.set(conf_key, old)
-        else:
-            spark.conf.unset(conf_key)
     return {"files_in": len(files), "files_out": count_parquet_files(dst),
             "bytes": total}

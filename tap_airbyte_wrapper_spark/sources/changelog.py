@@ -43,11 +43,29 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..catalog import Catalog, StreamEntry, SyncMode
 from .base import Source, SourceError, register
 
-__all__ = ["ChangelogSource"]
+__all__ = ["ChangelogSource", "normalize_changes"]
 
 _OP_ALIASES = {"c": "insert", "u": "update", "d": "delete",
                "insert": "insert", "update": "update", "delete": "delete"}
 _META_COLS = ("_op", "_cursor", "_deleted")
+
+
+def normalize_changes(df: DataFrame, op_col: str = "_op",
+                      cursor_col: str | None = "_cursor") -> DataFrame:
+    """Change rows in canonical form: ``_op`` is ``op_col`` lower-cased
+    with Debezium's ``c``/``u``/``d`` folded to ``insert``/``update``/
+    ``delete`` (other values pass through lower-cased), ``_deleted`` is
+    ``_op == "delete"``, and ``cursor_col`` (if given) is cast to long.
+    The one op normalization of the batch source, the streaming CDC
+    apply and the streaming index maintenance."""
+    op = F.lower(F.col(op_col))
+    norm = F.element_at(
+        F.create_map(*[F.lit(x) for kv in _OP_ALIASES.items() for x in kv]),
+        op)
+    df = df.withColumn("_op", F.coalesce(norm, op))
+    if cursor_col is not None:
+        df = df.withColumn(cursor_col, F.col(cursor_col).cast("long"))
+    return df.withColumn("_deleted", F.col("_op") == "delete")
 
 
 @register
@@ -126,15 +144,7 @@ class ChangelogSource(Source):
         for col in ("_op", "_cursor"):
             if col not in df.columns:
                 raise SourceError(f"changelog {d!r} missing {col!r}")
-        op = F.lower(F.col("_op"))
-        norm = F.element_at(
-            F.create_map(*[F.lit(x) for kv in _OP_ALIASES.items() for x in kv]),
-            op)
-        return (
-            df.withColumn("_op", F.coalesce(norm, op))
-            .withColumn("_cursor", F.col("_cursor").cast("long"))
-            .withColumn("_deleted", F.col("_op") == "delete")
-        )
+        return normalize_changes(df)
 
     def _load_base(self, spark: SparkSession, stream: str,
                    payload_cols: list[str] | None = None) -> DataFrame | None:

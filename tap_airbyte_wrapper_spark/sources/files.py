@@ -32,6 +32,7 @@ except ImportError:  # pragma: no cover - pyarrow ships in this env
     _pq = None
 
 from ..catalog import Catalog, StreamEntry, SyncMode
+from ..confutil import scoped_conf
 from .base import Source, SourceError, register
 
 # Streams in the driver corpus that support incremental sync, with their
@@ -187,10 +188,7 @@ def load_parquet(
     confs = {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"}
     if ns_cols:
         confs["spark.sql.legacy.parquet.nanosAsLong"] = "true"
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
+    with scoped_conf(spark, confs):
         reader = spark.read
         schema = None if merge_schema else _footer_schema(spark, path)
         if schema is not None:
@@ -201,24 +199,20 @@ def load_parquet(
             # one file's schema and silently drops the rest
             reader = reader.option("mergeSchema", "true")
         df = reader.parquet(path)
-    finally:
-        for k, was in prev.items():
-            if was is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, was)
 
     if cursor_after is not None:
         col, bookmark = cursor_after
         if bookmark is not None:
             if col in ns_cols:
-                import pandas as pd
-
-                # Bookmarks are microsecond-truncated (Spark timestamp);
-                # raw values keep nanos.  Widen by 999 ns so every row whose
-                # truncated value == bookmark is treated as already synced.
-                nanos = int(pd.Timestamp(bookmark).value) + 999
-                df = df.filter(F.col(col) > F.lit(nanos))
+                # The bookmark is rendered in the session time zone, so
+                # Spark's own string -> timestamp cast reads it back; the
+                # foldable bound becomes a literal in the optimizer and
+                # the filter on the raw column is still pushed down.
+                # Bookmarks are microsecond-truncated; raw values keep
+                # nanos.  Widen by 999 ns so every row whose truncated
+                # value == bookmark is treated as already synced.
+                nanos = F.unix_micros(F.lit(bookmark).cast("timestamp"))
+                df = df.filter(F.col(col) > nanos * 1000 + 999)
             else:
                 ctype = df.schema[col].dataType
                 df = df.filter(F.col(col) > F.lit(bookmark).cast(ctype))

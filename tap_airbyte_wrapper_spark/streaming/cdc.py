@@ -27,11 +27,12 @@ from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..sinks import merge_snapshot_write
-from ..sources.changelog import _OP_ALIASES
+from ..sources.changelog import normalize_changes
+from ._batch import start_foreach_batch
 
 __all__ = ["stream_changelog_apply"]
 
@@ -60,17 +61,7 @@ def stream_changelog_apply(
     reader = spark.readStream.schema(schema).format(fmt)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    changes = reader.load(changes_dir)
-
-    op = F.lower(F.col("_op"))
-    norm = F.element_at(
-        F.create_map(*[F.lit(x) for kv in _OP_ALIASES.items() for x in kv]),
-        op)
-    changes = (
-        changes.withColumn("_op", F.coalesce(norm, op))
-        .withColumn("_cursor", F.col("_cursor").cast("long"))
-        .withColumn("_deleted", F.col("_op") == "delete")
-    )
+    changes = normalize_changes(reader.load(changes_dir))
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         if batch.isEmpty():
@@ -80,11 +71,5 @@ def stream_changelog_apply(
             order_col=order_col, delete_col="_deleted",
             n_buckets=n_buckets)
 
-    writer = (
-        changes.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("update")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(changes, apply_batch, checkpoint_path,
+                               available_now)

@@ -8,25 +8,15 @@ for continuous arrival: ``foreachBatch`` probes the batch against the
 index, keeps the survivors, lands them, and folds them INTO the index
 (``minhash_index_append``), so the next batch dedups against them too.
 
-Replay safety (a crashed micro-batch re-runs under Structured
-Streaming's at-least-once foreachBatch contract):
-
-* a replayed doc is already in the index and matches ITSELF — corpus
-  hits with ``id_a == id_b`` are therefore excluded from the drop
-  set, so the replay keeps exactly the docs the first run kept;
-* output lands per-batch in ``{out}/batch={id}`` with overwrite, so a
-  re-run overwrites its own directory instead of duplicating rows;
-* the index append is guarded by a ``_batch_<id>`` marker written
-  AFTER the append.  The marker is an optimization, not a correctness
-  gate: a crash between append and marker re-appends on replay, which
-  only inflates the index (candidate pairs are ``distinct``-ed and
-  the drop set is ``distinct``-ed, so duplicated postings/signatures
-  never change the gate's output — run ``minhash_index_compact``
-  on the index periodically anyway; the flat ``compact_parquet``
-  would drop the bucket metadata).  Marker IO goes through the Hadoop
-  FS API (``fsutil``), so object-store index paths get the same replay
-  skip; a failed marker write is swallowed and the replay re-appends
-  (more index growth, same gate output).
+Replay safety follows the gate skeleton's contract
+(:func:`._batch.run_gate`): a replayed doc is already in the index and
+matches ITSELF, so corpus hits with ``id_a == id_b`` are excluded from
+the drop set and the replay keeps exactly the docs the first run kept.
+A re-append after a crash between append and marker duplicates
+postings/signatures, which never change the gate's output (candidate
+pairs and the drop set are ``distinct``-ed); run
+``minhash_index_compact`` on the index periodically anyway — the flat
+``compact_parquet`` would drop the bucket metadata.
 
 Cost per batch: O(batch) signatures + a bucket-co-located join against
 the index (zero corpus shuffle, same plan the batch delta-dedup tests
@@ -39,12 +29,10 @@ wall_seconds)`` row under ``{out}/_gate_stats`` (best-effort, see
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..functions.dedup import minhash_dedup_delta, minhash_index_append
-from .stats import append_gate_stats
+from ._batch import drop_duplicates, run_gate
 
 __all__ = ["stream_near_dup_gate", "stream_exact_dedup_gate",
            "stream_simhash_gate"]
@@ -69,53 +57,17 @@ def stream_near_dup_gate(
     clean corpus back with ``spark.read.parquet(out_path)``.
     """
 
-    def gate(batch: DataFrame, batch_id: int) -> None:
-        import time as _time
+    def select(batch: DataFrame) -> DataFrame:
+        return drop_duplicates(batch, minhash_dedup_delta(
+            batch, index_table, index_path, id_col, text_col,
+            threshold=threshold), id_col)
 
-        started = _time.time()
-        batch = batch.persist()
-        try:
-            dupes = minhash_dedup_delta(
-                batch, index_table, index_path, id_col, text_col,
-                threshold=threshold)
-            drop = (
-                dupes.filter(
-                    (F.col("kind") == "corpus")
-                    & (F.col("id_a") != F.col("id_b"))
-                ).select(F.col("id_a").alias(id_col))
-                .unionByName(
-                    # within-batch: id_a < id_b, keep the min id
-                    dupes.filter(F.col("kind") == "delta")
-                    .select(F.col("id_b").alias(id_col)))
-                .distinct()
-            )
-            clean = batch.join(drop, id_col, "left_anti").persist()
-            clean.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch={batch_id}"))
-            from ..fsutil import exists as _fs_exists, \
-                write_text as _fs_write
-            spark = batch.sparkSession
-            marker = os.path.join(index_path, f"_batch_{batch_id}")
-            if not _fs_exists(spark, marker):
-                minhash_index_append(
-                    clean, index_table, index_path, id_col, text_col)
-                try:
-                    # Hadoop-FS write: works on object-store index paths
-                    _fs_write(spark, marker, "done")
-                except Exception:
-                    # best-effort replay marker — never kill the stream
-                    pass
-            append_gate_stats(batch.sparkSession, out_path, batch_id,
-                              batch.count(), clean.count(), started)
-            clean.unpersist()
-        finally:
-            batch.unpersist()
+    def fold(clean: DataFrame) -> None:
+        minhash_index_append(clean, index_table, index_path, id_col,
+                             text_col)
 
-    writer = stream.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_gate(stream, out_path, checkpoint, available_now, select,
+                    fold, index_path)
 
 
 def stream_exact_dedup_gate(
@@ -142,9 +94,8 @@ def stream_exact_dedup_gate(
     id"), a replayed loser loses to the same min-id winner again, and
     a doc the first run dropped via the corpus index still hits that
     other-id row — the survivor set is a pure function of (batch,
-    index-before-batch).  Output lands per-batch with overwrite; the
-    ``_batch_<id>`` Hadoop-FS marker only skips the (idempotent)
-    re-append.  Requires a bootstrapped index
+    index-before-batch); the rest of the replay contract is
+    :func:`._batch.run_gate`'s.  Requires a bootstrapped index
     (``fingerprint_index_write`` — an empty corpus frame is fine).
     """
     from ..functions.dedup import (
@@ -152,38 +103,14 @@ def stream_exact_dedup_gate(
         fingerprint_index_append,
     )
 
-    def gate(batch: DataFrame, batch_id: int) -> None:
-        import time as _time
+    def select(batch: DataFrame) -> DataFrame:
+        return fingerprint_dedup_delta(batch, index_table, id_col, text_col)
 
-        from ..fsutil import exists as _fs_exists, write_text as _fs_write
+    def fold(clean: DataFrame) -> None:
+        fingerprint_index_append(clean, index_table, id_col, text_col)
 
-        started = _time.time()
-        spark = batch.sparkSession
-        batch = batch.persist()
-        try:
-            clean = fingerprint_dedup_delta(
-                batch, index_table, id_col, text_col).persist()
-            clean.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch={batch_id}"))
-            marker = os.path.join(index_path, f"_batch_{batch_id}")
-            if not _fs_exists(spark, marker):
-                fingerprint_index_append(
-                    clean, index_table, id_col, text_col)
-                try:
-                    _fs_write(spark, marker, "done")
-                except Exception:
-                    pass  # best-effort marker — never kill the stream
-            append_gate_stats(spark, out_path, batch_id,
-                              batch.count(), clean.count(), started)
-            clean.unpersist()
-        finally:
-            batch.unpersist()
-
-    writer = stream.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_gate(stream, out_path, checkpoint, available_now, select,
+                    fold, index_path)
 
 
 def stream_simhash_gate(
@@ -209,55 +136,22 @@ def stream_simhash_gate(
 
     Replay safety mirrors the other index gates: the segment rows carry
     ids, so a replayed survivor matches ITSELF (id_a == id_b corpus
-    pair, not a drop), a replayed loser loses to the same winner again;
-    the ``_batch_<id>`` marker only skips the re-append.  Bootstrap with
+    pair, not a drop), a replayed loser loses to the same winner again
+    (replay contract: :func:`._batch.run_gate`).  Bootstrap with
     ``simhash_index_write`` (an empty corpus frame is fine)."""
     from ..functions.dedup import simhash_dedup_delta, simhash_index_append
 
-    def gate(batch: DataFrame, batch_id: int) -> None:
-        import time as _time
+    def select(batch: DataFrame) -> DataFrame:
+        return drop_duplicates(batch, simhash_dedup_delta(
+            batch, index_table, index_path, id_col, text_col,
+            max_hamming=max_hamming), id_col)
 
-        from ..fsutil import exists as _fs_exists, write_text as _fs_write
+    def fold(clean: DataFrame) -> None:
+        simhash_index_append(clean, index_table, index_path, id_col,
+                             text_col)
 
-        started = _time.time()
-        spark = batch.sparkSession
-        batch = batch.persist()
-        try:
-            dupes = simhash_dedup_delta(
-                batch, index_table, index_path, id_col, text_col,
-                max_hamming=max_hamming)
-            drop = (
-                dupes.filter(
-                    (F.col("kind") == "corpus")
-                    & (F.col("id_a") != F.col("id_b"))
-                ).select(F.col("id_a").alias(id_col))
-                .unionByName(
-                    dupes.filter(F.col("kind") == "delta")
-                    .select(F.col("id_b").alias(id_col)))
-                .distinct()
-            )
-            clean = batch.join(drop, id_col, "left_anti").persist()
-            clean.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch={batch_id}"))
-            marker = os.path.join(index_path, f"_batch_{batch_id}")
-            if not _fs_exists(spark, marker):
-                simhash_index_append(
-                    clean, index_table, index_path, id_col, text_col)
-                try:
-                    _fs_write(spark, marker, "done")
-                except Exception:
-                    pass  # best-effort marker — never kill the stream
-            append_gate_stats(spark, out_path, batch_id,
-                              batch.count(), clean.count(), started)
-            clean.unpersist()
-        finally:
-            batch.unpersist()
-
-    writer = stream.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_gate(stream, out_path, checkpoint, available_now, select,
+                    fold, index_path)
 
 
 def stream_media_dedup_gate(
@@ -285,53 +179,20 @@ def stream_media_dedup_gate(
     else's policy decision.
 
     Replay safety mirrors the other index gates: a replayed survivor
-    matches ITSELF (id_a == id_b corpus pair, not a drop); the
-    ``_batch_<id>`` marker only skips the re-append.  Bootstrap with
+    matches ITSELF (id_a == id_b corpus pair, not a drop; replay
+    contract: :func:`._batch.run_gate`).  Bootstrap with
     ``media_sig_index_write`` (an empty corpus frame is fine)."""
     from ..functions.multimodal import (media_dedup_delta,
                                         media_sig_index_append)
 
-    def gate(batch: DataFrame, batch_id: int) -> None:
-        import time as _time
+    def select(batch: DataFrame) -> DataFrame:
+        return drop_duplicates(batch, media_dedup_delta(
+            batch, index_table, index_path, id_col, media_col,
+            max_hamming=max_hamming), id_col)
 
-        from ..fsutil import exists as _fs_exists, write_text as _fs_write
+    def fold(clean: DataFrame) -> None:
+        media_sig_index_append(clean, index_table, index_path, id_col,
+                               media_col)
 
-        started = _time.time()
-        spark = batch.sparkSession
-        batch = batch.persist()
-        try:
-            dupes = media_dedup_delta(
-                batch, index_table, index_path, id_col, media_col,
-                max_hamming=max_hamming)
-            drop = (
-                dupes.filter(
-                    (F.col("kind") == "corpus")
-                    & (F.col("id_a") != F.col("id_b"))
-                ).select(F.col("id_a").alias(id_col))
-                .unionByName(
-                    dupes.filter(F.col("kind") == "delta")
-                    .select(F.col("id_b").alias(id_col)))
-                .distinct()
-            )
-            clean = batch.join(drop, id_col, "left_anti").persist()
-            clean.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch={batch_id}"))
-            marker = os.path.join(index_path, f"_batch_{batch_id}")
-            if not _fs_exists(spark, marker):
-                media_sig_index_append(
-                    clean, index_table, index_path, id_col, media_col)
-                try:
-                    _fs_write(spark, marker, "done")
-                except Exception:
-                    pass  # best-effort marker — never kill the stream
-            append_gate_stats(spark, out_path, batch_id,
-                              batch.count(), clean.count(), started)
-            clean.unpersist()
-        finally:
-            batch.unpersist()
-
-    writer = stream.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_gate(stream, out_path, checkpoint, available_now, select,
+                    fold, index_path)

@@ -27,6 +27,8 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from ._batch import start_foreach_batch
+
 __all__ = ["reference_profile", "stream_drift_monitor",
            "embedding_reference_mean", "stream_embedding_drift",
            "drift_reference_write", "stream_drift_gate",
@@ -137,11 +139,8 @@ def stream_drift_monitor(
             logger.warning("drift stats append failed for batch %d "
                            "(stream continues)", batch_id, exc_info=True)
 
-    writer = stream.writeStream.foreachBatch(monitor).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, monitor, checkpoint,
+                               available_now)
 
 
 def embedding_reference_mean(ref: DataFrame,
@@ -215,11 +214,8 @@ def stream_embedding_drift(
             logger.warning("embedding drift append failed for batch %d "
                            "(stream continues)", batch_id, exc_info=True)
 
-    writer = stream.writeStream.foreachBatch(monitor).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, monitor, checkpoint,
+                               available_now)
 
 
 def drift_reference_write(df: DataFrame, value_col: str, path: str,
@@ -369,11 +365,8 @@ def stream_drift_gate(
         finally:
             batch.unpersist()
 
-    writer = stream.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, gate, checkpoint,
+                               available_now)
 
 
 def read_drift_gate_report(spark, out_path: str) -> DataFrame:

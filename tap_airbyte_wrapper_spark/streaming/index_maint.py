@@ -42,10 +42,13 @@ upserts applied, n_dropped = deletes applied).
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..sources.changelog import _OP_ALIASES
+from ..fsutil import exists as _fs_exists, write_text as _fs_write
+from ..sources.changelog import normalize_changes
+from ._batch import start_foreach_batch
 from .stats import append_gate_stats
 
 __all__ = ["stream_bm25_index_maintenance",
@@ -54,28 +57,45 @@ __all__ = ["stream_bm25_index_maintenance",
 
 def _latest_changes(batch: DataFrame, id_col: str, op_col: str,
                     order_col: str) -> DataFrame:
-    """One row per id: the batch's LAST change under (order, op) —
-    normalized op in ``__op``.  Window state is batch-sized."""
-    op = F.lower(F.col(op_col))
-    norm = F.element_at(
-        F.create_map(*[F.lit(x) for kv in _OP_ALIASES.items() for x in kv]),
-        op)
+    """One row per id: the batch's LAST change under (order, raw op),
+    normalized (``_op``, ``_deleted``).  Window state is batch-sized."""
     w = Window.partitionBy(id_col).orderBy(
         F.col(order_col).desc(), F.col(op_col))
-    return (
-        batch.withColumn("__op", F.coalesce(norm, op))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    latest = (batch.withColumn("__rn", F.row_number().over(w))
+              .filter(F.col("__rn") == 1).drop("__rn"))
+    return normalize_changes(latest, op_col, cursor_col=None)
 
 
-def _maintenance_gate(stream, checkpoint, available_now, apply_batch):
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+def _maintain(stream, index_path, checkpoint, available_now, id_col,
+              text_col, op_col, order_col, apply):
+    """Start a maintenance query: per micro-batch, collapse to the last
+    change per id and call ``apply(spark, dels, ups, n_del, n_up)``
+    with the deleted ids and the upserted ``(id, text)`` rows, behind
+    the best-effort ``_maint_batch_<id>`` marker."""
+
+    def apply_batch(batch: DataFrame, batch_id: int) -> None:
+        started = time.time()
+        spark = batch.sparkSession
+        marker = os.path.join(index_path, f"_maint_batch_{batch_id}")
+        if _fs_exists(spark, marker):
+            return
+        latest = _latest_changes(batch, id_col, op_col, order_col).persist()
+        try:
+            dels = latest.filter(F.col("_deleted")).select(id_col)
+            ups = latest.filter(~F.col("_deleted")).select(id_col, text_col)
+            n_del = dels.count()
+            n_up = ups.count()
+            apply(spark, dels, ups, n_del, n_up)
+            try:
+                _fs_write(spark, marker, "done")
+            except Exception:
+                pass  # best-effort marker — replays converge anyway
+            append_gate_stats(spark, index_path, batch_id,
+                              n_del + n_up, n_up, started)
+        finally:
+            latest.unpersist()
+
+    return start_foreach_batch(stream, apply_batch, checkpoint, available_now)
 
 
 def stream_bm25_index_maintenance(
@@ -96,38 +116,15 @@ def stream_bm25_index_maintenance(
     on the corpus-with-changes-applied (pinned by test)."""
     from ..functions.retrieval import bm25_index_delete, bm25_index_replace
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        import time as _time
+    def apply(spark, dels, ups, n_del, n_up):
+        if n_del:
+            bm25_index_delete(spark, index_table, index_path, dels)
+        if n_up:
+            bm25_index_replace(ups, index_table, index_path, id_col,
+                               text_col)
 
-        from ..fsutil import exists as _fs_exists, write_text as _fs_write
-
-        started = _time.time()
-        spark = batch.sparkSession
-        marker = os.path.join(index_path, f"_maint_batch_{batch_id}")
-        if _fs_exists(spark, marker):
-            return
-        latest = _latest_changes(batch, id_col, op_col, order_col).persist()
-        try:
-            dels = latest.filter(F.col("__op") == "delete").select(id_col)
-            ups = latest.filter(F.col("__op") != "delete").select(
-                id_col, text_col)
-            n_del = dels.count()
-            n_up = ups.count()
-            if n_del:
-                bm25_index_delete(spark, index_table, index_path, dels)
-            if n_up:
-                bm25_index_replace(ups, index_table, index_path,
-                                   id_col, text_col)
-            try:
-                _fs_write(spark, marker, "done")
-            except Exception:
-                pass  # best-effort marker — replays converge anyway
-            append_gate_stats(spark, index_path, batch_id,
-                              n_del + n_up, n_up, started)
-        finally:
-            latest.unpersist()
-
-    return _maintenance_gate(stream, checkpoint, available_now, apply_batch)
+    return _maintain(stream, index_path, checkpoint, available_now, id_col,
+                     text_col, op_col, order_col, apply)
 
 
 def stream_fingerprint_index_maintenance(
@@ -152,40 +149,16 @@ def stream_fingerprint_index_maintenance(
         fingerprint_index_delete,
     )
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        import time as _time
-
-        from ..fsutil import exists as _fs_exists, write_text as _fs_write
-
-        started = _time.time()
-        spark = batch.sparkSession
-        marker = os.path.join(index_path, f"_maint_batch_{batch_id}")
-        if _fs_exists(spark, marker):
-            return
-        latest = _latest_changes(batch, id_col, op_col, order_col).persist()
-        try:
-            dels = latest.filter(F.col("__op") == "delete").select(
+    def apply(spark, dels, ups, n_del, n_up):
+        if n_del or n_up:
+            # updates tombstone their own id first (replace), then
+            # register the new content
+            all_dead = dels.unionByName(ups.select(id_col)).select(
                 F.col(id_col).alias("fid"))
-            ups = latest.filter(F.col("__op") != "delete").select(
-                id_col, text_col)
-            n_del = dels.count()
-            n_up = ups.count()
-            if n_del or n_up:
-                # updates tombstone their own id first (replace), then
-                # register the new content
-                all_dead = dels.unionByName(
-                    ups.select(F.col(id_col).alias("fid")))
-                fingerprint_index_delete(spark, index_table, index_path,
-                                         all_dead)
-            if n_up:
-                fingerprint_index_append(ups, index_table, id_col, text_col)
-            try:
-                _fs_write(spark, marker, "done")
-            except Exception:
-                pass  # best-effort marker — replays converge anyway
-            append_gate_stats(spark, index_path, batch_id,
-                              n_del + n_up, n_up, started)
-        finally:
-            latest.unpersist()
+            fingerprint_index_delete(spark, index_table, index_path,
+                                     all_dead)
+        if n_up:
+            fingerprint_index_append(ups, index_table, id_col, text_col)
 
-    return _maintenance_gate(stream, checkpoint, available_now, apply_batch)
+    return _maintain(stream, index_path, checkpoint, available_now, id_col,
+                     text_col, op_col, order_col, apply)

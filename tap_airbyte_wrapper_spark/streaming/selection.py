@@ -9,8 +9,8 @@ dedup gates.
 Unlike the dedup gates this one is STATELESS: the model is fixed, so a
 batch's survivor set is a pure function of the batch (scores are
 engine- and partitioning-deterministic — see ``functions/dsir.py``),
-and at-least-once ``foreachBatch`` replays land byte-identical output
-into the same ``batch=<id>`` directory.  No index grows; refresh the
+so replays land byte-identical output (the replay contract is
+:func:`._batch.run_gate`'s).  No index grows; refresh the
 model offline (refit + ``save_dsir`` to a new path) when the pool
 drifts — the same never-retrain-in-stream policy as the IVF gate's
 centroids.
@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions.dsir import dsir_score, load_dsir
+from ._batch import run_gate, start_foreach_batch
 from .stats import append_gate_stats
 
 __all__ = ["stream_dsir_gate", "stream_reservoir_sample",
@@ -63,57 +64,30 @@ def stream_novelty_gate(
     batch (its grams already folded in) scores exactly what the first
     run scored; re-folding may duplicate posting rows, which probes
     are insensitive to (distinct on the bucket key) and
-    ``novelty_index_compact`` folds away; output lands per-batch with
-    overwrite.  The guarantee is scoped to Structured Streaming's
-    actual at-least-once contract — the IN-FLIGHT batch re-runs with
-    the same boundaries; a fresh-checkpoint full re-drain can merge
-    batches, and merged boundaries change which docs count as "outside
-    the batch" (novelty is measured against the corpus, not within a
-    batch, by design).  Bootstrap with ``novelty_index_write`` (an
+    ``novelty_index_compact`` folds away (replay contract:
+    :func:`._batch.run_gate`).  The guarantee is scoped to Structured
+    Streaming's actual at-least-once contract — the IN-FLIGHT batch
+    re-runs with the same boundaries; a fresh-checkpoint full re-drain
+    can merge batches, and merged boundaries change which docs count as
+    "outside the batch" (novelty is measured against the corpus, not
+    within a batch, by design).  Bootstrap with ``novelty_index_write`` (an
     empty corpus frame is fine).
     """
     from ..functions.corpus import novelty_index_append, novelty_probe
 
-    def gate(batch: DataFrame, batch_id: int) -> None:
-        import time as _time
+    def select(batch: DataFrame) -> DataFrame:
+        scored = novelty_probe(batch, index_table, index_path, id_col,
+                               text_col)
+        return batch.join(
+            scored.filter(F.col("novelty") >= min_novelty)
+            .select(id_col, "n_grams", "n_seen", "novelty"), id_col)
 
-        from ..fsutil import exists as _fs_exists, write_text as _fs_write
+    def fold(clean: DataFrame) -> None:
+        novelty_index_append(clean, index_table, index_path, id_col,
+                             text_col)
 
-        started = _time.time()
-        spark = batch.sparkSession
-        batch = batch.persist()
-        try:
-            scored = novelty_probe(batch, index_table, index_path,
-                                   id_col, text_col)
-            clean = (
-                batch.join(
-                    scored.filter(F.col("novelty") >= min_novelty)
-                    .select(id_col, "n_grams", "n_seen", "novelty"),
-                    id_col)
-                .persist()
-            )
-            clean.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch={batch_id}"))
-            marker = os.path.join(index_path, f"_batch_{batch_id}")
-            if not _fs_exists(spark, marker):
-                novelty_index_append(clean, index_table, index_path,
-                                     id_col, text_col)
-                try:
-                    _fs_write(spark, marker, "done")
-                except Exception:
-                    pass  # best-effort marker — a re-append only
-                    # duplicates posting rows, which probes ignore
-            append_gate_stats(spark, out_path, batch_id,
-                              batch.count(), clean.count(), started)
-            clean.unpersist()
-        finally:
-            batch.unpersist()
-
-    writer = stream.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_gate(stream, out_path, checkpoint, available_now, select,
+                    fold, index_path)
 
 
 def stream_dsir_gate(
@@ -131,35 +105,15 @@ def stream_dsir_gate(
     mixture weighting reuses it — no rescore)."""
     cached: dict = {}
 
-    def gate(batch: DataFrame, batch_id: int) -> None:
-        import time as _time
-
-        started = _time.time()
-        spark = batch.sparkSession
+    def select(batch: DataFrame) -> DataFrame:
         if "model" not in cached:
-            cached["model"] = load_dsir(spark, model_path)
-        batch = batch.persist()
-        try:
-            scored = dsir_score(batch, cached["model"], id_col, text_col)
-            clean = (
-                batch.join(
-                    scored.filter(F.col("logw") >= min_logw)
-                    .select(id_col, "logw"), id_col)
-                .persist()
-            )
-            clean.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch={batch_id}"))
-            append_gate_stats(spark, out_path, batch_id,
-                              batch.count(), clean.count(), started)
-            clean.unpersist()
-        finally:
-            batch.unpersist()
+            cached["model"] = load_dsir(batch.sparkSession, model_path)
+        scored = dsir_score(batch, cached["model"], id_col, text_col)
+        return batch.join(
+            scored.filter(F.col("logw") >= min_logw).select(id_col, "logw"),
+            id_col)
 
-    writer = stream.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_gate(stream, out_path, checkpoint, available_now, select)
 
 
 def stream_reservoir_sample(
@@ -237,11 +191,7 @@ def stream_reservoir_sample(
             os.path.join(out_path, f"sample_v={batch_id}")).count()
         append_gate_stats(spark, out_path, batch_id, n_in, kept, started)
 
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, fold, checkpoint, available_now)
 
 
 #: threshold keys accepted per modality by :func:`stream_media_gate`
@@ -318,36 +268,19 @@ def stream_media_gate(
     64px thumbnails).  Unrecognized containers are DROPPED — at
     ingest time an unprobeable asset is an unusable asset.
 
-    Replay contract matches :func:`stream_quality_gate`: survivors are
-    a pure function of the batch, output lands under ``batch=<id>``
-    with overwrite, re-runs are byte-identical.  Survivor rows keep
+    Stateless replay contract (:func:`._batch.run_gate`): survivors
+    are a pure function of the batch.  Survivor rows keep
     all input columns plus the probe's ``media_meta`` map — the audit
     trail rides along instead of needing a re-probe."""
     from ..functions.multimodal import probe_media_meta
 
-    def gate(batch: DataFrame, batch_id: int) -> None:
-        import time as _time
+    def select(batch: DataFrame) -> DataFrame:
+        probed = batch.withColumn(
+            "media_meta", probe_media_meta(F.col(media_col)))
+        return probed.filter(media_admission_condition(
+            F.col("media_meta"), image, video, audio))
 
-        started = _time.time()
-        batch = batch.persist()
-        try:
-            probed = batch.withColumn(
-                "media_meta", probe_media_meta(F.col(media_col)))
-            clean = probed.filter(media_admission_condition(
-                F.col("media_meta"), image, video, audio)).persist()
-            clean.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch={batch_id}"))
-            append_gate_stats(batch.sparkSession, out_path, batch_id,
-                              batch.count(), clean.count(), started)
-            clean.unpersist()
-        finally:
-            batch.unpersist()
-
-    writer = stream.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_gate(stream, out_path, checkpoint, available_now, select)
 
 
 def stream_blocklist_gate(
@@ -366,37 +299,19 @@ def stream_blocklist_gate(
     and rides the closure across batches), docs matching NO phrase
     land.  ``fold_homoglyphs=True`` (default) folds Cyrillic/Greek
     look-alikes first, so the classic "chеаp" evasion doesn't slip the
-    gate.  Survivors keep all input columns; replay contract matches
-    :func:`stream_quality_gate` (pure function of the batch,
-    ``batch=<id>`` overwrite)."""
+    gate.  Survivors keep all input columns; stateless replay contract
+    (:func:`._batch.run_gate`: a pure function of the batch)."""
     from ..functions.text import fold_confusables, phrase_hits
 
     plist = list(phrases)
 
-    def gate(batch: DataFrame, batch_id: int) -> None:
-        import time as _time
+    def select(batch: DataFrame) -> DataFrame:
+        txt = F.col(text_col)
+        if fold_homoglyphs:
+            txt = fold_confusables(txt)
+        return batch.filter(F.size(phrase_hits(txt, plist)) == 0)
 
-        started = _time.time()
-        batch = batch.persist()
-        try:
-            txt = F.col(text_col)
-            if fold_homoglyphs:
-                txt = fold_confusables(txt)
-            clean = batch.filter(
-                F.size(phrase_hits(txt, plist)) == 0).persist()
-            clean.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch={batch_id}"))
-            append_gate_stats(batch.sparkSession, out_path, batch_id,
-                              batch.count(), clean.count(), started)
-            clean.unpersist()
-        finally:
-            batch.unpersist()
-
-    writer = stream.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_gate(stream, out_path, checkpoint, available_now, select)
 
 
 def stream_quality_gate(
@@ -414,37 +329,20 @@ def stream_quality_gate(
     expressions, zero state, zero index; the survivors then pay the
     exact-dedup, near-dup and DSIR gates).
 
-    Replay contract matches :func:`stream_dsir_gate` exactly: the
-    survivor set is a pure function of the batch, output lands under
-    ``batch=<id>`` with overwrite, re-runs are byte-identical.
+    Stateless replay contract (:func:`._batch.run_gate`): the survivor
+    set is a pure function of the batch.
     Survivor rows keep all input columns plus the full ``gopher``
     rule struct (per-rule booleans — the drop-reason audit rides along
     for free instead of needing a rescore).
     """
     from ..functions.text import gopher_rules
 
-    def gate(batch: DataFrame, batch_id: int) -> None:
-        import time as _time
+    def select(batch: DataFrame) -> DataFrame:
+        return batch.withColumn(
+            "gopher", gopher_rules(F.col(text_col))
+        ).filter(F.col("gopher.pass"))
 
-        started = _time.time()
-        batch = batch.persist()
-        try:
-            clean = batch.withColumn(
-                "gopher", gopher_rules(F.col(text_col))
-            ).filter(F.col("gopher.pass")).persist()
-            clean.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch={batch_id}"))
-            append_gate_stats(batch.sparkSession, out_path, batch_id,
-                              batch.count(), clean.count(), started)
-            clean.unpersist()
-        finally:
-            batch.unpersist()
-
-    writer = stream.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_gate(stream, out_path, checkpoint, available_now, select)
 
 
 def read_reservoir(spark, out_path: str) -> DataFrame:

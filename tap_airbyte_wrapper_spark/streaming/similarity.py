@@ -11,22 +11,18 @@ partition column), drop corpus-duplicates and within-batch losers, land
 the survivors, then :func:`~..functions.similarity.ivf_append` them so
 the next batch dedups against them too.
 
-Replay safety (at-least-once ``foreachBatch``): identical reasoning to
-the MinHash gate — a replayed vector is already in the index and
-matches ITSELF, and ``ivf_search`` excludes ``id == query_id`` pairs,
-so corpus hits only ever name OTHER vectors; batch-mates that lost the
-within-batch tie on the first run were never appended, so on replay
-they lose again via a corpus hit against the appended winner.  Output
-lands per-batch in ``{out}/batch=<id>`` with overwrite; the index
-append is guarded by a best-effort ``_batch_<id>`` marker (a re-append
-after a crash between append and marker only duplicates rows in the
-index — the drop set is ``distinct``-ed, so the gate's output never
-changes; compact the index periodically with ``ivf_compact`` —
-layout-preserving, unlike the flat ``compact_parquet``).
+Replay safety (:func:`._batch.run_gate` states the contract): a
+replayed vector is already in the index and matches ITSELF, and
+``ivf_search`` excludes ``id == query_id`` pairs, so corpus hits only
+ever name OTHER vectors; batch-mates that lost the within-batch tie on
+the first run were never appended, so on replay they lose again via a
+corpus hit against the appended winner.  A re-append only duplicates
+index rows; compact the index periodically with ``ivf_compact`` —
+layout-preserving, unlike the flat ``compact_parquet``.
 
 Centroid staleness: the quantizer is NEVER retrained inside the stream
 (moving cell boundaries would strand the already-assigned corpus — see
-``ivf_append``).  Each batch checks :func:`ivf_staleness` and logs a
+``ivf_append``).  Each append checks :func:`ivf_staleness` and logs a
 warning once appended rows exceed ``retrain_factor`` x the training
 corpus; the operator then rebuilds offline with ``ivf_build`` over
 ``spark.read.parquet(out_path)`` and swaps the index path.
@@ -38,13 +34,12 @@ probed cells + an O(batch) append.  The stream never pays O(corpus).
 from __future__ import annotations
 
 import logging
-import os
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..functions.similarity import IvfIndex, embedding_dedup_delta, \
     ivf_append, ivf_load, ivf_staleness
-from .stats import append_gate_stats
+from ._batch import drop_duplicates, run_gate
 
 __all__ = ["stream_embedding_gate"]
 
@@ -80,71 +75,36 @@ def stream_embedding_gate(
     # — only the vectors read (appended every batch) must be fresh.
     cached: dict = {}
 
-    def gate(batch: DataFrame, batch_id: int) -> None:
-        import time as _time
-
-        started = _time.time()
+    def select(batch: DataFrame) -> DataFrame:
         spark = batch.sparkSession
-        batch = batch.persist()
-        try:
-            if "cent" not in cached:
-                # only the centroid array and built_rows are immutable
-                # — caching a full ivf_load would pin a vectors frame
-                # that goes stale on the first append
-                cached["cent"] = ivf_load(
-                    spark, index_path, id_col, vec_col).centroids
-                cached["built"] = spark.read.parquet(
-                    f"{index_path}/meta").collect()[0]["built_rows"]
-            index = IvfIndex(
-                cached["cent"],
-                spark.read.parquet(f"{index_path}/vectors"),
-                id_col, vec_col)
-            dupes = embedding_dedup_delta(
-                index, batch, threshold=threshold, n_probe=n_probe, k=k)
-            drop = (
-                dupes.filter(
-                    (F.col("kind") == "corpus")
-                    & (F.col("id_a") != F.col("id_b"))
-                ).select(F.col("id_a").alias(id_col))
-                .unionByName(
-                    # within-batch: id_a < id_b, keep the min id
-                    dupes.filter(F.col("kind") == "delta")
-                    .select(F.col("id_b").alias(id_col)))
-                .distinct()
-            )
-            clean = batch.join(drop, id_col, "left_anti").persist()
-            clean.write.mode("overwrite").parquet(
-                os.path.join(out_path, f"batch={batch_id}"))
-            from ..fsutil import exists as _fs_exists, \
-                write_text as _fs_write
-            spark = batch.sparkSession
-            marker = os.path.join(index_path, f"_batch_{batch_id}")
-            if not _fs_exists(spark, marker):
-                ivf_append(spark, index_path, clean, id_col, vec_col,
-                           centroids=cached["cent"])
-                try:
-                    # Hadoop-FS write: works on object-store index paths
-                    _fs_write(spark, marker, "done")
-                except Exception:
-                    # best-effort replay marker — never kill the stream
-                    pass
-            stale = ivf_staleness(spark, index_path, retrain_factor,
-                                  built_rows=cached["built"])
-            if stale["needs_retrain"]:
-                logger.warning(
-                    "IVF index at %s has grown %.1fx past its training "
-                    "corpus (%d appended vs %d built) — rebuild the "
-                    "quantizer offline with ivf_build over the landed "
-                    "corpus", index_path, stale["append_ratio"],
-                    stale["appended_rows"], stale["built_rows"])
-            append_gate_stats(spark, out_path, batch_id,
-                              batch.count(), clean.count(), started)
-            clean.unpersist()
-        finally:
-            batch.unpersist()
+        if "cent" not in cached:
+            # only the centroid array and built_rows are immutable
+            # — caching a full ivf_load would pin a vectors frame
+            # that goes stale on the first append
+            cached["cent"] = ivf_load(
+                spark, index_path, id_col, vec_col).centroids
+            cached["built"] = spark.read.parquet(
+                f"{index_path}/meta").collect()[0]["built_rows"]
+        index = IvfIndex(
+            cached["cent"], spark.read.parquet(f"{index_path}/vectors"),
+            id_col, vec_col)
+        return drop_duplicates(batch, embedding_dedup_delta(
+            index, batch, threshold=threshold, n_probe=n_probe, k=k),
+            id_col)
 
-    writer = stream.writeStream.foreachBatch(gate).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    def fold(clean: DataFrame) -> None:
+        spark = clean.sparkSession
+        ivf_append(spark, index_path, clean, id_col, vec_col,
+                   centroids=cached["cent"])
+        stale = ivf_staleness(spark, index_path, retrain_factor,
+                              built_rows=cached["built"])
+        if stale["needs_retrain"]:
+            logger.warning(
+                "IVF index at %s has grown %.1fx past its training "
+                "corpus (%d appended vs %d built) — rebuild the "
+                "quantizer offline with ivf_build over the landed "
+                "corpus", index_path, stale["append_ratio"],
+                stale["appended_rows"], stale["built_rows"])
+
+    return run_gate(stream, out_path, checkpoint, available_now, select,
+                    fold, index_path)

@@ -43,6 +43,7 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from ._batch import start_foreach_batch
 from .stats import append_gate_stats
 
 __all__ = ["stream_heavy_hitters", "read_heavy_hitters"]
@@ -132,11 +133,8 @@ def stream_heavy_hitters(
         finally:
             partials.unpersist()
 
-    writer = stream.writeStream.foreachBatch(fold).option(
-        "checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, fold, checkpoint,
+                               available_now)
 
 
 def read_heavy_hitters(

@@ -38,6 +38,7 @@ from typing import Any, IO
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from .catalog import Catalog, StreamEntry, SyncMode
+from .confutil import MICROS_TIMESTAMPS, scoped_conf
 from .maps import StreamMapper
 from .singer_io import (render_column, singer_message, write_singer_files,
                         write_singer_stdout)
@@ -374,7 +375,7 @@ class Engine:
         if kind == "files":
             write_singer_files(df, stream_name, f"{path}/{stream_name}", mode)
         elif kind == "parquet":
-            out_df, ts_conf, sort_obs = df, None, None
+            out_df, sort_obs = df, None
             sort_by = sink.get("sort_by")
             if sort_by == "cursor":
                 sort_by = [cursor] if cursor else None
@@ -394,24 +395,12 @@ class Engine:
                 out_df = plain.repartitionByRange(
                     n, *[F.col(c) for c in sort_by]
                 ).sortWithinPartitions(*sort_by).observe(sort_obs, *observed)
-                ts_conf = spark.conf.get(
-                    "spark.sql.parquet.outputTimestampType", None)
-                spark.conf.set(
-                    "spark.sql.parquet.outputTimestampType",
-                    "TIMESTAMP_MICROS")
-            try:
-                w = out_df.write.mode(mode)
-                if sink.get("partition_by"):
-                    w = w.partitionBy(*sink["partition_by"])
+            w = out_df.write.mode(mode)
+            if sink.get("partition_by"):
+                w = w.partitionBy(*sink["partition_by"])
+            with scoped_conf(df.sparkSession,
+                             MICROS_TIMESTAMPS if sort_by else {}):
                 w.parquet(f"{path}/{stream_name}")
-            finally:
-                if sort_by:
-                    if ts_conf is not None:
-                        df.sparkSession.conf.set(
-                            "spark.sql.parquet.outputTimestampType", ts_conf)
-                    else:
-                        df.sparkSession.conf.unset(
-                            "spark.sql.parquet.outputTimestampType")
             if sort_obs is not None:
                 got = sort_obs.get
                 return int(got["n"]), got.get("cursor_max")

@@ -12,6 +12,9 @@ import pyarrow.parquet as pq
 import pytest
 from py4j.protocol import Py4JJavaError
 
+from pyspark.sql import functions as F
+
+from tap_airbyte_wrapper_spark.singer_io import render_column
 from tap_airbyte_wrapper_spark.sources import files
 from tap_airbyte_wrapper_spark.sources.files import load_parquet
 from tap_airbyte_wrapper_spark.sync import Engine
@@ -180,3 +183,35 @@ def test_files_sink_output_identical_to_inferred_schema(
         inferred = run(tmp_path / "inferred")
     assert {s for s, _ in footer} == set(TABLES)
     assert footer == inferred
+
+
+@pytest.mark.parametrize("zone", ["UTC", "Asia/Tokyo", "America/New_York"])
+def test_nanos_cursor_reads_bookmark_in_session_zone(spark, tmp_path, zone):
+    """A nanosecond-timestamp cursor reads its bookmark the way it was
+    rendered, in the session time zone: the rows after the median
+    row's bookmark are exactly the 499 that follow it.  The predicate
+    stays on the raw column in the scan's pushed filters, and planning
+    the read starts no Spark job."""
+    path = str(tmp_path / "ns.parquet")
+    start = 1_710_000_000 * 10**9          # 2024-03-09, spans a DST switch
+    pq.write_table(pa.table({
+        "id": pa.array(range(1000), pa.int64()),
+        "ts": pa.array([start + i * 3_700_000_000_123 for i in range(1000)],
+                       pa.timestamp("ns", tz="UTC")),
+    }), path)
+    key = "spark.sql.session.timeZone"
+    was = spark.conf.get(key)
+    spark.conf.set(key, zone)
+    try:
+        df = load_parquet(spark, path)
+        bookmark = df.filter("id = 500").select(
+            render_column(F.col("ts"), df.schema["ts"].dataType)).first()[0]
+        before = _job_ids(spark)
+        tail = load_parquet(spark, path, cursor_after=("ts", bookmark))
+        plan = tail._jdf.queryExecution().executedPlan().toString()
+        assert _job_ids(spark) - before == set()
+        assert "GreaterThan(ts," in plan
+        assert sorted(r.id for r in tail.select("id").collect()) == list(
+            range(501, 1000))
+    finally:
+        spark.conf.set(key, was)

@@ -862,3 +862,45 @@ def test_stream_embedding_drift_detects_shift(spark, tmp_path):
                 .collect() if r.n_batch == 80]
     assert len(combined) == 1
     assert combined[0].mmd2 == pytest.approx(1.0, abs=1e-5)
+
+
+def _cache_is_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("gate", ["quality", "exact_dedup"])
+def test_gate_failing_write_releases_batch_caches(spark, tmp_path, gate):
+    """A gate batch whose survivor write fails kills the query, and
+    neither the batch nor its survivors stay cached afterwards (both
+    are released in the gate skeleton's ``finally``)."""
+    from tap_airbyte_wrapper_spark.functions.dedup import (
+        fingerprint_index_write,
+    )
+    from tap_airbyte_wrapper_spark.streaming import (
+        stream_exact_dedup_gate,
+        stream_quality_gate,
+    )
+
+    schema = "doc_id long, text string"
+    src = tmp_path / "landing"
+    spark.createDataFrame(
+        [(1, "the quick brown fox " * 20), (2, "too short")], schema
+    ).coalesce(1).write.parquet(str(src))
+    stream = spark.readStream.schema(schema).parquet(str(src))
+    out = tmp_path / "clean"
+    out.write_text("a file where the batch directory must go")
+    ckpt = str(tmp_path / "ck")
+    spark.catalog.clearCache()
+    assert _cache_is_empty(spark)
+    if gate == "quality":
+        q = stream_quality_gate(stream, "doc_id", "text", str(out), ckpt)
+    else:
+        idx = str(tmp_path / "fpindex")
+        fingerprint_index_write(spark.createDataFrame([], schema), "gleak",
+                                idx, "doc_id", "text", n_buckets=2)
+        q = stream_exact_dedup_gate(stream, "doc_id", "text", "gleak", idx,
+                                    str(out), ckpt)
+    with pytest.raises(Exception):
+        q.awaitTermination(120)
+    assert q.exception() is not None
+    assert _cache_is_empty(spark)
