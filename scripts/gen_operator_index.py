@@ -54,7 +54,7 @@ SECTIONS = [
                               "streaming/stats.py",
                               "streaming/drift.py",
                               "streaming/index_maint.py"]),
-    ("Support", ["fsutil.py", "confutil.py"]),
+    ("Support", ["fsutil.py", "confutil.py", "casefold.py"]),
 ]
 
 

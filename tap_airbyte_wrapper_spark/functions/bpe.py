@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..casefold import lower
+
 __all__ = ["train_bpe", "bpe_segment"]
 
 _EOW = "</w>"
@@ -43,7 +45,7 @@ _EOW = "</w>"
 
 def _word_table(df: DataFrame, text_col: str) -> DataFrame:
     words = F.regexp_extract_all(
-        F.lower(F.trim(F.col(text_col))), F.lit(r"\S+"), 0)
+        lower(F.trim(F.col(text_col))), F.lit(r"\S+"), 0)
     return (
         df.select(F.explode(words).alias("word"))
         .groupBy("word").agg(F.count(F.lit(1)).alias("freq"))

@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..casefold import lower
+
 __all__ = [
     "pmi_collocations",
     "words",
@@ -70,7 +72,7 @@ def words(col: Column) -> Column:
     Mirrors the DuckDB oracle expression
     ``regexp_extract_all(lower(trim(text)), '\\S+')`` exactly.
     """
-    return F.regexp_extract_all(F.lower(F.trim(col)), F.lit(r"\S+"), 0)
+    return F.regexp_extract_all(lower(F.trim(col)), F.lit(r"\S+"), 0)
 
 
 def word_ngrams(ws: Column, n: int) -> Column:
@@ -1266,7 +1268,7 @@ def char_ngram_entropy(
     exchanges vanish from the plan).  Zero Python, no window, no
     all-pairs; cost stays linear in corpus grams.
     """
-    norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
+    norm = lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
     L = F.length(norm)
     grams = (
         df.select(F.col(id_col), norm.alias("__t"), L.alias("__l"))

@@ -29,7 +29,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
+from ..casefold import lower
 from ._cache import cache_bounded
+from .text import _let
 
 __all__ = [
     "simhash_index_write", "simhash_dedup_delta", "simhash_index_append",
@@ -68,7 +70,7 @@ __all__ = [
 
 def _norm_words(col: Column) -> Column:
     """Casefolded whitespace-split word array (one regexp pass)."""
-    return F.split(F.lower(F.trim(col)), r"\s+")
+    return F.split(lower(F.trim(col)), r"\s+")
 
 
 def shingles(col: Column, n: int = 3) -> Column:
@@ -80,17 +82,22 @@ def shingles(col: Column, n: int = 3) -> Column:
     per-element ops, ~5x faster than the transform-over-indices +
     per-shingle ``slice`` formulation (HOFs are interpreted, so the
     per-element work must be minimal)."""
-    words = _norm_words(col)
-    cnt = F.size(words)
-    acc = words
-    for k in range(1, n):
-        shifted = F.slice(words, k + 1, F.greatest(cnt - k, F.lit(0)))
-        # zip_with pads the shorter side with null; concat_ws skips nulls,
-        # so trailing partial shingles exist until the final slice drops them
-        acc = F.zip_with(acc, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    full = F.slice(acc, 1, F.greatest(cnt - (n - 1), F.lit(1)))
-    return F.when(cnt >= n, full).otherwise(
-        F.array(F.concat_ws(" ", words)))
+    def shingles_of(words):
+        cnt = F.size(words)
+        acc = words
+        for k in range(1, n):
+            shifted = F.slice(words, k + 1, F.greatest(cnt - k, F.lit(0)))
+            # zip_with pads the shorter side with null; concat_ws skips
+            # nulls, so trailing partial shingles exist until the final
+            # slice drops them
+            acc = F.zip_with(acc, shifted, lambda a, b: F.concat_ws(" ", a, b))
+        full = F.slice(acc, 1, F.greatest(cnt - (n - 1), F.lit(1)))
+        return F.when(cnt >= n, full).otherwise(
+            F.array(F.concat_ws(" ", words)))
+
+    # the word array is bound once per row: each zip_with would otherwise
+    # re-split (and re-fold) the text
+    return _let(_norm_words(col), shingles_of)
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -623,7 +630,10 @@ def simhash(col: Column, bits: int = 64) -> Column:
 
     Per token: xxhash64 -> for each bit position, +1/-1; accumulate over
     tokens with zip_with; pack sign bits.  All higher-order expressions."""
-    words = F.split(F.lower(F.trim(F.regexp_replace(col, r"\s+", " "))), " ")
+    # fold, then collapse whitespace (a case map never makes or removes
+    # whitespace): the higher-order functions below get no subexpression
+    # elimination, so the fold must not take the regex as its argument
+    words = F.split(F.trim(F.regexp_replace(lower(col), r"\s+", " ")), " ")
     zeros = F.array_repeat(F.lit(0), bits)
     # Hash each word ONCE (transform), then fold bit contributions over the
     # hash array — bit positions are unrolled Python-side (shift amounts

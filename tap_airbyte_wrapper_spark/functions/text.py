@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from ..casefold import lower, lower_ascii
+
 __all__ = [
     "phrase_hits", "phrase_blocklist_filter",
     "fold_confusables", "confusable_ratio", "CONFUSABLES",
@@ -62,9 +64,17 @@ LANG_MARKERS: dict[str, list[str]] = {
 }
 
 
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` computed once per row.  Higher-order
+    functions get no subexpression elimination: an expression named
+    inside a lambda, or as the input of several of them, is recomputed
+    each time.  Binding it to a lambda variable computes it once."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
 def _marker_hits(col: Column, words: list[str]) -> Column:
     pattern = r"\b(" + "|".join(words) + r")\b"
-    return F.size(F.regexp_extract_all(F.lower(col), F.lit(pattern), 1))
+    return F.size(F.regexp_extract_all(lower(col), F.lit(pattern), 1))
 
 
 def _all_marker_matches(col: Column) -> Column:
@@ -77,7 +87,7 @@ def _all_marker_matches(col: Column) -> Column:
     separate-scan counts."""
     all_words = sorted({w for ws in LANG_MARKERS.values() for w in ws})
     pattern = r"\b(" + "|".join(all_words) + r")\b"
-    return F.regexp_extract_all(F.lower(col), F.lit(pattern), 1)
+    return F.regexp_extract_all(lower(col), F.lit(pattern), 1)
 
 
 def token_count(col: Column) -> Column:
@@ -116,19 +126,22 @@ def language_id(col: Column) -> Column:
     is a whole \\b-delimited marker word, so per-language counts via set
     membership on the small match array are exactly the counts of four
     separate scans — at a quarter of the regex cost, which dominates)."""
-    matches = _all_marker_matches(col)
-    scores = [
-        (lang, F.size(F.filter(matches, lambda m: m.isin(words))))
-        for lang, words in sorted(LANG_MARKERS.items())
-    ]
-    best_score = scores[0][1]
-    for _, s in scores[1:]:
-        best_score = F.greatest(best_score, s)
-    out = F.lit("und")
-    # reversed so earlier (alphabetical) languages win ties
-    for lang, s in reversed(scores):
-        out = F.when((s == best_score) & (best_score > 0), F.lit(lang)).otherwise(out)
-    return out
+    langs = sorted(LANG_MARKERS)
+
+    def pick(counts):
+        best = F.array_max(counts)
+        out = F.lit("und")
+        # reversed so earlier (alphabetical) languages win ties
+        for i in reversed(range(len(langs))):
+            out = F.when((counts[i] == best) & (best > 0),
+                         F.lit(langs[i])).otherwise(out)
+        return out
+
+    # the scan and the four counts are each bound once per row: inside
+    # filter() they would otherwise be recomputed at every reference
+    return _let(_all_marker_matches(col), lambda matches: _let(F.array(*[
+        F.size(F.filter(matches, lambda m: m.isin(LANG_MARKERS[lang])))
+        for lang in langs]), pick))
 
 
 def quality_score(col: Column) -> Column:
@@ -165,7 +178,7 @@ def quality_score(col: Column) -> Column:
 def fingerprint(col: Column) -> Column:
     """Canonical document fingerprint: md5 of casefolded,
     whitespace-collapsed text — the exact-dedup key."""
-    return F.md5(F.lower(F.trim(F.regexp_replace(col, r"\s+", " "))))
+    return F.md5(lower(F.trim(F.regexp_replace(col, r"\s+", " "))))
 
 
 def minhash_fingerprints(col: Column, num_hashes: int = 16, shingle_len: int = 3) -> Column:
@@ -176,12 +189,19 @@ def minhash_fingerprints(col: Column, num_hashes: int = 16, shingle_len: int = 3
     md5 -> array_min.  md5-on-string min keeps it engine-portable; the
     xxhash64 fast path lives in functions/dedup.py.
     """
-    words = F.split(F.lower(F.trim(F.regexp_replace(col, r"\s+", " "))), " ")
-    n = F.size(words)
-    idx = F.sequence(F.lit(0), F.greatest(n - shingle_len, F.lit(0)))
-    shingles = F.when(n >= shingle_len, F.transform(
-        idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, shingle_len))
-    )).otherwise(F.array(F.concat_ws(" ", words)))
+    def shingles_of(words):
+        n = F.size(words)
+        idx = F.sequence(F.lit(0), F.greatest(n - shingle_len, F.lit(0)))
+        return F.when(n >= shingle_len, F.transform(
+            idx, lambda i: F.concat_ws(" ", F.slice(words, i + 1, shingle_len))
+        )).otherwise(F.array(F.concat_ws(" ", words)))
+
+    # fold the raw column, then collapse whitespace (a case map never
+    # makes or removes whitespace), so the fold names a column, not the
+    # regex.  The word array is bound once per row; named inside the
+    # transform lambda it would be re-split and re-folded per shingle.
+    shingles = _let(F.split(F.trim(F.regexp_replace(
+        lower(col), r"\s+", " ")), " "), shingles_of)
     # aggregate-over-shingles shape: shingle array evaluated once per row
     # (see functions/dedup.py minhash_signature).  "g" sorts after every
     # md5 hex digit, so it is a safe string +infinity.
@@ -420,8 +440,9 @@ def canonical_url(col: Column) -> Column:
     through trimmed, so the column is safe to run over dirty data.
     """
     u = F.regexp_replace(F.trim(col), r"#.*$", "")
-    scheme = F.lower(F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    host = F.lower(
+    scheme = lower_ascii(
+        F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
+    host = lower(
         F.regexp_extract(u, r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1))
     host = F.when(
         (scheme == "http") & host.endswith(":80"),
@@ -530,7 +551,7 @@ def gopher_rules(col: Column) -> Column:
 
     stop_pat = r"\b(" + "|".join(GOPHER_STOPWORDS) + r")\b"
     n_stop = F.size(F.array_distinct(
-        F.regexp_extract_all(F.lower(col), F.lit(stop_pat), 1)))
+        F.regexp_extract_all(lower(col), F.lit(stop_pat), 1)))
 
     words_ok = (n_words >= 50) & (n_words <= 100000)
     mean_word_ok = (n_words > 0) & (mean_word >= 3) & (mean_word <= 10)
@@ -582,13 +603,13 @@ def c4_clean(col: Column, min_line_words: int = 3,
         F.transform(F.split(col, "\n"), lambda l: F.trim(l)),
         lambda l: l.rlike(r'[.!?"]$')
         & (F.size(F.regexp_extract_all(l, F.lit(r"\S+"), 0)) >= min_line_words)
-        & ~F.lower(l).contains("javascript"),
+        & ~lower(l).contains("javascript"),
     )
     clean = F.array_join(kept, "\n")
     n_sent = F.size(F.regexp_extract_all(clean, F.lit(r"[.!?]"), 0))
     dropped = (
         col.contains("{")
-        | F.lower(col).contains("lorem ipsum")
+        | lower(col).contains("lorem ipsum")
         | (n_sent < min_sentences)
     )
     return F.struct(
@@ -608,7 +629,7 @@ def url_host(col: Column) -> Column:
     ``https://x@blocked.com/`` or ``https://blocked.com./`` would parse
     to a host that never suffix-matches ``blocked.com`` and a
     safety gate would fail OPEN."""
-    host = F.lower(
+    host = lower(
         F.regexp_extract(F.trim(col),
                          r"^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]*)", 1))
     # greedy: the host is everything after the LAST '@' (browser
@@ -677,7 +698,10 @@ def domain_filter(
         host = F.col(host_out)
     if not blocked:
         return df if mode == "block" else df.filter(F.lit(False))
-    hit = F.exists(parent_domains(host), lambda s: s.isin(*blocked))
+    # bind the host once per row: parent_domains names it several times,
+    # and no subexpression elimination runs inside higher-order functions
+    hit = F.exists(F.array(host), lambda h: F.exists(
+        parent_domains(h), lambda s: s.isin(*blocked)))
     return df.filter(~hit if mode == "block" else hit)
 
 
@@ -995,7 +1019,7 @@ def flesch_reading_ease(col: Column) -> Column:
     sentences = F.greatest(
         F.size(F.regexp_extract_all(col, F.lit(r"[.!?]+"), 0)), F.lit(1))
     vowel_groups = F.size(
-        F.regexp_extract_all(F.lower(col), F.lit(r"[aeiouy]+"), 0))
+        F.regexp_extract_all(lower(col), F.lit(r"[aeiouy]+"), 0))
     syllables = F.greatest(vowel_groups, words_n)
     return F.when(
         words_n > 0,
@@ -1037,8 +1061,8 @@ def detect_license(col: Column) -> Column:
     2-clause because its text is a superset).  Pure Catalyst regexes —
     RE2-portable, reproduced verbatim in the SQL oracle."""
     spdx = F.regexp_extract(col, _SPDX_RE, 1)
-    out = F.when(spdx != "", F.lower(spdx))
-    low = F.lower(col)
+    out = F.when(spdx != "", lower_ascii(spdx))
+    low = lower(col)
     for lic, pat in _LICENSE_PATTERNS:
         out = out.when(low.rlike(pat), F.lit(lic))
     return out.otherwise(F.lit(None).cast("string"))

@@ -25,6 +25,7 @@ from ..operators.tails import lgamma_sql as _lgamma_sql
 from ..operators.tails import ptukey_node_columns as _ptukey_nodes
 from ..operators.tails import ptukey_sql as _ptukey_sql
 
+from ..casefold import lower
 from ..functions import (
     bpe_token_estimate,
     connected_components,
@@ -1163,14 +1164,23 @@ def q_doc_word_stats(spark, sf_dir):
     """Higher-order array functions end-to-end (transform/filter/
     aggregate/array_distinct) — the scalar-function surface of §2.3 in
     one narrow, shuffle-free projection."""
-    words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    word_lens = F.transform(words, lambda w: F.length(w))
-    return _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.size(F.array_distinct(words)).alias("n_distinct_words"),
-        F.size(F.filter(words, lambda w: F.length(w) > 4)).alias("n_long_words"),
-        F.aggregate(word_lens, F.lit(0), lambda a, x: a + x).alias("sum_word_len"),
-        F.array_max(word_lens).alias("max_word_len"),
+    # words and word_lens are columns of their own projections: named in
+    # several higher-order functions of one projection they would be
+    # recomputed by each (CollapseProject keeps the projections apart)
+    words, word_lens = F.col("words"), F.col("word_lens")
+    return (
+        _t(spark, sf_dir, "documents")
+        .withColumn("words", F.split(lower(F.trim(F.col("text"))), r"\s+"))
+        .withColumn("word_lens", F.transform(words, lambda w: F.length(w)))
+        .select(
+            "doc_id",
+            F.size(F.array_distinct(words)).alias("n_distinct_words"),
+            F.size(F.filter(words, lambda w: F.length(w) > 4)
+                   ).alias("n_long_words"),
+            F.aggregate(word_lens, F.lit(0), lambda a, x: a + x
+                        ).alias("sum_word_len"),
+            F.array_max(word_lens).alias("max_word_len"),
+        )
     )
 
 

@@ -40,6 +40,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ..casefold import lower
 from ..catalog import Catalog, StreamEntry, SyncMode
 from .base import Source, SourceError, register
 
@@ -58,7 +59,7 @@ def normalize_changes(df: DataFrame, op_col: str = "_op",
     ``_op == "delete"``, and ``cursor_col`` (if given) is cast to long.
     The one op normalization of the batch source, the streaming CDC
     apply and the streaming index maintenance."""
-    op = F.lower(F.col(op_col))
+    op = lower(F.col(op_col))
     norm = F.element_at(
         F.create_map(*[F.lit(x) for kv in _OP_ALIASES.items() for x in kv]),
         op)

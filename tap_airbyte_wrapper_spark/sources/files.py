@@ -31,6 +31,7 @@ try:
 except ImportError:  # pragma: no cover - pyarrow ships in this env
     _pq = None
 
+from ..casefold import lower
 from ..catalog import Catalog, StreamEntry, SyncMode
 from ..confutil import scoped_conf
 from .base import Source, SourceError, register
@@ -563,7 +564,7 @@ class BinaryFileSource(Source):
         if self.config.get("glob"):
             reader = reader.option("pathGlobFilter", self.config["glob"])
         df = reader.load(self.config["path"])
-        ext = F.lower(F.element_at(F.split(F.col("path"), r"\."), -1))
+        ext = lower(F.element_at(F.split(F.col("path"), r"\."), -1))
         mtype = F.lit("application/octet-stream")
         for e, t in self._EXT_TYPES.items():
             mtype = F.when(ext == e, F.lit(t)).otherwise(mtype)
