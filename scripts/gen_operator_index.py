@@ -30,6 +30,7 @@ SECTIONS = [
     ("LLM-pipeline functions", ["functions/text.py", "functions/dedup.py",
                                 "functions/similarity.py",
                                 "functions/retrieval.py",
+                                "functions/index_store.py",
                                 "functions/projection.py",
                                 "functions/classifier.py",
                                 "functions/lm.py",

@@ -1,25 +1,12 @@
-"""Shared tombstone maintenance for the persisted-index family.
+"""Tombstone primitives of the persisted indexes: ``__ver`` stamping,
+the live-row filter and the tombstone side table.
 
-All four index families (BM25 postings, MinHash postings+sigs, exact
-fingerprints, IVF cell-partitioned vectors) are append-optimized: their
-O(delta) folds assume delta ids are not already live.  Real standing
-corpora get re-crawled and edited, so each family needs a delete /
-replace path that does NOT cost a full rebuild.  The shared scheme:
-
-* every stored row carries ``__ver`` — the number of times its id had
-  been deleted when the row was written (0 at build time);
-* a delete appends one row per id to a tombstone side table — O(delete
-  batch), no data files touched;
-* a row is LIVE iff ``__ver == tombstone_count(id)`` — a delete bumps
-  the count past every stored row; a replace re-appends rows stamped
-  with the new count;
-* compaction folds: only live rows are rewritten, re-versioned to 0,
-  and the destination starts with no tombstones.
-
-The tombstone table is delete-batch-sized (one row per delete event),
-so its per-id count aggregate broadcasts everywhere and the liveness
-filter never disturbs the bucketed/cell-partitioned layout the indexes
-exist to preserve.
+The index contract they implement — a row is live iff its ``__ver``
+equals its id's tombstone count — is stated once, in
+:mod:`.index_store`, which runs the catalog-table lifecycle of the six
+bucketed index families on top of these helpers.  The IVF vector index
+(``similarity``) uses ``stamp_version`` and ``live_rows`` directly over
+its cell-partitioned directory layout.
 """
 
 from __future__ import annotations
@@ -28,8 +15,8 @@ from pyspark.sql import DataFrame, functions as F
 
 
 def tombstone_counts_table(spark, table_name: str, id_col: str):
-    """(id, __tombs) for a catalog-table-backed index (BM25 / MinHash /
-    fingerprint), or None when nothing was ever deleted."""
+    """(id, __tombs) for a catalog-table-backed index, or None when
+    nothing was ever deleted."""
     if not spark.catalog.tableExists(f"{table_name}_tombstones"):
         return None
     return (spark.table(f"{table_name}_tombstones")

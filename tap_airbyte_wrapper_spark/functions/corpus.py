@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from ..casefold import lower
+from . import index_store as store
 
 __all__ = [
     "pmi_collocations",
@@ -52,8 +53,6 @@ __all__ = [
     "novelty_index_write",
     "novelty_probe",
     "novelty_index_append",
-    "novelty_index_delete",
-    "novelty_index_compact",
     "corpus_diff",
     "dataset_card",
     "dup_span_stats",
@@ -754,6 +753,7 @@ def corpus_diff(
 # Persisted novelty (reference-gram) index — the cross-corpus member of the
 # persisted-index family: probe any delta batch's n-gram novelty against
 # everything landed so far at O(delta), never rescanning the corpus.
+# Lifecycle, liveness and compaction: ``index_store``.
 # ---------------------------------------------------------------------------
 
 def novelty_index_write(
@@ -767,47 +767,32 @@ def novelty_index_write(
 ) -> None:
     """Persist the reference corpus's gram POSTING pairs as a bucketed
     ``(gram_h, owner)`` table — one row per (distinct gram, contributing
-    doc) — + ``_index_meta.json`` recording ``n``.  Delta probes shuffle
-    only the delta's grams into this bucketing — the corpus side is a
+    doc) — with ``n`` recorded in the meta.  Delta probes shuffle only
+    the delta's grams into this bucketing — the corpus side is a
     bucket-co-located scan, the same zero-corpus-shuffle contract as
     the MinHash/fingerprint/BM25 indexes.
 
-    The owner column is the gram's exact contributor set (round 8
-    recorded only the MIN owner), which buys two things:
+    The owner column is the gram's exact contributor set, which buys
+    two things:
 
     * **replay safety is exact**: :func:`novelty_probe` counts a gram
-      as SEEN only when some contributor OUTSIDE the probing batch
-      holds it — with full postings this is precise, where the
-      min-owner scheme mis-scored grams whose min owner was in-batch
-      but that other docs also held;
-    * **per-doc deletion is expressible** (round-8 verdict "What's
-      missing #3" — right-to-be-forgotten on the memorization-audit
-      use): :func:`novelty_index_delete` appends removed ids to a side
-      list at O(delete batch); a gram dies exactly when ALL its
-      contributors are removed, with no rebuild.  Postings cost
+      as SEEN only when some live contributor OUTSIDE the probing batch
+      holds it;
+    * **per-doc deletion is expressible** (right-to-be-forgotten on the
+      memorization-audit use): ``index_delete`` tombstones owners at
+      O(delete batch), and a gram dies exactly when ALL its
+      contributors are deleted, with no rebuild.  Postings cost
       corpus-token-linear storage (the BM25-postings scale) instead of
       distinct-gram storage — the price of an exact owner set.
 
     Appends stay O(delta) and write-only (:func:`novelty_index_append`
     inserts the delta's pairs without reading the corpus table);
     replayed appends may duplicate rows, which probes are insensitive
-    to (``distinct`` on the bucket key, co-located) and
-    :func:`novelty_index_compact` folds away."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import write_text as _write_text
-
-    spark = df.sparkSession
-    grams = _novelty_pairs(df, n, id_col, text_col)
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}_grams")
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}_removed")
-    (grams.write.bucketBy(n_buckets, "gram_h").sortBy("gram_h")
-        .option("path", _os.path.join(path, "grams"))
-        .mode("overwrite").saveAsTable(f"{table_name}_grams"))
-    _write_text(spark, _os.path.join(path, "_index_meta.json"),
-                _json.dumps({"n": n, "n_buckets": n_buckets,
-                             "id_col": id_col}))
+    to (``distinct`` on the bucket key, co-located) and compaction
+    folds away."""
+    store.build(df.sparkSession, "novelty", table_name, path,
+                {"grams": _novelty_pairs(df, n, id_col, text_col)},
+                {"n": n, "n_buckets": n_buckets, "id_col": id_col})
 
 
 def _novelty_pairs(df, n, id_col, text_col):
@@ -822,13 +807,6 @@ def _novelty_pairs(df, n, id_col, text_col):
     ).select("gram_h", "owner")
 
 
-def _novelty_removed(spark, table_name: str):
-    """Removed-owner id frame for a novelty index, or None."""
-    if not spark.catalog.tableExists(f"{table_name}_removed"):
-        return None
-    return spark.table(f"{table_name}_removed").distinct()
-
-
 def novelty_probe(
     batch: DataFrame,
     table_name: str,
@@ -839,27 +817,15 @@ def novelty_probe(
     """Per-doc novelty of a delta batch against the persisted gram
     index: ``(id, n_grams, n_seen, novelty)`` — the incremental form
     of :func:`ngram_novelty` (same output contract), at O(delta) cost.
-    A gram counts as seen only when some contributor OUTSIDE the batch
-    (and outside the removed-doc list, see
-    :func:`novelty_index_delete`) holds it — exact under the posting
-    schema; both exclusion lists broadcast, the gram distinct runs on
-    the bucket key co-located."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import read_text as _read_text
-
+    A gram counts as seen only when some live contributor OUTSIDE the
+    batch holds it — exact under the posting schema; the in-batch
+    owner list and the tombstone counts broadcast, the gram distinct
+    runs on the bucket key co-located."""
     spark = batch.sparkSession
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(path, "_index_meta.json")))
-    n = meta["n"]
+    n = store.read_meta(spark, path)["n"]
     excluded = batch.select(F.col(id_col).alias("owner")).distinct()
-    removed = _novelty_removed(spark, table_name)
-    if removed is not None:
-        excluded = excluded.unionByName(
-            removed.select(F.col(removed.columns[0]).alias("owner")))
     seen = (
-        spark.table(f"{table_name}_grams")
+        store.live(spark, "novelty", table_name, "grams")
         .join(F.broadcast(excluded), "owner", "left_anti")
         .select("gram_h").distinct()
         .withColumn("__hit", F.lit(1))
@@ -890,90 +856,18 @@ def novelty_index_append(
     text_col: str = "text",
 ) -> None:
     """Fold a delta's posting pairs into the index at O(delta), WRITE
-    ONLY — the corpus table is never read (round 8's new-gram anti-join
-    is gone: under the posting schema a delta doc's pair must land even
-    when the gram already exists, or deleting the original contributor
-    would kill a gram this doc still holds).  Replayed appends
-    duplicate rows harmlessly: probes are distinct-on-bucket-key and
-    :func:`novelty_index_compact` folds duplicates away — semantic
-    convergence, not storage idempotence."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import read_text as _read_text
-
+    ONLY — the corpus table is never read: under the posting schema a
+    delta doc's pair must land even when the gram already exists, or
+    deleting the original contributor would kill a gram this doc still
+    holds.  A deleted owner revives here.  Replayed appends duplicate
+    rows harmlessly: probes are distinct-on-bucket-key and compaction
+    folds duplicates away — semantic convergence, not storage
+    idempotence."""
     spark = delta.sparkSession
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(path, "_index_meta.json")))
-    _novelty_pairs(delta, meta["n"], id_col, text_col) \
-        .write.mode("append").insertInto(f"{table_name}_grams")
-
-
-def novelty_index_delete(
-    ids: DataFrame,
-    table_name: str,
-    path: str,
-    id_col: str = "doc_id",
-) -> None:
-    """Remove reference documents from a novelty index at O(delete
-    batch) — the takedown / right-to-be-forgotten path the round-8
-    min-owner schema could not express without a rebuild.  Appends the
-    ids to a ``{table}_removed`` side list; a gram stops counting as
-    seen exactly when ALL of its contributors are removed (the probe's
-    broadcast anti-join covers removed ∪ in-batch owners).  Re-adding
-    a removed id requires :func:`novelty_index_compact` first (the
-    removed list is a set, matching the other families' one-way
-    tombstone-until-compact contract)."""
-    import os as _os
-
-    spark = ids.sparkSession
-    if id_col in ids.columns:
-        src = id_col
-    elif len(ids.columns) == 1:
-        src = ids.columns[0]
-    else:
-        raise ValueError(
-            f"ids frame has columns {ids.columns} but none is {id_col!r}")
-    rows = ids.select(F.col(src).alias(id_col)).distinct()
-    if spark.catalog.tableExists(f"{table_name}_removed"):
-        rows.write.mode("append").insertInto(f"{table_name}_removed")
-    else:
-        (rows.write.option("path", _os.path.join(path, "removed"))
-             .saveAsTable(f"{table_name}_removed"))
-
-
-def novelty_index_compact(
-    spark,
-    src_table: str,
-    src_path: str,
-    dst_table: str,
-    dst_path: str,
-) -> None:
-    """Fold a novelty index: live posting pairs (removed contributors
-    dropped, replay-duplicated rows deduped) rewrite into a fresh
-    bucketed table with an empty removed list.  The dedup/anti-join
-    both run on the bucket key, co-located."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import read_text as _read_text, write_text as _write_text
-
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(src_path, "_index_meta.json")))
-    live = spark.table(f"{src_table}_grams").distinct()
-    removed = _novelty_removed(spark, src_table)
-    if removed is not None:
-        removed = removed.select(
-            F.col(removed.columns[0]).alias("owner"))
-        live = live.join(F.broadcast(removed), "owner", "left_anti")
-    spark.sql(f"DROP TABLE IF EXISTS {dst_table}_grams")
-    spark.sql(f"DROP TABLE IF EXISTS {dst_table}_removed")
-    (live.select("gram_h", "owner")
-         .write.bucketBy(meta["n_buckets"], "gram_h").sortBy("gram_h")
-         .option("path", _os.path.join(dst_path, "grams"))
-         .mode("overwrite").saveAsTable(f"{dst_table}_grams"))
-    _write_text(spark, _os.path.join(dst_path, "_index_meta.json"),
-                _json.dumps(meta))
+    meta = store.read_meta(spark, path)
+    store.append(spark, table_name, meta, id_col,
+                 {"grams": _novelty_pairs(delta, meta["n"], id_col,
+                                          text_col)})
 
 
 def dup_span_stats(

@@ -30,13 +30,13 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..casefold import lower
+from . import index_store as store
 from ._cache import cache_bounded
 from .text import _let
 
 __all__ = [
     "simhash_index_write", "simhash_dedup_delta", "simhash_index_append",
-    "simhash_index_delete", "simhash_index_replace", "simhash_index_compact",
-    
+    "simhash_index_replace",
     "shingles",
     "exact_dedup",
     "soft_dedup_weights",
@@ -57,14 +57,11 @@ __all__ = [
     "minhash_verified_pairs",
     "simhash_verified_pairs",
     "minhash_index_write",
-    "minhash_index_delete",
     "minhash_index_replace",
-    "fingerprint_index_delete",
     "containment_prefix_candidates",
     "lsh_plan",
     "minhash_index_append",
     "minhash_dedup_delta",
-    "minhash_index_compact",
 ]
 
 
@@ -1406,6 +1403,16 @@ def _posting_key() -> Column:
     return F.xxhash64(F.col("band"), F.col("band_hash"))
 
 
+def _minhash_postings(sigs: DataFrame, id_col: str) -> DataFrame:
+    """``(id, bkey)`` band-bucket postings of a signature frame."""
+    return (
+        sigs.select(
+            F.col(id_col),
+            F.posexplode("band_hashes").alias("band", "band_hash"))
+        .select(F.col(id_col), _posting_key().alias("bkey"))
+    )
+
+
 def minhash_index_write(
     df: DataFrame,
     id_col: str,
@@ -1418,7 +1425,8 @@ def minhash_index_write(
     n_buckets: int = 32,
 ) -> None:
     """Persist the corpus MinHash-LSH index as BUCKETED tables so later
-    delta batches dedup against the corpus without ever reshuffling it:
+    delta batches dedup against the corpus without ever reshuffling it
+    (lifecycle and liveness: ``index_store``):
 
     * ``{table_name}_postings`` (bkey, id) — bucketed+sorted by the
       band-bucket key.  A delta's postings (small) shuffle into the
@@ -1426,9 +1434,9 @@ def minhash_index_write(
     * ``{table_name}_sigs`` (id, sig) — bucketed by id, so candidate
       verification fetches corpus signatures without a corpus shuffle
       either.
-    * ``{path}/_index_meta.json`` — the sketch parameters, read back by
-      :func:`minhash_dedup_delta` so delta signatures are computed with
-      the exact same (num_hashes, shingle_len, bands).
+    * the meta records (num_hashes, shingle_len, bands), so
+      :func:`minhash_dedup_delta` computes delta signatures with the
+      exact same sketch.
 
     This is the 100 TB production shape: the O(corpus) signature +
     bucketing cost is paid ONCE at index build (or maintained
@@ -1436,41 +1444,17 @@ def minhash_index_write(
     O(delta) + a co-located join — not a fresh corpus-wide pair
     generation per batch.
     """
-    import json as _json
-    import os as _os
-
-    spark = df.sparkSession
     sigs = minhash_signatures_df(
         df, id_col, text_col, num_hashes, shingle_len, bands=bands).persist()
-    postings = (
-        sigs.select(
-            F.col(id_col),
-            F.posexplode("band_hashes").alias("band", "band_hash"))
-        .select(F.col(id_col), _posting_key().alias("bkey"))
-    )
-    ver0 = F.lit(0).cast("long")
     try:
-        spark.sql(f"DROP TABLE IF EXISTS {table_name}_postings")
-        spark.sql(f"DROP TABLE IF EXISTS {table_name}_sigs")
-        spark.sql(f"DROP TABLE IF EXISTS {table_name}_tombstones")
-        (postings.withColumn("__ver", ver0)
-            .write.bucketBy(n_buckets, "bkey").sortBy("bkey")
-            .option("path", _os.path.join(path, "postings"))
-            .mode("overwrite").saveAsTable(f"{table_name}_postings"))
-        (sigs.select(id_col, "sig").withColumn("__ver", ver0)
-            .write.bucketBy(n_buckets, id_col).sortBy(id_col)
-            .option("path", _os.path.join(path, "sigs"))
-            .mode("overwrite").saveAsTable(f"{table_name}_sigs"))
+        store.build(df.sparkSession, "minhash", table_name, path,
+                    {"postings": _minhash_postings(sigs, id_col),
+                     "sigs": sigs.select(id_col, "sig")},
+                    {"id_col": id_col, "num_hashes": num_hashes,
+                     "shingle_len": shingle_len, "bands": bands,
+                     "n_buckets": n_buckets})
     finally:
         sigs.unpersist()
-    from ..fsutil import write_text as _write_text
-
-    # Hadoop-FS write: the index path may live on an object store
-    _write_text(spark, _os.path.join(path, "_index_meta.json"), _json.dumps({
-        "id_col": id_col, "num_hashes": num_hashes,
-        "shingle_len": shingle_len, "bands": bands,
-        "n_buckets": n_buckets,
-    }))
 
 
 def minhash_index_append(
@@ -1480,78 +1464,24 @@ def minhash_index_append(
     id_col: str,
     text_col: str,
 ) -> None:
-    """Fold a delta batch INTO the persisted index — the maintenance
-    half the index-build docstring promises: signatures/postings are
-    computed with the index's own recorded parameters and APPENDED to
-    the bucketed tables (same bucket spec, so the zero-corpus-shuffle
-    join property of :func:`minhash_dedup_delta` survives; appends add
-    files per bucket, so run :func:`minhash_index_compact` — NOT the
-    flat ``compact_parquet``, which would drop the bucket metadata —
-    when batch count grows).  Cost is O(delta) — the corpus is never
-    read.  Caller contract: ids must not be LIVE (dedup the delta
-    against the index FIRST; a previously :func:`minhash_index_delete`-d
-    id revives at its new content — re-crawls go through
-    :func:`minhash_index_replace`).
-    """
-    import json as _json
-    import os as _os
-
-    from ..fsutil import read_text as _read_text
-    from ._maint import stamp_version, tombstone_counts_table
-
+    """Fold a delta batch INTO the persisted index at O(delta):
+    signatures/postings are computed with the index's own recorded
+    parameters and appended under the store's append contract (dedup
+    the delta against the index FIRST; re-crawls go through
+    :func:`minhash_index_replace`).  Appends add files per bucket, so
+    run ``index_compact`` — NOT the flat ``compact_parquet``, which
+    would drop the bucket metadata — when batch count grows."""
     spark = delta.sparkSession
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(path, "_index_meta.json")))
-    if meta["id_col"] != id_col:
-        raise ValueError(
-            f"index was built on id column {meta['id_col']!r}, got {id_col!r}")
-    tombs = tombstone_counts_table(spark, table_name, id_col)
+    meta = store.read_meta(spark, path)
     sigs = minhash_signatures_df(
         delta, id_col, text_col, meta["num_hashes"], meta["shingle_len"],
         bands=meta["bands"]).persist()
-    postings = (
-        sigs.select(
-            F.col(id_col),
-            F.posexplode("band_hashes").alias("band", "band_hash"))
-        .select(F.col(id_col), _posting_key().alias("bkey"))
-    )
-    n_buckets = meta["n_buckets"]
     try:
-        (stamp_version(postings, tombs, id_col)
-            .select(id_col, "bkey", "__ver")
-            .write.bucketBy(n_buckets, "bkey").sortBy("bkey")
-            .option("path", _os.path.join(path, "postings"))
-            .mode("append").saveAsTable(f"{table_name}_postings"))
-        (stamp_version(sigs.select(id_col, "sig"), tombs, id_col)
-            .select(id_col, "sig", "__ver")
-            .write.bucketBy(n_buckets, id_col).sortBy(id_col)
-            .option("path", _os.path.join(path, "sigs"))
-            .mode("append").saveAsTable(f"{table_name}_sigs"))
+        store.append(spark, table_name, meta, id_col,
+                     {"postings": _minhash_postings(sigs, id_col),
+                      "sigs": sigs.select(id_col, "sig")})
     finally:
         sigs.unpersist()
-
-
-def minhash_index_delete(
-    spark,
-    table_name: str,
-    path: str,
-    ids: DataFrame,
-) -> None:
-    """Delete documents from the persisted MinHash index at O(delete
-    batch): tombstone rows append to the ``_tombstones`` side table and
-    every reader (:func:`minhash_dedup_delta`, compaction) filters to
-    live versions — see ``_maint`` for the scheme.  Without this, a
-    removed doc's postings keep matching future deltas and its near-dups
-    are dropped against a ghost."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import read_text as _read_text
-    from ._maint import record_tombstones_table
-
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(path, "_index_meta.json")))
-    record_tombstones_table(spark, table_name, path, ids, meta["id_col"])
 
 
 def minhash_index_replace(
@@ -1565,87 +1495,9 @@ def minhash_index_replace(
     ids, then append their new signatures/postings at the bumped
     version.  Probes and search behave as if the index were rebuilt
     from scratch on the edited corpus (pinned by test)."""
-    spark = delta.sparkSession
-    minhash_index_delete(spark, table_name, path,
-                         delta.select(id_col).distinct())
+    store.index_delete(delta.sparkSession, table_name, path,
+                       delta.select(id_col).distinct())
     minhash_index_append(delta, table_name, path, id_col, text_col)
-
-
-def minhash_index_compact(
-    spark,
-    table_name: str,
-    path: str,
-    dst_table: str,
-    dst_path: str,
-) -> dict:
-    """LAYOUT-PRESERVING compaction of a persisted MinHash index: each
-    :func:`minhash_index_append` adds one file per touched bucket, so a
-    long-running streaming gate accumulates files and the co-located
-    delta join pays per-file open/footer cost.  A plain
-    ``compact_parquet`` rewrite would FIX the file count but DESTROY
-    the bucket metadata (the rewrite is not ``bucketBy``), silently
-    re-introducing the corpus-side shuffle the index exists to avoid —
-    so this compactor re-reads the postings/sigs TABLES with the
-    BUCKETED scan forced on (``autoBucketedScan`` off: the planner
-    otherwise reads file splits while still reporting the bucket
-    partitioning, which both misaligns the write and lets it drop an
-    explicit repartition as "redundant") and rewrites with the SAME
-    bucket spec.  One task per bucket in, one file per bucket out,
-    and — because scan partitioning equals write partitioning — ZERO
-    shuffle: compaction is a narrow per-bucket concatenation.  Same
-    crash-safety contract as ``compact_parquet``: the write goes to a
-    NEW table/path; callers swap by probing the new name afterwards.
-
-    Returns ``{"files_in", "files_out"}`` (parquet data files across
-    both tables)."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import copy_text as _copy_text, read_text as _read_text
-
-    if _os.path.abspath(path) == _os.path.abspath(dst_path):
-        raise ValueError("minhash_index_compact writes to a NEW path")
-    if dst_table.casefold() == table_name.casefold():
-        # The DROPs below would destroy the live index's catalog
-        # entries before the source tables are even read.  Spark SQL
-        # resolves table names case-insensitively, so compare folded.
-        raise ValueError("minhash_index_compact writes to a NEW table "
-                         "name (dst_table must differ from table_name)")
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(path, "_index_meta.json")))
-    n_buckets, id_col = meta["n_buckets"], meta["id_col"]
-
-    from ..fsutil import count_parquet_files as _nfiles
-
-    from ._maint import live_rows, tombstone_counts_table
-
-    files_in = _nfiles(path, spark)
-    spark.sql(f"DROP TABLE IF EXISTS {dst_table}_postings")
-    spark.sql(f"DROP TABLE IF EXISTS {dst_table}_sigs")
-    spark.sql(f"DROP TABLE IF EXISTS {dst_table}_tombstones")
-    tombs = tombstone_counts_table(spark, table_name, id_col)
-    conf_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    old = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "false")
-    try:
-        # tombstones FOLD here (live rows only, versions reset, no dst
-        # tombstone table) — the liveness filter is a broadcast join,
-        # so the per-bucket narrow rewrite survives
-        (live_rows(spark.table(f"{table_name}_postings"), tombs, id_col)
-            .withColumn("__ver", F.lit(0).cast("long"))
-            .write.bucketBy(n_buckets, "bkey").sortBy("bkey")
-            .option("path", _os.path.join(dst_path, "postings"))
-            .mode("overwrite").saveAsTable(f"{dst_table}_postings"))
-        (live_rows(spark.table(f"{table_name}_sigs"), tombs, id_col)
-            .withColumn("__ver", F.lit(0).cast("long"))
-            .write.bucketBy(n_buckets, id_col).sortBy(id_col)
-            .option("path", _os.path.join(dst_path, "sigs"))
-            .mode("overwrite").saveAsTable(f"{dst_table}_sigs"))
-    finally:
-        spark.conf.set(conf_key, old)
-    _copy_text(spark, _os.path.join(path, "_index_meta.json"),
-               _os.path.join(dst_path, "_index_meta.json"))
-    return {"files_in": files_in, "files_out": _nfiles(dst_path, spark)}
 
 
 def minhash_dedup_delta(
@@ -1672,14 +1524,8 @@ def minhash_dedup_delta(
     the delta's own signatures broadcast.  Nothing anywhere costs
     O(corpus) compute or shuffle.
     """
-    import json as _json
-    import os as _os
-
     spark = delta.sparkSession
-    from ..fsutil import read_text as _read_text
-
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(path, "_index_meta.json")))
+    meta = store.read_meta(spark, path)
 
     # eager localCheckpoint, not persist(): the signature pass feeds
     # two branches (postings + broadcast sigs) so it must materialize,
@@ -1689,18 +1535,10 @@ def minhash_dedup_delta(
     dsigs = minhash_signatures_df(
         delta, id_col, text_col, meta["num_hashes"], meta["shingle_len"],
         bands=meta["bands"]).localCheckpoint(eager=True)
-    dpost = (
-        dsigs.select(
-            F.col(id_col).alias("__did"),
-            F.posexplode("band_hashes").alias("band", "band_hash"))
-        .select(F.col("__did"), _posting_key().alias("bkey"))
-    )
-
-    from ._maint import live_rows, tombstone_counts_table
-
-    tombs = tombstone_counts_table(spark, table_name, meta["id_col"])
-    cpost = live_rows(spark.table(f"{table_name}_postings"), tombs,
-                      meta["id_col"]) \
+    dpost = _minhash_postings(dsigs, id_col) \
+        .withColumnRenamed(id_col, "__did")
+    cpost = store.live(spark, "minhash", table_name, "postings",
+                       meta["id_col"]) \
         .withColumnRenamed(meta["id_col"], "__cid")
     cand_x = (
         dpost.join(cpost, on="bkey")
@@ -1716,8 +1554,8 @@ def minhash_dedup_delta(
 
     d_sig = F.broadcast(
         dsigs.select(F.col(id_col).alias("__did"), F.col("sig").alias("__dsig")))
-    csigs = live_rows(spark.table(f"{table_name}_sigs"), tombs,
-                      meta["id_col"]).select(
+    csigs = store.live(spark, "minhash", table_name, "sigs",
+                       meta["id_col"]).select(
         F.col(meta["id_col"]).alias("__cid"), F.col("sig").alias("__csig"))
     est_x = (
         cand_x.join(csigs, on="__cid")
@@ -1747,6 +1585,7 @@ def minhash_dedup_delta(
 # (normalized) re-crawls at O(delta) cost without ever scanning the
 # corpus.  Probes are bucket-co-located joins on the 128-bit fingerprint,
 # the same zero-corpus-shuffle contract minhash_dedup_delta asserts.
+# Lifecycle and liveness: ``index_store``.
 # ---------------------------------------------------------------------------
 
 def fingerprint_index_write(
@@ -1764,27 +1603,15 @@ def fingerprint_index_write(
     MinHash index keeps ids: a replayed doc then matches ITSELF and is
     kept, making the gate's output replay-deterministic without any
     special-casing (see ``streaming/dedup.py``)."""
-    import json as _json
-    import os as _os
-
     from .text import fingerprint
 
-    spark = df.sparkSession
     fps = (
         df.select(fingerprint(F.col(text_col)).alias("fp"),
                   F.col(id_col).alias("fid"))
         .groupBy("fp").agg(F.min("fid").alias("fid"))
     )
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}_fps")
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}_tombstones")
-    (fps.withColumn("__ver", F.lit(0).cast("long"))
-        .write.bucketBy(n_buckets, "fp").sortBy("fp")
-        .option("path", _os.path.join(path, "fps"))
-        .mode("overwrite").saveAsTable(f"{table_name}_fps"))
-    from ..fsutil import write_text as _write_text
-
-    _write_text(spark, _os.path.join(path, "_index_meta.json"),
-                _json.dumps({"n_buckets": n_buckets, "id_col": id_col}))
+    store.build(df.sparkSession, "fingerprint", table_name, path,
+                {"fps": fps}, {"n_buckets": n_buckets, "id_col": id_col})
 
 
 def fingerprint_dedup_delta(
@@ -1805,13 +1632,9 @@ def fingerprint_dedup_delta(
 
     from .text import fingerprint
 
-    from ._maint import live_rows, tombstone_counts_table
-
-    spark = delta.sparkSession
     fps = delta.withColumn("__fp", fingerprint(F.col(text_col)))
-    corpus = live_rows(spark.table(f"{table_name}_fps"),
-                       tombstone_counts_table(spark, table_name, "fid"),
-                       "fid")
+    corpus = store.live(delta.sparkSession, "fingerprint", table_name,
+                        "fps")
     fresh = fps.join(
         corpus,
         (F.col("__fp") == F.col("fp")) & (F.col(id_col) != F.col("fid")),
@@ -1830,42 +1653,20 @@ def fingerprint_index_append(
     id_col: str,
     text_col: str,
 ) -> None:
-    """Fold surviving docs' ``(fp, id)`` rows into the index (the
-    saveAsTable append respects the table's bucket spec, so the
-    co-located probe property survives).  Re-appending a survivor
-    (at-least-once replay) duplicates its OWN ``(fp, id)`` row, which
-    cannot change any probe's outcome — the drop test is "exists a
-    row with my fp and a different id" — so the append is idempotent
-    for the gate's output; periodic ``compact_parquet``-style cleanup
-    is cosmetic."""
+    """Fold surviving docs' ``(fp, id)`` rows into the index (bucket
+    spec respected, so the co-located probe property survives).
+    Re-appending a survivor (at-least-once replay) duplicates its OWN
+    ``(fp, id)`` row, which cannot change any probe's outcome — the
+    drop test is "exists a row with my fp and a different id" — so the
+    append is idempotent for the gate's output."""
     from .text import fingerprint
-    from ._maint import stamp_version, tombstone_counts_table
 
     spark = survivors.sparkSession
     rows = survivors.select(fingerprint(F.col(text_col)).alias("fp"),
                             F.col(id_col).alias("fid")).distinct()
-    (stamp_version(rows, tombstone_counts_table(spark, table_name, "fid"),
-                   "fid")
-        .select("fp", "fid", "__ver")
-        .write.mode("append").insertInto(f"{table_name}_fps"))
-
-
-def fingerprint_index_delete(
-    spark,
-    table_name: str,
-    path: str,
-    ids: DataFrame,
-) -> None:
-    """Delete documents from the persisted fingerprint index at
-    O(delete batch) — the re-crawl maintenance op: a removed doc's
-    ``(fp, id)`` row otherwise keeps dropping future docs with the
-    same content against a ghost.  Tombstone rows append to the
-    ``_tombstones`` side table; probes filter to live versions.  A
-    deleted id's content can re-enter via
-    :func:`fingerprint_index_append` (rows stamp the bumped version)."""
-    from ._maint import record_tombstones_table
-
-    record_tombstones_table(spark, table_name, path, ids, "fid")
+    store.append(spark, table_name,
+                 store.located_meta(spark, f"{table_name}_fps"), id_col,
+                 {"fps": rows})
 
 
 # ---------------------------------------------------------------------------
@@ -1877,8 +1678,7 @@ def fingerprint_index_delete(
 # (segment idx, segment value) key, with the full signature ON the
 # segment row — one long, so unlike MinHash no side signature table is
 # needed and candidate verification is a codegen'd bit_count on the
-# probe join's own output.  Same zero-corpus-shuffle and tombstone
-# contracts as the other families.
+# probe join's own output.  Lifecycle and liveness: ``index_store``.
 # ---------------------------------------------------------------------------
 
 def _simhash_segments(hashed: DataFrame, id_alias: str, chunks: int):
@@ -1917,29 +1717,16 @@ def simhash_index_write(
     is RECORDED as the index's contract — probes verify against it by
     default (a looser probe threshold would need more chunks than the
     stored layout has)."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import write_text as _write_text
-
     if max_hamming >= chunks:
         raise ValueError(
             f"pigeonhole needs max_hamming < chunks, got "
             f"{max_hamming} >= {chunks}")
-    spark = df.sparkSession
     segs = _simhash_segments(
         simhash_df(df, id_col, text_col), "sid", chunks)
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}_segs")
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}_tombstones")
-    (segs.withColumn("__ver", F.lit(0).cast("long"))
-        .select("seg_key", "sid", "sh", "__ver")
-        .write.bucketBy(n_buckets, "seg_key").sortBy("seg_key")
-        .option("path", _os.path.join(path, "segs"))
-        .mode("overwrite").saveAsTable(f"{table_name}_segs"))
-    _write_text(spark, _os.path.join(path, "_index_meta.json"),
-                _json.dumps({"id_col": id_col, "chunks": chunks,
-                             "max_hamming": max_hamming,
-                             "n_buckets": n_buckets}))
+    store.build(df.sparkSession, "simhash", table_name, path,
+                {"segs": segs.select("seg_key", "sid", "sh")},
+                {"id_col": id_col, "chunks": chunks,
+                 "max_hamming": max_hamming, "n_buckets": n_buckets})
 
 
 def simhash_dedup_delta(
@@ -1962,15 +1749,8 @@ def simhash_dedup_delta(
     verification is ``bit_count(xor)`` ON the join output — no second
     corpus table, no signature fetch (the 8-byte signature rides the
     segment row)."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import read_text as _read_text
-    from ._maint import live_rows, tombstone_counts_table
-
     spark = delta.sparkSession
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(path, "_index_meta.json")))
+    meta = store.read_meta(spark, path)
     hmax = meta["max_hamming"] if max_hamming is None else max_hamming
     if hmax > meta["max_hamming"]:
         raise ValueError(
@@ -1980,8 +1760,7 @@ def simhash_dedup_delta(
     dsegs = _simhash_segments(
         simhash_df(delta, id_col, text_col).localCheckpoint(eager=True),
         "__did", meta["chunks"])
-    tombs = tombstone_counts_table(spark, table_name, "sid")
-    csegs = live_rows(spark.table(f"{table_name}_segs"), tombs, "sid")
+    csegs = store.live(spark, "simhash", table_name, "segs")
     pairs_x = (
         dsegs.join(csegs.withColumnRenamed("sh", "__csh"), on="seg_key")
         .withColumn("hamming",
@@ -2016,45 +1795,14 @@ def simhash_index_append(
     text_col: str,
 ) -> None:
     """Fold a delta's segments into the index at O(delta) with the
-    index's own recorded parameters (bucket spec respected — the
-    co-located probe property survives).  Caller contract matches
-    :func:`minhash_index_append`: dedup the delta first; re-crawls go
-    through :func:`simhash_index_replace`."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import read_text as _read_text
-    from ._maint import stamp_version, tombstone_counts_table
-
+    index's own recorded parameters, under the store's append contract
+    (dedup the delta first; re-crawls go through
+    :func:`simhash_index_replace`)."""
     spark = delta.sparkSession
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(path, "_index_meta.json")))
-    if meta["id_col"] != id_col:
-        raise ValueError(
-            f"index was built on id column {meta['id_col']!r}, "
-            f"got {id_col!r}")
+    meta = store.read_meta(spark, path)
     segs = _simhash_segments(
         simhash_df(delta, id_col, text_col), "sid", meta["chunks"])
-    (stamp_version(segs, tombstone_counts_table(spark, table_name, "sid"),
-                   "sid")
-        .select("seg_key", "sid", "sh", "__ver")
-        .write.bucketBy(meta["n_buckets"], "seg_key").sortBy("seg_key")
-        .option("path", _os.path.join(path, "segs"))
-        .mode("append").saveAsTable(f"{table_name}_segs"))
-
-
-def simhash_index_delete(
-    spark,
-    table_name: str,
-    path: str,
-    ids: DataFrame,
-) -> None:
-    """Delete documents at O(delete batch): tombstone rows append;
-    probes filter to live versions (same scheme as every family —
-    ``functions/_maint.py``)."""
-    from ._maint import record_tombstones_table
-
-    record_tombstones_table(spark, table_name, path, ids, "sid")
+    store.append(spark, table_name, meta, id_col, {"segs": segs})
 
 
 def simhash_index_replace(
@@ -2066,56 +1814,6 @@ def simhash_index_replace(
 ) -> None:
     """Replace documents in-place at O(delta): tombstone the delta's
     ids, then append their new segments at the bumped version."""
-    spark = delta.sparkSession
-    simhash_index_delete(
-        spark, table_name, path,
-        delta.select(F.col(id_col).alias("sid")).distinct())
+    store.index_delete(delta.sparkSession, table_name, path,
+                       delta.select(id_col).distinct())
     simhash_index_append(delta, table_name, path, id_col, text_col)
-
-
-def simhash_index_compact(
-    spark,
-    table_name: str,
-    path: str,
-    dst_table: str,
-    dst_path: str,
-) -> dict:
-    """Layout-preserving compaction — same contract and mechanism as
-    :func:`minhash_index_compact`: bucketed scan forced on, live rows
-    only (tombstones fold, versions reset), rewrite with the SAME
-    bucket spec into a NEW table/path — one task per bucket, zero
-    shuffle.  Returns ``{"files_in", "files_out"}``."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import (copy_text as _copy_text,
-                          count_parquet_files as _nfiles,
-                          read_text as _read_text)
-    from ._maint import live_rows, tombstone_counts_table
-
-    if _os.path.abspath(path) == _os.path.abspath(dst_path):
-        raise ValueError("simhash_index_compact writes to a NEW path")
-    if dst_table.casefold() == table_name.casefold():
-        raise ValueError("simhash_index_compact writes to a NEW table "
-                         "name (dst_table must differ from table_name)")
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(path, "_index_meta.json")))
-    files_in = _nfiles(path, spark)
-    spark.sql(f"DROP TABLE IF EXISTS {dst_table}_segs")
-    spark.sql(f"DROP TABLE IF EXISTS {dst_table}_tombstones")
-    tombs = tombstone_counts_table(spark, table_name, "sid")
-    conf_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    old = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "false")
-    try:
-        (live_rows(spark.table(f"{table_name}_segs"), tombs, "sid")
-            .withColumn("__ver", F.lit(0).cast("long"))
-            .write.bucketBy(meta["n_buckets"], "seg_key")
-            .sortBy("seg_key")
-            .option("path", _os.path.join(dst_path, "segs"))
-            .mode("overwrite").saveAsTable(f"{dst_table}_segs"))
-    finally:
-        spark.conf.set(conf_key, old)
-    _copy_text(spark, _os.path.join(path, "_index_meta.json"),
-               _os.path.join(dst_path, "_index_meta.json"))
-    return {"files_in": files_in, "files_out": _nfiles(dst_path, spark)}

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
 from . import codecs as _codecs
+from . import index_store as store
 
 
 def _payload_and_type(b) -> tuple[bytes, str]:
@@ -62,9 +63,7 @@ __all__ = [
     "media_sig_index_write",
     "media_dedup_delta",
     "media_sig_index_append",
-    "media_sig_index_delete",
     "media_sig_index_replace",
-    "media_sig_index_compact",
     "resize_image",
     "extract_features",
     "sample_frames",
@@ -1268,30 +1267,17 @@ def media_sig_index_write(
     O(delta): the delta's segments shuffle into this bucketing and the
     corpus side scans co-located — the payload bytes are read exactly
     once ever (at their own build/append), never again at probe time.
-    Signature and blocking parameters are RECORDED in
-    ``_index_meta.json`` so probes and appends reproduce them
-    exactly."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import write_text as _write_text
-
+    Signature and blocking parameters are RECORDED in the index meta
+    so probes and appends reproduce them exactly (lifecycle and
+    liveness: ``index_store``)."""
     if max_hamming >= chunks:
         raise ValueError(
             f"pigeonhole needs max_hamming < chunks, got "
             f"{max_hamming} >= {chunks}")
-    spark = df.sparkSession
     segs = _media_segments(
         _media_blocked_sigs(df, id_col, media_col, duration_bucket_s,
                             n_windows, window, stride,
                             sig_kind=sig_kind), "mid", chunks)
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}_segs")
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}_tombstones")
-    (segs.withColumn("__ver", F.lit(0).cast("long"))
-        .select("seg_key", "mid", "sh", "__ver")
-        .write.bucketBy(n_buckets, "seg_key").sortBy("seg_key")
-        .option("path", _os.path.join(path, "segs"))
-        .mode("overwrite").saveAsTable(f"{table_name}_segs"))
     meta = {"id_col": id_col, "chunks": chunks,
             "max_hamming": max_hamming, "n_buckets": n_buckets,
             "duration_bucket_s": duration_bucket_s,
@@ -1300,8 +1286,8 @@ def media_sig_index_write(
     if sig_kind == "timing":
         meta["timing_sig_version"] = TIMING_SIG_VERSION
         meta["window_samples"] = TIMING_SIG_WINDOW_SAMPLES
-    _write_text(spark, _os.path.join(path, "_index_meta.json"),
-                _json.dumps(meta))
+    store.build(df.sparkSession, "media_sig", table_name, path,
+                {"segs": segs.select("seg_key", "mid", "sh")}, meta)
 
 
 def media_dedup_delta(
@@ -1322,15 +1308,8 @@ def media_dedup_delta(
     segments (corpus scan bucket-co-located, zero corpus shuffle),
     verification is ``bit_count(xor)`` on the join output — the 8-byte
     signature rides the segment row."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import read_text as _read_text
-    from ._maint import live_rows, tombstone_counts_table
-
     spark = delta.sparkSession
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(path, "_index_meta.json")))
+    meta = store.read_meta(spark, path)
     _check_timing_sig_meta(meta)
     hmax = meta["max_hamming"] if max_hamming is None else max_hamming
     if hmax > meta["max_hamming"]:
@@ -1345,8 +1324,7 @@ def media_dedup_delta(
             sig_kind=meta.get("sig_kind", "window"))
         .localCheckpoint(eager=True),
         "__did", meta["chunks"])
-    tombs = tombstone_counts_table(spark, table_name, "mid")
-    csegs = live_rows(spark.table(f"{table_name}_segs"), tombs, "mid")
+    csegs = store.live(spark, "media_sig", table_name, "segs")
     pairs_x = (
         dsegs.join(csegs.withColumnRenamed("sh", "__csh"), on="seg_key")
         .withColumn("hamming",
@@ -1381,49 +1359,19 @@ def media_sig_index_append(
     media_col: str,
 ) -> None:
     """Fold a delta's segments into the index at O(delta) with the
-    index's recorded parameters (bucket spec respected).  Caller
-    contract matches the other families: dedup the delta first;
-    re-uploads of EXISTING ids go through
-    :func:`media_sig_index_replace`."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import read_text as _read_text
-    from ._maint import stamp_version, tombstone_counts_table
-
+    index's recorded parameters, under the store's append contract
+    (dedup the delta first; re-uploads of EXISTING ids go through
+    :func:`media_sig_index_replace`)."""
     spark = delta.sparkSession
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(path, "_index_meta.json")))
+    meta = store.read_meta(spark, path)
     _check_timing_sig_meta(meta)
-    if meta["id_col"] != id_col:
-        raise ValueError(
-            f"index was built on id column {meta['id_col']!r}, "
-            f"got {id_col!r}")
     segs = _media_segments(
         _media_blocked_sigs(
             delta, id_col, media_col, meta["duration_bucket_s"],
             meta["n_windows"], meta["window"], meta["stride"],
             sig_kind=meta.get("sig_kind", "window")),
         "mid", meta["chunks"])
-    (stamp_version(segs, tombstone_counts_table(spark, table_name, "mid"),
-                   "mid")
-        .select("seg_key", "mid", "sh", "__ver")
-        .write.bucketBy(meta["n_buckets"], "seg_key").sortBy("seg_key")
-        .option("path", _os.path.join(path, "segs"))
-        .mode("append").saveAsTable(f"{table_name}_segs"))
-
-
-def media_sig_index_delete(
-    spark,
-    table_name: str,
-    path: str,
-    ids: DataFrame,
-) -> None:
-    """Delete assets at O(delete batch) via the shared tombstone
-    scheme (``functions/_maint.py``)."""
-    from ._maint import record_tombstones_table
-
-    record_tombstones_table(spark, table_name, path, ids, "mid")
+    store.append(spark, table_name, meta, id_col, {"segs": segs})
 
 
 def media_sig_index_replace(
@@ -1435,55 +1383,6 @@ def media_sig_index_replace(
 ) -> None:
     """Replace assets in-place at O(delta): tombstone the delta's ids,
     then append their new segments at the bumped version."""
-    spark = delta.sparkSession
-    media_sig_index_delete(
-        spark, table_name, path,
-        delta.select(F.col(id_col).alias("mid")).distinct())
+    store.index_delete(delta.sparkSession, table_name, path,
+                       delta.select(id_col).distinct())
     media_sig_index_append(delta, table_name, path, id_col, media_col)
-
-
-def media_sig_index_compact(
-    spark,
-    table_name: str,
-    path: str,
-    dst_table: str,
-    dst_path: str,
-) -> dict:
-    """Layout-preserving compaction — same contract and mechanism as
-    the other five families: bucketed scan forced on, live rows only,
-    rewrite with the SAME bucket spec into a NEW table/path — one task
-    per bucket, zero shuffle.  Returns ``{"files_in", "files_out"}``."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import (copy_text as _copy_text,
-                          count_parquet_files as _nfiles,
-                          read_text as _read_text)
-    from ._maint import live_rows, tombstone_counts_table
-
-    if _os.path.abspath(path) == _os.path.abspath(dst_path):
-        raise ValueError("media_sig_index_compact writes to a NEW path")
-    if dst_table.casefold() == table_name.casefold():
-        raise ValueError("media_sig_index_compact writes to a NEW table "
-                         "name (dst_table must differ from table_name)")
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(path, "_index_meta.json")))
-    files_in = _nfiles(path, spark)
-    spark.sql(f"DROP TABLE IF EXISTS {dst_table}_segs")
-    spark.sql(f"DROP TABLE IF EXISTS {dst_table}_tombstones")
-    tombs = tombstone_counts_table(spark, table_name, "mid")
-    conf_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    old = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "false")
-    try:
-        (live_rows(spark.table(f"{table_name}_segs"), tombs, "mid")
-            .withColumn("__ver", F.lit(0).cast("long"))
-            .write.bucketBy(meta["n_buckets"], "seg_key")
-            .sortBy("seg_key")
-            .option("path", _os.path.join(dst_path, "segs"))
-            .mode("overwrite").saveAsTable(f"{dst_table}_segs"))
-    finally:
-        spark.conf.set(conf_key, old)
-    _copy_text(spark, _os.path.join(path, "_index_meta.json"),
-               _os.path.join(dst_path, "_index_meta.json"))
-    return {"files_in": files_in, "files_out": _nfiles(dst_path, spark)}

@@ -26,13 +26,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from . import index_store as store
 from ._cache import cache_bounded
 from .corpus import words
 
 __all__ = ["bm25_topk", "doc_term_freq", "rrf_fuse", "rank_eval",
            "prf_expand_topk",
-           "bm25_index_write", "bm25_index_append", "bm25_index_compact",
-           "bm25_index_search", "bm25_index_delete", "bm25_index_replace"]
+           "bm25_index_write", "bm25_index_append", "bm25_index_search",
+           "bm25_index_replace"]
 
 
 def doc_term_freq(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -339,10 +340,20 @@ def rank_eval(
 
 # ---------------------------------------------------------------------------
 # Persisted BM25 index — the retrieval member of the engine's persisted-
-# index family (MinHash postings, IVF cells, exact fingerprints): build
-# the corpus-side tables once, search any number of query batches, fold
-# new documents in at O(delta).
+# index family: build the corpus-side tables once, search any number of
+# query batches, fold new documents in at O(delta).  Lifecycle, liveness
+# and compaction: ``index_store``.
 # ---------------------------------------------------------------------------
+
+def _doclen(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """``(id, dl)`` per document with at least one term.  The sum of a
+    doc's term frequencies IS its token count, so this tokenizes only
+    instead of re-running the postings aggregate."""
+    return (df.select(F.col(id_col),
+                      F.size(words(F.col(text_col))).cast("long")
+                      .alias("dl"))
+            .filter(F.col("dl") > 0))
+
 
 def bm25_index_write(
     df: DataFrame,
@@ -360,48 +371,10 @@ def bm25_index_write(
     either).  N and avgdl derive from the length table at search time —
     one metadata-sized aggregate — so appends never maintain running
     totals that could drift."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import write_text as _write_text
-
-    spark = df.sparkSession
-    tf = doc_term_freq(df, id_col, text_col).withColumn(
-        "__ver", F.lit(0).cast("long"))
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}_postings")
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}_doclen")
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}_tombstones")
-    (tf.write.bucketBy(n_buckets, "term").sortBy("term")
-       .option("path", _os.path.join(path, "postings"))
-       .mode("overwrite").saveAsTable(f"{table_name}_postings"))
-    # doc length per ROW (round 14, guide §2.4): dl was
-    # ``tf.groupBy(id).sum(tf)`` — but the sum of a doc's term
-    # frequencies IS its token count, a per-row expression.  The old
-    # spelling re-ran the whole postings subtree (tokenize + explode +
-    # (id, term) aggregate, two exchanges) for this second write
-    # action; this one tokenizes only.  The ``> 0`` filter reproduces
-    # "docs with no terms have no dl row" exactly.
-    (df.select(F.col(id_col),
-               F.size(words(F.col(text_col))).cast("long").alias("dl"))
-       .filter(F.col("dl") > 0)
-       .withColumn("__ver", F.lit(0).cast("long"))
-       .write.bucketBy(n_buckets, id_col).sortBy(id_col)
-       .option("path", _os.path.join(path, "doclen"))
-       .mode("overwrite").saveAsTable(f"{table_name}_doclen"))
-    _write_text(spark, _os.path.join(path, "_index_meta.json"),
-                _json.dumps({"id_col": id_col, "n_buckets": n_buckets}))
-
-
-def _live(spark, table_name: str, which: str, id_col: str) -> DataFrame:
-    """The LIVE rows of a versioned index table: a row written at
-    version v is live iff exactly v tombstones exist for its id (a
-    delete bumps the id's tombstone count past every stored row; a
-    replace re-appends rows at the new count).  See ``_maint``."""
-    from ._maint import live_rows, tombstone_counts_table
-
-    return live_rows(spark.table(f"{table_name}_{which}"),
-                     tombstone_counts_table(spark, table_name, id_col),
-                     id_col)
+    store.build(df.sparkSession, "bm25", table_name, path,
+                {"postings": doc_term_freq(df, id_col, text_col),
+                 "doclen": _doclen(df, id_col, text_col)},
+                {"id_col": id_col, "n_buckets": n_buckets})
 
 
 def bm25_index_append(
@@ -410,60 +383,15 @@ def bm25_index_append(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> None:
-    """Fold documents into the index at O(delta): the delta's postings
-    and lengths insert into the bucketed tables (bucket spec respected,
-    so lookups stay co-located).  Contract: delta ids must not be LIVE
-    — brand-new ids always qualify, and a previously
-    :func:`bm25_index_delete`-d id revives here (its rows stamp the
-    id's current tombstone count as their version, so the liveness
-    filter keeps them and keeps ignoring the dead generation).
-    Appending an id that is still live double-counts its postings —
-    re-crawled docs go through :func:`bm25_index_replace`."""
-    from ._maint import stamp_version, tombstone_counts_table
-
+    """Fold documents into the index at O(delta) under the store's
+    append contract: delta ids must not be live (a deleted id revives
+    here); re-crawled docs go through :func:`bm25_index_replace`."""
     spark = delta.sparkSession
-    tombs = tombstone_counts_table(spark, table_name, id_col)
-    tf = stamp_version(doc_term_freq(delta, id_col, text_col),
-                       tombs, id_col)
-    tf.select(id_col, "term", "tf", "__ver") \
-        .write.mode("append").insertInto(f"{table_name}_postings")
-    # per-row dl, same equivalence as bm25_index_write: sum of a doc's
-    # tf IS its token count, and the old groupBy re-ran the delta's
-    # postings subtree for this second action.  __ver stamps the same
-    # per-id tombstone count the postings rows got.
-    (stamp_version(
-        delta.select(F.col(id_col),
-                     F.size(words(F.col(text_col))).cast("long")
-                     .alias("dl"))
-        .filter(F.col("dl") > 0), tombs, id_col)
-       .select(id_col, "dl", "__ver")
-       .write.mode("append").insertInto(f"{table_name}_doclen"))
-
-
-def bm25_index_delete(
-    spark,
-    table_name: str,
-    path: str,
-    ids: DataFrame,
-) -> None:
-    """Delete documents from the index at O(delete batch): one
-    tombstone row per id appends to the ``_tombstones`` table; the
-    stored postings/doclen rows stay on disk but every reader filters
-    to live versions (a row is live iff its stamped version equals the
-    id's tombstone count).  :func:`bm25_index_compact` folds tombstones
-    physically.  ``ids`` is a 1-column frame named as the index's id
-    column; deleting an absent or already-dead id is a harmless extra
-    tombstone for it — the liveness predicate compares exact counts, so
-    re-appending after N deletes still works."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import read_text as _read_text
-    from ._maint import record_tombstones_table
-
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(path, "_index_meta.json")))
-    record_tombstones_table(spark, table_name, path, ids, meta["id_col"])
+    store.append(spark, table_name,
+                 store.located_meta(spark, f"{table_name}_postings"),
+                 id_col,
+                 {"postings": doc_term_freq(delta, id_col, text_col),
+                  "doclen": _doclen(delta, id_col, text_col)})
 
 
 def bm25_index_replace(
@@ -475,14 +403,12 @@ def bm25_index_replace(
 ) -> None:
     """Replace documents in-place at O(delta) — the re-crawl/edited-doc
     maintenance op the append contract excludes: tombstone the delta's
-    ids (killing the stored generation), then append the new text,
-    whose rows stamp the bumped tombstone count as their version.
-    Post-replace search equals a from-scratch rebuild on the edited
-    corpus (pinned by test and by the ``bm25_index_docs`` fleet
-    oracle)."""
-    spark = delta.sparkSession
-    bm25_index_delete(spark, table_name, path,
-                      delta.select(id_col).distinct())
+    ids (killing the stored generation), then append the new text at
+    the bumped version.  Post-replace search equals a from-scratch
+    rebuild on the edited corpus (pinned by test and by the
+    ``bm25_index_docs`` fleet oracle)."""
+    store.index_delete(delta.sparkSession, table_name, path,
+                       delta.select(id_col).distinct())
     bm25_index_append(delta, table_name, id_col, text_col)
 
 
@@ -519,78 +445,7 @@ def bm25_index_sync(
     if upsert_ids.limit(1).count():
         bm25_index_replace(upserts, table_name, path, id_col, text_col)
     if removed_ids.limit(1).count():
-        bm25_index_delete(spark, table_name, path, removed_ids)
-
-
-def bm25_index_compact(
-    spark,
-    table_name: str,
-    path: str,
-    dst_table: str,
-    dst_path: str,
-) -> dict:
-    """LAYOUT-PRESERVING compaction of a persisted BM25 index — the
-    retrieval member of the index family's maintenance triple
-    (``minhash_index_compact``, ``ivf_compact``): each
-    :func:`bm25_index_append` adds one file per touched bucket, so a
-    long-lived index accumulates small files and every query-term
-    lookup pays per-file open/footer cost.  A plain parquet rewrite
-    would fix the file count but destroy the bucket metadata, silently
-    re-introducing the postings shuffle the index exists to avoid —
-    so the postings/doclen tables are re-read with the bucketed scan
-    forced on and rewritten under the SAME bucket spec: one task per
-    bucket, one file per bucket, ZERO shuffle.  The write goes to a
-    NEW table/path (crash-safe swap-by-rename contract, same as the
-    other compactors).  Tombstones from :func:`bm25_index_delete` /
-    :func:`bm25_index_replace` FOLD here: the destination holds only
-    live rows, re-versioned to 0, with no tombstone table.
-
-    Returns ``{"files_in", "files_out"}``.
-    """
-    import json as _json
-    import os as _os
-
-    from ..fsutil import copy_text as _copy_text, \
-        count_parquet_files as _nfiles, read_text as _read_text
-
-    if _os.path.abspath(path) == _os.path.abspath(dst_path):
-        raise ValueError("bm25_index_compact writes to a NEW path")
-    if dst_table.casefold() == table_name.casefold():
-        # Spark SQL resolves table names case-insensitively; the DROPs
-        # below would otherwise destroy the live index's catalog entry
-        raise ValueError("bm25_index_compact writes to a NEW table "
-                         "name (dst_table must differ from table_name)")
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(path, "_index_meta.json")))
-    n_buckets, id_col = meta["n_buckets"], meta["id_col"]
-
-    files_in = _nfiles(path, spark)
-    spark.sql(f"DROP TABLE IF EXISTS {dst_table}_postings")
-    spark.sql(f"DROP TABLE IF EXISTS {dst_table}_doclen")
-    spark.sql(f"DROP TABLE IF EXISTS {dst_table}_tombstones")
-    conf_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    old = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "false")
-    try:
-        # tombstones FOLD here: only live rows are rewritten, versions
-        # reset to 0, and the dst index starts with no tombstone table
-        # — the liveness filter is a broadcast join, so the per-bucket
-        # narrow rewrite (one task per bucket, zero shuffle) survives
-        (_live(spark, table_name, "postings", id_col)
-            .withColumn("__ver", F.lit(0).cast("long"))
-            .write.bucketBy(n_buckets, "term").sortBy("term")
-            .option("path", _os.path.join(dst_path, "postings"))
-            .mode("overwrite").saveAsTable(f"{dst_table}_postings"))
-        (_live(spark, table_name, "doclen", id_col)
-            .withColumn("__ver", F.lit(0).cast("long"))
-            .write.bucketBy(n_buckets, id_col).sortBy(id_col)
-            .option("path", _os.path.join(dst_path, "doclen"))
-            .mode("overwrite").saveAsTable(f"{dst_table}_doclen"))
-    finally:
-        spark.conf.set(conf_key, old)
-    _copy_text(spark, _os.path.join(path, "_index_meta.json"),
-               _os.path.join(dst_path, "_index_meta.json"))
-    return {"files_in": files_in, "files_out": _nfiles(dst_path, spark)}
+        store.index_delete(spark, table_name, path, removed_ids)
 
 
 def bm25_index_search(
@@ -612,21 +467,14 @@ def bm25_index_search(
     query-sized by contract, so collecting their distinct terms is the
     same scale as the broadcasts the scorer already does) and N/avgdl
     come from one doc-length aggregate."""
-    import json as _json
-    import os as _os
-
-    from ..fsutil import read_text as _read_text
-
-    meta = _json.loads(
-        _read_text(spark, _os.path.join(path, "_index_meta.json")))
-    id_col = meta["id_col"]
+    id_col = store.read_meta(spark, path)["id_col"]
     return bm25_topk(
         None, queries,
         id_col=id_col,
         query_id_col=query_id_col, query_text_col=query_text_col,
         k=k, k1=k1, b=b,
-        tf_table=_live(spark, table_name, "postings", id_col),
-        dl_table=_live(spark, table_name, "doclen", id_col),
+        tf_table=store.live(spark, "bm25", table_name, "postings", id_col),
+        dl_table=store.live(spark, "bm25", table_name, "doclen", id_col),
         prune_term_scan=True)
 
 

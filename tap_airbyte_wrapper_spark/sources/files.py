@@ -24,7 +24,7 @@ from typing import Any
 from py4j.java_gateway import JavaClass
 from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType, TimestampType
 
 try:
     import pyarrow.parquet as _pq
@@ -142,6 +142,42 @@ def _footer_schema(spark: SparkSession, path: str) -> StructType | None:
     return StructType.fromJson(json.loads(schema.json()))
 
 
+def _schema_confs(ns_cols: list[str]) -> dict[str, str]:
+    """Session confs under which a parquet schema resolves (see
+    :func:`load_parquet`)."""
+    confs = {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"}
+    if ns_cols:
+        confs["spark.sql.legacy.parquet.nanosAsLong"] = "true"
+    return confs
+
+
+# The nanos rule, in one place: an INT64 TIMESTAMP(NANOS) column resolves
+# to raw longs under nanosAsLong, and surfaces as the microsecond
+# TIMESTAMP this expression computes.
+def _nanos_as_timestamp(c: str):
+    return F.expr(f"timestamp_micros(`{c}` div 1000)")
+
+
+def _nanos_as_timestamp_schema(schema: StructType,
+                               ns_cols: list[str]) -> StructType:
+    return StructType([
+        StructField(f.name, TimestampType(), f.nullable)
+        if f.name in ns_cols else f for f in schema.fields])
+
+
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema :func:`load_parquet` returns for ``path``, without
+    building a DataFrame: for one plain file it is the footer schema
+    under the same scoped confs and nanos rule, read on the driver;
+    anything else falls back to ``load_parquet(...).schema``."""
+    ns_cols = _nanos_columns(path)
+    with scoped_conf(spark, _schema_confs(ns_cols)):
+        schema = _footer_schema(spark, path)
+    if schema is None:
+        return load_parquet(spark, path).schema
+    return _nanos_as_timestamp_schema(schema, ns_cols)
+
+
 def load_parquet(
     spark: SparkSession,
     path: str,
@@ -186,10 +222,7 @@ def load_parquet(
     #   throughout the engine) keeps one uniform timestamp dtype, and the
     #   conversion happens at schema resolution so cursor filters still
     #   reach the scan.
-    confs = {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"}
-    if ns_cols:
-        confs["spark.sql.legacy.parquet.nanosAsLong"] = "true"
-    with scoped_conf(spark, confs):
+    with scoped_conf(spark, _schema_confs(ns_cols)):
         reader = spark.read
         schema = None if merge_schema else _footer_schema(spark, path)
         if schema is not None:
@@ -219,7 +252,7 @@ def load_parquet(
                 df = df.filter(F.col(col) > F.lit(bookmark).cast(ctype))
 
     for c in ns_cols:
-        df = df.withColumn(c, F.expr(f"timestamp_micros(`{c}` div 1000)"))
+        df = df.withColumn(c, _nanos_as_timestamp(c))
     return df
 
 
@@ -482,7 +515,7 @@ class DatasetDirSource(Source):
         pks = {**_DEFAULT_PKS, **(self.config.get("primary_keys") or {})}
         cat = Catalog()
         for name, path in self._tables():
-            schema = load_parquet(spark, path).schema
+            schema = parquet_schema(spark, path)
             cursor = cursors.get(name)
             cat.add(
                 StreamEntry(

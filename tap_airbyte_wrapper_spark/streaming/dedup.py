@@ -15,8 +15,8 @@ the drop set and the replay keeps exactly the docs the first run kept.
 A re-append after a crash between append and marker duplicates
 postings/signatures, which never change the gate's output (candidate
 pairs and the drop set are ``distinct``-ed); run
-``minhash_index_compact`` on the index periodically anyway — the flat
-``compact_parquet`` would drop the bucket metadata.
+``functions.index_compact`` on the index periodically anyway — the
+flat ``compact_parquet`` would drop the bucket metadata.
 
 Cost per batch: O(batch) signatures + a bucket-co-located join against
 the index (zero corpus shuffle, same plan the batch delta-dedup tests

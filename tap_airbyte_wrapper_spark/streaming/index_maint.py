@@ -1,15 +1,13 @@
 """Streaming CDC -> persisted-index maintenance: a changelog stream of
-document inserts / updates / deletes keeps a search index current at
-O(churn) per micro-batch.
+document inserts / updates / deletes keeps a BM25 or exact-fingerprint
+index current at O(churn) per micro-batch.
 
-This closes the loop the round-8 maintenance ops opened
-(``bm25_index_delete/replace``, ``fingerprint_index_delete``): a
-standing corpus is not append-only — re-crawls edit documents and
-takedowns remove them — and the CDC source
-(``sources/changelog.py``) already models that churn for SNAPSHOT
-sinks (``streaming/cdc.py``).  The missing piece was the same apply
-loop for the SEARCH indexes, so a 100 TB deployment can keep BM25 /
-fingerprint lookups fresh continuously instead of rebuilding nightly.
+A standing corpus is not append-only — re-crawls edit documents and
+takedowns remove them — and the CDC source (``sources/changelog.py``)
+already models that churn for SNAPSHOT sinks (``streaming/cdc.py``).
+These gates run the same apply loop for the SEARCH indexes, so a
+deployment keeps lookups fresh continuously instead of rebuilding
+nightly.
 
 Change rows follow the changelog source's conventions: an op column
 (``insert``/``update``/``delete``, with ``c``/``u``/``d`` aliases) and
@@ -17,22 +15,20 @@ a monotone ``_cursor`` for intra-batch ordering.  Per micro-batch:
 
 1. collapse to the LAST change per id (window over the batch only —
    batch-sized state);
-2. deletes -> ``*_index_delete`` (O(batch) tombstone rows);
-3. inserts + updates -> ``*_index_replace`` semantics (tombstone then
-   re-append at the bumped version) — an insert of a brand-new id just
-   writes one harmless tombstone, so one code path serves both.
+2. deletes -> ``index_delete`` (O(batch) tombstone rows);
+3. inserts + updates -> replace semantics (tombstone then re-append at
+   the bumped version) — an insert of a brand-new id just writes one
+   harmless tombstone, so one code path serves both.
 
-Replay safety (at-least-once ``foreachBatch``): the tombstone
-liveness predicate makes replays CONVERGE without markers — a replayed
-replace bumps the id's tombstone count AND re-appends at the new
-count, so the live generation is always the latest applied content; a
-replayed delete adds a redundant tombstone to an already-dead id.  A
-crash BETWEEN the delete and the append of a replace leaves the id
-dead until the replay completes the append — never a double-counted
-generation.  Structured Streaming replays only the in-flight batch
-(earlier batches are committed in the checkpoint), so a replay can
-never clobber newer content.  A best-effort ``_maint_batch_<id>``
-marker skips redundant re-applies; correctness never depends on it.
+Replay safety (at-least-once ``foreachBatch``) comes from the store's
+tombstone liveness rule (``functions/index_store.py``): replays
+CONVERGE without markers.  A crash BETWEEN the delete and the append of
+a replace leaves the id dead until the replay completes the append —
+never a double-counted generation.  Structured Streaming replays only
+the in-flight batch (earlier batches are committed in the checkpoint),
+so a replay can never clobber newer content.  A best-effort
+``_maint_batch_<id>`` marker skips redundant re-applies; correctness
+never depends on it.
 
 Each drained batch appends a ``(batch_id, n_in, n_kept, n_dropped,
 wall_seconds)`` row under ``{index_path}/_gate_stats`` (n_kept =
@@ -114,11 +110,12 @@ def stream_bm25_index_maintenance(
     (``bm25_index_write`` — an empty corpus frame is fine).  After any
     drained batch, ``bm25_index_search`` equals a from-scratch rebuild
     on the corpus-with-changes-applied (pinned by test)."""
-    from ..functions.retrieval import bm25_index_delete, bm25_index_replace
+    from ..functions.index_store import index_delete
+    from ..functions.retrieval import bm25_index_replace
 
     def apply(spark, dels, ups, n_del, n_up):
         if n_del:
-            bm25_index_delete(spark, index_table, index_path, dels)
+            index_delete(spark, index_table, index_path, dels)
         if n_up:
             bm25_index_replace(ups, index_table, index_path, id_col,
                                text_col)
@@ -144,19 +141,15 @@ def stream_fingerprint_index_maintenance(
     re-point the fingerprint (old content dies, new content registers
     at the bumped version).  Requires a bootstrapped index
     (``fingerprint_index_write``)."""
-    from ..functions.dedup import (
-        fingerprint_index_append,
-        fingerprint_index_delete,
-    )
+    from ..functions.dedup import fingerprint_index_append
+    from ..functions.index_store import index_delete
 
     def apply(spark, dels, ups, n_del, n_up):
         if n_del or n_up:
             # updates tombstone their own id first (replace), then
             # register the new content
-            all_dead = dels.unionByName(ups.select(id_col)).select(
-                F.col(id_col).alias("fid"))
-            fingerprint_index_delete(spark, index_table, index_path,
-                                     all_dead)
+            index_delete(spark, index_table, index_path,
+                         dels.unionByName(ups.select(id_col)))
         if n_up:
             fingerprint_index_append(ups, index_table, id_col, text_col)
 

@@ -64,7 +64,7 @@ def stream_novelty_gate(
     batch (its grams already folded in) scores exactly what the first
     run scored; re-folding may duplicate posting rows, which probes
     are insensitive to (distinct on the bucket key) and
-    ``novelty_index_compact`` folds away (replay contract:
+    ``functions.index_compact`` folds away (replay contract:
     :func:`._batch.run_gate`).  The guarantee is scoped to Structured
     Streaming's actual at-least-once contract — the IN-FLIGHT batch
     re-runs with the same boundaries; a fresh-checkpoint full re-drain

@@ -1,0 +1,231 @@
+"""One contract over the six persisted-index families that share
+``functions/index_store.py``: after any sequence of build, append,
+delete, replace and re-append, every probe equals the same probe on an
+index built from scratch on the edited corpus; compaction leaves the
+probe unchanged, drops the tombstones and writes at most one file per
+bucket per table; and a compaction aimed at the live index itself is
+refused before anything is touched."""
+
+import os
+import struct
+import zlib
+
+import pytest
+
+from tap_airbyte_wrapper_spark.functions import (
+    bm25_index_append, bm25_index_replace, bm25_index_search,
+    bm25_index_write, fingerprint_dedup_delta, fingerprint_index_append,
+    fingerprint_index_write, index_compact, index_delete,
+    media_dedup_delta, media_sig_index_append, media_sig_index_replace,
+    media_sig_index_write, minhash_dedup_delta, minhash_index_append,
+    minhash_index_replace, minhash_index_write, novelty_index_append,
+    novelty_index_write, novelty_probe, simhash_dedup_delta,
+    simhash_index_append, simhash_index_replace, simhash_index_write)
+from tap_airbyte_wrapper_spark.functions.index_store import LAYOUTS
+from tap_airbyte_wrapper_spark.functions.video import mp4_stub
+
+N_BUCKETS = 2
+
+
+def _text(i, tag="v"):
+    return " ".join(f"{w}{tag}{i}" for w in (
+        "alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta",
+        "theta")) + " " + " ".join(f"w{i}x{k}" for k in range(16))
+
+
+def _payload(text):
+    """A tiny MP4 whose essence is seeded by the text; a ``' tail'``
+    suffix trims the payload end (a near-duplicate, not a copy)."""
+    base = text[:-5] if text.endswith(" tail") else text
+    ess, k, seed = b"", 0, zlib.crc32(base.encode())
+    while len(ess) < 2300:
+        ess += struct.pack(">I", zlib.crc32(f"{seed}:{k}".encode())) * 4
+        k += 1
+    stub = mp4_stub(320, 240, 5000)[:-16]
+    payload = stub + struct.pack(">I", 8 + len(ess)) + b"mdat" + ess
+    return payload[:-80] if base != text else payload
+
+
+class _Family:
+    def __init__(self, spark, name):
+        self.spark, self.name = spark, name
+
+    def frame(self, texts):
+        if self.name == "media_sig":
+            return self.spark.createDataFrame(
+                [(i, _payload(t)) for i, t in sorted(texts.items())],
+                "doc_id long, media binary")
+        return self.spark.createDataFrame(
+            sorted(texts.items()), "doc_id long, text string")
+
+    def write(self, texts, t, p):
+        df = self.frame(texts)
+        {
+            "bm25": lambda: bm25_index_write(
+                df, t, p, "doc_id", "text", n_buckets=N_BUCKETS),
+            "minhash": lambda: minhash_index_write(
+                df, "doc_id", "text", t, p, num_hashes=32, bands=8,
+                n_buckets=N_BUCKETS),
+            "fingerprint": lambda: fingerprint_index_write(
+                df, t, p, "doc_id", "text", n_buckets=N_BUCKETS),
+            "simhash": lambda: simhash_index_write(
+                df, t, p, "doc_id", "text", n_buckets=N_BUCKETS),
+            "media_sig": lambda: media_sig_index_write(
+                df, t, p, "doc_id", "media", n_buckets=N_BUCKETS,
+                window=16, stride=32),
+            "novelty": lambda: novelty_index_write(
+                df, t, p, n=3, n_buckets=N_BUCKETS),
+        }[self.name]()
+
+    def append(self, texts, t, p):
+        df = self.frame(texts)
+        {
+            "bm25": lambda: bm25_index_append(df, t, "doc_id", "text"),
+            "minhash": lambda: minhash_index_append(
+                df, t, p, "doc_id", "text"),
+            "fingerprint": lambda: fingerprint_index_append(
+                df, t, "doc_id", "text"),
+            "simhash": lambda: simhash_index_append(
+                df, t, p, "doc_id", "text"),
+            "media_sig": lambda: media_sig_index_append(
+                df, t, p, "doc_id", "media"),
+            "novelty": lambda: novelty_index_append(df, t, p),
+        }[self.name]()
+
+    def replace(self, texts, t, p):
+        df = self.frame(texts)
+        replace = {
+            "bm25": lambda: bm25_index_replace(df, t, p, "doc_id", "text"),
+            "minhash": lambda: minhash_index_replace(
+                df, t, p, "doc_id", "text"),
+            "simhash": lambda: simhash_index_replace(
+                df, t, p, "doc_id", "text"),
+            "media_sig": lambda: media_sig_index_replace(
+                df, t, p, "doc_id", "media"),
+        }.get(self.name)
+        if replace is not None:
+            replace()
+        else:  # families without a replace op: delete, then append
+            index_delete(self.spark, t, p, df.select("doc_id"))
+            self.append(texts, t, p)
+
+    def probe(self, batch, t, p):
+        df = self.frame(batch)
+        if self.name == "bm25":
+            queries = self.spark.createDataFrame(
+                [(i, " ".join(txt.split()[k] for k in (0, 3, 9)))
+                 for i, txt in sorted(batch.items())],
+                "query_id long, query_text string")
+            rows = bm25_index_search(self.spark, t, queries, p, k=20)
+        elif self.name == "minhash":
+            rows = minhash_dedup_delta(df, t, p, "doc_id", "text",
+                                       threshold=0.5)
+        elif self.name == "fingerprint":
+            rows = fingerprint_dedup_delta(df, t, "doc_id", "text") \
+                .select("doc_id")
+        elif self.name == "simhash":
+            rows = simhash_dedup_delta(df, t, p, "doc_id", "text")
+        elif self.name == "media_sig":
+            rows = media_dedup_delta(df, t, p, "doc_id", "media")
+        else:
+            rows = novelty_probe(df, t, p)
+        return sorted(tuple(r) for r in rows.collect())
+
+    def drop(self, *names):
+        for t in names:
+            for suffix in (*LAYOUTS[self.name].tables, "tombstones"):
+                self.spark.sql(f"DROP TABLE IF EXISTS {t}_{suffix}")
+
+
+def _files(path):
+    """{relative path: (size, mtime)} of every file under ``path``."""
+    out = {}
+    for root, _dirs, names in os.walk(path):
+        for n in names:
+            full = os.path.join(root, n)
+            st = os.stat(full)
+            out[os.path.relpath(full, path)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+CORPUS_A = {i: _text(i) for i in range(1, 7)}
+CORPUS_B = {i: _text(i) for i in range(7, 10)}
+DELETED = (2, 8)
+REPLACED = {3: _text(3, "r"), 7: _text(7, "r")}
+REVIVED = {2: _text(2, "n")}
+# copies and near-copies of live, deleted, replaced-away and revived text
+BATCH = {
+    100: _text(1), 101: _text(1) + " tail",
+    102: _text(3), 103: _text(3, "r") + " tail",
+    104: _text(8) + " tail", 105: _text(2, "n"),
+    106: _text(2) + " tail", 107: _text(7, "r"),
+    108: _text(50),
+}
+
+FAMILIES = sorted(LAYOUTS)
+
+
+def test_every_store_family_is_covered():
+    assert FAMILIES == sorted(
+        ["bm25", "minhash", "fingerprint", "simhash", "media_sig",
+         "novelty"])
+
+
+@pytest.mark.parametrize("family", FAMILIES)
+def test_maintained_index_probes_like_a_rebuild(spark, tmp_path, family):
+    fam = _Family(spark, family)
+    t, p = f"ixs_{family}", str(tmp_path / "idx")
+    fam.write(CORPUS_A, t, p)
+    fam.append(CORPUS_B, t, p)
+    index_delete(spark, t, p,
+                 spark.createDataFrame([(i,) for i in DELETED],
+                                       "doc_id long"))
+    fam.replace(REPLACED, t, p)
+    fam.append(REVIVED, t, p)
+    got = fam.probe(BATCH, t, p)
+
+    edited = {**CORPUS_A, **CORPUS_B}
+    for i in DELETED:
+        del edited[i]
+    edited.update(REPLACED)
+    edited.update(REVIVED)
+    fam.write(edited, f"{t}_fresh", str(tmp_path / "fresh"))
+    want = fam.probe(BATCH, f"{t}_fresh", str(tmp_path / "fresh"))
+    assert got == want
+    assert want, "probe batch must exercise the index"
+
+    dst = str(tmp_path / "compacted")
+    stats = index_compact(spark, t, p, f"{t}_c", dst)
+    assert stats["files_out"] <= stats["files_in"]
+    assert not spark.catalog.tableExists(f"{t}_c_tombstones")
+    for suffix in LAYOUTS[family].tables:
+        n_files = sum(f.endswith(".parquet")
+                      for f in _files(os.path.join(dst, suffix)))
+        assert n_files <= N_BUCKETS, suffix
+    assert fam.probe(BATCH, f"{t}_c", dst) == want
+    fam.drop(t, f"{t}_fresh", f"{t}_c")
+
+
+@pytest.mark.parametrize("family", FAMILIES)
+def test_compact_onto_itself_touches_nothing(spark, tmp_path, family):
+    """Compacting into the live index's own path, or into a name that
+    folds to its own, raises before any table or file is touched (the
+    novelty compactor once dropped and overwrote its own source)."""
+    fam = _Family(spark, family)
+    t, p = f"ixg_{family}", str(tmp_path / "idx")
+    fam.write(CORPUS_A, t, p)
+    before, files = fam.probe(BATCH, t, p), _files(p)
+
+    for dst_table, dst_path, msg in (
+            (f"{t}_2", p, "NEW path"),
+            (f"{t}_2", os.path.join(p, "."), "NEW path"),
+            (t.upper(), str(tmp_path / "other"), "NEW table")):
+        with pytest.raises(ValueError, match=msg):
+            index_compact(spark, t, p, dst_table, dst_path)
+
+    assert _files(p) == files
+    assert not os.path.exists(tmp_path / "other")
+    for suffix in LAYOUTS[family].tables:
+        assert spark.catalog.tableExists(f"{t}_{suffix}")
+    assert fam.probe(BATCH, t, p) == before
+    fam.drop(t)

@@ -215,3 +215,35 @@ def test_nanos_cursor_reads_bookmark_in_session_zone(spark, tmp_path, zone):
             range(501, 1000))
     finally:
         spark.conf.set(key, was)
+
+
+def test_discover_reads_schemas_only(spark, monkeypatch, tmp_path):
+    """``dataset_dir`` discovery takes each schema from the footer route
+    without building a DataFrame, and the schema equals what a read of
+    the same file returns — sf tables and an INT64 TIMESTAMP(NANOS)
+    file alike."""
+    from tap_airbyte_wrapper_spark.sources.files import DatasetDirSource
+
+    nanos_dir = tmp_path / "nanos"
+    nanos_dir.mkdir()
+    pq.write_table(pa.table({
+        "id": pa.array([1, 2], pa.int64()),
+        "ts": pa.array([1_700_000_000_123_456_789, None],
+                       pa.timestamp("ns", tz="UTC")),
+    }), str(nanos_dir / "ev.parquet"), version="2.6",
+        coerce_timestamps=None)
+
+    for root in (BENCH_SF, str(nanos_dir)):
+        calls = []
+        with monkeypatch.context() as m:
+            m.setattr(files, "load_parquet",
+                      lambda *a, **k: calls.append(a) or load_parquet(*a,
+                                                                      **k))
+            cat = DatasetDirSource({"path": root}).discover(spark)
+        assert calls == []
+        for s in cat.streams:
+            assert s.schema == load_parquet(spark, s.options["path"]).schema
+    assert len(DatasetDirSource({"path": BENCH_SF}).discover(spark)) \
+        == len(TABLES) == 10
+    assert dict(load_parquet(spark, str(nanos_dir / "ev.parquet"))
+                .dtypes)["ts"] == "timestamp"

@@ -507,7 +507,7 @@ def test_media_delta_replay_self_match_and_corpus_no_shuffle(media_index):
 
 def test_media_index_replace_delete_compact(media_index, tmp_path):
     from tap_airbyte_wrapper_spark.functions import (
-        media_dedup_delta, media_sig_index_compact, media_sig_index_delete,
+        media_dedup_delta, index_compact, index_delete,
         media_sig_index_replace)
 
     spark, corpus, path = media_index
@@ -527,15 +527,15 @@ def test_media_index_replace_delete_compact(media_index, tmp_path):
         probe, "m10_t", path, "asset_id", "media").collect()}
     assert (9005, 5) in got and (9006, 5) not in got
     # delete 5 entirely: nothing matches it any more
-    media_sig_index_delete(
+    index_delete(
         spark, "m10_t", path,
         spark.createDataFrame([(5,)], "mid long"))
     got2 = {(r.id_a, r.id_b) for r in media_dedup_delta(
         probe, "m10_t", path, "asset_id", "media").collect()}
     assert not any(b == 5 for _a, b in got2)
     # compact folds the tombstones; probe results unchanged
-    stats = media_sig_index_compact(spark, "m10_t", path, "m10c_t",
-                                    str(tmp_path / "m_idx_c"))
+    stats = index_compact(spark, "m10_t", path, "m10c_t",
+                          str(tmp_path / "m_idx_c"))
     assert stats["files_out"] <= stats["files_in"]
     got3 = {(r.id_a, r.id_b) for r in media_dedup_delta(
         probe, "m10c_t", str(tmp_path / "m_idx_c"), "asset_id",

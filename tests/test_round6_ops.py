@@ -422,7 +422,7 @@ def test_minhash_index_compact_preserves_bucketed_join(spark, tmp_path):
 
     from pyspark.sql import Row
     from tap_airbyte_wrapper_spark.functions import (
-        minhash_dedup_delta, minhash_index_append, minhash_index_compact,
+        minhash_dedup_delta, minhash_index_append, index_compact,
         minhash_index_write)
 
     long_a = " ".join(f"alpha{i} beta{i} gamma{i}" for i in range(12))
@@ -440,7 +440,7 @@ def test_minhash_index_compact_preserves_bucketed_join(spark, tmp_path):
             "mhc6", idx, "doc_id", "text")
 
     dst = str(tmp_path / "idx_c")
-    stats = minhash_index_compact(spark, "mhc6", idx, "mhc6c", dst)
+    stats = index_compact(spark, "mhc6", idx, "mhc6c", dst)
     assert stats["files_out"] < stats["files_in"]
     # at most one file per NON-EMPTY bucket per table
     assert stats["files_out"] <= 2 * 4
@@ -749,11 +749,11 @@ def test_minhash_compact_table_guard_case_insensitive(spark, tmp_path):
     """Spark SQL resolves table names case-insensitively, so a
     dst_table differing only in case would still DROP the live index's
     catalog tables — the guard must compare folded."""
-    from tap_airbyte_wrapper_spark.functions import minhash_index_compact
+    from tap_airbyte_wrapper_spark.functions import index_compact
 
     with pytest.raises(ValueError, match="NEW table"):
-        minhash_index_compact(spark, "someidx", str(tmp_path / "a"),
-                              "SOMEIDX", str(tmp_path / "b"))
+        index_compact(spark, "someidx", str(tmp_path / "a"),
+                      "SOMEIDX", str(tmp_path / "b"))
 
 
 def test_cli_catalog_tolerates_json_nulls(tmp_path, capsys):

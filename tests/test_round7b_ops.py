@@ -250,12 +250,12 @@ def test_script_profile_alphabetical_tiebreak(spark):
     assert r.dominant == "cyrillic"
 
 
-# ---------------------------------------------------- bm25_index_compact
+# ---------------------------------------------------- index_compact
 
 def test_bm25_index_compact_preserves_layout_and_results(spark, tmp_path):
     from tap_airbyte_wrapper_spark.functions import (
         bm25_index_append,
-        bm25_index_compact,
+        index_compact,
         bm25_index_search,
         bm25_index_write,
     )
@@ -275,7 +275,7 @@ def test_bm25_index_compact_preserves_layout_and_results(spark, tmp_path):
     bm25_index_append(docs.filter(F.col("doc_id") >= 30), "bm25c")
     before = bm25_index_search(spark, "bm25c", queries, idx, k=8).collect()
 
-    stats = bm25_index_compact(
+    stats = index_compact(
         spark, "bm25c", idx, "bm25c2", str(tmp_path / "idx2"))
     assert stats["files_out"] < stats["files_in"]
     # at most one file per bucket per table (empty buckets write none)
@@ -296,10 +296,10 @@ def test_bm25_index_compact_preserves_layout_and_results(spark, tmp_path):
     # guard rails: same path / same table name are refused
     import pytest as _pytest
     with _pytest.raises(ValueError, match="NEW path"):
-        bm25_index_compact(spark, "bm25c", idx, "bm25c3", idx)
+        index_compact(spark, "bm25c", idx, "bm25c3", idx)
     with _pytest.raises(ValueError, match="NEW table"):
-        bm25_index_compact(spark, "bm25c", idx, "BM25C",
-                           str(tmp_path / "idx3"))
+        index_compact(spark, "bm25c", idx, "BM25C",
+                      str(tmp_path / "idx3"))
 
 
 # -------------------------------------------------------- extract_links

@@ -806,7 +806,7 @@ def test_bm25_index_replace_equals_fresh_rebuild(spark, tmp_path):
     texts[3] = "gamma gamma body entirely new content now"
     texts[7] = "alpha gamma shared"
     delta = _bm25_corpus(spark, {3: texts[3], 7: texts[7]})
-    from tap_airbyte_wrapper_spark.functions import bm25_index_delete  # noqa
+    from tap_airbyte_wrapper_spark.functions import index_delete  # noqa
     bm25_index_replace(delta, "bm25r8a", str(tmp_path / "idx"),
                        "doc_id", "text")
     got = bm25_index_search(spark, "bm25r8a", _bm25_queries(spark),
@@ -822,7 +822,7 @@ def test_bm25_index_delete_then_compact_folds_tombstones(spark, tmp_path):
     compact the tombstones fold physically (dst has no tombstone table)
     and search output is unchanged."""
     from tap_airbyte_wrapper_spark.functions import (
-        bm25_index_compact, bm25_index_delete, bm25_index_search,
+        index_compact, index_delete, bm25_index_search,
         bm25_index_write, bm25_topk)
 
     texts = {i: f"token{i % 5} alpha shared body text w{i}"
@@ -831,7 +831,7 @@ def test_bm25_index_delete_then_compact_folds_tombstones(spark, tmp_path):
                      str(tmp_path / "idx"), "doc_id", "text",
                      n_buckets=4)
     dead = [2, 11, 29]
-    bm25_index_delete(
+    index_delete(
         spark, "bm25r8b", str(tmp_path / "idx"),
         spark.createDataFrame([(i,) for i in dead], "doc_id long"))
     kept = {k: v for k, v in texts.items() if k not in dead}
@@ -842,8 +842,8 @@ def test_bm25_index_delete_then_compact_folds_tombstones(spark, tmp_path):
     key = lambda r: (r.query_id, r.rank)  # noqa: E731
     assert sorted(got, key=key) == sorted(want, key=key)
 
-    stats = bm25_index_compact(spark, "bm25r8b", str(tmp_path / "idx"),
-                               "bm25r8bc", str(tmp_path / "idx2"))
+    stats = index_compact(spark, "bm25r8b", str(tmp_path / "idx"),
+                          "bm25r8bc", str(tmp_path / "idx2"))
     assert stats["files_out"] <= stats["files_in"]
     assert not spark.catalog.tableExists("bm25r8bc_tombstones")
     got2 = bm25_index_search(spark, "bm25r8bc", _bm25_queries(spark),
@@ -856,7 +856,7 @@ def test_bm25_index_delete_then_append_revives_id(spark, tmp_path):
     content — the tombstone-count liveness predicate must keep the NEW
     generation, not resurrect the old one."""
     from tap_airbyte_wrapper_spark.functions import (
-        bm25_index_append, bm25_index_delete, bm25_index_search,
+        bm25_index_append, index_delete, bm25_index_search,
         bm25_index_write, bm25_topk)
 
     texts = {i: f"token{i % 5} alpha shared body text w{i}"
@@ -864,7 +864,7 @@ def test_bm25_index_delete_then_append_revives_id(spark, tmp_path):
     bm25_index_write(_bm25_corpus(spark, texts), "bm25r8c",
                      str(tmp_path / "idx"), "doc_id", "text",
                      n_buckets=4)
-    bm25_index_delete(
+    index_delete(
         spark, "bm25r8c", str(tmp_path / "idx"),
         spark.createDataFrame([(5,)], "doc_id long"))
     texts[5] = "gamma body resurrected doc"
@@ -918,7 +918,7 @@ def test_minhash_index_replace_matches_fresh_rebuild(spark, tmp_path):
 
 def test_minhash_index_delete_then_compact_folds(spark, tmp_path):
     from tap_airbyte_wrapper_spark.functions import (
-        minhash_dedup_delta, minhash_index_compact, minhash_index_delete,
+        minhash_dedup_delta, index_compact, index_delete,
         minhash_index_write)
 
     text = "shared content that will be deleted from corpus " * 4
@@ -928,16 +928,16 @@ def test_minhash_index_delete_then_compact_folds(spark, tmp_path):
     minhash_index_write(docs, "doc_id", "text", "mhd8",
                         str(tmp_path / "idx"), num_hashes=64, bands=16,
                         n_buckets=4)
-    minhash_index_delete(spark, "mhd8", str(tmp_path / "idx"),
-                         spark.createDataFrame([(1,)], "doc_id long"))
+    index_delete(spark, "mhd8", str(tmp_path / "idx"),
+                 spark.createDataFrame([(1,)], "doc_id long"))
     probe = spark.createDataFrame(
         [(50, text + " tail")], "doc_id long, text string")
     assert not minhash_dedup_delta(
         probe, "mhd8", str(tmp_path / "idx"), "doc_id", "text",
         threshold=0.5).filter(F.col("id_b") == 1).count()
 
-    minhash_index_compact(spark, "mhd8", str(tmp_path / "idx"),
-                          "mhd8c", str(tmp_path / "idx2"))
+    index_compact(spark, "mhd8", str(tmp_path / "idx"),
+                  "mhd8c", str(tmp_path / "idx2"))
     assert not spark.catalog.tableExists("mhd8c_tombstones")
     assert not minhash_dedup_delta(
         probe, "mhd8c", str(tmp_path / "idx2"), "doc_id", "text",
@@ -949,7 +949,7 @@ def test_fingerprint_index_delete_readmits_content(spark, tmp_path):
     the same content; re-appending keeps working afterwards."""
     from tap_airbyte_wrapper_spark.functions import (
         fingerprint_dedup_delta, fingerprint_index_append,
-        fingerprint_index_delete, fingerprint_index_write)
+        index_delete, fingerprint_index_write)
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma"), (2, "other content")],
@@ -960,8 +960,8 @@ def test_fingerprint_index_delete_readmits_content(spark, tmp_path):
         [(100, "alpha beta gamma")], "doc_id long, text string")
     assert fingerprint_dedup_delta(dup, "fpr8", "doc_id",
                                    "text").count() == 0  # dropped: dup of 1
-    fingerprint_index_delete(spark, "fpr8", str(tmp_path / "idx"),
-                             spark.createDataFrame([(1,)], "fid long"))
+    index_delete(spark, "fpr8", str(tmp_path / "idx"),
+                 spark.createDataFrame([(1,)], "fid long"))
     survivors = fingerprint_dedup_delta(dup, "fpr8", "doc_id", "text")
     assert [r.doc_id for r in survivors.collect()] == [100]  # readmitted
     fingerprint_index_append(survivors, "fpr8", "doc_id", "text")

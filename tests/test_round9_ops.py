@@ -263,8 +263,7 @@ def test_novelty_index_delete_matches_rebuilt_reference(spark, tmp_path):
     a gram doc 2 SHARED with a surviving doc (stays seen) vs a gram
     UNIQUE to doc 2 (becomes novel)."""
     from tap_airbyte_wrapper_spark.functions import (
-        ngram_novelty, novelty_index_delete, novelty_index_write,
-        novelty_probe)
+        index_delete, ngram_novelty, novelty_index_write, novelty_probe)
 
     ref = spark.createDataFrame(
         [(1, "a b c d e"),            # holds gram "a b c" etc.
@@ -279,9 +278,8 @@ def test_novelty_index_delete_matches_rebuilt_reference(spark, tmp_path):
         "doc_id long, text string")
     novelty_index_write(ref, "nv9d", str(tmp_path / "idx"), n=3,
                         n_buckets=2)
-    novelty_index_delete(
-        spark.createDataFrame([(2,)], "doc_id long"),
-        "nv9d", str(tmp_path / "idx"))
+    index_delete(spark, "nv9d", str(tmp_path / "idx"),
+                 spark.createDataFrame([(2,)], "doc_id long"))
 
     got = {r.doc_id: r for r in
            novelty_probe(batch, "nv9d", str(tmp_path / "idx")).collect()}
@@ -295,7 +293,7 @@ def test_novelty_index_delete_matches_rebuilt_reference(spark, tmp_path):
     # the sharp cases explicitly
     assert got[100].n_seen == 1      # shared gram survives doc 2's removal
     assert got[101].n_seen == 0      # doc-2-unique gram is novel again
-    for t in ("nv9d_grams", "nv9d_removed"):
+    for t in ("nv9d_grams", "nv9d_tombstones"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -304,8 +302,8 @@ def test_novelty_index_compact_folds_and_revives(spark, tmp_path):
     contributors into a fresh index; a removed id can then be
     re-appended (the one-way-until-compact contract)."""
     from tap_airbyte_wrapper_spark.functions import (
-        novelty_index_append, novelty_index_compact,
-        novelty_index_delete, novelty_index_write, novelty_probe)
+        index_compact, index_delete, novelty_index_append,
+        novelty_index_write, novelty_probe)
 
     ref = spark.createDataFrame(
         [(1, "a b c d"), (2, "p q r s")], "doc_id long, text string")
@@ -318,18 +316,18 @@ def test_novelty_index_compact_folds_and_revives(spark, tmp_path):
     novelty_index_write(ref, "nv9c", path, n=3, n_buckets=2)
     novelty_index_append(delta, "nv9c", path)
     novelty_index_append(delta, "nv9c", path)   # replay: duplicate rows
-    novelty_index_delete(
-        spark.createDataFrame([(2,)], "doc_id long"), "nv9c", path)
+    index_delete(spark, "nv9c", path,
+                 spark.createDataFrame([(2,)], "doc_id long"))
 
     before = {r.doc_id: r.n_seen
               for r in novelty_probe(batch, "nv9c", path).collect()}
     assert before == {100: 1, 101: 1, 102: 0}
 
     dst = str(tmp_path / "idx2")
-    novelty_index_compact(spark, "nv9c", path, "nv9c2", dst)
+    index_compact(spark, "nv9c", path, "nv9c2", dst)
     rows = spark.table("nv9c2_grams")
     assert rows.count() == rows.distinct().count()   # duplicates folded
-    assert not spark.catalog.tableExists("nv9c2_removed")
+    assert not spark.catalog.tableExists("nv9c2_tombstones")
     after = {r.doc_id: r.n_seen
              for r in novelty_probe(batch, "nv9c2", dst).collect()}
     assert after == before
@@ -339,8 +337,8 @@ def test_novelty_index_compact_folds_and_revives(spark, tmp_path):
     revived = {r.doc_id: r.n_seen
                for r in novelty_probe(batch, "nv9c2", dst).collect()}
     assert revived == {100: 1, 101: 1, 102: 1}
-    for t in ("nv9c_grams", "nv9c_removed", "nv9c2_grams",
-              "nv9c2_removed"):
+    for t in ("nv9c_grams", "nv9c_tombstones", "nv9c2_grams",
+              "nv9c2_tombstones"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -363,7 +361,7 @@ def test_novelty_probe_exact_under_shared_batch_owner(spark, tmp_path):
     # held by someone else; min-owner would have scored n_seen = 0.
     assert got.n_grams == 3 and got.n_seen == 1
     spark.sql("DROP TABLE IF EXISTS nv9e_grams")
-    spark.sql("DROP TABLE IF EXISTS nv9e_removed")
+    spark.sql("DROP TABLE IF EXISTS nv9e_tombstones")
 
 
 # ------------------------------- corpus_diff -> index maintenance E2E
@@ -1088,10 +1086,10 @@ def test_simhash_index_compact_folds_tombstones(sh_index, tmp_path):
     from pyspark.sql import Row
 
     from tap_airbyte_wrapper_spark.functions import (
-        simhash_dedup_delta, simhash_index_compact, simhash_index_delete)
+        simhash_dedup_delta, index_compact, index_delete)
 
     spark, corpus, path = sh_index
-    simhash_index_delete(
+    index_delete(
         spark, "sh9_t", path,
         spark.createDataFrame([(4,)], "sid long"))
     probe = corpus.filter("doc_id = 4").withColumn(
@@ -1101,7 +1099,7 @@ def test_simhash_index_compact_folds_tombstones(sh_index, tmp_path):
     assert (9004, 4) not in before          # deleted: no longer matches
 
     dst = str(tmp_path / "sh_idx2")
-    stats = simhash_index_compact(spark, "sh9_t", path, "sh9c_t", dst)
+    stats = index_compact(spark, "sh9_t", path, "sh9c_t", dst)
     assert stats["files_out"] <= stats["files_in"]
     assert not spark.catalog.tableExists("sh9c_t_tombstones")
     segs = spark.table("sh9c_t_segs")
@@ -1111,7 +1109,7 @@ def test_simhash_index_compact_folds_tombstones(sh_index, tmp_path):
         probe, "sh9c_t", dst, "doc_id", "text").collect()}
     assert after == before
     with pytest.raises(ValueError, match="NEW table"):
-        simhash_index_compact(spark, "sh9_t", path, "SH9_T", dst)
+        index_compact(spark, "sh9_t", path, "SH9_T", dst)
     for t in ("sh9c_t_segs", "sh9c_t_tombstones"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
