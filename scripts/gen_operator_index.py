@@ -28,6 +28,7 @@ SECTIONS = [
                               "operators/tails.py",
                               "operators/graph.py"]),
     ("LLM-pipeline functions", ["functions/text.py", "functions/dedup.py",
+                                "functions/hamming.py",
                                 "functions/similarity.py",
                                 "functions/retrieval.py",
                                 "functions/index_store.py",

@@ -3,7 +3,7 @@
 Two layers:
 
 * **Hadoop-FS helpers** (``read_text`` / ``write_text`` / ``copy_text``
-  / ``exists`` / ``mkdirs``) — driver-side metadata IO routed through
+  / ``exists`` / ``mkdirs`` / ``remove``) — driver-side metadata IO routed through
   the JVM's ``org.apache.hadoop.fs.FileSystem``, so an index whose
   ``path`` lives on an object store (``s3a://`` / ``gs://`` / ``abfs://``)
   or HDFS works exactly like a local one.  These move only
@@ -20,7 +20,7 @@ import os
 
 __all__ = [
     "list_parquet_files", "count_parquet_files",
-    "read_text", "write_text", "copy_text", "exists", "mkdirs",
+    "read_text", "write_text", "copy_text", "exists", "mkdirs", "remove",
 ]
 
 
@@ -73,6 +73,12 @@ def exists(spark, path: str) -> bool:
 def mkdirs(spark, path: str) -> None:
     fs, jpath, _ = _fs_path(spark, path)
     fs.mkdirs(jpath)
+
+
+def remove(spark, path: str) -> None:
+    """Delete ``path`` recursively; a missing path is not an error."""
+    fs, jpath, _ = _fs_path(spark, path)
+    fs.delete(jpath, True)
 
 
 def list_parquet_files(path: str) -> list[str]:

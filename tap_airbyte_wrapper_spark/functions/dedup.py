@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..casefold import lower
-from . import index_store as store
+from . import hamming, index_store as store
 from ._cache import cache_bounded
 from .text import _let
 
@@ -202,28 +202,32 @@ def lsh_candidate_pairs(
     identical — exact-dedup first to keep buckets small).
     """
     sig_size_expr = F.size(F.col(sig_col))
-    rows = sig_df.select(
-        F.col(id_col),
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(
-                    b,
-                    F.concat_ws(
-                        ",",
-                        F.transform(
-                            F.slice(
-                                F.col(sig_col),
-                                b * (sig_size_expr / bands).cast("int") + 1,
-                                (sig_size_expr / bands).cast("int"),
-                            ),
-                            lambda x: x.cast("string"),
-                        ),
+    return _band_pairs(sig_df, id_col, F.transform(
+        F.sequence(F.lit(0), F.lit(bands - 1)),
+        lambda b: F.xxhash64(
+            b,
+            F.concat_ws(
+                ",",
+                F.transform(
+                    F.slice(
+                        F.col(sig_col),
+                        b * (sig_size_expr / bands).cast("int") + 1,
+                        (sig_size_expr / bands).cast("int"),
                     ),
+                    lambda x: x.cast("string"),
                 ),
-            )
-        ).alias("band", "band_hash"),
-    )
+            ),
+        ),
+    ))
+
+
+def _band_pairs(df: DataFrame, id_col: str,
+                band_hashes: Column) -> DataFrame:
+    """(id_a, id_b), id_a < id_b, distinct: the docs sharing any
+    ``(band, band_hash)`` bucket of their ``band_hashes`` array — the
+    banded-LSH self-join, id-only."""
+    rows = df.select(F.col(id_col),
+                     F.posexplode(band_hashes).alias("band", "band_hash"))
     a = rows.select(F.col(id_col).alias("id_a"), "band", "band_hash")
     b = rows.select(F.col(id_col).alias("id_b"), "band", "band_hash")
     return (
@@ -336,16 +340,7 @@ def minhash_near_dup_pairs(
     # instead of a bands-times-corpus one.
     sigs = cache_bounded(minhash_signatures_df(
         df, id_col, text_col, num_hashes, shingle_len, bands=bands))
-    banded = sigs.select(
-        F.col(id_col), F.posexplode("band_hashes").alias("band", "band_hash"))
-    a = banded.select(F.col(id_col).alias("id_a"), "band", "band_hash")
-    b = banded.select(F.col(id_col).alias("id_b"), "band", "band_hash")
-    pairs = (
-        a.join(b, on=["band", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    pairs = _band_pairs(sigs, id_col, F.col("band_hashes"))
     sa = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
     return (
@@ -713,41 +708,13 @@ def simhash_near_dup_pairs(
     hash into ``chunks`` segments; any pair within ``max_hamming <
     chunks`` must agree on >= 1 whole segment, so candidates = pairs
     sharing a (segment_idx, segment_value) bucket; verify with exact
-    bit_count(xor) <= max_hamming."""
-    seg_bits = 64 // chunks
+    bit_count(xor) <= max_hamming (see ``hamming``)."""
     # feeds both pair sides — bounded-pool persist so tokenize+hash
     # runs once AND repeated identical calls hit the plan-matched cache
     # (eviction bounds the round-6 leak; see functions/_cache.py)
     hashed = cache_bounded(simhash_df(df, id_col, text_col))
-    segs = hashed.select(
-        id_col,
-        "sh",
-        F.posexplode(
-            F.array(*[
-                F.shiftright(F.col("sh"), i * seg_bits).bitwiseAND(
-                    F.lit((1 << seg_bits) - 1)
-                )
-                for i in range(chunks)
-            ])
-        ).alias("seg_idx", "seg_val"),
-    )
-    a = segs.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"),
-                    "seg_idx", "seg_val")
-    b = segs.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"),
-                    "seg_idx", "seg_val")
-    # verify BEFORE distinct: bit_count is a per-row codegen'd op, so the
-    # dedup shuffle carries only true near-dups, not every bucket collision
-    return (
-        a.join(b, on=["seg_idx", "seg_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .distinct()
-    )
+    return hamming.hamming_near_dup_pairs(hashed, id_col, "sh",
+                                          max_hamming, chunks=chunks)
 
 
 def ngram_jaccard_pairs(
@@ -830,30 +797,8 @@ def ngram_jaccard_pairs(
             .select("id_a", "id_b", "jaccard")
         )
 
-    prefix_len = (
-        F.col("sh_size") - F.ceil(F.col("sh_size") * F.lit(threshold)) + 1
-    ).cast("int")
-    posting = sh.select(
-        id_col, *blocking_cols, "sh_size",
-        F.explode(F.slice("hs", F.lit(1), prefix_len)).alias("shingle"))
-    a = posting.select(
-        *[F.col(c) for c in blocking_cols],
-        F.col(id_col).alias("id_a"), F.col("sh_size").alias("size_a"),
-        "shingle")
-    b = posting.select(
-        *[F.col(c) for c in blocking_cols],
-        F.col(id_col).alias("id_b"), F.col("sh_size").alias("size_b"),
-        "shingle")
-    cands = (
-        a.join(b, on=blocking_cols + ["shingle"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        # size-ratio bound: jaccard >= t forces t*|A| <= |B| <= |A|/t
-        .filter((F.col("size_b") >= F.col("size_a") * threshold)
-                & (F.col("size_a") >= F.col("size_b") * threshold))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    ha = sh.select(F.col(id_col).alias("id_a"), F.col("hs").alias("hs_a"),
+    cands = _prefix_candidates(sh, id_col, threshold, blocking_cols)
+    ha =sh.select(F.col(id_col).alias("id_a"), F.col("hs").alias("hs_a"),
                    F.col("sh_size").alias("size_a"))
     hb = sh.select(F.col(id_col).alias("id_b"), F.col("hs").alias("hs_b"),
                    F.col("sh_size").alias("size_b"))
@@ -885,27 +830,29 @@ def prefix_filter_candidates(
     ``prefix_filter`` path, for composing with sketch-based generators
     whose recall is probabilistic.  Output: (id_a, id_b), id_a < id_b.
     """
-    sh = df.select(
-        F.col(id_col),
-        F.array_sort(
-            F.array_distinct(
-                F.transform(shingles(F.col(text_col), n),
-                            lambda s: F.xxhash64(s)))
-        ).alias("hs"),
-    ).withColumn("sh_size", F.size("hs"))
+    return _prefix_candidates(
+        _shingle_hash_table(df, id_col, text_col, n), id_col, threshold)
+
+
+def _prefix_candidates(sh: DataFrame, id_col: str, threshold: float,
+                       blocking_cols=()) -> DataFrame:
+    """(id_a, id_b), id_a < id_b, distinct: the PPJoin prefix postings
+    self-join over a canonical shingle-hash table ``(id, blocking...,
+    hs, sh_size)`` (``hs`` sorted ascending), size-ratio filtered."""
     prefix_len = (
         F.col("sh_size") - F.ceil(F.col("sh_size") * F.lit(threshold)) + 1
     ).cast("int")
     posting = sh.select(
-        id_col, "sh_size",
+        id_col, *blocking_cols, "sh_size",
         F.explode(F.slice("hs", F.lit(1), prefix_len)).alias("shingle"))
-    a = posting.select(F.col(id_col).alias("id_a"),
+    a = posting.select(*blocking_cols, F.col(id_col).alias("id_a"),
                        F.col("sh_size").alias("size_a"), "shingle")
-    b = posting.select(F.col(id_col).alias("id_b"),
+    b = posting.select(*blocking_cols, F.col(id_col).alias("id_b"),
                        F.col("sh_size").alias("size_b"), "shingle")
     return (
-        a.join(b, on="shingle")
+        a.join(b, on=[*blocking_cols, "shingle"])
         .filter(F.col("id_a") < F.col("id_b"))
+        # size-ratio bound: jaccard >= t forces t*|A| <= |B| <= |A|/t
         .filter((F.col("size_b") >= F.col("size_a") * threshold)
                 & (F.col("size_a") >= F.col("size_b") * threshold))
         .select("id_a", "id_b")
@@ -1226,19 +1173,9 @@ def minhash_verified_pairs(
         sigs = cache_bounded(minhash_signatures_df(
             reps, id_col, text_col, num_hashes, shingle_len,
             bands=bands))
-        banded = sigs.select(
-            F.col(id_col),
-            F.posexplode("band_hashes").alias("band", "band_hash"))
-        a = banded.select(F.col(id_col).alias("id_a"), "band", "band_hash")
-        b = banded.select(F.col(id_col).alias("id_b"), "band", "band_hash")
-        cands = (
-            a.join(b, on=["band", "band_hash"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
-            .distinct()
-        )
         return exact_jaccard_on_pairs(
-            reps, cands, id_col, text_col, shingle_len, threshold,
+            reps, _band_pairs(sigs, id_col, F.col("band_hashes")), id_col,
+            text_col, shingle_len, threshold,
             broadcast_arrays=broadcast_verify)
 
     return _collapse_expand_verified(
@@ -1673,31 +1610,11 @@ def fingerprint_index_append(
 # Persisted SIMHASH index — the hamming near-dup member of the persisted
 # index family (MinHash=jaccard, fingerprint=exact, IVF=cosine,
 # BM25=retrieval, novelty=span overlap): a continuously-arriving corpus
-# drops small-edit near-dups at O(delta) cost.  One table: pigeonhole
-# SEGMENTS of each doc's 64-bit simhash, bucketed by the packed
-# (segment idx, segment value) key, with the full signature ON the
-# segment row — one long, so unlike MinHash no side signature table is
-# needed and candidate verification is a codegen'd bit_count on the
-# probe join's own output.  Lifecycle and liveness: ``index_store``.
+# drops small-edit near-dups at O(delta) cost.  One table of pigeonhole
+# segments of each doc's 64-bit simhash; the segment encoding, the
+# recall contract and the probe are ``hamming``'s, lifecycle and
+# liveness ``index_store``'s.
 # ---------------------------------------------------------------------------
-
-def _simhash_segments(hashed: DataFrame, id_alias: str, chunks: int):
-    """(id_alias, sh, seg_key) — pigeonhole segments with the packed
-    join key ``seg_val * chunks + seg_idx``."""
-    seg_bits = 64 // chunks
-    mask = (1 << seg_bits) - 1
-    return hashed.select(
-        F.col(hashed.columns[0]).alias(id_alias),
-        "sh",
-        F.posexplode(F.array(*[
-            F.shiftright(F.col("sh"), i * seg_bits)
-            .bitwiseAND(F.lit(mask)) for i in range(chunks)
-        ])).alias("__seg_idx", "__seg_val"),
-    ).select(
-        id_alias, "sh",
-        (F.col("__seg_val") * chunks + F.col("__seg_idx"))
-        .alias("seg_key"))
-
 
 def simhash_index_write(
     df: DataFrame,
@@ -1710,23 +1627,13 @@ def simhash_index_write(
     n_buckets: int = 16,
 ) -> None:
     """Build the persisted SimHash index: ``{table}_segs``
-    (seg_key, id, sh, __ver) bucketed+sorted by ``seg_key``.  Any pair
-    within ``max_hamming < chunks`` must agree on >= 1 whole segment
-    (pigeonhole), so a delta probe joins its own segments into this
-    bucketing and the corpus side scans co-located.  ``max_hamming``
-    is RECORDED as the index's contract — probes verify against it by
-    default (a looser probe threshold would need more chunks than the
-    stored layout has)."""
-    if max_hamming >= chunks:
-        raise ValueError(
-            f"pigeonhole needs max_hamming < chunks, got "
-            f"{max_hamming} >= {chunks}")
-    segs = _simhash_segments(
-        simhash_df(df, id_col, text_col), "sid", chunks)
-    store.build(df.sparkSession, "simhash", table_name, path,
-                {"segs": segs.select("seg_key", "sid", "sh")},
-                {"id_col": id_col, "chunks": chunks,
-                 "max_hamming": max_hamming, "n_buckets": n_buckets})
+    (seg_key, sid, sh, __ver) bucketed+sorted by ``seg_key``.
+    ``max_hamming`` (``< chunks``) is RECORDED as the index's contract
+    — probes verify against it by default."""
+    hamming.index_build(
+        "simhash", simhash_df(df, id_col, text_col), table_name, path,
+        {"id_col": id_col, "chunks": chunks, "max_hamming": max_hamming,
+         "n_buckets": n_buckets})
 
 
 def simhash_dedup_delta(
@@ -1741,50 +1648,12 @@ def simhash_dedup_delta(
     within itself) — the incremental form of
     :func:`simhash_near_dup_pairs`.  Returns ``(id_a, id_b, hamming,
     kind)`` with ``kind`` ``'corpus'`` (delta doc id_a matches corpus
-    doc id_b) or ``'delta'`` (two new docs match, id_a < id_b).
-
-    Scale shape (delta << corpus): one Arrow simhash pass over the
-    delta; the candidate join shuffles only delta segments into the
-    index bucketing (corpus scan co-located, zero corpus shuffle);
-    verification is ``bit_count(xor)`` ON the join output — no second
-    corpus table, no signature fetch (the 8-byte signature rides the
-    segment row)."""
-    spark = delta.sparkSession
-    meta = store.read_meta(spark, path)
-    hmax = meta["max_hamming"] if max_hamming is None else max_hamming
-    if hmax > meta["max_hamming"]:
-        raise ValueError(
-            f"index guarantees candidates only to hamming "
-            f"{meta['max_hamming']} (chunks={meta['chunks']}); "
-            f"rebuild with more chunks for {hmax}")
-    dsegs = _simhash_segments(
-        simhash_df(delta, id_col, text_col).localCheckpoint(eager=True),
-        "__did", meta["chunks"])
-    csegs = store.live(spark, "simhash", table_name, "segs")
-    pairs_x = (
-        dsegs.join(csegs.withColumnRenamed("sh", "__csh"), on="seg_key")
-        .withColumn("hamming",
-                    F.bit_count(F.col("sh").bitwiseXOR(F.col("__csh"))))
-        .filter(F.col("hamming") <= hmax)
-        .select(F.col("__did").alias("id_a"),
-                F.col("sid").alias("id_b"), "hamming",
-                F.lit("corpus").alias("kind"))
-        .distinct()
-    )
-    a = dsegs.select(F.col("__did").alias("id_a"),
-                     F.col("sh").alias("__sa"), "seg_key")
-    b = dsegs.select(F.col("__did").alias("id_b"),
-                     F.col("sh").alias("__sb"), "seg_key")
-    pairs_d = (
-        a.join(b, on="seg_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming",
-                    F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb"))))
-        .filter(F.col("hamming") <= hmax)
-        .select("id_a", "id_b", "hamming", F.lit("delta").alias("kind"))
-        .distinct()
-    )
-    return pairs_x.unionByName(pairs_d)
+    doc id_b) or ``'delta'`` (two new docs match, id_a < id_b).  One
+    Arrow simhash pass over the delta; the corpus side is read with zero
+    shuffle."""
+    meta = store.read_meta(delta.sparkSession, path)
+    return hamming.delta_probe(simhash_df(delta, id_col, text_col),
+                               table_name, meta, max_hamming)
 
 
 def simhash_index_append(
@@ -1798,11 +1667,9 @@ def simhash_index_append(
     index's own recorded parameters, under the store's append contract
     (dedup the delta first; re-crawls go through
     :func:`simhash_index_replace`)."""
-    spark = delta.sparkSession
-    meta = store.read_meta(spark, path)
-    segs = _simhash_segments(
-        simhash_df(delta, id_col, text_col), "sid", meta["chunks"])
-    store.append(spark, table_name, meta, id_col, {"segs": segs})
+    meta = store.read_meta(delta.sparkSession, path)
+    hamming.index_append(simhash_df(delta, id_col, text_col), table_name,
+                         meta, id_col)
 
 
 def simhash_index_replace(

@@ -25,7 +25,9 @@ A delete appends one row per id to ``t_tombstones`` (O(delete batch),
 no data file touched).  A row is LIVE iff ``__ver`` equals its id's
 tombstone count, so a delete kills every stored generation of an id
 and a later append (stamped with the bumped count) revives it; a
-replace is a delete followed by an append.  The tombstone table is
+replace is a delete followed by an append.  A build or a compaction
+starts a new generation at its path and removes that path's old
+tombstone files (dropping the external table leaves them).  The tombstone table is
 delete-sized, so its per-id count broadcasts and the liveness filter
 never disturbs the bucketed layout.
 
@@ -65,7 +67,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, functions as F
 
 from ..confutil import scoped_conf
-from ..fsutil import copy_text, count_parquet_files, read_text, write_text
+from ..fsutil import (copy_text, count_parquet_files, read_text, remove,
+                      write_text)
 from ._maint import (live_rows, record_tombstones_table, stamp_version,
                      tombstone_counts_table)
 
@@ -120,9 +123,14 @@ def live(spark, family: str, table_name: str, suffix: str,
                      tombstone_counts_table(spark, table_name, tid), tid)
 
 
-def _drop(spark, table_name: str, layout: Layout) -> None:
+def _drop(spark, table_name: str, layout: Layout, path: str) -> None:
+    """Drop the catalog tables and start a new tombstone generation at
+    ``path``: the tables are external, so a DROP leaves their files,
+    and the first delete's table creation refuses a non-empty
+    ``{path}/tombstones``."""
     for suffix in (*layout.tables, "tombstones"):
         spark.sql(f"DROP TABLE IF EXISTS {table_name}_{suffix}")
+    remove(spark, os.path.join(path, "tombstones"))
 
 
 def _write(rows: DataFrame, layout: Layout, meta: dict, table_name: str,
@@ -137,12 +145,12 @@ def _write(rows: DataFrame, layout: Layout, meta: dict, table_name: str,
 def build(spark, family: str, table_name: str, path: str,
           tables: dict[str, DataFrame], meta: dict) -> None:
     """Build an index from scratch: drop the family's tables and any
-    tombstones, write each table at ``__ver = 0`` under its bucket
+    tombstones (catalog entries and files), write each table at ``__ver = 0`` under its bucket
     spec, and record ``meta`` (which must hold ``id_col`` and
     ``n_buckets``) plus the family."""
     layout = LAYOUTS[family]
     meta = {"family": family, **meta}
-    _drop(spark, table_name, layout)
+    _drop(spark, table_name, layout, path)
     for suffix, rows in tables.items():
         _write(rows, layout, meta, table_name, path, suffix)
     write_text(spark, os.path.join(path, META), json.dumps(meta))
@@ -199,7 +207,7 @@ def index_compact(spark, table_name: str, path: str, dst_table: str,
     meta = read_meta(spark, path)
     layout = LAYOUTS[meta["family"]]
     files_in = count_parquet_files(path, spark)
-    _drop(spark, dst_table, layout)
+    _drop(spark, dst_table, layout, dst_path)
     with scoped_conf(spark, {
             "spark.sql.sources.bucketing.autoBucketedScan.enabled":
             "false"}):

@@ -29,8 +29,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 from pyspark.sql.functions import pandas_udf
 
-from . import codecs as _codecs
-from . import index_store as store
+from . import audio_meta as _audio, codecs as _codecs, video as _video
+from . import hamming, index_store as store
+from .exif import exif_metadata as _exif
 
 
 def _payload_and_type(b) -> tuple[bytes, str]:
@@ -51,7 +52,6 @@ __all__ = [
     "image_ahash",
     "image_near_dup_pairs",
     "audio_ahash",
-    "hamming_near_dup_pairs",
     "media_window_sig",
     "mp4_timing_sig",
     "video_timing_sig",
@@ -181,40 +181,32 @@ def probe_media_meta(col: Column) -> Column:
     are stringified for the open-ended meta map; absent keys mean no
     probe recognized the container.  Arrow pandas UDF, one pass, zero
     shuffle."""
-    from . import audio_meta as _audio
-    from . import video as _video
-    from .exif import exif_metadata as _exif
 
     @pandas_udf("map<string,string>")
     def probe(payloads: pd.Series) -> pd.Series:
-        out = []
-        for p in payloads:
-            b = bytes(p) if p is not None else None
-            entries: dict[str, str] = {}
-            got = None
-            dims = None
-            if b:
-                # magic-exact probes first; the MP3 sync scan inside
-                # audio_metadata is heuristic, so images must not
-                # reach it
-                got = _video.video_metadata(b)
-                if got is None:
-                    dims = _codecs.image_dimensions(b)
-                if got is None and dims is None:
-                    got = _audio.audio_metadata(b)
-            if got is not None:
-                entries = {k: str(v) for k, v in got.items()
-                           if v is not None}
-            elif dims is not None:
-                entries = {"width": str(dims[0]),
-                           "height": str(dims[1])}
-                exif = _exif(b)
-                if exif:
-                    entries.update({k: str(v) for k, v in exif.items()})
-            out.append(entries)
-        return pd.Series(out)
+        return pd.Series([_probe_entries(bytes(p) if p is not None else None)
+                          for p in payloads])
 
     return probe(col)
+
+
+def _probe_entries(b: bytes | None) -> dict[str, str]:
+    """:func:`probe_media_meta` of one payload."""
+    if not b:
+        return {}
+    # magic-exact probes first; the MP3 sync scan inside audio_metadata
+    # is heuristic, so images must not reach it
+    got = _video.video_metadata(b)
+    dims = _codecs.image_dimensions(b) if got is None else None
+    if got is None and dims is None:
+        got = _audio.audio_metadata(b)
+    if got is not None:
+        return {k: str(v) for k, v in got.items() if v is not None}
+    if dims is None:
+        return {}
+    entries = {"width": str(dims[0]), "height": str(dims[1])}
+    entries.update({k: str(v) for k, v in (_exif(b) or {}).items()})
+    return entries
 
 
 def exif_meta(col: Column) -> Column:
@@ -224,7 +216,6 @@ def exif_meta(col: Column) -> Column:
     TIFF walk finds; see :mod:`.exif`).  Empty map when there is no
     parseable EXIF; never raises.  Arrow pandas UDF, header bytes
     only, zero shuffle."""
-    from .exif import exif_metadata as _exif
 
     @pandas_udf("map<string,string>")
     def probe(payloads: pd.Series) -> pd.Series:
@@ -515,6 +506,12 @@ _ORIENT_FIX = {
 }
 
 
+def _pack64(bits) -> int:
+    """``bits`` packed LSB-first into one signed 64-bit value."""
+    v = sum(1 << i for i, bit in enumerate(bits) if bit)
+    return v if v < (1 << 63) else v - (1 << 64)
+
+
 def image_ahash(col: Column, media_type: str = "image/png",
                 normalize_orientation: bool = False) -> Column:
     """Perceptual average-hash of a binary image column as a 64-bit
@@ -522,8 +519,8 @@ def image_ahash(col: Column, media_type: str = "image/png",
     above the 64-pixel mean.  Visually similar images (recompression,
     mild noise, small edits) land within a few hamming bits, so
     near-dup detection reuses the TEXT sketch machinery unchanged:
-    :func:`..dedup.simhash_near_dup_pairs`'s pigeonhole bucketing works
-    on any 64-bit hamming space, this column included.
+    the pigeonhole bucketing of :mod:`.hamming` works on any 64-bit
+    hamming space, this column included.
 
     ``normalize_orientation``: apply the EXIF orientation transform
     (tags 2-8, the PIL ``exif_transpose`` mapping) to the decoded
@@ -538,8 +535,6 @@ def image_ahash(col: Column, media_type: str = "image/png",
 
     @pandas_udf("long")
     def ahash(payloads: pd.Series) -> pd.Series:
-        from .exif import exif_metadata as _exif
-
         codec = _codecs.image_codec_for(media_type)
         out = []
         for p in payloads:
@@ -558,60 +553,11 @@ def image_ahash(col: Column, media_type: str = "image/png",
                 if pixels.ndim == 3 else pixels.astype("float64")
             small = _codecs.nearest_resize(
                 gray[..., None].astype("uint8"), 8, 8)[..., 0]
-            bits = (small.astype("float64") > small.mean()).flatten()
-            v = np.uint64(0)
-            for i, bit in enumerate(bits):
-                if bit:
-                    v |= np.uint64(1) << np.uint64(i)
-            iv = int(v)
-            out.append(iv if iv < (1 << 63) else iv - (1 << 64))
+            out.append(_pack64(
+                (small.astype("float64") > small.mean()).flatten()))
         return pd.Series(out, dtype="object").astype("Int64")
 
     return ahash(col)
-
-
-def hamming_near_dup_pairs(
-    hashed: DataFrame,
-    id_col: str,
-    hash_col: str = "sh",
-    max_hamming: int = 6,
-    block_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """Near-dup pairs over ANY 64-bit hamming space (text simhash,
-    image/audio perceptual hashes, byte-window signatures): pigeonhole
-    the hash into ``chunks`` segments (recall guaranteed for hamming <
-    chunks), bucket-join, and verify with ``bit_count(xor)``.  Shuffles
-    8-byte hashes + ids only — the payloads that produced the hashes
-    never move.  ``block_cols`` adds extra equi-join blocking keys
-    (e.g. a container-metadata bucket): candidates must then share a
-    block AND a hash segment, never a cross-block comparison."""
-    chunks = max_hamming + 1 if max_hamming < 15 else 16
-    hashed = hashed.select(
-        F.col(id_col), F.col(hash_col).alias("sh"), *block_cols
-    ).filter(F.col("sh").isNotNull())
-    seg_bits = 64 // chunks
-    segs = hashed.select(
-        id_col, "sh", *block_cols,
-        F.posexplode(
-            F.array(*[
-                F.shiftright(F.col("sh"), i * seg_bits).bitwiseAND(
-                    F.lit((1 << seg_bits) - 1))
-                for i in range(chunks)
-            ])).alias("seg_idx", "seg_val"),
-    )
-    a = segs.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"),
-                    "seg_idx", "seg_val", *block_cols)
-    b = segs.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"),
-                    "seg_idx", "seg_val", *block_cols)
-    return (
-        a.join(b, on=["seg_idx", "seg_val", *block_cols])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming",
-                    F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
-        .distinct()
-    )
 
 
 def image_near_dup_pairs(
@@ -623,10 +569,10 @@ def image_near_dup_pairs(
 ) -> DataFrame:
     """Visual near-duplicate pairs ``(id_a, id_b, hamming)``: average-
     hash each image (one parallel decode pass — the expensive part),
-    then :func:`hamming_near_dup_pairs` on the 64-bit hashes."""
+    then :func:`.hamming.hamming_near_dup_pairs` on the 64-bit hashes."""
     hashed = df.select(
         F.col(id_col), image_ahash(F.col(media_col), media_type).alias("sh"))
-    return hamming_near_dup_pairs(hashed, id_col, "sh", max_hamming)
+    return hamming.hamming_near_dup_pairs(hashed, id_col, "sh", max_hamming)
 
 
 def audio_ahash(col: Column, media_type: str = "audio/wav",
@@ -636,7 +582,7 @@ def audio_ahash(col: Column, media_type: str = "audio/wav",
     energy above the median window energy.  Gain changes barely move
     the bits (median threshold scales with the signal); silence
     padding, mild noise and re-encoding flip only a few — so
-    :func:`hamming_near_dup_pairs` finds re-uploads and trims the same
+    :func:`.hamming.hamming_near_dup_pairs` finds re-uploads and trims the same
     way it finds near-identical images.  Undecodable payloads -> null.
     """
 
@@ -655,12 +601,7 @@ def audio_ahash(col: Column, media_type: str = "audio/wav",
             cut = (len(samples) // n_windows) * n_windows
             win = samples[:cut].reshape(n_windows, -1)
             energy = np.sqrt((win.astype("float64") ** 2).mean(axis=1))
-            bits = energy > np.median(energy)
-            v = 0
-            for i, bit in enumerate(bits):
-                if bit:
-                    v |= 1 << i
-            out.append(v if v < (1 << 63) else v - (1 << 64))
+            out.append(_pack64(energy > np.median(energy)))
         return pd.Series(out, dtype="object").astype("Int64")
 
     return ahash(col)
@@ -702,28 +643,28 @@ def media_window_sig(col: Column, n_windows: int = 64,
 
     @pandas_udf("long")
     def sig(payloads: pd.Series) -> pd.Series:
-        out = []
-        for p in payloads:
-            if p is None or len(p) == 0:
-                out.append(None)
-                continue
-            b = bytes(p)
-            anchor = 0
-            for marker in _ESSENCE_MARKERS:
-                at = b.find(marker)
-                if at >= 0:
-                    anchor = at + len(marker)
-                    break
-            v = 0
-            for i in range(n_windows):
-                off = anchor + i * stride
-                win = b[off:off + window]
-                if win and (hashlib.md5(win).digest()[-1] & 1):
-                    v |= 1 << i
-            out.append(v if v < (1 << 63) else v - (1 << 64))
+        out = [_window_sig(bytes(p), n_windows, window, stride)
+               if p is not None and len(p) > 0 else None for p in payloads]
         return pd.Series(out, dtype="object").astype("Int64")
 
     return sig(col)
+
+
+def _window_sig(b: bytes, n_windows: int, window: int, stride: int) -> int:
+    """:func:`media_window_sig` of one non-empty payload."""
+    anchor = 0
+    for marker in _ESSENCE_MARKERS:
+        at = b.find(marker)
+        if at >= 0:
+            anchor = at + len(marker)
+            break
+    v = 0
+    for i in range(n_windows):
+        off = anchor + i * stride
+        win = b[off:off + window]
+        if win and (hashlib.md5(win).digest()[-1] & 1):
+            v |= 1 << i
+    return v if v < (1 << 63) else v - (1 << 64)
 
 
 def mp4_timing_sig(col: Column, window_samples: int = 4) -> Column:
@@ -868,31 +809,31 @@ def _windowed_timing_sig(col: Column, window_samples: int,
     if window_samples < 1:
         raise ValueError(
             f"window_samples must be >= 1, got {window_samples}")
-    cap = 64 * window_samples
 
     @pandas_udf("long")
     def sig(payloads: pd.Series) -> pd.Series:
-        out = []
-        for p in payloads:
-            deltas = _timing_deltas_us(bytes(p), cap, containers) \
-                if p is not None and len(p) > 0 else None
-            if not deltas:
-                out.append(None)
-                continue
-            v = 0
-            for i in range(64):
-                win = deltas[i * window_samples:
-                             (i + 1) * window_samples]
-                if not win:
-                    break
-                blob = b"".join(d.to_bytes(8, "big", signed=False)
-                                for d in win)
-                if hashlib.md5(blob).digest()[-1] & 1:
-                    v |= 1 << i
-            out.append(v if v < (1 << 63) else v - (1 << 64))
+        out = [_timing_sig(bytes(p), window_samples, containers)
+               if p is not None and len(p) > 0 else None for p in payloads]
         return pd.Series(out, dtype="object").astype("Int64")
 
     return sig(col)
+
+
+def _timing_sig(b: bytes, window_samples: int, containers) -> int | None:
+    """:func:`_windowed_timing_sig` of one non-empty payload (None when
+    no container in ``containers`` yields durations)."""
+    deltas = _timing_deltas_us(b, 64 * window_samples, containers)
+    if not deltas:
+        return None
+    v = 0
+    for i in range(64):
+        win = deltas[i * window_samples:(i + 1) * window_samples]
+        if not win:
+            break
+        blob = b"".join(d.to_bytes(8, "big", signed=False) for d in win)
+        if hashlib.md5(blob).digest()[-1] & 1:
+            v |= 1 << i
+    return v if v < (1 << 63) else v - (1 << 64)
 
 
 def audio_timing_sig(col: Column, window_samples: int = 4) -> Column:
@@ -975,7 +916,7 @@ def media_timing_near_dup_pairs(
             "|", "__kind", "__dims", F.col("__dbk").cast("string")))
         .select(id_col, "sh", "__blk")
         .localCheckpoint(eager=True))
-    return hamming_near_dup_pairs(
+    return hamming.hamming_near_dup_pairs(
         blocked, id_col, "sh", max_hamming, block_cols=("__blk",))
 
 
@@ -994,12 +935,6 @@ def _probe_and_sig(col: Column, sig_kind: str, n_windows: int,
     and returns ``struct<m: map<string,string>, sh: long>``.  Guide
     §4: pass the payload across the boundary once, amortize the
     dispatch."""
-
-    from . import audio_meta as _audio
-    from . import video as _video
-    from .exif import exif_metadata as _exif
-
-    cap = 64 * window_samples
     timing_containers = ("mp4", "mkv", "audio")
 
     @pandas_udf("struct<m: map<string,string>, sh: bigint>")
@@ -1007,62 +942,14 @@ def _probe_and_sig(col: Column, sig_kind: str, n_windows: int,
         metas, sigs = [], []
         for p in payloads:
             b = bytes(p) if p is not None else None
-            # --- probe (token-identical logic to probe_media_meta)
-            entries: dict[str, str] = {}
-            got = None
-            dims = None
-            if b:
-                got = _video.video_metadata(b)
-                if got is None:
-                    dims = _codecs.image_dimensions(b)
-                if got is None and dims is None:
-                    got = _audio.audio_metadata(b)
-            if got is not None:
-                entries = {k: str(v) for k, v in got.items()
-                           if v is not None}
-            elif dims is not None:
-                entries = {"width": str(dims[0]),
-                           "height": str(dims[1])}
-                exif = _exif(b)
-                if exif:
-                    entries.update({k: str(v)
-                                    for k, v in exif.items()})
-            metas.append(entries)
-            # --- signature (token-identical to media_window_sig /
-            # _windowed_timing_sig)
+            metas.append(_probe_entries(b))
             if not b:
                 sigs.append(None)
-                continue
-            if sig_kind == "window":
-                anchor = 0
-                for marker in _ESSENCE_MARKERS:
-                    at = b.find(marker)
-                    if at >= 0:
-                        anchor = at + len(marker)
-                        break
-                v = 0
-                for i in range(n_windows):
-                    off = anchor + i * stride
-                    win = b[off:off + window]
-                    if win and (hashlib.md5(win).digest()[-1] & 1):
-                        v |= 1 << i
-                sigs.append(v if v < (1 << 63) else v - (1 << 64))
+            elif sig_kind == "window":
+                sigs.append(_window_sig(b, n_windows, window, stride))
             else:
-                deltas = _timing_deltas_us(b, cap, timing_containers)
-                if not deltas:
-                    sigs.append(None)
-                    continue
-                v = 0
-                for i in range(64):
-                    win = deltas[i * window_samples:
-                                 (i + 1) * window_samples]
-                    if not win:
-                        break
-                    blob = b"".join(d.to_bytes(8, "big", signed=False)
-                                    for d in win)
-                    if hashlib.md5(blob).digest()[-1] & 1:
-                        v |= 1 << i
-                sigs.append(v if v < (1 << 63) else v - (1 << 64))
+                sigs.append(_timing_sig(b, window_samples,
+                                        timing_containers))
         return pd.DataFrame({
             "m": metas,
             "sh": pd.Series(sigs, dtype="object").astype("Int64")})
@@ -1169,7 +1056,7 @@ def media_container_near_dup_pairs(
     blocked = _media_blocked_sigs(df, id_col, media_col,
                                   duration_bucket_s, n_windows, window,
                                   stride).localCheckpoint(eager=True)
-    return hamming_near_dup_pairs(
+    return hamming.hamming_near_dup_pairs(
         blocked, id_col, "sh", max_hamming, block_cols=("__blk",))
 
 
@@ -1218,30 +1105,18 @@ def mp4_asset_payload(width: Column, height: Column,
 
 
 # ------------------------------------------- persisted media-sig index
+# Pigeonhole segments of each asset's signature with the probe block
+# folded into the key: the segment encoding, the recall contract and
+# the probe are ``hamming``'s, lifecycle and liveness ``index_store``'s.
 
-def _media_segments(sigs: DataFrame, id_alias: str,
-                    chunks: int) -> DataFrame:
-    """(id_alias, sh, seg_key) — pigeonhole segments of the byte-window
-    signature, with the metadata BLOCK folded into the join key:
-    ``seg_key = xxhash64(__blk, seg_val * chunks + seg_idx)``, so two
-    assets can only be candidates when they agree on a whole segment
-    AND the probe block — the same candidate contract as the batch
-    pair op, just as one long key the bucketed layout can sort by."""
-    seg_bits = 64 // chunks
-    mask = (1 << seg_bits) - 1
-    return sigs.select(
-        F.col(sigs.columns[0]).alias(id_alias),
-        "sh", "__blk",
-        F.posexplode(F.array(*[
-            F.shiftright(F.col("sh"), i * seg_bits)
-            .bitwiseAND(F.lit(mask)) for i in range(chunks)
-        ])).alias("__seg_idx", "__seg_val"),
-    ).select(
-        id_alias, "sh",
-        F.xxhash64(
-            F.col("__blk"),
-            F.col("__seg_val") * chunks + F.col("__seg_idx"))
-        .alias("seg_key"))
+def _media_index_sigs(df: DataFrame, id_col: str, media_col: str,
+                      meta: dict) -> DataFrame:
+    """(id, sh, __blk) computed with an index's recorded parameters."""
+    _check_timing_sig_meta(meta)
+    return _media_blocked_sigs(
+        df, id_col, media_col, meta["duration_bucket_s"],
+        meta["n_windows"], meta["window"], meta["stride"],
+        sig_kind=meta.get("sig_kind", "window"))
 
 
 def media_sig_index_write(
@@ -1270,14 +1145,6 @@ def media_sig_index_write(
     Signature and blocking parameters are RECORDED in the index meta
     so probes and appends reproduce them exactly (lifecycle and
     liveness: ``index_store``)."""
-    if max_hamming >= chunks:
-        raise ValueError(
-            f"pigeonhole needs max_hamming < chunks, got "
-            f"{max_hamming} >= {chunks}")
-    segs = _media_segments(
-        _media_blocked_sigs(df, id_col, media_col, duration_bucket_s,
-                            n_windows, window, stride,
-                            sig_kind=sig_kind), "mid", chunks)
     meta = {"id_col": id_col, "chunks": chunks,
             "max_hamming": max_hamming, "n_buckets": n_buckets,
             "duration_bucket_s": duration_bucket_s,
@@ -1286,8 +1153,10 @@ def media_sig_index_write(
     if sig_kind == "timing":
         meta["timing_sig_version"] = TIMING_SIG_VERSION
         meta["window_samples"] = TIMING_SIG_WINDOW_SAMPLES
-    store.build(df.sparkSession, "media_sig", table_name, path,
-                {"segs": segs.select("seg_key", "mid", "sh")}, meta)
+    hamming.index_build(
+        "media_sig", _media_blocked_sigs(
+            df, id_col, media_col, duration_bucket_s, n_windows, window,
+            stride, sig_kind=sig_kind), table_name, path, meta)
 
 
 def media_dedup_delta(
@@ -1302,53 +1171,13 @@ def media_dedup_delta(
     index (and within itself) — the incremental form of
     :func:`media_container_near_dup_pairs`.  Returns ``(id_a, id_b,
     hamming, kind)`` with ``kind`` ``'corpus'`` (delta asset id_a
-    duplicates live corpus asset id_b) or ``'delta'``.  Scale shape
-    mirrors ``simhash_dedup_delta``: one probe+signature Arrow pass
-    over the delta payloads, candidate join shuffles only delta
-    segments (corpus scan bucket-co-located, zero corpus shuffle),
-    verification is ``bit_count(xor)`` on the join output — the 8-byte
-    signature rides the segment row."""
-    spark = delta.sparkSession
-    meta = store.read_meta(spark, path)
-    _check_timing_sig_meta(meta)
-    hmax = meta["max_hamming"] if max_hamming is None else max_hamming
-    if hmax > meta["max_hamming"]:
-        raise ValueError(
-            f"index guarantees candidates only to hamming "
-            f"{meta['max_hamming']} (chunks={meta['chunks']}); "
-            f"rebuild with more chunks for {hmax}")
-    dsegs = _media_segments(
-        _media_blocked_sigs(
-            delta, id_col, media_col, meta["duration_bucket_s"],
-            meta["n_windows"], meta["window"], meta["stride"],
-            sig_kind=meta.get("sig_kind", "window"))
-        .localCheckpoint(eager=True),
-        "__did", meta["chunks"])
-    csegs = store.live(spark, "media_sig", table_name, "segs")
-    pairs_x = (
-        dsegs.join(csegs.withColumnRenamed("sh", "__csh"), on="seg_key")
-        .withColumn("hamming",
-                    F.bit_count(F.col("sh").bitwiseXOR(F.col("__csh"))))
-        .filter(F.col("hamming") <= hmax)
-        .select(F.col("__did").alias("id_a"),
-                F.col("mid").alias("id_b"), "hamming",
-                F.lit("corpus").alias("kind"))
-        .distinct()
-    )
-    a = dsegs.select(F.col("__did").alias("id_a"),
-                     F.col("sh").alias("__sa"), "seg_key")
-    b = dsegs.select(F.col("__did").alias("id_b"),
-                     F.col("sh").alias("__sb"), "seg_key")
-    pairs_d = (
-        a.join(b, on="seg_key")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming",
-                    F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb"))))
-        .filter(F.col("hamming") <= hmax)
-        .select("id_a", "id_b", "hamming", F.lit("delta").alias("kind"))
-        .distinct()
-    )
-    return pairs_x.unionByName(pairs_d)
+    duplicates live corpus asset id_b) or ``'delta'``.  One
+    probe+signature Arrow pass over the delta payloads; the corpus side
+    is read with zero shuffle."""
+    meta = store.read_meta(delta.sparkSession, path)
+    return hamming.delta_probe(
+        _media_index_sigs(delta, id_col, media_col, meta), table_name,
+        meta, max_hamming)
 
 
 def media_sig_index_append(
@@ -1362,16 +1191,9 @@ def media_sig_index_append(
     index's recorded parameters, under the store's append contract
     (dedup the delta first; re-uploads of EXISTING ids go through
     :func:`media_sig_index_replace`)."""
-    spark = delta.sparkSession
-    meta = store.read_meta(spark, path)
-    _check_timing_sig_meta(meta)
-    segs = _media_segments(
-        _media_blocked_sigs(
-            delta, id_col, media_col, meta["duration_bucket_s"],
-            meta["n_windows"], meta["window"], meta["stride"],
-            sig_kind=meta.get("sig_kind", "window")),
-        "mid", meta["chunks"])
-    store.append(spark, table_name, meta, id_col, {"segs": segs})
+    meta = store.read_meta(delta.sparkSession, path)
+    hamming.index_append(_media_index_sigs(delta, id_col, media_col, meta),
+                         table_name, meta, id_col)
 
 
 def media_sig_index_replace(

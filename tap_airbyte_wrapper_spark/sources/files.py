@@ -256,11 +256,13 @@ def load_parquet(
     return df
 
 
-@register
-class ParquetSource(Source):
-    """Single-stream parquet path source."""
-
-    name = "parquet"
+class _FileSource(Source):
+    """Single-stream file source: one path (file, directory or glob) is
+    one stream with an optional cursor column.  Subclasses say how the
+    path loads (``_load``, which discovery reads the schema from); a
+    full read checks the loaded schema against the configured catalog
+    (:meth:`_drift_checked`), and incremental reads take the base
+    cursor filter over ``read``."""
 
     @classmethod
     def spec(cls) -> dict[str, Any]:
@@ -293,10 +295,6 @@ class ParquetSource(Source):
     def _merge(self) -> bool:
         return self.config.get("on_schema_drift") == "merge"
 
-    def _load(self, spark: SparkSession) -> DataFrame:
-        return load_parquet(
-            spark, self.config["path"], merge_schema=self._merge())
-
     def discover(self, spark: SparkSession) -> Catalog:
         df = self._load(spark)
         cursor = self.config.get("cursor_field")
@@ -315,26 +313,44 @@ class ParquetSource(Source):
         )
 
     def read(self, spark: SparkSession, stream: StreamEntry) -> DataFrame:
-        # Parquet carries its schema in the footer.  The drift check must
-        # probe with the UNION of all footers (mergeSchema): a plain read
-        # infers from one arbitrary file, so a column added by newer
-        # files is visible or invisible depending on listing order — a
-        # contract check cannot be file-order-dependent.  (The probe is
-        # a footer-metadata pass, parallelized by Spark; no data read.)
-        # Default: fail loudly on drift (the configured catalog is a
-        # contract).  on_schema_drift="merge": conform to the catalog —
-        # missing columns null, new columns dropped until a re-discover
-        # widens the catalog.
-        df = load_parquet(spark, self.config["path"], merge_schema=True)
-        if df.schema != stream.schema:
-            if self._merge():
-                return conform_to_schema(df, stream.schema)
-            raise SourceError(
-                f"schema drift on stream {stream.name!r}: "
-                f"discovered {stream.schema.simpleString()}, "
-                f"now {df.schema.simpleString()}"
-            )
-        return df
+        return self._drift_checked(self._load(spark), stream)
+
+    def _drift_checked(self, df: DataFrame, stream: StreamEntry) -> DataFrame:
+        """``df`` when its schema is the catalog's.  Otherwise fail
+        loudly (the default: the configured catalog is a contract), or
+        with on_schema_drift="merge" conform to the catalog — missing
+        columns null, new columns dropped until a re-discover widens
+        the catalog."""
+        if df.schema == stream.schema:
+            return df
+        if self._merge():
+            return conform_to_schema(df, stream.schema)
+        raise SourceError(
+            f"schema drift on stream {stream.name!r}: "
+            f"discovered {stream.schema.simpleString()}, "
+            f"now {df.schema.simpleString()}")
+
+
+@register
+class ParquetSource(_FileSource):
+    """Single-stream parquet path source."""
+
+    name = "parquet"
+
+    def _load(self, spark: SparkSession) -> DataFrame:
+        return load_parquet(
+            spark, self.config["path"], merge_schema=self._merge())
+
+    def read(self, spark: SparkSession, stream: StreamEntry) -> DataFrame:
+        # The drift check must probe with the UNION of all footers
+        # (mergeSchema): a plain read infers from one arbitrary file, so
+        # a column added by newer files is visible or invisible
+        # depending on listing order — a contract check cannot be
+        # file-order-dependent.  (The probe is a footer-metadata pass,
+        # parallelized by Spark; no data read.)
+        return self._drift_checked(
+            load_parquet(spark, self.config["path"], merge_schema=True),
+            stream)
 
     def read_incremental(self, spark: SparkSession, stream: StreamEntry, bookmark: Any) -> DataFrame:
         df = load_parquet(
@@ -349,7 +365,7 @@ class ParquetSource(Source):
 
 
 @register
-class CsvSource(ParquetSource):
+class CsvSource(_FileSource):
     """Single-stream CSV source (header + inferred schema, like
     airbyte/source-file's CSV mode)."""
 
@@ -374,15 +390,9 @@ class CsvSource(ParquetSource):
     def read(self, spark: SparkSession, stream: StreamEntry) -> DataFrame:
         return self._reader(spark).schema(stream.schema).csv(self.config["path"])
 
-    def read_incremental(self, spark: SparkSession, stream: StreamEntry,
-                         bookmark: Any) -> DataFrame:
-        # ParquetSource's override reads the path as parquet; csv must
-        # take the base cursor-filter path over its own read()
-        return Source.read_incremental(self, spark, stream, bookmark)
-
 
 @register
-class JsonSource(ParquetSource):
+class JsonSource(_FileSource):
     """Single-stream JSONL source.
 
     ``quarantine_path`` config (optional): malformed lines are diverted
@@ -393,7 +403,9 @@ class JsonSource(ParquetSource):
     turn into the stream schema (``from_json`` -> NULL struct) is
     written verbatim to the quarantine directory (one eager job), and
     ``read`` returns only the good, typed rows.  Costs one extra parse
-    of the input versus the plain path — only when quarantine is on.
+    of the input versus the plain path — only when quarantine is on;
+    incremental syncs filter over ``read``, so quarantine applies to
+    them too.
     """
 
     name = "json"
@@ -442,16 +454,9 @@ class JsonSource(ParquetSource):
             .select("__rec.*").drop("_corrupt_record")
         )
 
-    def read_incremental(self, spark: SparkSession, stream: StreamEntry,
-                         bookmark: Any) -> DataFrame:
-        # base cursor-filter over read() — keeps the quarantine path in
-        # force for incremental syncs too (ParquetSource's override
-        # would read the JSONL path as parquet and crash)
-        return Source.read_incremental(self, spark, stream, bookmark)
-
 
 @register
-class OrcSource(ParquetSource):
+class OrcSource(_FileSource):
     """Single-stream ORC source.  Same columnar pushdown story as
     parquet (Spark's native ORC reader does predicate pushdown + column
     pruning via file/stripe statistics); schema comes from the ORC
@@ -463,21 +468,6 @@ class OrcSource(ParquetSource):
 
     def _load(self, spark: SparkSession) -> DataFrame:
         return spark.read.orc(self.config["path"])
-
-    def read(self, spark: SparkSession, stream: StreamEntry) -> DataFrame:
-        df = self._load(spark)
-        if df.schema != stream.schema:
-            if self._merge():
-                return conform_to_schema(df, stream.schema)
-            raise SourceError(
-                f"schema drift on stream {stream.name!r}: "
-                f"discovered {stream.schema.simpleString()}, "
-                f"now {df.schema.simpleString()}")
-        return df
-
-    def read_incremental(self, spark: SparkSession, stream: StreamEntry,
-                         bookmark: Any) -> DataFrame:
-        return Source.read_incremental(self, spark, stream, bookmark)
 
 
 @register

@@ -229,3 +229,38 @@ def test_compact_onto_itself_touches_nothing(spark, tmp_path, family):
         assert spark.catalog.tableExists(f"{t}_{suffix}")
     assert fam.probe(BATCH, t, p) == before
     fam.drop(t)
+
+
+@pytest.mark.parametrize("family", FAMILIES)
+def test_build_and_compact_onto_a_used_path_start_new_tombstones(
+        spark, tmp_path, family):
+    """A build at a path that held an index, and a compaction onto one,
+    start a new tombstone generation: the earlier index's tombstone
+    files (the external table's DROP leaves them) neither block the next
+    delete nor kill rows of the new index."""
+    fam = _Family(spark, family)
+    t, p = f"ixr_{family}", str(tmp_path / "idx")
+    gone = spark.createDataFrame([(1,), (2,)], "doc_id long")
+
+    fresh, fresh_p = f"{t}_fresh", str(tmp_path / "fresh")
+    fam.write(CORPUS_A, fresh, fresh_p)
+    want_full = fam.probe(BATCH, fresh, fresh_p)
+    index_delete(spark, fresh, fresh_p, gone)
+    want = fam.probe(BATCH, fresh, fresh_p)
+    assert want != want_full, "the delete must be observable"
+
+    fam.write(CORPUS_A, t, p)
+    index_delete(spark, t, p, gone)
+    fam.write(CORPUS_A, t, p)
+    assert fam.probe(BATCH, t, p) == want_full
+    index_delete(spark, t, p, gone)
+    assert fam.probe(BATCH, t, p) == want
+
+    dst = str(tmp_path / "dst")
+    fam.write(CORPUS_A, f"{t}_old", dst)
+    index_delete(spark, f"{t}_old", dst, gone)
+    index_compact(spark, t, p, f"{t}_c", dst)
+    assert fam.probe(BATCH, f"{t}_c", dst) == want
+    index_delete(spark, f"{t}_c", dst, gone)
+    assert fam.probe(BATCH, f"{t}_c", dst) == want
+    fam.drop(t, fresh, f"{t}_old", f"{t}_c")

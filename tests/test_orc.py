@@ -1,6 +1,7 @@
-"""ORC source contract: discover / full read / incremental pushdown /
-schema-drift policy — the parquet source's story on Spark's native ORC
-reader."""
+"""Single-stream file sources other than parquet: the ORC source's
+discover / full read / incremental pushdown / schema-drift policy (the
+parquet source's story on Spark's native ORC reader), JSONL quarantine,
+and the CSV source's spec, discovery and reads."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -119,3 +120,36 @@ def test_json_incremental_uses_json_reader_and_quarantine(spark, tmp_path):
     assert sorted(r["id"] for r in inc.collect()) == [3, 4, 5]
     import glob as _glob
     assert _glob.glob(qdir + "/part-*")  # quarantine still active
+
+
+def test_csv_spec_discover_read_and_incremental(spark, tmp_path):
+    """CSV: its spec adds ``delimiter``/``header`` to the file-source
+    keys; discovery infers the header's columns and types; the full read
+    is pinned to the catalog schema; an incremental read past a bookmark
+    filters on the cursor with the CSV reader, not a parquet one."""
+    src_path = tmp_path / "people.csv"
+    src_path.write_text(
+        "id;name;ts\n" + "".join(f"{i};n{i};{i * 10}\n" for i in range(6)))
+    spec = get_source("csv", {"path": str(src_path)}).spec()
+    assert {"path", "stream_name", "cursor_field", "primary_keys",
+            "on_schema_drift", "delimiter", "header"} <= set(
+        spec["properties"])
+    assert spec["required"] == ["path"]
+
+    csv = get_source("csv", {"path": str(src_path), "delimiter": ";",
+                             "cursor_field": "ts", "primary_keys": ["id"]})
+    (stream,) = csv.discover(spark).streams
+    assert stream.name == "people"
+    assert stream.replication_key == "ts"
+    assert stream.primary_keys == ["id"]
+    assert [(f.name, f.dataType.simpleString())
+            for f in stream.schema.fields] == [
+        ("id", "int"), ("name", "string"), ("ts", "int")]
+
+    full = csv.read(spark, stream)
+    assert full.schema == stream.schema
+    assert sorted(tuple(r) for r in full.collect()) == [
+        (i, f"n{i}", i * 10) for i in range(6)]
+    inc = csv.read_incremental(spark, stream, 20)
+    assert sorted(r["id"] for r in inc.collect()) == [3, 4, 5]
+    assert csv.read_incremental(spark, stream, None).count() == 6
