@@ -2,12 +2,13 @@
 
 Two layers:
 
-* **Hadoop-FS helpers** (``read_text`` / ``write_text`` / ``copy_text``
+* **Hadoop-FS helpers** (``read_text`` / ``write_text`` / ``copy``
   / ``exists`` / ``mkdirs`` / ``remove``) — driver-side metadata IO routed through
   the JVM's ``org.apache.hadoop.fs.FileSystem``, so an index whose
   ``path`` lives on an object store (``s3a://`` / ``gs://`` / ``abfs://``)
   or HDFS works exactly like a local one.  These move only
-  metadata-sized payloads (a JSON doc, a marker file) — never data.
+  metadata-sized payloads (a JSON doc, a marker file, a centroid
+  table) — never data.
 * **local-walk helpers** (``list_parquet_files`` / ``count_parquet_files``)
   — small-files diagnostics.  ``count_parquet_files`` uses the Hadoop FS
   when a ``spark`` handle is passed (works on any scheme) and falls back
@@ -20,7 +21,7 @@ import os
 
 __all__ = [
     "list_parquet_files", "count_parquet_files",
-    "read_text", "write_text", "copy_text", "exists", "mkdirs", "remove",
+    "read_text", "write_text", "copy", "exists", "mkdirs", "remove",
 ]
 
 
@@ -59,10 +60,15 @@ def write_text(spark, path: str, text: str) -> None:
         stream.close()
 
 
-def copy_text(spark, src: str, dst: str) -> None:
-    """Copy a metadata-sized text file between (possibly different)
-    Hadoop-FS locations via the driver."""
-    write_text(spark, dst, read_text(spark, src))
+def copy(spark, src: str, dst: str) -> None:
+    """Replace ``dst`` with a copy of the metadata-sized file or
+    directory ``src``, between (possibly different) Hadoop-FS
+    locations, via the driver."""
+    sfs, spath, jvm = _fs_path(spark, src)
+    dfs, dpath, _ = _fs_path(spark, dst)
+    dfs.delete(dpath, True)
+    jvm.org.apache.hadoop.fs.FileUtil.copy(
+        sfs, spath, dfs, dpath, False, spark._jsc.hadoopConfiguration())
 
 
 def exists(spark, path: str) -> bool:

@@ -790,9 +790,10 @@ def novelty_index_write(
     replayed appends may duplicate rows, which probes are insensitive
     to (``distinct`` on the bucket key, co-located) and compaction
     folds away."""
-    store.build(df.sparkSession, "novelty", table_name, path,
+    store.build(df.sparkSession, "novelty", path,
                 {"grams": _novelty_pairs(df, n, id_col, text_col)},
-                {"n": n, "n_buckets": n_buckets, "id_col": id_col})
+                {"n": n, "n_buckets": n_buckets, "id_col": id_col},
+                table_name)
 
 
 def _novelty_pairs(df, n, id_col, text_col):
@@ -822,10 +823,11 @@ def novelty_probe(
     owner list and the tombstone counts broadcast, the gram distinct
     runs on the bucket key co-located."""
     spark = batch.sparkSession
-    n = store.read_meta(spark, path)["n"]
+    meta = store.read_meta(spark, path)
+    n = meta["n"]
     excluded = batch.select(F.col(id_col).alias("owner")).distinct()
     seen = (
-        store.live(spark, "novelty", table_name, "grams")
+        store.live(spark, path, meta, "grams", table_name)
         .join(F.broadcast(excluded), "owner", "left_anti")
         .select("gram_h").distinct()
         .withColumn("__hit", F.lit(1))
@@ -865,9 +867,9 @@ def novelty_index_append(
     idempotence."""
     spark = delta.sparkSession
     meta = store.read_meta(spark, path)
-    store.append(spark, table_name, meta, id_col,
+    store.append(spark, path, meta, id_col,
                  {"grams": _novelty_pairs(delta, meta["n"], id_col,
-                                          text_col)})
+                                          text_col)}, table_name)
 
 
 def dup_span_stats(

@@ -36,7 +36,6 @@ from .text import _let
 
 __all__ = [
     "simhash_index_write", "simhash_dedup_delta", "simhash_index_append",
-    "simhash_index_replace",
     "shingles",
     "exact_dedup",
     "soft_dedup_weights",
@@ -57,7 +56,6 @@ __all__ = [
     "minhash_verified_pairs",
     "simhash_verified_pairs",
     "minhash_index_write",
-    "minhash_index_replace",
     "containment_prefix_candidates",
     "lsh_plan",
     "minhash_index_append",
@@ -1384,12 +1382,12 @@ def minhash_index_write(
     sigs = minhash_signatures_df(
         df, id_col, text_col, num_hashes, shingle_len, bands=bands).persist()
     try:
-        store.build(df.sparkSession, "minhash", table_name, path,
+        store.build(df.sparkSession, "minhash", path,
                     {"postings": _minhash_postings(sigs, id_col),
                      "sigs": sigs.select(id_col, "sig")},
                     {"id_col": id_col, "num_hashes": num_hashes,
                      "shingle_len": shingle_len, "bands": bands,
-                     "n_buckets": n_buckets})
+                     "n_buckets": n_buckets}, table_name)
     finally:
         sigs.unpersist()
 
@@ -1404,8 +1402,9 @@ def minhash_index_append(
     """Fold a delta batch INTO the persisted index at O(delta):
     signatures/postings are computed with the index's own recorded
     parameters and appended under the store's append contract (dedup
-    the delta against the index FIRST; re-crawls go through
-    :func:`minhash_index_replace`).  Appends add files per bucket, so
+    the delta against the index FIRST; a re-crawl is an
+    ``index_delete`` of its ids, then this append).  Appends add files
+    per bucket, so
     run ``index_compact`` — NOT the flat ``compact_parquet``, which
     would drop the bucket metadata — when batch count grows."""
     spark = delta.sparkSession
@@ -1414,27 +1413,11 @@ def minhash_index_append(
         delta, id_col, text_col, meta["num_hashes"], meta["shingle_len"],
         bands=meta["bands"]).persist()
     try:
-        store.append(spark, table_name, meta, id_col,
+        store.append(spark, path, meta, id_col,
                      {"postings": _minhash_postings(sigs, id_col),
-                      "sigs": sigs.select(id_col, "sig")})
+                      "sigs": sigs.select(id_col, "sig")}, table_name)
     finally:
         sigs.unpersist()
-
-
-def minhash_index_replace(
-    delta: DataFrame,
-    table_name: str,
-    path: str,
-    id_col: str,
-    text_col: str,
-) -> None:
-    """Replace documents in-place at O(delta): tombstone the delta's
-    ids, then append their new signatures/postings at the bumped
-    version.  Probes and search behave as if the index were rebuilt
-    from scratch on the edited corpus (pinned by test)."""
-    store.index_delete(delta.sparkSession, table_name, path,
-                       delta.select(id_col).distinct())
-    minhash_index_append(delta, table_name, path, id_col, text_col)
 
 
 def minhash_dedup_delta(
@@ -1474,8 +1457,7 @@ def minhash_dedup_delta(
         bands=meta["bands"]).localCheckpoint(eager=True)
     dpost = _minhash_postings(dsigs, id_col) \
         .withColumnRenamed(id_col, "__did")
-    cpost = store.live(spark, "minhash", table_name, "postings",
-                       meta["id_col"]) \
+    cpost = store.live(spark, path, meta, "postings", table_name) \
         .withColumnRenamed(meta["id_col"], "__cid")
     cand_x = (
         dpost.join(cpost, on="bkey")
@@ -1491,8 +1473,7 @@ def minhash_dedup_delta(
 
     d_sig = F.broadcast(
         dsigs.select(F.col(id_col).alias("__did"), F.col("sig").alias("__dsig")))
-    csigs = store.live(spark, "minhash", table_name, "sigs",
-                       meta["id_col"]).select(
+    csigs = store.live(spark, path, meta, "sigs", table_name).select(
         F.col(meta["id_col"]).alias("__cid"), F.col("sig").alias("__csig"))
     est_x = (
         cand_x.join(csigs, on="__cid")
@@ -1547,8 +1528,8 @@ def fingerprint_index_write(
                   F.col(id_col).alias("fid"))
         .groupBy("fp").agg(F.min("fid").alias("fid"))
     )
-    store.build(df.sparkSession, "fingerprint", table_name, path,
-                {"fps": fps}, {"n_buckets": n_buckets, "id_col": id_col})
+    store.build(df.sparkSession, "fingerprint", path, {"fps": fps},
+                {"n_buckets": n_buckets, "id_col": id_col}, table_name)
 
 
 def fingerprint_dedup_delta(
@@ -1569,9 +1550,11 @@ def fingerprint_dedup_delta(
 
     from .text import fingerprint
 
+    spark = delta.sparkSession
     fps = delta.withColumn("__fp", fingerprint(F.col(text_col)))
-    corpus = store.live(delta.sparkSession, "fingerprint", table_name,
-                        "fps")
+    path = store.locate(spark, f"{table_name}_fps")
+    corpus = store.live(spark, path, store.read_meta(spark, path), "fps",
+                        table_name)
     fresh = fps.join(
         corpus,
         (F.col("__fp") == F.col("fp")) & (F.col(id_col) != F.col("fid")),
@@ -1601,9 +1584,9 @@ def fingerprint_index_append(
     spark = survivors.sparkSession
     rows = survivors.select(fingerprint(F.col(text_col)).alias("fp"),
                             F.col(id_col).alias("fid")).distinct()
-    store.append(spark, table_name,
-                 store.located_meta(spark, f"{table_name}_fps"), id_col,
-                 {"fps": rows})
+    path = store.locate(spark, f"{table_name}_fps")
+    store.append(spark, path, store.read_meta(spark, path), id_col,
+                 {"fps": rows}, table_name)
 
 
 # ---------------------------------------------------------------------------
@@ -1653,7 +1636,7 @@ def simhash_dedup_delta(
     shuffle."""
     meta = store.read_meta(delta.sparkSession, path)
     return hamming.delta_probe(simhash_df(delta, id_col, text_col),
-                               table_name, meta, max_hamming)
+                               table_name, path, meta, max_hamming)
 
 
 def simhash_index_append(
@@ -1665,22 +1648,8 @@ def simhash_index_append(
 ) -> None:
     """Fold a delta's segments into the index at O(delta) with the
     index's own recorded parameters, under the store's append contract
-    (dedup the delta first; re-crawls go through
-    :func:`simhash_index_replace`)."""
+    (dedup the delta first; a re-crawl is an ``index_delete`` of its
+    ids, then this append)."""
     meta = store.read_meta(delta.sparkSession, path)
     hamming.index_append(simhash_df(delta, id_col, text_col), table_name,
-                         meta, id_col)
-
-
-def simhash_index_replace(
-    delta: DataFrame,
-    table_name: str,
-    path: str,
-    id_col: str,
-    text_col: str,
-) -> None:
-    """Replace documents in-place at O(delta): tombstone the delta's
-    ids, then append their new segments at the bumped version."""
-    store.index_delete(delta.sparkSession, table_name, path,
-                       delta.select(id_col).distinct())
-    simhash_index_append(delta, table_name, path, id_col, text_col)
+                         path, meta, id_col)

@@ -126,20 +126,21 @@ def index_build(family: str, sigs: DataFrame, table_name: str, path: str,
             f"{meta['max_hamming']} >= {meta['chunks']}")
     sid = store.LAYOUTS[family].tomb_id
     segs = _keyed_segments(sigs, sid, meta["chunks"])
-    store.build(sigs.sparkSession, family, table_name, path,
-                {"segs": segs.select("seg_key", sid, "sh")}, meta)
+    store.build(sigs.sparkSession, family, path,
+                {"segs": segs.select("seg_key", sid, "sh")}, meta, table_name)
 
 
-def index_append(sigs: DataFrame, table_name: str, meta: dict,
+def index_append(sigs: DataFrame, table_name: str, path: str, meta: dict,
                  id_col: str) -> None:
     """Fold a delta's signatures into the index at O(delta), under the
     store's append contract."""
     sid = store.LAYOUTS[meta["family"]].tomb_id
-    store.append(sigs.sparkSession, table_name, meta, id_col,
-                 {"segs": _keyed_segments(sigs, sid, meta["chunks"])})
+    store.append(sigs.sparkSession, path, meta, id_col,
+                 {"segs": _keyed_segments(sigs, sid, meta["chunks"])},
+                 table_name)
 
 
-def delta_probe(sigs: DataFrame, table_name: str, meta: dict,
+def delta_probe(sigs: DataFrame, table_name: str, path: str, meta: dict,
                 max_hamming: int | None = None) -> DataFrame:
     """``(id_a, id_b, hamming, kind)`` for a delta's signatures against
     the live index (``kind = 'corpus'``: id_b is a corpus id) and within
@@ -155,7 +156,7 @@ def delta_probe(sigs: DataFrame, table_name: str, meta: dict,
     family = meta["family"]
     dsegs = _keyed_segments(sigs.localCheckpoint(eager=True), "__did",
                             meta["chunks"])
-    csegs = store.live(sigs.sparkSession, family, table_name, "segs")
+    csegs = store.live(sigs.sparkSession, path, meta, "segs", table_name)
     corpus = (
         _within(dsegs.join(csegs.withColumnRenamed("sh", "__csh"),
                            on="seg_key"), "sh", "__csh", hmax)

@@ -63,7 +63,6 @@ __all__ = [
     "media_sig_index_write",
     "media_dedup_delta",
     "media_sig_index_append",
-    "media_sig_index_replace",
     "resize_image",
     "extract_features",
     "sample_frames",
@@ -1134,9 +1133,8 @@ def media_sig_index_write(
     stride: int = 4096,
     sig_kind: str = "window",
 ) -> None:
-    """Persist the media-asset near-dup index — the SIXTH member of
-    the bucketed index family (MinHash, fingerprint, BM25, IVF,
-    SimHash, and now container signatures): ``{table}_segs``
+    """Persist the media-asset near-dup index — the container-signature
+    member of the persisted index family: ``{table}_segs``
     (seg_key, mid, sh, __ver) bucketed+sorted by ``seg_key``.  A daily
     asset delta then near-dups against the standing corpus at
     O(delta): the delta's segments shuffle into this bucketing and the
@@ -1177,7 +1175,7 @@ def media_dedup_delta(
     meta = store.read_meta(delta.sparkSession, path)
     return hamming.delta_probe(
         _media_index_sigs(delta, id_col, media_col, meta), table_name,
-        meta, max_hamming)
+        path, meta, max_hamming)
 
 
 def media_sig_index_append(
@@ -1189,22 +1187,8 @@ def media_sig_index_append(
 ) -> None:
     """Fold a delta's segments into the index at O(delta) with the
     index's recorded parameters, under the store's append contract
-    (dedup the delta first; re-uploads of EXISTING ids go through
-    :func:`media_sig_index_replace`)."""
+    (dedup the delta first; a re-upload of an EXISTING id is an
+    ``index_delete`` of the id, then this append)."""
     meta = store.read_meta(delta.sparkSession, path)
     hamming.index_append(_media_index_sigs(delta, id_col, media_col, meta),
-                         table_name, meta, id_col)
-
-
-def media_sig_index_replace(
-    delta: DataFrame,
-    table_name: str,
-    path: str,
-    id_col: str,
-    media_col: str,
-) -> None:
-    """Replace assets in-place at O(delta): tombstone the delta's ids,
-    then append their new segments at the bumped version."""
-    store.index_delete(delta.sparkSession, table_name, path,
-                       delta.select(id_col).distinct())
-    media_sig_index_append(delta, table_name, path, id_col, media_col)
+                         table_name, path, meta, id_col)

@@ -32,8 +32,7 @@ from .corpus import words
 
 __all__ = ["bm25_topk", "doc_term_freq", "rrf_fuse", "rank_eval",
            "prf_expand_topk",
-           "bm25_index_write", "bm25_index_append", "bm25_index_search",
-           "bm25_index_replace"]
+           "bm25_index_write", "bm25_index_append", "bm25_index_search"]
 
 
 def doc_term_freq(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -371,10 +370,10 @@ def bm25_index_write(
     either).  N and avgdl derive from the length table at search time —
     one metadata-sized aggregate — so appends never maintain running
     totals that could drift."""
-    store.build(df.sparkSession, "bm25", table_name, path,
+    store.build(df.sparkSession, "bm25", path,
                 {"postings": doc_term_freq(df, id_col, text_col),
                  "doclen": _doclen(df, id_col, text_col)},
-                {"id_col": id_col, "n_buckets": n_buckets})
+                {"id_col": id_col, "n_buckets": n_buckets}, table_name)
 
 
 def bm25_index_append(
@@ -385,31 +384,13 @@ def bm25_index_append(
 ) -> None:
     """Fold documents into the index at O(delta) under the store's
     append contract: delta ids must not be live (a deleted id revives
-    here); re-crawled docs go through :func:`bm25_index_replace`."""
+    here, so a re-crawled doc is an ``index_delete`` of its id, then
+    this append)."""
     spark = delta.sparkSession
-    store.append(spark, table_name,
-                 store.located_meta(spark, f"{table_name}_postings"),
-                 id_col,
+    path = store.locate(spark, f"{table_name}_postings")
+    store.append(spark, path, store.read_meta(spark, path), id_col,
                  {"postings": doc_term_freq(delta, id_col, text_col),
-                  "doclen": _doclen(delta, id_col, text_col)})
-
-
-def bm25_index_replace(
-    delta: DataFrame,
-    table_name: str,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Replace documents in-place at O(delta) — the re-crawl/edited-doc
-    maintenance op the append contract excludes: tombstone the delta's
-    ids (killing the stored generation), then append the new text at
-    the bumped version.  Post-replace search equals a from-scratch
-    rebuild on the edited corpus (pinned by test and by the
-    ``bm25_index_docs`` fleet oracle)."""
-    store.index_delete(delta.sparkSession, table_name, path,
-                       delta.select(id_col).distinct())
-    bm25_index_append(delta, table_name, id_col, text_col)
+                  "doclen": _doclen(delta, id_col, text_col)}, table_name)
 
 
 def bm25_index_sync(
@@ -421,9 +402,10 @@ def bm25_index_sync(
     text_col: str = "text",
 ) -> None:
     """Drive index maintenance from a :func:`..corpus.corpus_diff`
-    churn report — the composition the two layers exist for: ``added``
-    / ``changed`` docs REPLACE (tombstone + re-append), ``removed``
-    ids DELETE, ``unchanged`` docs cost nothing.  Total cost is
+    churn report — the composition the two layers exist for: every
+    ``added`` / ``changed`` / ``removed`` id is deleted, then the
+    ``added`` / ``changed`` docs are appended (a replace); ``unchanged``
+    docs cost nothing.  Total cost is
     O(churn), never O(corpus): the upsert set semi-joins out of the
     new corpus on id, and both maintenance ops are tombstone appends +
     churn-sized postings inserts.  Post-sync search equals a
@@ -432,20 +414,18 @@ def bm25_index_sync(
     spark = new_corpus.sparkSession
     # one evaluation of the diff (it costs two corpus fingerprint
     # scans): the churn rows are id+status-sized, so checkpoint them
-    # eagerly and let the guard counts, the semi-join, and the delete
+    # eagerly and let the guard counts, the delete and the semi-join
     # all read the materialized churn instead of re-diffing
     churn = (diff.filter(F.col("status").isin("added", "changed",
                                               "removed"))
              .select(id_col, "status").localCheckpoint(eager=True))
     upsert_ids = (churn.filter(F.col("status") != "removed")
                   .select(id_col))
-    removed_ids = churn.filter(F.col("status") == "removed") \
-        .select(id_col)
-    upserts = new_corpus.join(upsert_ids, id_col, "left_semi")
+    if churn.limit(1).count():
+        store.index_delete(spark, path, churn.select(id_col))
     if upsert_ids.limit(1).count():
-        bm25_index_replace(upserts, table_name, path, id_col, text_col)
-    if removed_ids.limit(1).count():
-        store.index_delete(spark, table_name, path, removed_ids)
+        bm25_index_append(new_corpus.join(upsert_ids, id_col, "left_semi"),
+                          table_name, id_col, text_col)
 
 
 def bm25_index_search(
@@ -467,14 +447,14 @@ def bm25_index_search(
     query-sized by contract, so collecting their distinct terms is the
     same scale as the broadcasts the scorer already does) and N/avgdl
     come from one doc-length aggregate."""
-    id_col = store.read_meta(spark, path)["id_col"]
+    meta = store.read_meta(spark, path)
     return bm25_topk(
         None, queries,
-        id_col=id_col,
+        id_col=meta["id_col"],
         query_id_col=query_id_col, query_text_col=query_text_col,
         k=k, k1=k1, b=b,
-        tf_table=store.live(spark, "bm25", table_name, "postings", id_col),
-        dl_table=store.live(spark, "bm25", table_name, "doclen", id_col),
+        tf_table=store.live(spark, path, meta, "postings", table_name),
+        dl_table=store.live(spark, path, meta, "doclen", table_name),
         prune_term_scan=True)
 
 

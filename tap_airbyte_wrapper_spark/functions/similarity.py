@@ -24,13 +24,13 @@ from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..operators.windows import topk_per_group
+from . import index_store as store
 
 __all__ = ["dot", "l2_norm", "cosine", "cosine_topk", "hyperplane_signature",
            "cosine_topk_lsh", "cosine_topk_ivf", "embedding_near_dup_pairs",
            "IvfIndex", "ivf_build", "ivf_load", "ivf_search",
-           "ivf_append", "ivf_staleness", "ivf_compact", "ivf_delete",
-           "truncation_recall", "bitext_mine",
-           "ivf_replace", "embedding_dedup_delta",
+           "ivf_append", "ivf_staleness",
+           "truncation_recall", "bitext_mine", "embedding_dedup_delta",
            "PqModel", "pq_train", "pq_encode", "pq_topk", "pq_rerank",
            "save_pq", "load_pq", "kmeans_fit", "kmeans_predict",
            "ivfpq_encode", "ivfpq_topk", "ivfpq_train_residual",
@@ -595,7 +595,9 @@ def ivf_build(
     """Train the coarse quantizer (driver-side k-means on a bounded
     sample — k x dim is tiny by construction) and assign every corpus
     vector to its nearest cell (one numpy matmul per Arrow batch).
-    With ``path``, persist centroids + cell-partitioned vectors.
+    With ``path``, persist the centroids next to a cell-partitioned
+    ``ivf`` index of the store (``index_store``: delete and compact
+    are the shared ``index_delete`` / ``index_compact``).
 
     The training sample is the ``train_sample`` rows with the smallest
     ``xxhash64(id, seed)`` — a bare ``limit()`` pulls whole partitions
@@ -637,59 +639,30 @@ def ivf_build(
         spark = corpus.sparkSession
         _centroid_df(spark, cent).coalesce(1).write.mode(
             "overwrite").parquet(f"{path}/centroids")
-        # repartition on the cell BEFORE partitionBy: without it every
-        # input task writes one file per cell it touches (tasks x cells
-        # small-file spray — the same failure write_training_shards
-        # guards against); with it each cell is written by the task
-        # that owns it.  One file per cell per write batch; compact
-        # with ivf_compact (layout-preserving) when appends accumulate.
-        (assigned.withColumn("__ver", F.lit(0).cast("long"))
-         .repartition(len(cent), "__cell")
-         .write.mode("overwrite").partitionBy("__cell")
-         .parquet(f"{path}/vectors"))
-        assigned = corpus.sparkSession.read.parquet(
-            f"{path}/vectors").drop("__ver")
-        # training-time corpus size, the baseline ivf_staleness compares
-        # appends against (parquet metadata count — no data scan)
-        built_rows = assigned.count()
-        spark.range(1).select(
-            F.lit(int(built_rows)).cast("long").alias("built_rows"),
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
+        # one file per cell per write batch; the meta records the
+        # training-time corpus size ivf_staleness compares appends
+        # against
+        meta = store.build(spark, "ivf", path, {"vectors": assigned},
+                           {"id_col": id_col, "n_clusters": len(cent)})
+        assigned = store.live(spark, path, meta, "vectors")
     return IvfIndex(cent, assigned, id_col, vec_col)
 
 
-def _ivf_tombs(spark, path: str, id_col: str):
-    """(id, __tombs) tombstone counts for a persisted IVF index, or
-    None when nothing was ever deleted."""
-    from ..fsutil import exists as _exists
-
-    if not _exists(spark, f"{path}/tombstones"):
-        return None
-    return (spark.read.parquet(f"{path}/tombstones")
-            .groupBy(id_col).agg(F.count(F.lit(1)).alias("__tombs")))
-
-
-def _ivf_live(spark, path: str, id_col: str):
-    """The live vector rows of a persisted IVF index (see
-    ``_maint.live_rows``: a row is live iff its stamped version equals
-    its id's tombstone count).  The count table broadcasts, so probe
-    joins keep their ``__cell`` file pruning."""
-    from ._maint import live_rows
-
-    return live_rows(spark.read.parquet(f"{path}/vectors"),
-                     _ivf_tombs(spark, path, id_col), id_col)
+def _centroids(spark, path: str) -> "np.ndarray":
+    rows = sorted(
+        (r["cell"], r["centroid"])
+        for r in spark.read.parquet(f"{path}/centroids").collect())
+    return np.array([c for _, c in rows], dtype="float64")
 
 
 def ivf_load(spark, path: str, id_col: str = "vec_id",
              vec_col: str = "embedding") -> IvfIndex:
     """Reopen a persisted IVF index; searches partition-prune to the
     probed cells and filter to live (non-deleted) vectors."""
-    rows = sorted(
-        (r["cell"], r["centroid"])
-        for r in spark.read.parquet(f"{path}/centroids").collect())
-    cent = np.array([c for _, c in rows], dtype="float64")
-    return IvfIndex(cent, _ivf_live(spark, path, id_col),
-                    id_col, vec_col)
+    return IvfIndex(
+        _centroids(spark, path),
+        store.live(spark, path, store.read_meta(spark, path), "vectors"),
+        id_col, vec_col)
 
 
 def ivf_append(
@@ -703,9 +676,10 @@ def ivf_append(
     """Fold a DELTA batch of vectors into a persisted IVF index WITHOUT
     retraining: assign each new vector to its nearest existing cell
     (one numpy matmul per Arrow batch, centroids ride the closure) and
-    append into the cell-partitioned parquet layout — O(delta) work,
-    the missing half of the continuously-arriving embedding loop that
-    ``minhash_index_append`` already provides on the MinHash side.
+    append into the cell-partitioned layout under the store's append
+    contract — O(delta) work, the missing half of the
+    continuously-arriving embedding loop that ``minhash_index_append``
+    already provides on the MinHash side.
 
     The quantizer is NOT retrained, by design: retraining would move
     cell boundaries and strand previously-assigned vectors in stale
@@ -719,12 +693,11 @@ def ivf_append(
     ``needs_retrain`` trips (appended rows exceed ``retrain_factor``
     x the rows the centroids were trained against).
 
-    Caller contract (same as ``minhash_index_append``): ids must not
-    be LIVE — dedup the delta against the index first (the streaming
-    gate does); appending a live id twice lists it in two rows and
-    every probe reports it twice.  A previously :func:`ivf_delete`-d
-    id revives here at its new vector; re-embedded docs go through
-    :func:`ivf_replace`.
+    Appended ids must not be LIVE — dedup the delta against the index
+    first (the streaming gate does); appending a live id twice lists it
+    in two rows and every probe reports it twice.  An id removed with
+    ``index_delete`` revives here at its new vector, so a re-embedded
+    document is an ``index_delete`` of its id, then this append.
 
     Returns the reopened index including the appended vectors.
 
@@ -733,105 +706,14 @@ def ivf_append(
     per-call centroid read+collect.  Passing centroids from a DIFFERENT
     index would mis-assign cells; only ever pass what ``ivf_load`` of
     the same ``path`` returned."""
-    if centroids is not None:
-        cent = centroids
-    else:
-        cent_rows = sorted(
-            (r["cell"], r["centroid"])
-            for r in spark.read.parquet(f"{path}/centroids").collect())
-        cent = np.array([c for _, c in cent_rows], dtype="float64")
-    from ._maint import stamp_version
-
-    assigned = stamp_version(
-        delta.filter(F.col(vec_col).isNotNull()).select(
+    cent = _centroids(spark, path) if centroids is None else centroids
+    meta = store.read_meta(spark, path)
+    store.append(spark, path, meta, id_col, {"vectors": delta.filter(
+        F.col(vec_col).isNotNull()).select(
             F.col(id_col), F.col(vec_col),
-            _cell_udf(cent)(F.col(vec_col)).alias("__cell")),
-        _ivf_tombs(spark, path, id_col), id_col)
-    # cell-co-located write: one file per touched cell per append, not
-    # tasks x cells (see ivf_build's layout note)
-    (assigned.select(id_col, vec_col, "__ver", "__cell")
-     .repartition(len(cent), "__cell")
-     .write.mode("append").partitionBy("__cell").parquet(f"{path}/vectors"))
-    return IvfIndex(cent, _ivf_live(spark, path, id_col),
+            _cell_udf(cent)(F.col(vec_col)).alias("__cell"))})
+    return IvfIndex(cent, store.live(spark, path, meta, "vectors"),
                     id_col, vec_col)
-
-
-def ivf_delete(
-    spark,
-    path: str,
-    ids: DataFrame,
-    id_col: str = "vec_id",
-) -> None:
-    """Delete vectors from a persisted IVF index at O(delete batch):
-    tombstone ids append to ``{path}/tombstones``; every reader
-    (:func:`ivf_load`, :func:`ivf_append`'s returned index,
-    :func:`ivf_compact`) filters to live versions.  The
-    cell-partitioned data files are untouched until compaction folds
-    the tombstones.  Note :func:`ivf_staleness` counts stored rows
-    (parquet metadata, no scan), so deleted generations keep counting
-    toward ``append_ratio`` until compact — conservative in the right
-    direction (retrain triggers sooner, never later)."""
-    (ids.select(F.col(ids.columns[0]).alias(id_col)).distinct()
-        .write.mode("append").parquet(f"{path}/tombstones"))
-
-
-def ivf_replace(
-    spark,
-    path: str,
-    delta: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: "np.ndarray | None" = None,
-) -> IvfIndex:
-    """Replace vectors in-place at O(delta) — the re-embedded/edited
-    document maintenance op: tombstone the delta's ids, then append
-    the new vectors (cell-assigned against the index's own centroids)
-    at the bumped version.  Search over the returned index equals a
-    from-scratch rebuild on the edited corpus (pinned by test)."""
-    ivf_delete(spark, path, delta.select(id_col).distinct(), id_col)
-    return ivf_append(spark, path, delta, id_col, vec_col,
-                      centroids=centroids)
-
-
-def ivf_compact(spark, src_path: str, dst_path: str,
-                id_col: str = "vec_id") -> dict:
-    """LAYOUT-PRESERVING compaction of a persisted IVF index: each
-    :func:`ivf_append` adds one file per touched cell, so a streaming
-    embedding gate accumulates files per cell.  A flat
-    ``compact_parquet`` rewrite would drop the ``__cell`` partition
-    directories and with them the probe join's file-level pruning —
-    this compactor rewrites the vectors WITH the cell partitioning
-    (one file per cell afterwards) and copies centroids + meta
-    unchanged.  Same crash-safety contract as ``compact_parquet``:
-    writes to a NEW index directory; callers swap by loading the new
-    path.  Returns ``{"files_in", "files_out"}``."""
-    import os as _os
-
-    if _os.path.abspath(src_path) == _os.path.abspath(dst_path):
-        raise ValueError("ivf_compact writes to a NEW path")
-
-    from ..fsutil import count_parquet_files as _nfiles
-
-    files_in = _nfiles(f"{src_path}/vectors", spark)
-    cent = spark.read.parquet(f"{src_path}/centroids")
-    n_cells = cent.count()
-    cent.coalesce(1).write.mode("overwrite").parquet(
-        f"{dst_path}/centroids")
-    src = spark.read.parquet(f"{src_path}/vectors")
-    # tombstones FOLD here: only live rows move, re-versioned to 0,
-    # and the destination index starts with no tombstone file
-    from ._maint import live_rows
-
-    live = live_rows(src, _ivf_tombs(spark, src_path, id_col), id_col)
-    if "__ver" in src.columns:
-        live = live.withColumn("__ver", F.lit(0).cast("long"))
-    (live.repartition(n_cells, "__cell")
-        .write.mode("overwrite").partitionBy("__cell")
-        .parquet(f"{dst_path}/vectors"))
-    spark.read.parquet(f"{src_path}/meta").coalesce(1).write.mode(
-        "overwrite").parquet(f"{dst_path}/meta")
-    return {"files_in": files_in,
-            "files_out": _nfiles(f"{dst_path}/vectors", spark)}
 
 
 def ivf_staleness(spark, path: str, retrain_factor: float = 1.0,
@@ -843,12 +725,15 @@ def ivf_staleness(spark, path: str, retrain_factor: float = 1.0,
     ``needs_retrain`` (ratio > ``retrain_factor``).  Pair with
     :func:`ivf_append`'s documented policy: append freely, rebuild the
     quantizer offline once the index has grown past the factor.
+    ``total_rows`` counts stored rows, so deleted generations keep
+    counting until ``index_compact`` folds them — conservative in the
+    right direction (retrain triggers sooner, never later).
 
     ``built_rows``: pass the meta value if already known (it is fixed
     at build time, so repeat callers — the streaming gate — read it
     once and skip the per-call meta read)."""
     built = (built_rows if built_rows is not None else
-             spark.read.parquet(f"{path}/meta").collect()[0]["built_rows"])
+             store.read_meta(spark, path)["built_rows"])
     total = spark.read.parquet(f"{path}/vectors").count()
     appended = total - built
     ratio = appended / built if built else float("inf")
@@ -1342,6 +1227,37 @@ def pq_encode(
     return df.select(F.col(id_col), enc(F.col(vec_col)).alias(out_col))
 
 
+def _adc_kernel(queries: DataFrame, id_col: str, vec_col: str,
+                model: PqModel):
+    """The asymmetric-distance kernel of :func:`pq_topk` and
+    :func:`ivfpq_topk`: the unit-normalised query matrix ``(nq, d)``,
+    the query ids as a literal array (in the queries frame's id dtype,
+    so an output ``query_id`` matches the corpus id type exactly) and a
+    pandas UDF mapping a PQ code to its ``nq`` ADC scores.  The lookup
+    table ``LUT[q, j, code]`` (inner product of query sub-vector ``j``
+    with each codeword) is built driver-side and rides the closure."""
+    qrows = queries.select(F.col(id_col), F.col(vec_col)).collect()
+    qmat = np.stack([np.asarray(r[1], dtype="float64") for r in qrows])
+    qn = np.linalg.norm(qmat, axis=1, keepdims=True)
+    qn[qn == 0] = 1.0
+    qmat = qmat / qn
+    books, dsub = model.codebooks, model.dsub
+    lut = np.stack([qmat[:, j * dsub:(j + 1) * dsub] @ books[j].T
+                    for j in range(model.m)], axis=1)     # (nq, m, ks)
+
+    @pandas_udf("array<double>")
+    def adc(code_s: pd.Series) -> pd.Series:
+        cmat = np.stack(code_s.to_numpy()).astype("int64")      # (B, m)
+        scores = np.zeros((len(cmat), lut.shape[0]))
+        for j in range(lut.shape[1]):
+            scores += lut[:, j, cmat[:, j]].T                   # (B, nq)
+        return pd.Series(list(np.round(scores, 6)))
+
+    qid_type = queries.schema[id_col].dataType
+    qid_arr = F.array(*[F.lit(r[0]).cast(qid_type) for r in qrows])
+    return qmat, qid_arr, adc
+
+
 def pq_topk(
     codes: DataFrame,
     model: PqModel,
@@ -1365,32 +1281,7 @@ def pq_topk(
     ADC scores approximate cosine; for exact final ordering compose
     with :func:`pq_rerank` (shortlist C >> k, then true-vector
     re-rank) — the standard two-stage production shape."""
-    qrows = queries.select(F.col(id_col), F.col(vec_col)).collect()
-    qids = [r[0] for r in qrows]
-    qmat = np.stack([np.asarray(r[1], dtype="float64") for r in qrows])
-    qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0
-    qmat = qmat / qn
-    books = model.codebooks
-    msub, dsub = model.m, model.dsub
-    # LUT[q, j, code]: inner product of query sub-vector with codeword
-    lut = np.stack([
-        np.stack([qmat[:, j * dsub:(j + 1) * dsub] @ books[j].T
-                  for j in range(msub)], axis=1)
-    ])[0]  # (nq, m, ks)
-
-    @pandas_udf("array<double>")
-    def adc(code_s: pd.Series) -> pd.Series:
-        cmat = np.stack(code_s.to_numpy()).astype("int64")      # (B, m)
-        scores = np.zeros((len(cmat), lut.shape[0]))
-        for j in range(lut.shape[1]):
-            scores += lut[:, j, cmat[:, j]].T                   # (B, nq)
-        return pd.Series(list(np.round(scores, 6)))
-
-    # literal query ids keep the queries frame's id dtype, so the
-    # output's query_id column matches the corpus id type exactly
-    qid_type = queries.schema[id_col].dataType
-    qid_arr = F.array(*[F.lit(q).cast(qid_type) for q in qids])
+    _, qid_arr, adc = _adc_kernel(queries, id_col, vec_col, model)
     scored = (
         codes.select(F.col(id_col), adc(F.col(code_col)).alias("__s"))
         .select(F.col(id_col), F.posexplode("__s").alias("__qi", "adc_score"))
@@ -1783,36 +1674,15 @@ def ivfpq_topk(
     id_col, vec_col = index.id_col, index.vec_col
     if codes is None:
         codes = ivfpq_encode(index, model, residual=residual)
-    qrows = queries.select(F.col(id_col), F.col(vec_col)).collect()
-    qids = [r[0] for r in qrows]
-    qmat = np.stack([np.asarray(r[1], dtype="float64") for r in qrows])
-    qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0
-    qmat = qmat / qn
+    qmat, qid_arr, adc = _adc_kernel(queries, id_col, vec_col, model)
     cent = index.centroids
     n_probe = min(n_probe, len(cent))
     sims = qmat @ cent.T
     probes = np.argsort(-sims, axis=1)[:, :n_probe]       # (nq, n_probe)
     all_cells = sorted({int(c) for row in probes for c in row})
-
-    books = model.codebooks
-    msub, dsub = model.m, model.dsub
-    lut = np.stack([qmat[:, j * dsub:(j + 1) * dsub] @ books[j].T
-                    for j in range(msub)], axis=1)        # (nq, m, ks)
-
-    @pandas_udf("array<double>")
-    def adc(code_s: pd.Series) -> pd.Series:
-        cmat = np.stack(code_s.to_numpy()).astype("int64")
-        scores = np.zeros((len(cmat), lut.shape[0]))
-        for j in range(lut.shape[1]):
-            scores += lut[:, j, cmat[:, j]].T
-        return pd.Series(list(np.round(scores, 6)))
-
-    qid_type = queries.schema[id_col].dataType
-    qid_arr = F.array(*[F.lit(q).cast(qid_type) for q in qids])
     # per-query probe sets as a literal map: query index -> cell array
     probe_map = F.array(*[
-        F.array(*[F.lit(int(c)) for c in probes[i]]) for i in range(len(qids))
+        F.array(*[F.lit(int(c)) for c in row]) for row in probes
     ])
     scored = (
         codes.filter(F.col("__cell").isin(all_cells))     # union pruning
@@ -1834,7 +1704,7 @@ def ivfpq_topk(
         coarse = F.array(*[
             F.array(*[F.lit(round(float(sims[i, c]), 6))
                       for c in range(len(cent))])
-            for i in range(len(qids))
+            for i in range(len(qmat))
         ])
         scored = scored.withColumn(
             "adc_score",

@@ -1415,9 +1415,9 @@ def q_bm25_index(spark, sf_dir):
 
     from ..functions import (
         bm25_index_append,
-        bm25_index_replace,
         bm25_index_search,
         bm25_index_write,
+        index_delete,
     )
 
     docs = _t(spark, sf_dir, "documents")
@@ -1433,10 +1433,10 @@ def q_bm25_index(spark, sf_dir):
     bm25_index_append(docs.filter(F.col("doc_id") % 2 == 1),
                       table, "doc_id", "text")
     # re-crawl: every 50th doc's text truncated — dl, tf and df all move
-    bm25_index_replace(
-        docs.filter(F.col("doc_id") % 50 == 0).select(
-            "doc_id", F.substring("text", 1, 150).alias("text")),
-        table, path, "doc_id", "text")
+    recrawl = docs.filter(F.col("doc_id") % 50 == 0).select(
+        "doc_id", F.substring("text", 1, 150).alias("text"))
+    index_delete(spark, path, recrawl.select("doc_id"))
+    bm25_index_append(recrawl, table, "doc_id", "text")
     queries = _bm25_queries(spark)
     return bm25_index_search(spark, table, queries, path, k=5)
 

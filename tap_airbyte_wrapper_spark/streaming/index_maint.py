@@ -43,6 +43,7 @@ import time
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..fsutil import exists as _fs_exists, write_text as _fs_write
+from ..functions.index_store import index_delete
 from ..sources.changelog import normalize_changes
 from ._batch import start_foreach_batch
 from .stats import append_gate_stats
@@ -63,11 +64,12 @@ def _latest_changes(batch: DataFrame, id_col: str, op_col: str,
 
 
 def _maintain(stream, index_path, checkpoint, available_now, id_col,
-              text_col, op_col, order_col, apply):
+              text_col, op_col, order_col, append):
     """Start a maintenance query: per micro-batch, collapse to the last
-    change per id and call ``apply(spark, dels, ups, n_del, n_up)``
-    with the deleted ids and the upserted ``(id, text)`` rows, behind
-    the best-effort ``_maint_batch_<id>`` marker."""
+    change per id, ``index_delete`` every changed id (an update
+    tombstones its own id first: a replace) and ``append`` the upserted
+    ``(id, text)`` rows, behind the best-effort ``_maint_batch_<id>``
+    marker."""
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
         started = time.time()
@@ -81,7 +83,11 @@ def _maintain(stream, index_path, checkpoint, available_now, id_col,
             ups = latest.filter(~F.col("_deleted")).select(id_col, text_col)
             n_del = dels.count()
             n_up = ups.count()
-            apply(spark, dels, ups, n_del, n_up)
+            if n_del or n_up:
+                index_delete(spark, index_path,
+                             dels.unionByName(ups.select(id_col)))
+            if n_up:
+                append(ups)
             try:
                 _fs_write(spark, marker, "done")
             except Exception:
@@ -110,18 +116,12 @@ def stream_bm25_index_maintenance(
     (``bm25_index_write`` — an empty corpus frame is fine).  After any
     drained batch, ``bm25_index_search`` equals a from-scratch rebuild
     on the corpus-with-changes-applied (pinned by test)."""
-    from ..functions.index_store import index_delete
-    from ..functions.retrieval import bm25_index_replace
-
-    def apply(spark, dels, ups, n_del, n_up):
-        if n_del:
-            index_delete(spark, index_table, index_path, dels)
-        if n_up:
-            bm25_index_replace(ups, index_table, index_path, id_col,
-                               text_col)
+    from ..functions.retrieval import bm25_index_append
 
     return _maintain(stream, index_path, checkpoint, available_now, id_col,
-                     text_col, op_col, order_col, apply)
+                     text_col, op_col, order_col,
+                     lambda ups: bm25_index_append(ups, index_table, id_col,
+                                                   text_col))
 
 
 def stream_fingerprint_index_maintenance(
@@ -142,16 +142,8 @@ def stream_fingerprint_index_maintenance(
     at the bumped version).  Requires a bootstrapped index
     (``fingerprint_index_write``)."""
     from ..functions.dedup import fingerprint_index_append
-    from ..functions.index_store import index_delete
-
-    def apply(spark, dels, ups, n_del, n_up):
-        if n_del or n_up:
-            # updates tombstone their own id first (replace), then
-            # register the new content
-            index_delete(spark, index_table, index_path,
-                         dels.unionByName(ups.select(id_col)))
-        if n_up:
-            fingerprint_index_append(ups, index_table, id_col, text_col)
 
     return _maintain(stream, index_path, checkpoint, available_now, id_col,
-                     text_col, op_col, order_col, apply)
+                     text_col, op_col, order_col,
+                     lambda ups: fingerprint_index_append(
+                         ups, index_table, id_col, text_col))

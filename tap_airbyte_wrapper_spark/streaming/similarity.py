@@ -17,8 +17,11 @@ replayed vector is already in the index and matches ITSELF, and
 ever name OTHER vectors; batch-mates that lost the within-batch tie on
 the first run were never appended, so on replay they lose again via a
 corpus hit against the appended winner.  A re-append only duplicates
-index rows; compact the index periodically with ``ivf_compact`` —
-layout-preserving, unlike the flat ``compact_parquet``.
+index rows; compact the index periodically with ``index_compact`` —
+layout-preserving, unlike the flat ``compact_parquet``.  Each batch
+probes the index's LIVE rows (``index_store``), so a vector removed
+with ``index_delete`` — or the dead generation of a replaced one — no
+longer blocks new documents.
 
 Centroid staleness: the quantizer is NEVER retrained inside the stream
 (moving cell boundaries would strand the already-assigned corpus — see
@@ -37,6 +40,7 @@ import logging
 
 from pyspark.sql import DataFrame
 
+from ..functions import index_store as store
 from ..functions.similarity import IvfIndex, embedding_dedup_delta, \
     ivf_append, ivf_load, ivf_staleness
 from ._batch import drop_duplicates, run_gate
@@ -70,23 +74,20 @@ def stream_embedding_gate(
     """
 
     # The quantizer is never retrained inside the stream (see module
-    # docstring), so centroids and the meta's built_rows are IMMUTABLE
-    # for the life of the query: load them on the first batch and reuse
-    # — only the vectors read (appended every batch) must be fresh.
+    # docstring), so centroids and the meta are IMMUTABLE for the life
+    # of the query: load them on the first batch and reuse — only the
+    # live vectors (appended every batch) must be read fresh.
     cached: dict = {}
 
     def select(batch: DataFrame) -> DataFrame:
         spark = batch.sparkSession
         if "cent" not in cached:
-            # only the centroid array and built_rows are immutable
-            # — caching a full ivf_load would pin a vectors frame
-            # that goes stale on the first append
             cached["cent"] = ivf_load(
                 spark, index_path, id_col, vec_col).centroids
-            cached["built"] = spark.read.parquet(
-                f"{index_path}/meta").collect()[0]["built_rows"]
+            cached["meta"] = store.read_meta(spark, index_path)
         index = IvfIndex(
-            cached["cent"], spark.read.parquet(f"{index_path}/vectors"),
+            cached["cent"],
+            store.live(spark, index_path, cached["meta"], "vectors"),
             id_col, vec_col)
         return drop_duplicates(batch, embedding_dedup_delta(
             index, batch, threshold=threshold, n_probe=n_probe, k=k),
@@ -97,7 +98,7 @@ def stream_embedding_gate(
         ivf_append(spark, index_path, clean, id_col, vec_col,
                    centroids=cached["cent"])
         stale = ivf_staleness(spark, index_path, retrain_factor,
-                              built_rows=cached["built"])
+                              built_rows=cached["meta"]["built_rows"])
         if stale["needs_retrain"]:
             logger.warning(
                 "IVF index at %s has grown %.1fx past its training "

@@ -1,30 +1,35 @@
-"""One contract over the six persisted-index families that share
+"""One contract over the seven persisted-index families that share
 ``functions/index_store.py``: after any sequence of build, append,
-delete, replace and re-append, every probe equals the same probe on an
-index built from scratch on the edited corpus; compaction leaves the
-probe unchanged, drops the tombstones and writes at most one file per
-bucket per table; and a compaction aimed at the live index itself is
-refused before anything is touched."""
+delete, replace (a delete, then an append) and re-append, every probe
+equals the same probe on an index built from scratch on the edited
+corpus; compaction leaves the probe unchanged, drops the tombstones and
+writes at most one file per bucket (or IVF cell) per table; and a
+compaction aimed at the live index itself is refused before anything is
+touched."""
 
+import ast
 import os
 import struct
 import zlib
 
 import pytest
 
+from pyspark.sql import functions as F
+
+from tap_airbyte_wrapper_spark.fsutil import exists
 from tap_airbyte_wrapper_spark.functions import (
-    bm25_index_append, bm25_index_replace, bm25_index_search,
-    bm25_index_write, fingerprint_dedup_delta, fingerprint_index_append,
-    fingerprint_index_write, index_compact, index_delete,
-    media_dedup_delta, media_sig_index_append, media_sig_index_replace,
-    media_sig_index_write, minhash_dedup_delta, minhash_index_append,
-    minhash_index_replace, minhash_index_write, novelty_index_append,
+    bm25_index_append, bm25_index_search, bm25_index_write,
+    fingerprint_dedup_delta, fingerprint_index_append,
+    fingerprint_index_write, index_compact, index_delete, ivf_append,
+    ivf_build, ivf_load, ivf_search, media_dedup_delta,
+    media_sig_index_append, media_sig_index_write, minhash_dedup_delta,
+    minhash_index_append, minhash_index_write, novelty_index_append,
     novelty_index_write, novelty_probe, simhash_dedup_delta,
-    simhash_index_append, simhash_index_replace, simhash_index_write)
+    simhash_index_append, simhash_index_write)
 from tap_airbyte_wrapper_spark.functions.index_store import LAYOUTS
 from tap_airbyte_wrapper_spark.functions.video import mp4_stub
 
-N_BUCKETS = 2
+N_BUCKETS = 2  # also the IVF cell count
 
 
 def _text(i, tag="v"):
@@ -46,6 +51,16 @@ def _payload(text):
     return payload[:-80] if base != text else payload
 
 
+def _vec(text, dim=32):
+    """A feature-hashed bag of words: texts sharing most words (a
+    ``' tail'`` near-copy) get nearby vectors."""
+    v = [0.0] * dim
+    for w in text.split():
+        h = zlib.crc32(w.encode())
+        v[h % dim] += 1.0 if (h >> 8) & 1 else -1.0
+    return v
+
+
 class _Family:
     def __init__(self, spark, name):
         self.spark, self.name = spark, name
@@ -55,6 +70,10 @@ class _Family:
             return self.spark.createDataFrame(
                 [(i, _payload(t)) for i, t in sorted(texts.items())],
                 "doc_id long, media binary")
+        if self.name == "ivf":
+            return self.spark.createDataFrame(
+                [(i, _vec(t)) for i, t in sorted(texts.items())],
+                "doc_id long, vec array<double>")
         return self.spark.createDataFrame(
             sorted(texts.items()), "doc_id long, text string")
 
@@ -75,6 +94,8 @@ class _Family:
                 window=16, stride=32),
             "novelty": lambda: novelty_index_write(
                 df, t, p, n=3, n_buckets=N_BUCKETS),
+            "ivf": lambda: ivf_build(
+                df, "doc_id", "vec", n_clusters=N_BUCKETS, path=p),
         }[self.name]()
 
     def append(self, texts, t, p):
@@ -90,24 +111,17 @@ class _Family:
             "media_sig": lambda: media_sig_index_append(
                 df, t, p, "doc_id", "media"),
             "novelty": lambda: novelty_index_append(df, t, p),
+            "ivf": lambda: ivf_append(self.spark, p, df, "doc_id", "vec"),
         }[self.name]()
 
     def replace(self, texts, t, p):
-        df = self.frame(texts)
-        replace = {
-            "bm25": lambda: bm25_index_replace(df, t, p, "doc_id", "text"),
-            "minhash": lambda: minhash_index_replace(
-                df, t, p, "doc_id", "text"),
-            "simhash": lambda: simhash_index_replace(
-                df, t, p, "doc_id", "text"),
-            "media_sig": lambda: media_sig_index_replace(
-                df, t, p, "doc_id", "media"),
-        }.get(self.name)
-        if replace is not None:
-            replace()
-        else:  # families without a replace op: delete, then append
-            index_delete(self.spark, t, p, df.select("doc_id"))
-            self.append(texts, t, p)
+        index_delete(self.spark, p, self.frame(texts).select("doc_id"))
+        self.append(texts, t, p)
+
+    def compact(self, t, p, dst_t, dst):
+        if LAYOUTS[self.name].catalog:
+            return index_compact(self.spark, p, dst, t, dst_t)
+        return index_compact(self.spark, p, dst)
 
     def probe(self, batch, t, p):
         df = self.frame(batch)
@@ -127,13 +141,19 @@ class _Family:
             rows = simhash_dedup_delta(df, t, p, "doc_id", "text")
         elif self.name == "media_sig":
             rows = media_dedup_delta(df, t, p, "doc_id", "media")
+        elif self.name == "ivf":  # a full probe: exact top-k
+            rows = ivf_search(ivf_load(self.spark, p, "doc_id", "vec"), df,
+                              k=3, n_probe=N_BUCKETS) \
+                .withColumn("cos_sim", F.round("cos_sim", 6))
         else:
             rows = novelty_probe(df, t, p)
         return sorted(tuple(r) for r in rows.collect())
 
     def drop(self, *names):
+        if not LAYOUTS[self.name].catalog:
+            return
         for t in names:
-            for suffix in (*LAYOUTS[self.name].tables, "tombstones"):
+            for suffix in LAYOUTS[self.name].tables:
                 self.spark.sql(f"DROP TABLE IF EXISTS {t}_{suffix}")
 
 
@@ -168,7 +188,7 @@ FAMILIES = sorted(LAYOUTS)
 def test_every_store_family_is_covered():
     assert FAMILIES == sorted(
         ["bm25", "minhash", "fingerprint", "simhash", "media_sig",
-         "novelty"])
+         "novelty", "ivf"])
 
 
 @pytest.mark.parametrize("family", FAMILIES)
@@ -177,9 +197,10 @@ def test_maintained_index_probes_like_a_rebuild(spark, tmp_path, family):
     t, p = f"ixs_{family}", str(tmp_path / "idx")
     fam.write(CORPUS_A, t, p)
     fam.append(CORPUS_B, t, p)
-    index_delete(spark, t, p,
-                 spark.createDataFrame([(i,) for i in DELETED],
-                                       "doc_id long"))
+    # the id column is found by name, not position
+    index_delete(spark, p,
+                 spark.createDataFrame([("gone", i) for i in DELETED],
+                                       "why string, doc_id long"))
     fam.replace(REPLACED, t, p)
     fam.append(REVIVED, t, p)
     got = fam.probe(BATCH, t, p)
@@ -195,9 +216,9 @@ def test_maintained_index_probes_like_a_rebuild(spark, tmp_path, family):
     assert want, "probe batch must exercise the index"
 
     dst = str(tmp_path / "compacted")
-    stats = index_compact(spark, t, p, f"{t}_c", dst)
+    stats = fam.compact(t, p, f"{t}_c", dst)
     assert stats["files_out"] <= stats["files_in"]
-    assert not spark.catalog.tableExists(f"{t}_c_tombstones")
+    assert not exists(spark, f"{dst}/tombstones")
     for suffix in LAYOUTS[family].tables:
         n_files = sum(f.endswith(".parquet")
                       for f in _files(os.path.join(dst, suffix)))
@@ -216,17 +237,19 @@ def test_compact_onto_itself_touches_nothing(spark, tmp_path, family):
     fam.write(CORPUS_A, t, p)
     before, files = fam.probe(BATCH, t, p), _files(p)
 
-    for dst_table, dst_path, msg in (
-            (f"{t}_2", p, "NEW path"),
-            (f"{t}_2", os.path.join(p, "."), "NEW path"),
-            (t.upper(), str(tmp_path / "other"), "NEW table")):
+    cases = [(f"{t}_2", p, "NEW path"),
+             (f"{t}_2", os.path.join(p, "."), "NEW path")]
+    if LAYOUTS[family].catalog:
+        cases.append((t.upper(), str(tmp_path / "other"), "NEW table"))
+    for dst_table, dst_path, msg in cases:
         with pytest.raises(ValueError, match=msg):
-            index_compact(spark, t, p, dst_table, dst_path)
+            fam.compact(t, p, dst_table, dst_path)
 
     assert _files(p) == files
     assert not os.path.exists(tmp_path / "other")
-    for suffix in LAYOUTS[family].tables:
-        assert spark.catalog.tableExists(f"{t}_{suffix}")
+    if LAYOUTS[family].catalog:
+        for suffix in LAYOUTS[family].tables:
+            assert spark.catalog.tableExists(f"{t}_{suffix}")
     assert fam.probe(BATCH, t, p) == before
     fam.drop(t)
 
@@ -245,22 +268,73 @@ def test_build_and_compact_onto_a_used_path_start_new_tombstones(
     fresh, fresh_p = f"{t}_fresh", str(tmp_path / "fresh")
     fam.write(CORPUS_A, fresh, fresh_p)
     want_full = fam.probe(BATCH, fresh, fresh_p)
-    index_delete(spark, fresh, fresh_p, gone)
+    index_delete(spark, fresh_p, gone)
     want = fam.probe(BATCH, fresh, fresh_p)
     assert want != want_full, "the delete must be observable"
 
     fam.write(CORPUS_A, t, p)
-    index_delete(spark, t, p, gone)
+    index_delete(spark, p, gone)
     fam.write(CORPUS_A, t, p)
     assert fam.probe(BATCH, t, p) == want_full
-    index_delete(spark, t, p, gone)
+    index_delete(spark, p, gone)
     assert fam.probe(BATCH, t, p) == want
 
     dst = str(tmp_path / "dst")
     fam.write(CORPUS_A, f"{t}_old", dst)
-    index_delete(spark, f"{t}_old", dst, gone)
-    index_compact(spark, t, p, f"{t}_c", dst)
+    index_delete(spark, dst, gone)
+    fam.compact(t, p, f"{t}_c", dst)
     assert fam.probe(BATCH, f"{t}_c", dst) == want
-    index_delete(spark, f"{t}_c", dst, gone)
+    index_delete(spark, dst, gone)
     assert fam.probe(BATCH, f"{t}_c", dst) == want
     fam.drop(t, fresh, f"{t}_old", f"{t}_c")
+
+
+_LIFECYCLE_CALLS = {"live_rows", "stamp_version", "tombstone_counts",
+                    "record_tombstones", "clear_tombstones"}
+
+
+def _lifecycle_uses(path):
+    """``(line, what)`` of each call to a tombstone or liveness helper
+    and each non-docstring string naming a tombstones path or the index
+    meta file, in one module."""
+    tree = ast.parse(open(path).read())
+    docstrings = {
+        id(node.body[0].value) for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                             ast.AsyncFunctionDef))
+        and node.body and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)}
+    hits = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.attr if isinstance(f, ast.Attribute) else \
+                getattr(f, "id", None)
+            if name in _LIFECYCLE_CALLS:
+                hits.append((node.lineno, name))
+        elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+              and id(node) not in docstrings
+              and ("_index_meta.json" in node.value
+                   or "tombstones" in node.value.split("/"))):
+            hits.append((node.lineno, node.value))
+    return hits
+
+
+def test_no_index_lifecycle_outside_the_store():
+    """Only ``index_store`` and ``_maint`` stamp versions, filter live
+    rows, read or write tombstones and name the meta file, so an eighth
+    index family cannot grow its own lifecycle."""
+    pkg = os.path.join(os.path.dirname(__file__), os.pardir,
+                       "tap_airbyte_wrapper_spark")
+    owners = {os.path.join("functions", "index_store.py"),
+              os.path.join("functions", "_maint.py")}
+    offenders = []
+    for dirpath, _, files in os.walk(pkg):
+        for name in files:
+            path = os.path.join(dirpath, name)
+            rel = os.path.relpath(path, pkg)
+            if name.endswith(".py") and rel not in owners:
+                offenders += [(rel, *hit) for hit in _lifecycle_uses(path)]
+    assert offenders == [], "go through functions/index_store.py"
+    for rel in owners:
+        assert _lifecycle_uses(os.path.join(pkg, rel)) != []

@@ -430,8 +430,7 @@ def media_index(spark, tmp_path):
     media_sig_index_write(corpus, "m10_t", path, "asset_id", "media",
                           n_buckets=4, **SIG_KW)
     yield spark, corpus, path
-    for t in ("m10_t_segs", "m10_t_tombstones"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    spark.sql("DROP TABLE IF EXISTS m10_t_segs")
 
 
 def test_media_delta_finds_corpus_and_delta_dups(media_index):
@@ -508,7 +507,7 @@ def test_media_delta_replay_self_match_and_corpus_no_shuffle(media_index):
 def test_media_index_replace_delete_compact(media_index, tmp_path):
     from tap_airbyte_wrapper_spark.functions import (
         media_dedup_delta, index_compact, index_delete,
-        media_sig_index_replace)
+        media_sig_index_append)
 
     spark, corpus, path = media_index
     # replace asset 5 with a different recording: probes of the OLD
@@ -516,7 +515,8 @@ def test_media_index_replace_delete_compact(media_index, tmp_path):
     new5 = spark.createDataFrame(
         [(5, _mp4_with_essence(320, 240, 6000, seed=505))],
         "asset_id long, media binary")
-    media_sig_index_replace(new5, "m10_t", path, "asset_id", "media")
+    index_delete(spark, path, new5.select("asset_id"))
+    media_sig_index_append(new5, "m10_t", path, "asset_id", "media")
     probe = spark.createDataFrame([
         (9005, _mp4_with_essence(320, 240, 6000, seed=505,
                                  remux_junk=b"z")),
@@ -528,21 +528,20 @@ def test_media_index_replace_delete_compact(media_index, tmp_path):
     assert (9005, 5) in got and (9006, 5) not in got
     # delete 5 entirely: nothing matches it any more
     index_delete(
-        spark, "m10_t", path,
+        spark, path,
         spark.createDataFrame([(5,)], "mid long"))
     got2 = {(r.id_a, r.id_b) for r in media_dedup_delta(
         probe, "m10_t", path, "asset_id", "media").collect()}
     assert not any(b == 5 for _a, b in got2)
     # compact folds the tombstones; probe results unchanged
-    stats = index_compact(spark, "m10_t", path, "m10c_t",
-                          str(tmp_path / "m_idx_c"))
+    stats = index_compact(spark, path, str(tmp_path / "m_idx_c"),
+                          "m10_t", "m10c_t")
     assert stats["files_out"] <= stats["files_in"]
     got3 = {(r.id_a, r.id_b) for r in media_dedup_delta(
         probe, "m10c_t", str(tmp_path / "m_idx_c"), "asset_id",
         "media").collect()}
     assert got3 == got2
-    for t in ("m10c_t_segs", "m10c_t_tombstones"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    spark.sql("DROP TABLE IF EXISTS m10c_t_segs")
 
 
 def test_stream_media_dedup_gate_and_accumulation(spark, tmp_path):
@@ -588,8 +587,7 @@ def test_stream_media_dedup_gate_and_accumulation(spark, tmp_path):
     drain()
     assert sorted(r.asset_id
                   for r in spark.read.parquet(out).collect()) == [11, 21]
-    for t in ("m10g_t_segs", "m10g_t_tombstones"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    spark.sql("DROP TABLE IF EXISTS m10g_t_segs")
 
 # ---------------------------------------------------------------------
 # EXIF probe: hand-pinned TIFF walk, both byte orders, never-raise

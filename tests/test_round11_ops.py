@@ -776,7 +776,6 @@ def test_media_timing_index_catches_reencode_in_delta(spark, tmp_path):
         "id long, m binary")
     path = str(tmp_path / "tix")
     spark.sql("DROP TABLE IF EXISTS tix_segs")
-    spark.sql("DROP TABLE IF EXISTS tix_tombstones")
     media_sig_index_write(corpus, "tix", path, "id", "m",
                           sig_kind="timing")
     # delta: a re-encode of corpus asset 1 + one genuinely new asset

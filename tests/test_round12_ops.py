@@ -664,7 +664,6 @@ def test_mixed_family_timing_index_in_delta(spark, tmp_path):
         "id long, m binary")
     path = str(tmp_path / "mixix")
     spark.sql("DROP TABLE IF EXISTS mixix_segs")
-    spark.sql("DROP TABLE IF EXISTS mixix_tombstones")
     media_sig_index_write(corpus, "mixix", path, "id", "m",
                           sig_kind="timing")
     delta = spark.createDataFrame(

@@ -33,7 +33,6 @@ def test_timing_index_meta_records_sig_version(spark, tmp_path):
     p_w = str(tmp_path / "wix")
     for t in ("tix", "wix"):
         spark.sql(f"DROP TABLE IF EXISTS {t}_segs")
-        spark.sql(f"DROP TABLE IF EXISTS {t}_tombstones")
     media_sig_index_write(corpus, "tix", p_t, "id", "m",
                           sig_kind="timing")
     media_sig_index_write(corpus, "wix", p_w, "id", "m")
@@ -60,7 +59,6 @@ def test_timing_index_refuses_stale_sig_algorithm(spark, tmp_path):
         [(1, mp3_stub(120, essence_seed=1))], "id long, m binary")
     path = str(tmp_path / "stale")
     spark.sql("DROP TABLE IF EXISTS stale_segs")
-    spark.sql("DROP TABLE IF EXISTS stale_tombstones")
     media_sig_index_write(corpus, "stale", path, "id", "m",
                           sig_kind="timing")
     delta = spark.createDataFrame(

@@ -151,7 +151,6 @@ def test_bm25_doclen_table_equals_tf_rollup(spark, tmp_path):
     tbl = "t14_dl_eq"
     spark.sql(f"DROP TABLE IF EXISTS {tbl}_postings")
     spark.sql(f"DROP TABLE IF EXISTS {tbl}_doclen")
-    spark.sql(f"DROP TABLE IF EXISTS {tbl}_tombstones")
     bm25_index_write(df.filter(F.col("doc_id") <= 3),
                      tbl, str(tmp_path / "idx"), "doc_id", "text")
     bm25_index_append(df.filter(F.col("doc_id") > 3),
@@ -166,7 +165,7 @@ def test_bm25_doclen_table_equals_tf_rollup(spark, tmp_path):
     assert got == want
     assert (1, 4, 0) in got and (2, 2, 0) in got
     assert all(r[0] not in (3, 4) for r in got)
-    for suffix in ("postings", "doclen", "tombstones"):
+    for suffix in ("postings", "doclen"):
         spark.sql(f"DROP TABLE IF EXISTS {tbl}_{suffix}")
 
 

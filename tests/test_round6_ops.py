@@ -440,7 +440,7 @@ def test_minhash_index_compact_preserves_bucketed_join(spark, tmp_path):
             "mhc6", idx, "doc_id", "text")
 
     dst = str(tmp_path / "idx_c")
-    stats = index_compact(spark, "mhc6", idx, "mhc6c", dst)
+    stats = index_compact(spark, idx, dst, "mhc6", "mhc6c")
     assert stats["files_out"] < stats["files_in"]
     # at most one file per NON-EMPTY bucket per table
     assert stats["files_out"] <= 2 * 4
@@ -474,7 +474,7 @@ def test_ivf_compact_preserves_cells_and_search(spark, tmp_path):
     import os
 
     from tap_airbyte_wrapper_spark.functions import (
-        ivf_append, ivf_build, ivf_compact, ivf_load, ivf_search)
+        index_compact, ivf_append, ivf_build, ivf_load, ivf_search)
 
     src = str(tmp_path / "ivf")
     corpus = spark.createDataFrame(
@@ -487,7 +487,7 @@ def test_ivf_compact_preserves_cells_and_search(spark, tmp_path):
              for d in range(4)], "vec_id long, embedding array<float>"))
 
     dst = str(tmp_path / "ivf_c")
-    stats = ivf_compact(spark, src, dst)
+    stats = index_compact(spark, src, dst)
     assert stats["files_out"] < stats["files_in"]
     # cell partition dirs survive (file-level pruning intact)
     vdirs = [d for d in os.listdir(f"{dst}/vectors")
@@ -752,8 +752,8 @@ def test_minhash_compact_table_guard_case_insensitive(spark, tmp_path):
     from tap_airbyte_wrapper_spark.functions import index_compact
 
     with pytest.raises(ValueError, match="NEW table"):
-        index_compact(spark, "someidx", str(tmp_path / "a"),
-                      "SOMEIDX", str(tmp_path / "b"))
+        index_compact(spark, str(tmp_path / "a"), str(tmp_path / "b"),
+                      "someidx", "SOMEIDX")
 
 
 def test_cli_catalog_tolerates_json_nulls(tmp_path, capsys):

@@ -276,7 +276,7 @@ def test_bm25_index_compact_preserves_layout_and_results(spark, tmp_path):
     before = bm25_index_search(spark, "bm25c", queries, idx, k=8).collect()
 
     stats = index_compact(
-        spark, "bm25c", idx, "bm25c2", str(tmp_path / "idx2"))
+        spark, idx, str(tmp_path / "idx2"), "bm25c", "bm25c2")
     assert stats["files_out"] < stats["files_in"]
     # at most one file per bucket per table (empty buckets write none)
     assert stats["files_out"] <= 8
@@ -296,10 +296,10 @@ def test_bm25_index_compact_preserves_layout_and_results(spark, tmp_path):
     # guard rails: same path / same table name are refused
     import pytest as _pytest
     with _pytest.raises(ValueError, match="NEW path"):
-        index_compact(spark, "bm25c", idx, "bm25c3", idx)
+        index_compact(spark, idx, idx, "bm25c", "bm25c3")
     with _pytest.raises(ValueError, match="NEW table"):
-        index_compact(spark, "bm25c", idx, "BM25C",
-                      str(tmp_path / "idx3"))
+        index_compact(spark, idx, str(tmp_path / "idx3"), "bm25c",
+                      "BM25C")
 
 
 # -------------------------------------------------------- extract_links

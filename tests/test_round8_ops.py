@@ -7,6 +7,8 @@ import random
 import pytest
 from pyspark.sql import functions as F  # noqa: F401
 
+from tap_airbyte_wrapper_spark.fsutil import exists
+
 
 # ---------------------------------------------------------------------
 # ngram_novelty
@@ -794,8 +796,8 @@ def test_bm25_index_replace_equals_fresh_rebuild(spark, tmp_path):
     over a from-scratch index on the EDITED corpus — N, avgdl, df and
     tf all reflect only the live generation."""
     from tap_airbyte_wrapper_spark.functions import (
-        bm25_index_replace, bm25_index_search, bm25_index_write,
-        bm25_topk)
+        bm25_index_append, bm25_index_search, bm25_index_write,
+        bm25_topk, index_delete)
 
     texts = {i: f"token{i % 5} alpha shared body text w{i}"
              for i in range(30)}
@@ -806,9 +808,9 @@ def test_bm25_index_replace_equals_fresh_rebuild(spark, tmp_path):
     texts[3] = "gamma gamma body entirely new content now"
     texts[7] = "alpha gamma shared"
     delta = _bm25_corpus(spark, {3: texts[3], 7: texts[7]})
-    from tap_airbyte_wrapper_spark.functions import index_delete  # noqa
-    bm25_index_replace(delta, "bm25r8a", str(tmp_path / "idx"),
-                       "doc_id", "text")
+    # a replace: delete the ids, then append the new text
+    index_delete(spark, str(tmp_path / "idx"), delta.select("doc_id"))
+    bm25_index_append(delta, "bm25r8a", "doc_id", "text")
     got = bm25_index_search(spark, "bm25r8a", _bm25_queries(spark),
                             str(tmp_path / "idx"), k=10).collect()
     want = bm25_topk(_bm25_corpus(spark, texts), _bm25_queries(spark),
@@ -832,7 +834,7 @@ def test_bm25_index_delete_then_compact_folds_tombstones(spark, tmp_path):
                      n_buckets=4)
     dead = [2, 11, 29]
     index_delete(
-        spark, "bm25r8b", str(tmp_path / "idx"),
+        spark, str(tmp_path / "idx"),
         spark.createDataFrame([(i,) for i in dead], "doc_id long"))
     kept = {k: v for k, v in texts.items() if k not in dead}
     want = bm25_topk(_bm25_corpus(spark, kept), _bm25_queries(spark),
@@ -842,10 +844,10 @@ def test_bm25_index_delete_then_compact_folds_tombstones(spark, tmp_path):
     key = lambda r: (r.query_id, r.rank)  # noqa: E731
     assert sorted(got, key=key) == sorted(want, key=key)
 
-    stats = index_compact(spark, "bm25r8b", str(tmp_path / "idx"),
-                          "bm25r8bc", str(tmp_path / "idx2"))
+    stats = index_compact(spark, str(tmp_path / "idx"),
+                          str(tmp_path / "idx2"), "bm25r8b", "bm25r8bc")
     assert stats["files_out"] <= stats["files_in"]
-    assert not spark.catalog.tableExists("bm25r8bc_tombstones")
+    assert not exists(spark, f"{tmp_path / 'idx2'}/tombstones")
     got2 = bm25_index_search(spark, "bm25r8bc", _bm25_queries(spark),
                              str(tmp_path / "idx2"), k=10).collect()
     assert sorted(got2, key=key) == sorted(want, key=key)
@@ -865,7 +867,7 @@ def test_bm25_index_delete_then_append_revives_id(spark, tmp_path):
                      str(tmp_path / "idx"), "doc_id", "text",
                      n_buckets=4)
     index_delete(
-        spark, "bm25r8c", str(tmp_path / "idx"),
+        spark, str(tmp_path / "idx"),
         spark.createDataFrame([(5,)], "doc_id long"))
     texts[5] = "gamma body resurrected doc"
     bm25_index_append(_bm25_corpus(spark, {5: texts[5]}), "bm25r8c",
@@ -888,7 +890,8 @@ def test_minhash_index_replace_matches_fresh_rebuild(spark, tmp_path):
     near-dup of the NEW text matches the doc; a near-dup of the OLD
     text no longer does."""
     from tap_airbyte_wrapper_spark.functions import (
-        minhash_dedup_delta, minhash_index_replace, minhash_index_write)
+        index_delete, minhash_dedup_delta, minhash_index_append,
+        minhash_index_write)
 
     old_text = "the quick brown fox jumps over the lazy dog " * 4
     new_text = "entirely different replacement content body " * 4
@@ -899,9 +902,11 @@ def test_minhash_index_replace_matches_fresh_rebuild(spark, tmp_path):
     minhash_index_write(docs, "doc_id", "text", "mhr8",
                         str(tmp_path / "idx"), num_hashes=64, bands=16,
                         n_buckets=4)
-    minhash_index_replace(
-        spark.createDataFrame([(1, new_text)], "doc_id long, text string"),
-        "mhr8", str(tmp_path / "idx"), "doc_id", "text")
+    edited = spark.createDataFrame([(1, new_text)],
+                                   "doc_id long, text string")
+    index_delete(spark, str(tmp_path / "idx"), edited.select("doc_id"))
+    minhash_index_append(edited, "mhr8", str(tmp_path / "idx"), "doc_id",
+                         "text")
 
     probe_new = spark.createDataFrame(
         [(100, new_text + " tail")], "doc_id long, text string")
@@ -928,7 +933,7 @@ def test_minhash_index_delete_then_compact_folds(spark, tmp_path):
     minhash_index_write(docs, "doc_id", "text", "mhd8",
                         str(tmp_path / "idx"), num_hashes=64, bands=16,
                         n_buckets=4)
-    index_delete(spark, "mhd8", str(tmp_path / "idx"),
+    index_delete(spark, str(tmp_path / "idx"),
                  spark.createDataFrame([(1,)], "doc_id long"))
     probe = spark.createDataFrame(
         [(50, text + " tail")], "doc_id long, text string")
@@ -936,9 +941,9 @@ def test_minhash_index_delete_then_compact_folds(spark, tmp_path):
         probe, "mhd8", str(tmp_path / "idx"), "doc_id", "text",
         threshold=0.5).filter(F.col("id_b") == 1).count()
 
-    index_compact(spark, "mhd8", str(tmp_path / "idx"),
-                  "mhd8c", str(tmp_path / "idx2"))
-    assert not spark.catalog.tableExists("mhd8c_tombstones")
+    index_compact(spark, str(tmp_path / "idx"), str(tmp_path / "idx2"),
+                  "mhd8", "mhd8c")
+    assert not exists(spark, f"{tmp_path / 'idx2'}/tombstones")
     assert not minhash_dedup_delta(
         probe, "mhd8c", str(tmp_path / "idx2"), "doc_id", "text",
         threshold=0.5).filter(F.col("id_b") == 1).count()
@@ -960,7 +965,7 @@ def test_fingerprint_index_delete_readmits_content(spark, tmp_path):
         [(100, "alpha beta gamma")], "doc_id long, text string")
     assert fingerprint_dedup_delta(dup, "fpr8", "doc_id",
                                    "text").count() == 0  # dropped: dup of 1
-    index_delete(spark, "fpr8", str(tmp_path / "idx"),
+    index_delete(spark, str(tmp_path / "idx"),
                  spark.createDataFrame([(1,)], "fid long"))
     survivors = fingerprint_dedup_delta(dup, "fpr8", "doc_id", "text")
     assert [r.doc_id for r in survivors.collect()] == [100]  # readmitted
@@ -971,13 +976,15 @@ def test_fingerprint_index_delete_readmits_content(spark, tmp_path):
 
 
 def test_ivf_replace_and_delete(spark, tmp_path):
-    """ivf_replace swaps a vector in-place: queries near the NEW vector
-    find the id at ~1.0 similarity, the OLD vector is unfindable, and
-    compaction folds the tombstones with unchanged search output."""
+    """A replace (delete the id, then append its new vector) swaps a
+    vector in-place: queries near the NEW vector find the id at ~1.0
+    similarity, the OLD vector is unfindable, and compaction folds the
+    tombstones with unchanged search output."""
     import numpy as np
 
     from tap_airbyte_wrapper_spark.functions import (
-        ivf_build, ivf_compact, ivf_load, ivf_replace, ivf_search)
+        index_compact, index_delete, ivf_append, ivf_build, ivf_load,
+        ivf_search)
 
     rng = np.random.default_rng(8)
     dim = 16
@@ -989,9 +996,10 @@ def test_ivf_replace_and_delete(spark, tmp_path):
     ivf_build(corpus, n_clusters=4, train_sample=60, path=path)
 
     new_vec = (np.eye(dim)[3] * 5).tolist()
-    ivf_replace(spark, path,
-                spark.createDataFrame([(7, new_vec)],
-                                      "vec_id long, embedding array<double>"))
+    edited = spark.createDataFrame([(7, new_vec)],
+                                   "vec_id long, embedding array<double>")
+    index_delete(spark, path, edited.select("vec_id"))
+    ivf_append(spark, path, edited)
     idx = ivf_load(spark, path)
     q = spark.createDataFrame([(999, new_vec)],
                               "vec_id long, embedding array<double>")
@@ -1001,9 +1009,8 @@ def test_ivf_replace_and_delete(spark, tmp_path):
     assert sum(1 for r in ivf_search(idx, q, k=60, n_probe=4).collect()
                if r.vec_id == 7) == 1
 
-    stats = ivf_compact(spark, path, str(tmp_path / "ivf2"))
+    stats = index_compact(spark, path, str(tmp_path / "ivf2"))
     assert stats["files_out"] <= stats["files_in"]
-    from tap_airbyte_wrapper_spark.fsutil import exists
     assert not exists(spark, str(tmp_path / "ivf2") + "/tombstones")
     idx2 = ivf_load(spark, str(tmp_path / "ivf2"))
     got2 = ivf_search(idx2, q, k=3, n_probe=4).collect()

@@ -13,6 +13,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from tap_airbyte_wrapper_spark.fsutil import exists
+
 FIXDIR = os.path.join(os.path.dirname(__file__), "fixtures", "jpeg_gt")
 
 
@@ -278,7 +280,7 @@ def test_novelty_index_delete_matches_rebuilt_reference(spark, tmp_path):
         "doc_id long, text string")
     novelty_index_write(ref, "nv9d", str(tmp_path / "idx"), n=3,
                         n_buckets=2)
-    index_delete(spark, "nv9d", str(tmp_path / "idx"),
+    index_delete(spark, str(tmp_path / "idx"),
                  spark.createDataFrame([(2,)], "doc_id long"))
 
     got = {r.doc_id: r for r in
@@ -293,8 +295,7 @@ def test_novelty_index_delete_matches_rebuilt_reference(spark, tmp_path):
     # the sharp cases explicitly
     assert got[100].n_seen == 1      # shared gram survives doc 2's removal
     assert got[101].n_seen == 0      # doc-2-unique gram is novel again
-    for t in ("nv9d_grams", "nv9d_tombstones"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    spark.sql("DROP TABLE IF EXISTS nv9d_grams")
 
 
 def test_novelty_index_compact_folds_and_revives(spark, tmp_path):
@@ -316,7 +317,7 @@ def test_novelty_index_compact_folds_and_revives(spark, tmp_path):
     novelty_index_write(ref, "nv9c", path, n=3, n_buckets=2)
     novelty_index_append(delta, "nv9c", path)
     novelty_index_append(delta, "nv9c", path)   # replay: duplicate rows
-    index_delete(spark, "nv9c", path,
+    index_delete(spark, path,
                  spark.createDataFrame([(2,)], "doc_id long"))
 
     before = {r.doc_id: r.n_seen
@@ -324,10 +325,10 @@ def test_novelty_index_compact_folds_and_revives(spark, tmp_path):
     assert before == {100: 1, 101: 1, 102: 0}
 
     dst = str(tmp_path / "idx2")
-    index_compact(spark, "nv9c", path, "nv9c2", dst)
+    index_compact(spark, path, dst, "nv9c", "nv9c2")
     rows = spark.table("nv9c2_grams")
     assert rows.count() == rows.distinct().count()   # duplicates folded
-    assert not spark.catalog.tableExists("nv9c2_tombstones")
+    assert not exists(spark, f"{dst}/tombstones")
     after = {r.doc_id: r.n_seen
              for r in novelty_probe(batch, "nv9c2", dst).collect()}
     assert after == before
@@ -337,8 +338,7 @@ def test_novelty_index_compact_folds_and_revives(spark, tmp_path):
     revived = {r.doc_id: r.n_seen
                for r in novelty_probe(batch, "nv9c2", dst).collect()}
     assert revived == {100: 1, 101: 1, 102: 1}
-    for t in ("nv9c_grams", "nv9c_tombstones", "nv9c2_grams",
-              "nv9c2_tombstones"):
+    for t in ("nv9c_grams", "nv9c2_grams"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
@@ -361,7 +361,6 @@ def test_novelty_probe_exact_under_shared_batch_owner(spark, tmp_path):
     # held by someone else; min-owner would have scored n_seen = 0.
     assert got.n_grams == 3 and got.n_seen == 1
     spark.sql("DROP TABLE IF EXISTS nv9e_grams")
-    spark.sql("DROP TABLE IF EXISTS nv9e_tombstones")
 
 
 # ------------------------------- corpus_diff -> index maintenance E2E
@@ -415,7 +414,7 @@ def test_corpus_diff_drives_bm25_maintenance(spark, tmp_path):
     # the removed doc is really gone from results
     assert not any(d == 3 for _, d, _s, _r in got)
     for t in ("bm9_live", "bm9_fresh"):
-        for suf in ("_postings", "_doclen", "_tombstones"):
+        for suf in ("_postings", "_doclen"):
             spark.sql(f"DROP TABLE IF EXISTS {t}{suf}")
 
 
@@ -711,8 +710,7 @@ def sh_index(spark, tmp_path):
     simhash_index_write(corpus, "sh9_t", path, "doc_id", "text",
                         chunks=4, max_hamming=3, n_buckets=4)
     yield spark, corpus, path
-    for t in ("sh9_t_segs", "sh9_t_tombstones"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    spark.sql("DROP TABLE IF EXISTS sh9_t_segs")
 
 
 def test_simhash_delta_finds_corpus_and_delta_dups(sh_index):
@@ -810,7 +808,8 @@ def test_simhash_index_replace_matches_rebuild(sh_index, tmp_path):
     from pyspark.sql import Row
 
     from tap_airbyte_wrapper_spark.functions import (
-        simhash_dedup_delta, simhash_index_replace, simhash_index_write)
+        index_delete, simhash_dedup_delta, simhash_index_append,
+        simhash_index_write)
 
     spark, corpus, path = sh_index
     new5 = "completely different content now about streaming watermarks " \
@@ -818,7 +817,9 @@ def test_simhash_index_replace_matches_rebuild(sh_index, tmp_path):
     edited = corpus.withColumn(
         "text", F.when(F.col("doc_id") == 5, F.lit(new5))
         .otherwise(F.col("text")))
-    simhash_index_replace(
+    # a replace: delete the id, then append its new content
+    index_delete(spark, path, edited.filter("doc_id = 5").select("doc_id"))
+    simhash_index_append(
         edited.filter("doc_id = 5"), "sh9_t", path, "doc_id", "text")
 
     fresh_path = str(tmp_path / "fresh_idx")
@@ -837,8 +838,7 @@ def test_simhash_index_replace_matches_rebuild(sh_index, tmp_path):
     # the NEW content matches doc 5; the OLD content no longer does
     assert any(a == 9005 and b == 5 for a, b, _h, _k in got)
     assert not any(a == 9006 and b == 5 for a, b, _h, _k in got)
-    for t in ("sh9f_t_segs", "sh9f_t_tombstones"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    spark.sql("DROP TABLE IF EXISTS sh9f_t_segs")
 
 
 def test_simhash_index_rejects_bad_params(spark, tmp_path):
@@ -908,8 +908,7 @@ def test_stream_simhash_gate_and_replay(spark, tmp_path):
     drain("ck1")
     assert sorted(r.doc_id
                   for r in spark.read.parquet(out).collect()) == [11, 21]
-    for t in ("sh9g_t_segs", "sh9g_t_tombstones"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    spark.sql("DROP TABLE IF EXISTS sh9g_t_segs")
 
 
 # ----------------------------------- benford / dp counts / confusables
@@ -1090,7 +1089,7 @@ def test_simhash_index_compact_folds_tombstones(sh_index, tmp_path):
 
     spark, corpus, path = sh_index
     index_delete(
-        spark, "sh9_t", path,
+        spark, path,
         spark.createDataFrame([(4,)], "sid long"))
     probe = corpus.filter("doc_id = 4").withColumn(
         "doc_id", F.lit(9004).cast("long"))
@@ -1099,9 +1098,9 @@ def test_simhash_index_compact_folds_tombstones(sh_index, tmp_path):
     assert (9004, 4) not in before          # deleted: no longer matches
 
     dst = str(tmp_path / "sh_idx2")
-    stats = index_compact(spark, "sh9_t", path, "sh9c_t", dst)
+    stats = index_compact(spark, path, dst, "sh9_t", "sh9c_t")
     assert stats["files_out"] <= stats["files_in"]
-    assert not spark.catalog.tableExists("sh9c_t_tombstones")
+    assert not exists(spark, f"{dst}/tombstones")
     segs = spark.table("sh9c_t_segs")
     assert segs.filter("sid = 4").count() == 0   # tombstone folded away
     assert segs.filter("__ver != 0").count() == 0
@@ -1109,9 +1108,8 @@ def test_simhash_index_compact_folds_tombstones(sh_index, tmp_path):
         probe, "sh9c_t", dst, "doc_id", "text").collect()}
     assert after == before
     with pytest.raises(ValueError, match="NEW table"):
-        index_compact(spark, "sh9_t", path, "SH9_T", dst)
-    for t in ("sh9c_t_segs", "sh9c_t_tombstones"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        index_compact(spark, path, dst, "sh9_t", "SH9_T")
+    spark.sql("DROP TABLE IF EXISTS sh9c_t_segs")
 
 
 def test_stream_blocklist_gate_with_fold(spark, tmp_path):
@@ -1377,18 +1375,14 @@ def test_record_tombstones_selects_id_col_by_name(spark, tmp_path):
     NAMED id column, not silently columns[0]; ambiguous frames raise."""
     from tap_airbyte_wrapper_spark.functions import _maint
 
-    name = "t9_tomb_guard"
-    spark.sql(f"DROP TABLE IF EXISTS {name}_tombstones")
+    path = str(tmp_path / "idx")
     ids = spark.createDataFrame(
         [("textA", "doc1"), ("textB", "doc2")], ["text", "doc_id"])
-    _maint.record_tombstones_table(
-        spark, name, str(tmp_path / "idx"), ids, "doc_id")
-    got = {r[0] for r in
-           spark.table(f"{name}_tombstones").select("doc_id").collect()}
+    _maint.record_tombstones(spark, path, ids, "doc_id", "string")
+    got = {r[0] for r in _maint.tombstone_counts(
+        spark, path, "doc_id", "string").collect()}
     assert got == {"doc1", "doc2"}
 
     bad = spark.createDataFrame([("x", "y")], ["a", "b"])
     with pytest.raises(ValueError, match="none is 'doc_id'"):
-        _maint.record_tombstones_table(
-            spark, name, str(tmp_path / "idx"), bad, "doc_id")
-    spark.sql(f"DROP TABLE IF EXISTS {name}_tombstones")
+        _maint.record_tombstones(spark, path, bad, "doc_id", "string")

@@ -419,6 +419,44 @@ def test_stream_near_dup_gate_across_batches(spark, tmp_path):
     assert (4, 3) in hits            # the real dup, still dropped
 
 
+def test_stream_embedding_gate_ignores_deleted_vectors(spark, tmp_path):
+    """The embedding gate probes only LIVE index rows: a vector removed
+    with ``index_delete``, or the old generation of a replaced one
+    (deleted, then re-appended with a new vector), no longer blocks an
+    arriving document that carries it."""
+    import numpy as np
+
+    from tap_airbyte_wrapper_spark.functions import (
+        index_delete, ivf_append, ivf_build)
+    from tap_airbyte_wrapper_spark.streaming import stream_embedding_gate
+
+    rng = np.random.default_rng(11)
+    vecs = rng.normal(size=(42, 16)).tolist()
+    schema = "vec_id long, embedding array<double>"
+    idx = str(tmp_path / "ivf")
+    ivf_build(spark.createDataFrame(list(enumerate(vecs[:40])), schema),
+              n_clusters=4, path=idx)
+    index_delete(spark, idx, spark.createDataFrame([(7,)], "vec_id long"))
+    index_delete(spark, idx, spark.createDataFrame([(8,)], "vec_id long"))
+    ivf_append(spark, idx, spark.createDataFrame([(8, vecs[40])], schema))
+
+    src = tmp_path / "landing"
+    arriving = spark.createDataFrame(
+        [(100, vecs[7]),        # the deleted vector
+         (101, vecs[8]),        # the replaced-away vector
+         (102, vecs[40])],      # a copy of 8's live vector
+        schema)
+    arriving.coalesce(1).write.parquet(str(src))
+    out = str(tmp_path / "clean")
+    stream_embedding_gate(
+        spark.readStream.schema(arriving.schema).parquet(str(src)),
+        "vec_id", "embedding", idx, out,
+        checkpoint=str(tmp_path / "ck"), threshold=0.99,
+        n_probe=4).awaitTermination(120)
+    assert sorted(r["vec_id"] for r in
+                  spark.read.parquet(out).collect()) == [100, 101]
+
+
 def test_stream_exact_dedup_gate_across_batches_and_replay(spark, tmp_path):
     """Exact gate: within-batch dups keep the min id, cross-batch
     byte-identical (after normalization) repeats drop, fresh docs
