@@ -1,21 +1,32 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exactness baseline; random-hyperplane LSH
-bucketing as the scale path (candidates only, exact rerank).  Both keep the
-linear algebra in Catalyst higher-order functions (``zip_with`` +
-``aggregate``) — JVM codegen, no Python in the row loop.
+One top-k plan for every k-nearest-neighbour search, :func:`knn_topk`:
+a pluggable candidate generator proposes (query, corpus row) pairs, and
+the plan alone drops self-matches, scores each candidate with the exact
+:func:`cosine` expression and keeps ``k`` per query by
+``(cos_sim desc, id)``.  Approximate generation, exact verification —
+the split of *Continuously Adaptive Similarity Search* (SIGMOD 2020)
+and *REPOSE* (ICDE 2021).  The generators:
 
-Scale shape (1000-executor / 100 TB reading):
-* brute force: queries are broadcast (small side), corpus never shuffles —
-  cost is one full corpus scan per query batch, embarrassingly parallel;
-* LSH: corpus is hashed once into ``bands`` buckets (narrow), the join is
-  per-bucket — sublinear candidate generation at the cost of recall;
-  rerank is exact cosine on candidates.
+* :func:`exact` — every corpus row: queries are broadcast (small
+  side), the corpus never shuffles; one full corpus scan per batch;
+* :func:`lsh` — random-hyperplane band bucketing: corpus hashed once
+  into ``bands`` buckets, the join is per bucket — sublinear candidate
+  generation at the cost of recall;
+* :func:`ivf` — the query's ``n_probe`` nearest cells of a built
+  :class:`IvfIndex` (file-level pruning when persisted);
+* :func:`pq` / :func:`ivfpq` — an ADC-scored shortlist over product-
+  quantized codes (all cells, or the probed ones).
+
+The cosine itself stays in Catalyst higher-order functions (``zip_with``
++ ``aggregate``): JVM codegen, no Python in the row loop, and sequential
+summation that matches DuckDB bit-for-bit at the rounding boundary.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -26,14 +37,13 @@ from pyspark.sql.functions import pandas_udf
 from ..operators.windows import topk_per_group
 from . import index_store as store
 
-__all__ = ["dot", "l2_norm", "cosine", "cosine_topk", "hyperplane_signature",
-           "cosine_topk_lsh", "cosine_topk_ivf", "embedding_near_dup_pairs",
-           "IvfIndex", "ivf_build", "ivf_load", "ivf_search",
-           "ivf_append", "ivf_staleness",
+__all__ = ["dot", "l2_norm", "cosine", "knn_topk", "exact", "lsh", "ivf",
+           "pq", "ivfpq", "hyperplane_signature", "embedding_near_dup_pairs",
+           "IvfIndex", "ivf_build", "ivf_load", "ivf_append", "ivf_staleness",
            "truncation_recall", "bitext_mine", "embedding_dedup_delta",
-           "PqModel", "pq_train", "pq_encode", "pq_topk", "pq_rerank",
+           "PqModel", "pq_train", "pq_encode",
            "save_pq", "load_pq", "kmeans_fit", "kmeans_predict",
-           "ivfpq_encode", "ivfpq_topk", "ivfpq_train_residual",
+           "ivfpq_encode", "ivfpq_train_residual",
            "opq_train", "opq_rotate", "hard_negatives", "embedding_mmd",
            "semantic_dedup_clustered",
            "quantize_embeddings", "nearest_centroid_assign", "semantic_dedup"]
@@ -64,10 +74,12 @@ def cosine(a: Column, b: Column) -> Column:
 
 def cosine_pairs(a: Column, b: Column) -> Column:
     """Row-wise cosine of two array columns, one numpy pass per Arrow
-    batch — the rerank workhorse for candidate pairs (the expression
-    :func:`cosine` is kept for oracle-checked paths: JVM sequential
-    summation matches DuckDB bit-for-bit at the rounding boundary).
-    The UDF is built lazily: ``pandas_udf`` needs an active session."""
+    batch — the verify step of :func:`embedding_near_dup_pairs`' LSH
+    path, where candidate pairs are many and carry no ranking.  Every
+    top-k scores with the expression :func:`cosine` instead (JVM
+    sequential summation matches DuckDB bit-for-bit at the rounding
+    boundary).  The UDF is built lazily: ``pandas_udf`` needs an active
+    session."""
 
     @pandas_udf("double")
     def _cos(xs: pd.Series, ys: pd.Series) -> pd.Series:
@@ -80,36 +92,70 @@ def cosine_pairs(a: Column, b: Column) -> Column:
     return _cos(a, b)
 
 
-def cosine_topk(
+class KnnCols(NamedTuple):
+    """What a candidate generator is handed besides the two frames: the
+    corpus id and vector columns (the queries carry the same names),
+    the output query-id column, and the plan's self-match predicate
+    (``None`` when self-matches are kept).  A generator returns
+    ``(qid, id, vec, __qvec)`` rows; one that cuts a shortlist applies
+    ``keep`` first, so a self-match never takes a slot."""
+
+    id: str
+    vec: str
+    qid: str
+    keep: Column | None
+
+
+def _best_k(scored: DataFrame, group_col: str, id_col: str,
+            k: int) -> DataFrame:
+    """The similarity family's one tie-break: per ``group_col``, the
+    ``k`` best rows by ``(cos_sim desc, id_col)``."""
+    return topk_per_group(
+        scored, [group_col], [F.col("cos_sim").desc(), F.col(id_col)], k,
+    ).drop("rk")
+
+
+def _query_vecs(queries: DataFrame, c: KnnCols) -> DataFrame:
+    return F.broadcast(queries.select(
+        F.col(c.id).alias(c.qid), F.col(c.vec).alias("__qvec")))
+
+
+def exact(corpus: DataFrame, queries: DataFrame, c: KnnCols) -> DataFrame:
+    """Every corpus row is a candidate: the (small) query set is
+    broadcast against the corpus, which never shuffles."""
+    return corpus.select(F.col(c.id), F.col(c.vec)).crossJoin(
+        _query_vecs(queries, c))
+
+
+def knn_topk(
     corpus: DataFrame,
     queries: DataFrame,
+    k: int = 10,
+    candidates=exact,
+    include_self: bool = False,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    k: int = 10,
-    include_self: bool = False,
 ) -> DataFrame:
-    """Exact cosine top-k: broadcast the (small) query set against the
-    corpus, score JVM-side, keep k per query via window.
+    """Cosine top-k per query: ``(query_id, id, cos_sim)``.
 
-    Output: (query_id, vec_id, cos_sim) — deterministic tie-break on
-    corpus id.
-    """
-    q = F.broadcast(
-        queries.select(
-            F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qvec")
-        )
-    )
-    scored = corpus.select(F.col(id_col), F.col(vec_col)).crossJoin(q)
-    if not include_self:
-        scored = scored.filter(F.col(id_col) != F.col(query_id_col))
-    scored = scored.withColumn(
-        "cos_sim", cosine(F.col(vec_col), F.col("__qvec"))
-    ).select(query_id_col, id_col, "cos_sim")
-    return topk_per_group(
-        scored, [query_id_col],
-        [F.col("cos_sim").desc(), F.col(id_col)], k,
-    ).drop("rk")
+    ``candidates`` is the generator (default :func:`exact`), a callable
+    ``(corpus, queries, KnnCols) -> (qid, id, vec, __qvec)`` rows.  The
+    plan then drops ``id == query_id`` pairs unless ``include_self``,
+    reranks every candidate with the exact :func:`cosine` and keeps
+    ``k`` per query by ``(cos_sim desc, id)`` — so any generator that
+    proposes the true neighbours reproduces brute force exactly.  The
+    index-backed generators (:func:`ivf`, :func:`ivfpq`) search the
+    corpus their index holds; pass that corpus as ``corpus``."""
+    keep = None if include_self else F.col(id_col) != F.col(query_id_col)
+    pairs = candidates(
+        corpus, queries, KnnCols(id_col, vec_col, query_id_col, keep))
+    if keep is not None:
+        pairs = pairs.filter(keep)
+    scored = pairs.select(
+        query_id_col, id_col,
+        cosine(F.col(vec_col), F.col("__qvec")).alias("cos_sim"))
+    return _best_k(scored, query_id_col, id_col, k)
 
 
 def truncation_recall(
@@ -142,16 +188,15 @@ def truncation_recall(
     # would each re-run the full brute-force pass (the same
     # union-re-executes-shared-aggregate trap threshold_metrics hit);
     # the frame is |queries| x k rows, trivially cacheable
+    cols = dict(id_col=id_col, vec_col=vec_col, query_id_col=query_id_col)
     full = cache_bounded(
-        cosine_topk(corpus, queries, id_col, vec_col,
-                    query_id_col, k).select(query_id_col, id_col))
+        knn_topk(corpus, queries, k, **cols).select(query_id_col, id_col))
     out = None
     for d in dims:
         cut = F.slice(F.col(vec_col), 1, int(d)).alias(vec_col)
-        t = cosine_topk(
+        t = knn_topk(
             corpus.select(F.col(id_col), cut),
-            queries.select(F.col(id_col), cut),
-            id_col, vec_col, query_id_col, k
+            queries.select(F.col(id_col), cut), k, **cols
         ).select(query_id_col, id_col)
         r = (
             full.join(t, [query_id_col, id_col])
@@ -190,26 +235,27 @@ def _cosine_score_queries(
     (the hyperplane_signature lesson: dense linear algebra belongs in
     a vectorized pandas UDF, measured ~5x on the bitext entry).
     Queries collect to the driver (they are the broadcast-small side
-    by the same contract cosine_topk states) and ride the closure —
+    by the same contract :func:`knn_topk` states) and ride the closure —
     guarded: one cheap count x width aggregate first, raising past
     ``max_query_cells`` (default 2.5e7 cells ≈ 200 MB of closure
     doubles) instead of silently OOMing the driver with a corpus-sized
     "query" frame.  For corpus x corpus scale use
-    :func:`bitext_mine` ``method="ivf"`` / :func:`cosine_topk_ivf`,
-    which broadcast nothing corpus-sized."""
+    :func:`bitext_mine` ``method="ivf"`` / :func:`knn_topk` with
+    :func:`ivf` candidates, which broadcast nothing corpus-sized."""
     qstats = queries.agg(
         F.count(F.lit(1)).alias("n"),
         F.first(F.size(F.col(vec_col))).alias("dim")).first()
     qcells = (qstats["n"] or 0) * (qstats["dim"] or 1)
     if qcells > max_query_cells:
         raise ValueError(
-            f"_cosine_topk_many_queries: query side is {qstats['n']} x "
+            f"_cosine_score_queries: query side is {qstats['n']} x "
             f"{qstats['dim']} = {qcells} cells, over the "
             f"max_query_cells={max_query_cells} driver-collect guard. "
             "This path broadcasts the QUERY matrix via the closure; for "
             "corpus-x-corpus workloads route candidates through the IVF "
-            "index (bitext_mine(method='ivf') / cosine_topk_ivf) or raise "
-            "max_query_cells explicitly.")
+            "index (bitext_mine(method='ivf') / "
+            "knn_topk(candidates=ivf(...))) or raise max_query_cells "
+            "explicitly.")
     q_rows = queries.select(id_col, vec_col).collect()
     q_ids = [r[0] for r in q_rows]
     qm = np.stack([np.asarray(r[1], dtype="float64") for r in q_rows])
@@ -229,27 +275,6 @@ def _cosine_score_queries(
                 .alias(query_id_col),
                 F.col(id_col), F.col("cos_sim"))
     )
-
-
-def _cosine_topk_many_queries(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_id_col: str,
-    k: int,
-    max_query_cells: int = 25_000_000,
-) -> DataFrame:
-    """Exact cosine top-k for a MANY-query batch — the per-query-id
-    top ``k`` of :func:`_cosine_score_queries` (see there for the
-    scoring/guard contract).  Output matches :func:`cosine_topk` with
-    ``include_self=True``: (query_id, id, cos_sim), ties on id."""
-    scored = _cosine_score_queries(corpus, queries, id_col, vec_col,
-                                   query_id_col, max_query_cells)
-    return topk_per_group(
-        scored, [query_id_col],
-        [F.col("cos_sim").desc(), F.col(id_col)], k,
-    ).drop("rk")
 
 
 def bitext_mine(
@@ -290,15 +315,16 @@ def bitext_mine(
 
     ``method="ivf"`` is the corpus-x-corpus path: NEITHER side is
     driver-collected — each direction builds an IVF index over one
-    side (:func:`cosine_topk_ivf`: bounded-sample k-means centroids
-    ride the closure, cell assignment is one matmul per Arrow batch)
-    and probes it with the other, so the candidate join touches
+    side (:func:`ivf_build`: bounded-sample k-means centroids ride the
+    closure, cell assignment is one matmul per Arrow batch) and probes
+    it with the other through :func:`knn_topk`'s :func:`ivf`
+    candidates, so the candidate join touches
     ~n_probe/n_clusters of each corpus.  The margin/mutual-best tail
     is byte-identical to the exact path; recall < 1.0 by design —
     raise ``n_probe`` toward ``n_clusters`` to recover exactness (at
     ``n_probe == n_clusters`` the k-NN lists, and therefore the mined
     pairs, equal brute force).  Src/tgt id spaces must be disjoint
-    (IVF search drops same-id pairs as self-matches)."""
+    (the top-k plan drops same-id pairs as self-matches)."""
     if method not in ("exact", "ivf"):
         raise ValueError(f"method must be exact|ivf, got {method!r}")
     from ._cache import cache_bounded
@@ -307,14 +333,16 @@ def bitext_mine(
         # k-bounded per side, two consumers each (avg rollup + margin
         # leg) — persisted so the IVF probe join doesn't re-run per
         # consumer.  Lazy return: the bounded pool owns the lifetime.
-        fwd = cache_bounded(cosine_topk_ivf(
-            tgt, src, id_col, vec_col, "__src", k=k,
-            n_clusters=n_clusters, n_probe=n_probe,
-            seed=seed).withColumnRenamed(id_col, "__tgt"))
-        bwd = cache_bounded(cosine_topk_ivf(
-            src, tgt, id_col, vec_col, "__tgt", k=k,
-            n_clusters=n_clusters, n_probe=n_probe,
-            seed=seed).withColumnRenamed(id_col, "__src"))
+        def probe(corpus, queries, qid, other):
+            index = ivf_build(corpus, id_col, vec_col,
+                              n_clusters=n_clusters, seed=seed)
+            return cache_bounded(knn_topk(
+                corpus, queries, k, candidates=ivf(index, n_probe),
+                id_col=id_col, vec_col=vec_col, query_id_col=qid,
+            ).withColumnRenamed(id_col, other))
+
+        fwd = probe(tgt, src, "__src", "__tgt")
+        bwd = probe(src, tgt, "__tgt", "__src")
     else:
         # ONE scored pass serves both directions: the |src| x |tgt|
         # pair matrix is direction-free, so the per-__src and per-__tgt
@@ -326,14 +354,8 @@ def bitext_mine(
         scored = cache_bounded(_cosine_score_queries(
             tgt, src, id_col, vec_col, "__src").withColumnRenamed(
             id_col, "__tgt"))
-        fwd = cache_bounded(topk_per_group(
-            scored, ["__src"],
-            [F.col("cos_sim").desc(), F.col("__tgt")], k,
-        ).drop("rk"))
-        bwd = cache_bounded(topk_per_group(
-            scored, ["__tgt"],
-            [F.col("cos_sim").desc(), F.col("__src")], k,
-        ).drop("rk"))
+        fwd = cache_bounded(_best_k(scored, "__src", "__tgt", k))
+        bwd = cache_bounded(_best_k(scored, "__tgt", "__src", k))
     a_src = fwd.groupBy("__src").agg(F.avg("cos_sim").alias("__asrc"))
     a_tgt = bwd.groupBy("__tgt").agg(F.avg("cos_sim").alias("__atgt"))
 
@@ -543,8 +565,9 @@ def _kmeans_centroids(mat: "np.ndarray", k: int, iters: int, seed: int):
 class IvfIndex:
     """A built IVF index: driver-side centroids + the cell-assigned
     corpus.  Build once with :func:`ivf_build` (optionally persisting),
-    search many times with :func:`ivf_search` — the production ANN
-    shape, instead of re-training the quantizer per query batch.
+    search many times with :func:`knn_topk` over :func:`ivf` candidates
+    — the production ANN shape, instead of re-training the quantizer
+    per query batch.
 
     When persisted, vectors are written partitioned BY CELL, so a later
     loaded search scans only the probed cells' files (dynamic partition
@@ -746,95 +769,40 @@ def ivf_staleness(spark, path: str, retrain_factor: float = 1.0,
     }
 
 
-def ivf_search(
-    index: IvfIndex,
-    queries: DataFrame,
-    query_id_col: str = "query_id",
-    k: int = 10,
-    n_probe: int = 4,
-) -> DataFrame:
-    """Probe each query's ``n_probe`` nearest cells, exact-cosine rerank
-    inside them.  Queries are the broadcast-small side; the probe join
+def ivf(index: IvfIndex, n_probe: int = 4):
+    """Candidates from each query's ``n_probe`` nearest cells of a built
+    IVF index.  Queries are the broadcast-small side; the probe join
     touches ~n_probe/n_clusters of the corpus (and, for a persisted
-    index, of the FILES — __cell is the partition column)."""
+    index, of the FILES — __cell is the partition column).  Recall < 1.0
+    by design; ``n_probe`` = n_clusters probes every cell and is exact."""
     cent = index.centroids
     n_probe = min(n_probe, len(cent))
 
-    @pandas_udf("array<int>")
-    def probes_of(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype("float64")
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        order = np.argsort(-(m @ cent.T), axis=1)[:, :n_probe].astype("int32")
-        return pd.Series(list(order))
+    def candidates(corpus, queries, c):
+        @pandas_udf("array<int>")
+        def probes_of(vecs: pd.Series) -> pd.Series:
+            m = np.stack(vecs.to_numpy()).astype("float64")
+            m /= np.linalg.norm(m, axis=1, keepdims=True)
+            order = np.argsort(-(m @ cent.T), axis=1)[:, :n_probe]
+            return pd.Series(list(order.astype("int32")))
 
-    id_col, vec_col = index.id_col, index.vec_col
-    queries = queries.filter(F.col(vec_col).isNotNull())
-    q = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.col(vec_col).alias("__qvec"),
-        probes_of(F.col(vec_col)).alias("__probes"),
-    )
-    q_cells = F.broadcast(
-        q.select(query_id_col, "__qvec",
-                 F.explode("__probes").alias("__cell")))
-    scored = (
-        index.assigned.join(q_cells, on="__cell")
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .withColumn("cos_sim", cosine_pairs(F.col(vec_col), F.col("__qvec")))
-        .select(query_id_col, id_col, "cos_sim")
-    )
-    return topk_per_group(
-        scored, [query_id_col], [F.col("cos_sim").desc(), F.col(id_col)], k
-    ).drop("rk")
+        q = queries.filter(F.col(c.vec).isNotNull()).select(
+            F.col(c.id).alias(c.qid),
+            F.col(c.vec).alias("__qvec"),
+            probes_of(F.col(c.vec)).alias("__probes"),
+        )
+        q_cells = F.broadcast(q.select(
+            c.qid, "__qvec", F.explode("__probes").alias("__cell")))
+        return index.assigned.join(q_cells, on="__cell")
+
+    return candidates
 
 
-def cosine_topk_ivf(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    k: int = 10,
-    n_clusters: int = 16,
-    n_probe: int = 4,
-    train_sample: int = 100_000,
-    kmeans_iters: int = 10,
-    seed: int = 42,
-) -> DataFrame:
-    """IVF (inverted-file) approximate cosine top-k: one-shot
-    build-then-search (see :func:`ivf_build` / :func:`ivf_search` for
-    the build-once-search-many production path).
-
-    Scale shape: centroids are trained driver-side on a bounded sample
-    (k-means on k x dim is tiny by construction) and ride the closure to
-    executors; cell assignment is one numpy matmul per Arrow batch; the
-    query->cell fan-out is ``n_probe`` rows per query (queries are the
-    small side, broadcast), so the search join touches ~n_probe/n_clusters
-    of the corpus instead of all of it.  Recall < 1.0 by design; raise
-    ``n_probe`` toward ``n_clusters`` to trade speed back for recall."""
-    index = ivf_build(corpus, id_col, vec_col, n_clusters=n_clusters,
-                      train_sample=train_sample, kmeans_iters=kmeans_iters,
-                      seed=seed)
-    return ivf_search(index, queries, query_id_col=query_id_col, k=k,
-                      n_probe=n_probe)
-
-
-def cosine_topk_lsh(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    k: int = 10,
-    dim: int = 64,
-    bits: int = 32,
-    bands: int = 4,
-    seed: int = 42,
-    rerank: str = "expr",
-) -> DataFrame:
-    """Approximate cosine top-k: hyperplane-LSH band bucketing for
-    candidates, exact cosine rerank.  Recall < 1.0 by design; raise
-    ``bits``/``bands`` for recall, lower for speed.
+def lsh(bits: int = 32, bands: int = 4, seed: int = 42):
+    """Hyperplane-LSH candidates: corpus rows sharing at least one of
+    ``bands`` signature bands (``bits / bands`` bits each) with the
+    query.  Recall < 1.0 by design; raise ``bits``/``bands`` for recall,
+    lower for speed.
 
     One distributed signature pass total: queries are the broadcast-small
     side by contract, so their signatures are computed driver-side with
@@ -844,90 +812,75 @@ def cosine_topk_lsh(
     union would NOT help here: both post-split branches re-execute the
     lazy UDF, costing 2x(C+Q) instead of C.)
 
-    ``rerank="expr"`` scores candidates with the JVM cosine expression
-    (no extra Python stage); ``"pandas"`` uses the vectorized numpy UDF —
-    worth it only when candidates per query are large (wide bands, huge
-    corpus).  Measured at sf0.1 (corpus=2000, 10 queries, bits=64
-    bands=16): expr 1.11 s vs pandas 1.42 s vs brute force 0.95 s — at a
-    2k-vector corpus the signature pass + band join is pure overhead; the
-    LSH path only wins once candidate pruning saves more full-corpus
-    scoring than its fixed machinery costs (uniform-random synthetic
-    embeddings also force near-all-pairs bands for full recall).  The
-    crossover is real: at a 100k-vector corpus (same 10 queries, 8x8-bit
-    bands) LSH runs 4.9 s vs 13.5 s brute force with identical top-k
-    counts — 2.7x, growing linearly with corpus size."""
-    rng = np.random.RandomState(seed)
-    planes = rng.standard_normal((bits, dim))
+    Measured at sf0.1 (corpus=2000, 10 queries, bits=64 bands=16):
+    1.11 s vs 0.95 s brute force — at a 2k-vector corpus the signature
+    pass + band join is pure overhead; the LSH path only wins once
+    candidate pruning saves more full-corpus scoring than its fixed
+    machinery costs (uniform-random synthetic embeddings also force
+    near-all-pairs bands for full recall).  The crossover is real: at a
+    100k-vector corpus (same 10 queries, 8x8-bit bands) LSH runs 4.9 s
+    vs 13.5 s brute force with identical top-k counts — 2.7x, growing
+    linearly with corpus size."""
 
-    corpus = corpus.filter(F.col(vec_col).isNotNull())
-    queries = queries.filter(F.col(vec_col).isNotNull())
-    c = corpus.select(
-        F.col(id_col), hyperplane_signature(vec_col, planes, bands)
-        .alias("__sig"))
+    def candidates(corpus, queries, c):
+        corpus = corpus.filter(F.col(c.vec).isNotNull())
+        queries = queries.filter(F.col(c.vec).isNotNull())
+        qid_type = queries.schema[c.id].dataType.simpleString()
+        qvec_type = queries.schema[c.vec].dataType.simpleString()
+        qpdf = queries.select(c.id, c.vec).toPandas()
+        nq = len(qpdf)
+        if not nq:
+            return corpus.select(
+                F.lit(None).cast(qid_type).alias(c.qid), c.id, c.vec,
+                F.lit(None).cast(qvec_type).alias("__qvec")).limit(0)
+        qmat = np.stack(qpdf[c.vec].to_numpy()).astype("float64")
+        planes = _planes(bits, qmat.shape[1], seed)
+        qsigs = _pack_signatures(qmat, planes, bands)
+        spark = corpus.sparkSession
 
-    qpdf = queries.select(id_col, vec_col).toPandas()
-    qmat = np.stack(qpdf[vec_col].to_numpy()).astype("float64")
-    qsigs = _pack_signatures(qmat, np.asarray(planes, dtype="float64"), bands)
-    spark = corpus.sparkSession
+        def _pyid(i):
+            v = qpdf[c.id].iloc[i]
+            return v.item() if hasattr(v, "item") else v
 
-    def _pyid(i):
-        v = qpdf[id_col].iloc[i]
-        return v.item() if hasattr(v, "item") else v
-
-    qid_type = queries.schema[id_col].dataType.simpleString()
-    qvec_type = queries.schema[vec_col].dataType.simpleString()
-    # Band postings carry only (query_id, band, band_val); the query
-    # vectors live in a separate broadcast joined AFTER candidate dedup,
-    # so no vector payload rides the band join or the dedup shuffle.
-    # Both tiny frames are JVM-literal (range + lit arrays, the
-    # _centroid_df discipline) — spark.createDataFrame backs them with
-    # a Python RDD whose evaluation costs seconds per action on
-    # local[32] regardless of data size (round 14: the lifecycle entry
-    # read ~3.4 s at sf0.001, i.e. data-independent overhead).
-    nq = len(qpdf)
-    if nq:
+        # Band postings carry only (query_id, band, band_val); the query
+        # vectors live in a separate broadcast joined AFTER candidate
+        # dedup, so no vector payload rides the band join or the dedup
+        # shuffle.  Both tiny frames are JVM-literal (range + lit
+        # arrays, the _centroid_df discipline) — spark.createDataFrame
+        # backs them with a Python RDD whose evaluation costs seconds
+        # per action on local[32] regardless of data size (round 14:
+        # the lifecycle entry read ~3.4 s at sf0.001, i.e.
+        # data-independent overhead).
         qid_arr = F.array(*[F.lit(_pyid(i)) for i in range(nq)])
         sig_arr = F.array(*[F.lit(int(v)).cast("long")
                             for i in range(nq) for v in qsigs[i]])
         q_bands = F.broadcast(spark.range(nq * bands).select(
             F.element_at(qid_arr, (F.col("id") / bands).cast("int") + 1)
-            .cast(qid_type).alias(query_id_col),
+            .cast(qid_type).alias(c.qid),
             (F.col("id") % bands).cast("int").alias("band"),
             F.element_at(sig_arr, F.col("id").cast("int") + 1)
             .alias("band_val")))
         vec_arrs = F.array(*[
-            F.array(*[F.lit(float(x)) for x in qpdf[vec_col].iloc[i]])
+            F.array(*[F.lit(float(x)) for x in qpdf[c.vec].iloc[i]])
             for i in range(nq)])
         q_vecs = F.broadcast(spark.range(nq).select(
             F.element_at(qid_arr, F.col("id").cast("int") + 1)
-            .cast(qid_type).alias(query_id_col),
+            .cast(qid_type).alias(c.qid),
             F.element_at(vec_arrs, F.col("id").cast("int") + 1)
             .cast(qvec_type).alias("__qvec")))
-    else:
-        q_bands = F.broadcast(spark.createDataFrame(
-            [], f"{query_id_col} {qid_type}, band int, band_val long"))
-        q_vecs = F.broadcast(spark.createDataFrame(
-            [], f"{query_id_col} {qid_type}, __qvec {qvec_type}"))
 
-    c_bands = c.select(
-        id_col, F.posexplode("__sig").alias("band", "band_val")
-    )
-    cands = (
-        c_bands.join(q_bands, on=["band", "band_val"])
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .select(query_id_col, id_col)
-        .dropDuplicates([query_id_col, id_col])
-    )
-    score_fn = cosine if rerank == "expr" else cosine_pairs
-    scored = (
-        cands.join(corpus.select(id_col, vec_col), on=id_col)
-        .join(q_vecs, on=query_id_col)
-        .withColumn("cos_sim", score_fn(F.col(vec_col), F.col("__qvec")))
-        .select(query_id_col, id_col, "cos_sim")
-    )
-    return topk_per_group(
-        scored, [query_id_col], [F.col("cos_sim").desc(), F.col(id_col)], k
-    ).drop("rk")
+        c_bands = corpus.select(
+            c.id, F.posexplode(hyperplane_signature(c.vec, planes, bands))
+            .alias("band", "band_val"))
+        cands = (
+            c_bands.join(q_bands, on=["band", "band_val"])
+            .select(c.qid, c.id)
+            .dropDuplicates([c.qid, c.id])
+        )
+        return (cands.join(corpus.select(c.id, c.vec), on=c.id)
+                .join(q_vecs, on=c.qid))
+
+    return candidates
 
 
 def quantize_embeddings(
@@ -1065,11 +1018,11 @@ def embedding_dedup_delta(
     cosine); raise it if a delta vector may legitimately near-dup more
     than ``k`` corpus rows above the threshold.
     """
-    hits = ivf_search(index, delta, query_id_col="__qid",
-                      k=k, n_probe=n_probe)
+    hits = knn_topk(index.assigned, delta, k,
+                    candidates=ivf(index, n_probe), id_col=index.id_col,
+                    vec_col=index.vec_col, query_id_col="__qid")
     corpus_pairs = (
-        hits.filter((F.col("cos_sim") >= threshold)
-                    & (F.col("__qid") != F.col(index.id_col)))
+        hits.filter(F.col("cos_sim") >= threshold)
         .select(F.col("__qid").alias("id_a"),
                 F.col(index.id_col).alias("id_b"),
                 F.round("cos_sim", 6).alias("cos_sim"),
@@ -1093,7 +1046,7 @@ def embedding_dedup_delta(
 # raw footprint and the ADC scan reads m bytes + a tiny lookup table per
 # row instead of d floats.  Beyond-reference (the reference has no
 # vector layer); complements ivf_build (coarse routing) and
-# cosine_topk (exact re-rank).
+# knn_topk (exact re-rank).
 # ---------------------------------------------------------------------------
 
 @dataclass
@@ -1229,8 +1182,8 @@ def pq_encode(
 
 def _adc_kernel(queries: DataFrame, id_col: str, vec_col: str,
                 model: PqModel):
-    """The asymmetric-distance kernel of :func:`pq_topk` and
-    :func:`ivfpq_topk`: the unit-normalised query matrix ``(nq, d)``,
+    """The asymmetric-distance kernel of the :func:`pq` and
+    :func:`ivfpq` generators: the unit-normalised query matrix ``(nq, d)``,
     the query ids as a literal array (in the queries frame's id dtype,
     so an output ``query_id`` matches the corpus id type exactly) and a
     pandas UDF mapping a PQ code to its ``nq`` ADC scores.  The lookup
@@ -1258,69 +1211,45 @@ def _adc_kernel(queries: DataFrame, id_col: str, vec_col: str,
     return qmat, qid_arr, adc
 
 
-def pq_topk(
-    codes: DataFrame,
-    model: PqModel,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    code_col: str = "pq_code",
-    k: int = 10,
-    include_self: bool = False,
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over a PQ-coded corpus:
-    per-query lookup tables ``LUT[q][j][code] = <q_j, codeword>`` are
-    built driver-side (``nq * m * ks`` floats — query sets are small by
-    retrieval's contract) and ride the UDF closure; each corpus row
-    costs ``m`` table lookups instead of a ``d``-float dot product, and
-    the scan reads codes only — never the raw vectors.  Output
-    ``(query_id, id, adc_score)`` with the usual deterministic
-    (score desc, id) top-k per query.
-
-    ADC scores approximate cosine; for exact final ordering compose
-    with :func:`pq_rerank` (shortlist C >> k, then true-vector
-    re-rank) — the standard two-stage production shape."""
-    _, qid_arr, adc = _adc_kernel(queries, id_col, vec_col, model)
-    scored = (
-        codes.select(F.col(id_col), adc(F.col(code_col)).alias("__s"))
-        .select(F.col(id_col), F.posexplode("__s").alias("__qi", "adc_score"))
-        .select(F.element_at(qid_arr, F.col("__qi") + 1)
-                .alias(query_id_col),
-                F.col(id_col), F.col("adc_score"))
-    )
-    if not include_self:
-        scored = scored.filter(F.col(id_col) != F.col(query_id_col))
-    return topk_per_group(
-        scored, [query_id_col],
-        [F.col("adc_score").desc(), F.col(id_col)], k,
-    ).drop("rk")
+def _shortlist(scored: DataFrame, n: int, corpus: DataFrame,
+               queries: DataFrame, c: KnnCols) -> DataFrame:
+    """Cut ADC-scored ``(qid, id, adc_score)`` rows to the ``n`` best per
+    query by ``(adc_score desc, id)`` — after the plan's self-match
+    filter, so a self-match never takes a slot — and attach the true
+    vectors the plan reranks.  The rerank costs |shortlist| dot
+    products, bounded by ``n * |queries|`` whatever the corpus size."""
+    if c.keep is not None:
+        scored = scored.filter(c.keep)
+    short = topk_per_group(
+        scored, [c.qid], [F.col("adc_score").desc(), F.col(c.id)], n)
+    return (short.select(c.qid, c.id)
+            .join(corpus.select(F.col(c.id), F.col(c.vec)), c.id)
+            .join(_query_vecs(queries, c), c.qid))
 
 
-def pq_rerank(
-    shortlist: DataFrame,
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    k: int = 10,
-) -> DataFrame:
-    """Exact-cosine re-rank of a PQ/ADC shortlist — stage two of the
-    two-stage ANN: join the (small) shortlist back to true vectors,
-    broadcast the query vectors, exact cosine, keep k.  Output
-    ``(query_id, id, cos_sim)``.  Cost is |shortlist| dot products —
-    bounded by C * |queries|, independent of corpus size."""
-    q = F.broadcast(queries.select(
-        F.col(id_col).alias(query_id_col), F.col(vec_col).alias("__qv")))
-    return topk_per_group(
-        shortlist.select(query_id_col, id_col)
-        .join(corpus.select(F.col(id_col), F.col(vec_col)), id_col)
-        .join(q, query_id_col)
-        .withColumn("cos_sim", cosine(F.col(vec_col), F.col("__qv")))
-        .select(query_id_col, id_col, "cos_sim"),
-        [query_id_col], [F.col("cos_sim").desc(), F.col(id_col)], k,
-    ).drop("rk")
+def pq(model: PqModel, codes: DataFrame, shortlist: int = 50):
+    """Asymmetric-distance (ADC) candidates over a PQ-coded corpus
+    (``codes``: :func:`pq_encode` output): per-query lookup tables
+    ``LUT[q][j][code] = <q_j, codeword>`` are built driver-side
+    (``nq * m * ks`` floats — query sets are small by retrieval's
+    contract) and ride the UDF closure; each corpus row costs ``m``
+    table lookups instead of a ``d``-float dot product, and the scan
+    reads codes only — never the raw vectors.  The ``shortlist`` best
+    ADC scores per query go on to the exact rerank (the standard
+    two-stage shape); a corpus-sized shortlist is exact."""
+
+    def candidates(corpus, queries, c):
+        _, qid_arr, adc = _adc_kernel(queries, c.id, c.vec, model)
+        scored = (
+            codes.select(F.col(c.id), adc(F.col("pq_code")).alias("__s"))
+            .select(F.col(c.id),
+                    F.posexplode("__s").alias("__qi", "adc_score"))
+            .select(F.element_at(qid_arr, F.col("__qi") + 1).alias(c.qid),
+                    F.col(c.id), F.col("adc_score"))
+        )
+        return _shortlist(scored, shortlist, corpus, queries, c)
+
+    return candidates
 
 
 def save_pq(model: PqModel, spark, path: str) -> None:
@@ -1607,7 +1536,7 @@ def ivfpq_encode(
 
     ``residual=True`` encodes ``normalized(v) - centroid[cell]`` with a
     residual-trained model (:func:`ivfpq_train_residual`) — pass the
-    SAME flag to :func:`ivfpq_topk` so the ADC adds the coarse term
+    SAME flag to :func:`ivfpq` so the ADC adds the coarse term
     back."""
     books = model.codebooks.copy()
     msub, dsub = model.m, model.dsub
@@ -1648,80 +1577,74 @@ def ivfpq_encode(
         code_expr.alias(code_col))
 
 
-def ivfpq_topk(
+def ivfpq(
     index: IvfIndex,
     model: PqModel,
-    queries: DataFrame,
-    k: int = 10,
+    codes: DataFrame | None = None,
     n_probe: int = 4,
     shortlist: int = 50,
-    codes: DataFrame | None = None,
-    include_self: bool = False,
     residual: bool = False,
-) -> DataFrame:
-    """FAISS-style IVF-PQ search: coarse-probe ``n_probe`` cells per
+):
+    """FAISS-style IVF-PQ candidates: coarse-probe ``n_probe`` cells per
     query (driver numpy over the tiny centroid matrix), ADC-scan ONLY
     the probed cells' codes (``m`` table lookups per row — and
     file-level pruning when the codes frame is cell-partitioned
-    parquet), take a ``shortlist``-deep candidate set per query, and
-    exact-cosine rerank to the final ``k``.
+    parquet), and keep a ``shortlist``-deep candidate set per query for
+    the exact rerank.  ``codes`` defaults to :func:`ivfpq_encode` of the
+    index (pass ``residual`` as encoded).
 
-    Output ``(query_id, id, cos_sim)``.  The three approximations
-    (probe subset, PQ distance, shortlist cut) are each independently
-    tested exact-by-construction at full width (n_probe=all,
-    shortlist=corpus) against brute force — prune for speed, widen for
-    recall, the contract every ANN deployment tunes."""
-    id_col, vec_col = index.id_col, index.vec_col
-    if codes is None:
-        codes = ivfpq_encode(index, model, residual=residual)
-    qmat, qid_arr, adc = _adc_kernel(queries, id_col, vec_col, model)
+    The three approximations (probe subset, PQ distance, shortlist cut)
+    are each exact at full width (n_probe=all, shortlist=corpus) —
+    prune for speed, widen for recall, the contract every ANN
+    deployment tunes."""
     cent = index.centroids
     n_probe = min(n_probe, len(cent))
-    sims = qmat @ cent.T
-    probes = np.argsort(-sims, axis=1)[:, :n_probe]       # (nq, n_probe)
-    all_cells = sorted({int(c) for row in probes for c in row})
-    # per-query probe sets as a literal map: query index -> cell array
-    probe_map = F.array(*[
-        F.array(*[F.lit(int(c)) for c in row]) for row in probes
-    ])
-    scored = (
-        codes.filter(F.col("__cell").isin(all_cells))     # union pruning
-        .select(F.col(id_col), F.col("__cell"),
-                adc(F.col("pq_code")).alias("__s"))
-        .select(F.col(id_col), F.col("__cell"),
-                F.posexplode("__s").alias("__qi", "adc_score"))
-        # per-query pruning: the row's cell must be in THIS query's probes
-        .filter(F.array_contains(
-            F.element_at(probe_map, F.col("__qi") + 1), F.col("__cell")))
-        .select(F.element_at(qid_arr, F.col("__qi") + 1).alias("query_id"),
-                F.col(id_col), F.col("__qi"), F.col("__cell"),
-                F.col("adc_score"))
-    )
-    if residual:
-        # residual ADC approximates q.(c + r): the codes carry only the
-        # residual term, so add back the per-(query, cell) coarse dot
-        # product — an nq x n_clusters literal lookup, JVM-side
-        coarse = F.array(*[
-            F.array(*[F.lit(round(float(sims[i, c]), 6))
-                      for c in range(len(cent))])
-            for i in range(len(qmat))
+
+    def candidates(corpus, queries, c):
+        coded = (codes if codes is not None
+                 else ivfpq_encode(index, model, residual=residual))
+        qmat, qid_arr, adc = _adc_kernel(queries, c.id, c.vec, model)
+        sims = qmat @ cent.T
+        probes = np.argsort(-sims, axis=1)[:, :n_probe]   # (nq, n_probe)
+        all_cells = sorted({int(x) for row in probes for x in row})
+        # per-query probe sets as a literal map: query index -> cells
+        probe_map = F.array(*[
+            F.array(*[F.lit(int(x)) for x in row]) for row in probes
         ])
-        scored = scored.withColumn(
-            "adc_score",
-            F.round(
-                F.col("adc_score")
-                + F.element_at(F.element_at(coarse, F.col("__qi") + 1),
-                               F.col("__cell") + 1), 6))
-    scored = scored.drop("__qi", "__cell")
-    if not include_self:
-        scored = scored.filter(F.col(id_col) != F.col("query_id"))
-    short = topk_per_group(
-        scored, ["query_id"],
-        [F.col("adc_score").desc(), F.col(id_col)], shortlist,
-    ).drop("rk")
-    return pq_rerank(short, index.assigned, queries,
-                     id_col=id_col, vec_col=vec_col,
-                     query_id_col="query_id", k=k)
+        scored = (
+            coded.filter(F.col("__cell").isin(all_cells))  # union pruning
+            .select(F.col(c.id), F.col("__cell"),
+                    adc(F.col("pq_code")).alias("__s"))
+            .select(F.col(c.id), F.col("__cell"),
+                    F.posexplode("__s").alias("__qi", "adc_score"))
+            # per-query pruning: the row's cell must be in THIS query's
+            # probes
+            .filter(F.array_contains(
+                F.element_at(probe_map, F.col("__qi") + 1),
+                F.col("__cell")))
+        )
+        if residual:
+            # residual ADC approximates q.(c + r): the codes carry only
+            # the residual term, so add back the per-(query, cell)
+            # coarse dot product — an nq x n_clusters literal lookup,
+            # JVM-side
+            coarse = F.array(*[
+                F.array(*[F.lit(round(float(sims[i, j]), 6))
+                          for j in range(len(cent))])
+                for i in range(len(qmat))
+            ])
+            scored = scored.withColumn(
+                "adc_score",
+                F.round(
+                    F.col("adc_score")
+                    + F.element_at(F.element_at(coarse, F.col("__qi") + 1),
+                                   F.col("__cell") + 1), 6))
+        scored = scored.select(
+            F.element_at(qid_arr, F.col("__qi") + 1).alias(c.qid),
+            F.col(c.id), F.col("adc_score"))
+        return _shortlist(scored, shortlist, index.assigned, queries, c)
+
+    return candidates
 
 
 def opq_train(
@@ -1741,8 +1664,8 @@ def opq_train(
     product-quantize THERE — the standard fix for PQ's blind spot
     (correlated dimensions straddling sub-space boundaries waste
     codewords).  Returns ``(R, model)``; encode with
-    :func:`pq_encode` after :func:`opq_rotate`, search with
-    :func:`pq_topk` on rotated queries.
+    :func:`pq_encode` after :func:`opq_rotate`, and let :func:`pq`
+    candidates score rotated queries.
 
     Training is the paper's alternating minimization on the bounded
     hash-ordered sample (the :func:`pq_train` discipline): fix R ->
@@ -1842,13 +1765,12 @@ def hard_negatives(
     Output: ``(query_id, vec_id, cos_sim)`` (+ ``pos_sim`` for
     semi_hard), deterministic tie-break on corpus id.
 
-    Plan: queries broadcast against the corpus (the corpus NEVER
-    shuffles), scoring is JVM higher-order ``zip_with``/``aggregate``;
-    semi_hard adds one extra broadcast — the per-query positive max is
-    ≤ |Q| rows aggregated map-side.  Two map-only corpus scans in
-    semi_hard mode (one for positives, one for negatives), zero in
-    neither is a shuffle; per-query top-k is a |Q|-keyed window over
-    candidate rows only.
+    Plan: the wrong-label pairs are :func:`knn_topk`'s candidates —
+    queries broadcast against the corpus (the corpus NEVER shuffles),
+    and the plan's exact cosine, self-match filter and (cos_sim desc,
+    id) cut.  semi_hard adds one extra broadcast — the per-query
+    positive max is ≤ |Q| rows aggregated map-side, joined again onto
+    the k-bounded result for ``pos_sim``.
     """
     if mode not in ("hard", "semi_hard"):
         raise ValueError(f"mode must be 'hard' or 'semi_hard', got {mode!r}")
@@ -1859,31 +1781,33 @@ def hard_negatives(
             F.col(label_col).alias("__qlabel"),
         )
     )
-    scored = (
-        corpus.select(id_col, vec_col, label_col)
-        .crossJoin(q)
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .withColumn("cos_sim", cosine(F.col(vec_col), F.col("__qvec")))
-    )
-    neg = scored.filter(F.col(label_col) != F.col("__qlabel")).select(
-        query_id_col, id_col, "cos_sim")
+    pairs = corpus.select(id_col, vec_col, label_col).crossJoin(q)
+    neg = pairs.filter(F.col(label_col) != F.col("__qlabel"))
     if mode == "semi_hard":
+        # the band needs the anchor: the query's most-similar same-label
+        # row, itself excluded
+        sim = cosine(F.col(vec_col), F.col("__qvec"))
         pos_best = F.broadcast(
-            scored.filter(F.col(label_col) == F.col("__qlabel"))
+            pairs.filter((F.col(label_col) == F.col("__qlabel"))
+                         & (F.col(id_col) != F.col(query_id_col)))
             .groupBy(query_id_col)
-            .agg(F.max("cos_sim").alias("pos_sim"))
+            .agg(F.max(sim).alias("pos_sim"))
         )
         neg = (
             neg.join(pos_best, query_id_col)
-            .filter((F.col("cos_sim") < F.col("pos_sim"))
-                    & (F.col("cos_sim") >= F.col("pos_sim") - F.lit(margin)))
+            .filter((sim < F.col("pos_sim"))
+                    & (sim >= F.col("pos_sim") - F.lit(margin)))
         )
-    cols = [query_id_col, id_col, "cos_sim"] + (
-        ["pos_sim"] if mode == "semi_hard" else [])
-    return topk_per_group(
-        neg, [query_id_col],
-        [F.col("cos_sim").desc(), F.col(id_col)], k,
-    ).drop("rk").select(*cols)
+
+    def wrong_label(*_):
+        return neg
+
+    top = knn_topk(corpus, queries, k, candidates=wrong_label,
+                   id_col=id_col, vec_col=vec_col, query_id_col=query_id_col)
+    if mode == "hard":
+        return top
+    return top.join(pos_best, query_id_col).select(
+        query_id_col, id_col, "cos_sim", "pos_sim")
 
 
 def embedding_mmd(

@@ -30,12 +30,13 @@ from ..functions import (
     bpe_token_estimate,
     connected_components,
     split_sentences,
-    cosine_topk,
-    cosine_topk_ivf,
-    cosine_topk_lsh,
     decode_image,
     embedding_near_dup_pairs,
     exact_dedup,
+    ivf,
+    ivf_build,
+    knn_topk,
+    lsh,
     hash_split,
     language_id,
     minhash_near_dup_pairs,
@@ -1602,8 +1603,7 @@ def _pagerank_oracle_sql(n_iter: int = 3, d: float = 0.85) -> str:
 def q_knn_bruteforce(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    out = cosine_topk(emb, queries, k=5)
-    return out.select(
+    return knn_topk(emb, queries, k=5).select(
         "query_id", "vec_id", F.round("cos_sim", 4).alias("cos_r"))
 
 
@@ -3021,7 +3021,8 @@ def q_knn_lsh_verified(spark, sf_dir):
     config stays the unchecked scale entry (knn_lsh)."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return cosine_topk_lsh(emb, queries, k=5, dim=64, bits=64, bands=32).select(
+    return knn_topk(emb, queries, k=5,
+                    candidates=lsh(bits=64, bands=32)).select(
         "query_id", "vec_id", F.round("cos_sim", 4).alias("cos_r"))
 
 
@@ -3036,8 +3037,8 @@ def q_knn_ivf_verified(spark, sf_dir):
     and benched via knn_ivf."""
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return cosine_topk_ivf(
-        emb, queries, k=5, n_clusters=16, n_probe=16).select(
+    return knn_topk(emb, queries, k=5, candidates=ivf(
+        ivf_build(emb, n_clusters=16), n_probe=16)).select(
         "query_id", "vec_id", F.round("cos_sim", 4).alias("cos_r"))
 
 
@@ -3060,7 +3061,7 @@ def q_knn_ivf_append_verified(spark, sf_dir):
     import shutil
     import tempfile
 
-    from ..functions import ivf_append, ivf_build, ivf_search
+    from ..functions import ivf_append
 
     emb = _t(spark, sf_dir, "embeddings")
     # Stable path per (process, SF-dir), cleared on entry and removed at
@@ -3089,7 +3090,8 @@ def q_knn_ivf_append_verified(spark, sf_dir):
     index = ivf_append(spark, path, emb.filter(F.col("vec_id") % 2 == 1),
                        centroids=built.centroids)
     queries = emb.filter(F.col("vec_id") < 10)
-    return ivf_search(index, queries, k=5, n_probe=16).select(
+    return knn_topk(emb, queries, k=5,
+                    candidates=ivf(index, n_probe=16)).select(
         "query_id", "vec_id", F.round("cos_sim", 4).alias("cos_r"))
 
 
@@ -3112,15 +3114,16 @@ def q_simhash_pairs(spark, sf_dir):
 def q_knn_lsh(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return cosine_topk_lsh(emb, queries, k=5, dim=64, bits=64, bands=16).select(
+    return knn_topk(emb, queries, k=5,
+                    candidates=lsh(bits=64, bands=16)).select(
         "query_id", "vec_id", F.round("cos_sim", 4).alias("cos_r"))
 
 
 def q_knn_ivf(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 10)
-    return cosine_topk_ivf(
-        emb, queries, k=5, n_clusters=16, n_probe=4).select(
+    return knn_topk(emb, queries, k=5, candidates=ivf(
+        ivf_build(emb, n_clusters=16), n_probe=4)).select(
         "query_id", "vec_id", F.round("cos_sim", 4).alias("cos_r"))
 
 
@@ -3707,14 +3710,13 @@ def q_knn_pq(spark, sf_dir):
     rows-only driver check; exactness of every stage is pinned by
     tests/test_pq.py (numpy-reference encode/ADC equivalence,
     planted-cluster recall, full-shortlist rerank == brute force)."""
-    from ..functions import pq_encode, pq_rerank, pq_topk, pq_train
+    from ..functions import pq, pq_encode, pq_train
 
     emb = _t(spark, sf_dir, "embeddings")
     model = pq_train(emb, m=8, ks=16, train_sample=100_000)
-    codes = pq_encode(emb, model)
     queries = emb.filter(F.col("vec_id") < 10)
-    short = pq_topk(codes, model, queries, k=50)
-    return pq_rerank(short, emb, queries, k=5).select(
+    return knn_topk(emb, queries, k=5, candidates=pq(
+        model, pq_encode(emb, model), shortlist=50)).select(
         "query_id", "vec_id", F.round("cos_sim", 4).alias("cos_r"))
 
 
@@ -3829,14 +3831,13 @@ def q_knn_pq_verified(spark, sf_dir):
     the ADC scan's LUT arithmetic, per-query id mapping and both
     tie-break chains end-to-end against SQL.  The 50-candidate
     production cut stays benched as knn_pq (rows-only)."""
-    from ..functions import pq_encode, pq_rerank, pq_topk, pq_train
+    from ..functions import pq, pq_encode, pq_train
 
     emb = _t(spark, sf_dir, "embeddings")
     model = pq_train(emb, m=8, ks=16, train_sample=100_000)
-    codes = pq_encode(emb, model)
     queries = emb.filter(F.col("vec_id") < 10)
-    short = pq_topk(codes, model, queries, k=1_000_000_000)
-    return pq_rerank(short, emb, queries, k=5).select(
+    return knn_topk(emb, queries, k=5, candidates=pq(
+        model, pq_encode(emb, model), shortlist=1_000_000_000)).select(
         "query_id", "vec_id", F.round("cos_sim", 4).alias("cos_r"))
 
 

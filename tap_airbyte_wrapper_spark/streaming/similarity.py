@@ -12,11 +12,11 @@ the survivors, then :func:`~..functions.similarity.ivf_append` them so
 the next batch dedups against them too.
 
 Replay safety (:func:`._batch.run_gate` states the contract): a
-replayed vector is already in the index and matches ITSELF, and
-``ivf_search`` excludes ``id == query_id`` pairs, so corpus hits only
-ever name OTHER vectors; batch-mates that lost the within-batch tie on
-the first run were never appended, so on replay they lose again via a
-corpus hit against the appended winner.  A re-append only duplicates
+replayed vector is already in the index and matches ITSELF, and the
+probe's top-k plan (``knn_topk``) drops ``id == query_id`` pairs, so
+corpus hits only ever name OTHER vectors; batch-mates that lost the
+within-batch tie on the first run were never appended, so on replay
+they lose again via a corpus hit against the appended winner.  A re-append only duplicates
 index rows; compact the index periodically with ``index_compact`` —
 layout-preserving, unlike the flat ``compact_parquet``.  Each batch
 probes the index's LIVE rows (``index_store``), so a vector removed

@@ -1,12 +1,11 @@
-"""Fuzzy dedup + similarity search: planted near-duplicates must be found,
-clean corpus must stay intact, LSH recall vs brute force."""
+"""Fuzzy dedup + embedding near-dups: planted near-duplicates must be
+found, clean corpus must stay intact; the IVF index round trip.  The knn
+top-k plan itself is tested in test_topk.py."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from tap_airbyte_wrapper_spark.functions import (
-    cosine_topk,
-    cosine_topk_lsh,
     exact_dedup,
     minhash_dedup,
     minhash_near_dup_pairs,
@@ -79,31 +78,6 @@ def test_ngram_jaccard_exact(spark):
     assert pairs[(1, 2)] == 1.0
     assert 0.3 < pairs[(1, 3)] < 1.0
     assert (1, 4) not in pairs
-
-
-def test_cosine_topk_exact(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter("vec_id < 3")
-    out = cosine_topk(emb, queries, k=5)
-    rows = out.collect()
-    assert len(rows) == 15
-    per_q = {}
-    for r in rows:
-        per_q.setdefault(r.query_id, []).append(r.cos_sim)
-    for q, sims in per_q.items():
-        assert sims == sorted(sims, reverse=True)
-        assert all(-1.0001 <= s <= 1.0001 for s in sims)
-
-
-def test_cosine_lsh_recall(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter("vec_id < 10")
-    exact = cosine_topk(emb, queries, k=5)
-    approx = cosine_topk_lsh(emb, queries, k=5, dim=64, bits=64, bands=16)
-    e = {(r.query_id, r.vec_id) for r in exact.collect()}
-    a = {(r.query_id, r.vec_id) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.5, f"LSH recall {recall} too low"
 
 
 def test_embedding_near_dup_exact(spark, sf_dir):
@@ -188,23 +162,6 @@ def test_minhash_dedup_transitive(planted):
     assert all(i < 20000 for i in ids)
 
 
-def test_cosine_ivf_recall(spark, sf_dir):
-    from tap_airbyte_wrapper_spark.functions import cosine_topk_ivf
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter("vec_id < 10")
-    exact = cosine_topk(emb, queries, k=5)
-    approx = cosine_topk_ivf(emb, queries, k=5, n_clusters=8, n_probe=3)
-    e = {(r.query_id, r.vec_id) for r in exact.collect()}
-    a = {(r.query_id, r.vec_id) for r in approx.collect()}
-    recall = len(e & a) / len(e)
-    assert recall >= 0.5, f"IVF recall {recall} too low"
-    # probing ALL cells must reproduce brute force exactly
-    full = cosine_topk_ivf(emb, queries, k=5, n_clusters=8, n_probe=8)
-    f = {(r.query_id, r.vec_id) for r in full.collect()}
-    assert f == e
-
-
 def test_paragraph_dedup_planted(spark):
     from tap_airbyte_wrapper_spark.functions import paragraph_dedup
 
@@ -272,7 +229,7 @@ def test_similarity_null_vectors_dropped(spark):
     """Null embeddings must not crash the Arrow/numpy paths — they are
     dropped (a null vector can never match)."""
     from tap_airbyte_wrapper_spark.functions import (
-        cosine_topk_ivf, cosine_topk_lsh, embedding_near_dup_pairs)
+        embedding_near_dup_pairs, ivf, ivf_build, knn_topk, lsh)
 
     rows = [(i, [float(i % 7 + j) for j in range(8)]) for i in range(40)]
     rows += [(100, None), (101, None)]
@@ -281,8 +238,10 @@ def test_similarity_null_vectors_dropped(spark):
     assert embedding_near_dup_pairs(emb, threshold=0.99).count() >= 0
     assert embedding_near_dup_pairs(emb, threshold=0.99, method="lsh",
                                     dim=8).count() >= 0
-    assert cosine_topk_lsh(emb, q, k=3, dim=8, bits=16, bands=4).count() >= 0
-    assert cosine_topk_ivf(emb, q, k=3, n_clusters=4, n_probe=2).count() >= 0
+    assert knn_topk(emb, q, k=3,
+                    candidates=lsh(bits=16, bands=4)).count() >= 0
+    assert knn_topk(emb, q, k=3, candidates=ivf(
+        ivf_build(emb, n_clusters=4), n_probe=2)).count() >= 0
 
 
 def test_embedding_near_dup_exact_guard(spark, sf_dir):
@@ -301,20 +260,21 @@ def test_embedding_near_dup_exact_guard(spark, sf_dir):
 
 def test_ivf_index_build_persist_load_search(spark, sf_dir, tmp_path):
     from tap_airbyte_wrapper_spark.functions import (
-        cosine_topk_ivf, ivf_build, ivf_load, ivf_search)
+        ivf, ivf_build, ivf_load, knn_topk)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") < 5)
     params = dict(n_clusters=8, train_sample=1000, kmeans_iters=5, seed=42)
 
-    oneshot = {(r.query_id, r.vec_id) for r in cosine_topk_ivf(
-        emb, queries, k=5, n_probe=3, **params).collect()}
+    oneshot = {(r.query_id, r.vec_id) for r in knn_topk(
+        emb, queries, k=5,
+        candidates=ivf(ivf_build(emb, **params), n_probe=3)).collect()}
 
     path = str(tmp_path / "ivf")
     ivf_build(emb, path=path, **params)
     loaded = ivf_load(spark, path)
-    via_index = {(r.query_id, r.vec_id) for r in ivf_search(
-        loaded, queries, k=5, n_probe=3).collect()}
+    via_index = {(r.query_id, r.vec_id) for r in knn_topk(
+        emb, queries, k=5, candidates=ivf(loaded, n_probe=3)).collect()}
     # same quantizer seed + same probes -> identical results
     assert via_index == oneshot
 
@@ -402,17 +362,6 @@ def test_exact_jaccard_on_pairs_respects_candidates(spark):
     assert got == {(1, 2)}
 
 
-def test_knn_lsh_verified_config_matches_bruteforce(spark, sf_dir):
-    """bands=32 over 64 bits: candidate recall total on the synthetic
-    embeddings, so LSH top-k == brute-force top-k exactly."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") < 10)
-    bf = {(r.query_id, r.vec_id) for r in cosine_topk(emb, queries, k=5).collect()}
-    lsh = {(r.query_id, r.vec_id) for r in cosine_topk_lsh(
-        emb, queries, k=5, dim=64, bits=64, bands=32).collect()}
-    assert lsh == bf
-
-
 def test_quantize_embeddings_roundtrip_error_bound(spark, sf_dir):
     """Dequantized values must be within scale/2 of the originals, and
     quantized magnitudes within the int8 range."""
@@ -463,9 +412,9 @@ def test_embedding_dedup_delta_corpus_and_delta(spark, tmp_path):
     import numpy as np
 
     from tap_airbyte_wrapper_spark.functions import (
-        cosine_topk,
         embedding_dedup_delta,
         ivf_build,
+        knn_topk,
     )
 
     rng = np.random.RandomState(7)
@@ -493,7 +442,7 @@ def test_embedding_dedup_delta_corpus_and_delta(spark, tmp_path):
     assert 1010 not in flagged
 
     # corpus hits match exact brute force at the same threshold
-    brute = cosine_topk(corpus, delta, k=60).filter("cos_sim >= 0.95")
+    brute = knn_topk(corpus, delta, k=60).filter("cos_sim >= 0.95")
     brute_pairs = {(r.query_id, r.vec_id) for r in brute.collect()
                    if r.vec_id < 1000}
     assert {(a, b) for (a, b), k in kinds.items()

@@ -21,7 +21,7 @@ from tap_airbyte_wrapper_spark.functions import (
     bm25_index_append, bm25_index_search, bm25_index_write,
     fingerprint_dedup_delta, fingerprint_index_append,
     fingerprint_index_write, index_compact, index_delete, ivf_append,
-    ivf_build, ivf_load, ivf_search, media_dedup_delta,
+    ivf, ivf_build, ivf_load, knn_topk, media_dedup_delta,
     media_sig_index_append, media_sig_index_write, minhash_dedup_delta,
     minhash_index_append, minhash_index_write, novelty_index_append,
     novelty_index_write, novelty_probe, simhash_dedup_delta,
@@ -142,8 +142,10 @@ class _Family:
         elif self.name == "media_sig":
             rows = media_dedup_delta(df, t, p, "doc_id", "media")
         elif self.name == "ivf":  # a full probe: exact top-k
-            rows = ivf_search(ivf_load(self.spark, p, "doc_id", "vec"), df,
-                              k=3, n_probe=N_BUCKETS) \
+            idx = ivf_load(self.spark, p, "doc_id", "vec")
+            rows = knn_topk(idx.assigned, df, k=3,
+                            candidates=ivf(idx, n_probe=N_BUCKETS),
+                            id_col="doc_id", vec_col="vec") \
                 .withColumn("cos_sim", F.round("cos_sim", 6))
         else:
             rows = novelty_probe(df, t, p)

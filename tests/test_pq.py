@@ -1,6 +1,7 @@
 """Product quantization: encode/ADC numpy-reference equivalence,
-planted-cluster retrieval exactness, rerank-vs-bruteforce agreement,
-model persistence round-trip."""
+planted-cluster retrieval exactness, rerank-vs-bruteforce agreement
+(``knn_topk`` over ``pq`` / ``ivfpq`` candidates), model persistence
+round-trip."""
 
 import numpy as np
 import pytest
@@ -8,14 +9,14 @@ from pyspark.sql import functions as F
 
 from tap_airbyte_wrapper_spark.functions import (
     PqModel,
-    cosine_topk,
+    knn_topk,
     load_pq,
+    pq,
     pq_encode,
-    pq_rerank,
-    pq_topk,
     pq_train,
     save_pq,
 )
+from tap_airbyte_wrapper_spark.functions.similarity import _adc_kernel
 
 
 def _vec_df(spark, mat, id_start=0):
@@ -60,13 +61,16 @@ def test_pq_adc_scores_match_numpy(spark):
     model = PqModel(codebooks=books)
     corpus = np.array([[2.0, 0.0, 1.0, 1.0]])
     q = np.array([[1.0, 1.0, 0.0, 2.0]])
-    codes = pq_encode(_vec_df(spark, corpus), model)
-    got = pq_topk(codes, model, _vec_df(spark, q, id_start=100),
-                  k=1, include_self=True).collect()[0]
+    cdf, qdf = _vec_df(spark, corpus), _vec_df(spark, q, id_start=100)
+    codes = pq_encode(cdf, model)
+    _, _, adc = _adc_kernel(qdf, "vec_id", "embedding", model)
+    score = codes.select(adc(F.col("pq_code"))).first()[0][0]
     # corpus row encodes to (0, 0); query normalizes by sqrt(6)
     qn = q[0] / np.linalg.norm(q[0])
     want = round(float(qn[:2] @ books[0][0] + qn[2:] @ books[1][0]), 6)
-    assert got.adc_score == pytest.approx(want)
+    assert score == pytest.approx(want)
+    got = knn_topk(cdf, qdf, k=1, include_self=True,
+                   candidates=pq(model, codes, shortlist=1)).collect()[0]
     assert got.vec_id == 0 and got.query_id == 100
 
 
@@ -76,8 +80,10 @@ def test_pq_planted_clusters_retrieval_is_exact(spark):
     model = pq_train(df, m=4, ks=4, train_sample=1000, seed=3)
     codes = pq_encode(df, model)
     queries = df.filter(F.col("vec_id").isin(0, 6, 12, 18))
-    got = pq_topk(codes, model, queries, k=5)
-    exact = cosine_topk(df, queries, k=5)
+    # a 5-deep shortlist: the rerank only reorders the ADC top-5
+    got = knn_topk(df, queries, k=5,
+                   candidates=pq(model, codes, shortlist=5))
+    exact = knn_topk(df, queries, k=5)
     got_sets = {}
     for r in got.collect():
         got_sets.setdefault(r.query_id, set()).add(r.vec_id)
@@ -92,9 +98,9 @@ def test_pq_rerank_recovers_exact_cosine(spark):
     model = pq_train(df, m=4, ks=4, train_sample=1000, seed=3)
     codes = pq_encode(df, model)
     queries = df.filter(F.col("vec_id") < 2)
-    shortlist = pq_topk(codes, model, queries, k=len(mat) - 1)
-    got = pq_rerank(shortlist, df, queries, k=5).collect()
-    want = cosine_topk(df, queries, k=5).collect()
+    got = knn_topk(df, queries, k=5, candidates=pq(
+        model, codes, shortlist=len(mat) - 1)).collect()
+    want = knn_topk(df, queries, k=5).collect()
     gs = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in got)
     ws = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in want)
     assert gs == ws  # full-corpus shortlist => exact equality
@@ -182,18 +188,16 @@ def test_ivfpq_full_width_equals_brute_force(spark):
     """With n_probe = all cells and shortlist = corpus, the three
     approximations are each disabled — the composite must equal exact
     brute-force cosine top-k."""
-    from tap_airbyte_wrapper_spark.functions import (
-        ivf_build, ivfpq_topk, pq_train,
-    )
+    from tap_airbyte_wrapper_spark.functions import ivf_build, ivfpq
 
     mat = _clusters(n_per=8)
     df = _vec_df(spark, mat)
     index = ivf_build(df, n_clusters=4, train_sample=1000)
     model = pq_train(df, m=4, ks=8, train_sample=1000)
     queries = df.filter(F.col("vec_id") < 2)
-    got = ivfpq_topk(index, model, queries, k=5,
-                     n_probe=4, shortlist=len(mat)).collect()
-    want = cosine_topk(df, queries, k=5).collect()
+    got = knn_topk(df, queries, k=5, candidates=ivfpq(
+        index, model, n_probe=4, shortlist=len(mat))).collect()
+    want = knn_topk(df, queries, k=5).collect()
     gs = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in got)
     ws = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in want)
     assert gs == ws
@@ -202,17 +206,15 @@ def test_ivfpq_full_width_equals_brute_force(spark):
 def test_ivfpq_probe_pruning_respects_per_query_cells(spark):
     """n_probe=1 on well-separated clusters: each query's candidates
     come only from its own cluster's cell."""
-    from tap_airbyte_wrapper_spark.functions import (
-        ivf_build, ivfpq_topk, pq_train,
-    )
+    from tap_airbyte_wrapper_spark.functions import ivf_build, ivfpq
 
     mat = _clusters(n_per=8)
     df = _vec_df(spark, mat)
     index = ivf_build(df, n_clusters=4, train_sample=1000)
     model = pq_train(df, m=4, ks=8, train_sample=1000)
     queries = df.filter(F.col("vec_id").isin(0, 8, 16, 24))
-    out = ivfpq_topk(index, model, queries, k=7, n_probe=1,
-                     shortlist=50).collect()
+    out = knn_topk(df, queries, k=7, candidates=ivfpq(
+        index, model, n_probe=1, shortlist=50)).collect()
     for r in out:
         # same planted cluster: ids 0-7 / 8-15 / 16-23 / 24-31
         assert r.vec_id // 8 == r.query_id // 8, r
@@ -250,7 +252,7 @@ def test_ivfpq_residual_full_width_equals_brute_force(spark):
     not the widened-to-exact contract: full probes + corpus-wide
     shortlist + exact rerank must still equal brute force."""
     from tap_airbyte_wrapper_spark.functions import (
-        ivf_build, ivfpq_topk, ivfpq_train_residual,
+        ivf_build, ivfpq, ivfpq_train_residual,
     )
 
     mat = _clusters(n_per=8)
@@ -258,9 +260,10 @@ def test_ivfpq_residual_full_width_equals_brute_force(spark):
     index = ivf_build(df, n_clusters=4, train_sample=1000)
     model = ivfpq_train_residual(index, m=4, ks=8, train_sample=1000)
     queries = df.filter(F.col("vec_id") < 2)
-    got = ivfpq_topk(index, model, queries, k=5, n_probe=4,
-                     shortlist=len(mat), residual=True).collect()
-    want = cosine_topk(df, queries, k=5).collect()
+    got = knn_topk(df, queries, k=5, candidates=ivfpq(
+        index, model, n_probe=4, shortlist=len(mat),
+        residual=True)).collect()
+    want = knn_topk(df, queries, k=5).collect()
     gs = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in got)
     ws = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in want)
     assert gs == ws
@@ -320,10 +323,7 @@ def _correlated(n=64, d=8, seed=11):
 
 
 def test_opq_reconstruction_not_worse_and_search_exact(spark):
-    from tap_airbyte_wrapper_spark.functions import (
-        cosine_topk, opq_rotate, opq_train, pq_encode, pq_rerank,
-        pq_topk, pq_train,
-    )
+    from tap_airbyte_wrapper_spark.functions import opq_rotate, opq_train
 
     mat = _correlated()
     df = _vec_df(spark, mat)
@@ -349,15 +349,21 @@ def test_opq_reconstruction_not_worse_and_search_exact(spark):
 
     assert recon_err(opq_model, norm @ R) <= recon_err(raw, norm) + 1e-9
 
-    # full-width two-stage search in ROTATED space + true-vector rerank
-    # must equal brute force (rotation preserves cosine rankings)
-    rotated = opq_rotate(df, R)
-    codes = pq_encode(rotated, opq_model)
-    rot_q = opq_rotate(df.filter(F.col("vec_id") < 2), R)
-    short = pq_topk(codes, opq_model, rot_q, k=len(mat))
-    got = pq_rerank(short, df, df.filter(F.col("vec_id") < 2),
-                    k=5).collect()
-    want = cosine_topk(df, df.filter(F.col("vec_id") < 2), k=5).collect()
+    # full-width two-stage search: ADC in ROTATED space, rerank against
+    # the true vectors — must equal brute force (rotation preserves
+    # cosine rankings)
+    adc = pq(opq_model, pq_encode(opq_rotate(df, R), opq_model),
+             shortlist=len(mat))
+
+    def rotated_adc(corpus, queries, c):
+        true_q = F.broadcast(queries.select(
+            F.col(c.id).alias(c.qid), F.col(c.vec).alias("__qvec")))
+        return (adc(corpus, opq_rotate(queries, R), c).drop("__qvec")
+                .join(true_q, c.qid))
+
+    queries = df.filter(F.col("vec_id") < 2)
+    got = knn_topk(df, queries, k=5, candidates=rotated_adc).collect()
+    want = knn_topk(df, queries, k=5).collect()
     gs = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in got)
     ws = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in want)
     assert gs == ws

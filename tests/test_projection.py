@@ -120,24 +120,25 @@ def test_pca_then_ivf_composition(spark, emb):
     reduced space must preserve neighborhoods well (recall@10 vs the
     full-space ground truth)."""
     from pyspark.sql import functions as F
-    from tap_airbyte_wrapper_spark.functions import cosine_topk, cosine_topk_ivf
+    from tap_airbyte_wrapper_spark.functions import ivf, ivf_build, knn_topk
 
     model = fit_pca(emb, "embedding", k=16)
     proj = pca_project(emb, model).select(
         "vec_id", F.col("proj").cast("array<float>").alias("embedding"))
     queries = proj.filter(F.col("vec_id") < 5)
 
-    brute = cosine_topk(proj, queries, k=5)
-    ivf = cosine_topk_ivf(proj, queries, k=5, n_clusters=8, n_probe=8)
+    brute = knn_topk(proj, queries, k=5)
+    probed = knn_topk(proj, queries, k=5, candidates=ivf(
+        ivf_build(proj, n_clusters=8), n_probe=8))
     b = {(r["query_id"], r["vec_id"]) for r in brute.collect()}
-    v = {(r["query_id"], r["vec_id"]) for r in ivf.collect()}
+    v = {(r["query_id"], r["vec_id"]) for r in probed.collect()}
     assert b == v
 
     # neighborhood preservation: projected top-5 inside the full-space
     # top-20 far above chance.  The synthetic embeddings are uniform
     # 64-d (no low-rank structure — PCA's worst case), so demand a
     # 10x-over-chance signal, not perfection: chance is 20/500 = 4%.
-    full = cosine_topk(emb, emb.filter(F.col("vec_id") < 5), k=20)
+    full = knn_topk(emb, emb.filter(F.col("vec_id") < 5), k=20)
     f = {}
     for r in full.collect():
         f.setdefault(r["query_id"], set()).add(r["vec_id"])

@@ -275,7 +275,7 @@ def test_ivf_append_and_staleness(spark, tmp_path):
     the EXISTING centroids; searches then find the appended vectors;
     staleness reports the append ratio."""
     from tap_airbyte_wrapper_spark.functions import (
-        ivf_append, ivf_build, ivf_load, ivf_search, ivf_staleness)
+        ivf, ivf_append, ivf_build, ivf_load, ivf_staleness, knn_topk)
 
     idx = str(tmp_path / "ivf")
     corpus = spark.createDataFrame(
@@ -299,7 +299,8 @@ def test_ivf_append_and_staleness(spark, tmp_path):
     loaded = ivf_load(spark, idx)
     q = spark.createDataFrame([(300, _vec(0, eps=0.01))],
                               "vec_id long, embedding array<float>")
-    hits = ivf_search(loaded, q, k=3, n_probe=2).collect()
+    hits = knn_topk(loaded.assigned, q, k=3,
+                    candidates=ivf(loaded, n_probe=2)).collect()
     ids = {r["vec_id"] for r in hits}
     assert {100, 200} <= ids
 
@@ -366,9 +367,9 @@ def test_stream_embedding_gate_across_batches(spark, tmp_path):
     hits = {(r["id_a"], r["id_b"]) for r in reprobe.collect()
             if r["kind"] == "corpus"}
     assert (4, 2) in hits             # the real dup, still dropped
-    assert (5, 5) not in hits         # self-match excluded in ivf_search
-    from tap_airbyte_wrapper_spark.functions import cosine_topk
-    brute = cosine_topk(index.assigned, b2, k=5)
+    assert (5, 5) not in hits         # self-match excluded by knn_topk
+    from tap_airbyte_wrapper_spark.functions import knn_topk
+    brute = knn_topk(index.assigned, b2, k=5)
     brute_pairs = {(r["query_id"], r["vec_id"])
                    for r in brute.collect() if r["cos_sim"] >= 0.9
                    and r["query_id"] != r["vec_id"]}
@@ -474,7 +475,7 @@ def test_ivf_compact_preserves_cells_and_search(spark, tmp_path):
     import os
 
     from tap_airbyte_wrapper_spark.functions import (
-        index_compact, ivf_append, ivf_build, ivf_load, ivf_search)
+        index_compact, ivf, ivf_append, ivf_build, ivf_load, knn_topk)
 
     src = str(tmp_path / "ivf")
     corpus = spark.createDataFrame(
@@ -496,10 +497,12 @@ def test_ivf_compact_preserves_cells_and_search(spark, tmp_path):
 
     q = spark.createDataFrame([(999, _vec(2, eps=0.005))],
                               "vec_id long, embedding array<float>")
-    want = {(r["vec_id"]) for r in ivf_search(
-        ivf_load(spark, src), q, k=3, n_probe=4).collect()}
-    got = {(r["vec_id"]) for r in ivf_search(
-        ivf_load(spark, dst), q, k=3, n_probe=4).collect()}
+    def search(path):
+        idx = ivf_load(spark, path)
+        return {r["vec_id"] for r in knn_topk(
+            idx.assigned, q, k=3, candidates=ivf(idx, n_probe=4)).collect()}
+
+    want, got = search(src), search(dst)
     assert got == want and got
 
 

@@ -983,8 +983,8 @@ def test_ivf_replace_and_delete(spark, tmp_path):
     import numpy as np
 
     from tap_airbyte_wrapper_spark.functions import (
-        index_compact, index_delete, ivf_append, ivf_build, ivf_load,
-        ivf_search)
+        index_compact, index_delete, ivf, ivf_append, ivf_build, ivf_load,
+        knn_topk)
 
     rng = np.random.default_rng(8)
     dim = 16
@@ -1003,17 +1003,20 @@ def test_ivf_replace_and_delete(spark, tmp_path):
     idx = ivf_load(spark, path)
     q = spark.createDataFrame([(999, new_vec)],
                               "vec_id long, embedding array<double>")
-    hits = ivf_search(idx, q, k=3, n_probe=4).collect()
+    def search(idx, k):
+        return knn_topk(idx.assigned, q, k=k,
+                        candidates=ivf(idx, n_probe=4)).collect()
+
+    hits = search(idx, 3)
     assert hits[0].vec_id == 7 and hits[0].cos_sim == pytest.approx(1.0)
     # the id appears exactly once (old generation dead, not duplicated)
-    assert sum(1 for r in ivf_search(idx, q, k=60, n_probe=4).collect()
-               if r.vec_id == 7) == 1
+    assert sum(1 for r in search(idx, 60) if r.vec_id == 7) == 1
 
     stats = index_compact(spark, path, str(tmp_path / "ivf2"))
     assert stats["files_out"] <= stats["files_in"]
     assert not exists(spark, str(tmp_path / "ivf2") + "/tombstones")
     idx2 = ivf_load(spark, str(tmp_path / "ivf2"))
-    got2 = ivf_search(idx2, q, k=3, n_probe=4).collect()
+    got2 = search(idx2, 3)
     assert [r.vec_id for r in got2] == [r.vec_id for r in hits]
 
 

@@ -114,29 +114,7 @@ def test_single_component_scan_ignores_sampling_factors():
     assert np.array_equal(base, patched)
 
 
-# ------------------------------------------- bitext: guard + IVF-fed path
-
-def test_cosine_topk_many_queries_guard_raises(spark):
-    """Round-8 advice: the many-query exact scorer driver-collects the
-    query side; a corpus-sized 'query' frame must raise with the IVF
-    routing hint, not silently OOM the driver."""
-    from tap_airbyte_wrapper_spark.functions.similarity import (
-        _cosine_topk_many_queries)
-
-    corpus = spark.range(4).select(
-        F.col("id").alias("vec_id"),
-        F.array(F.rand(1), F.rand(2)).alias("embedding"))
-    queries = spark.range(100).select(
-        F.col("id").alias("vec_id"),
-        F.array(F.rand(3), F.rand(4)).alias("embedding"))
-    with pytest.raises(ValueError, match="max_query_cells.*ivf"):
-        _cosine_topk_many_queries(corpus, queries, "vec_id", "embedding",
-                                  "__q", 2, max_query_cells=100)
-    # under the guard it still runs
-    ok = _cosine_topk_many_queries(corpus, queries.limit(3), "vec_id",
-                                   "embedding", "__q", 2)
-    assert ok.count() == 6
-
+# ------------------------------------------------- bitext: IVF-fed path
 
 def test_bitext_mine_ivf_matches_bruteforce(spark):
     """The corpus-x-corpus path the bitext docstring promises: IVF
