@@ -6,13 +6,18 @@ determinism and applies runtime type coercions in ``default()``
 serializer:
 
 * **SCHEMA** and **STATE** — small driver-side documents, serialized by
-  :func:`singer_message` (``json.dumps`` with sorted keys).
+  :func:`singer_message` (``json.dumps`` with sorted keys); every SCHEMA
+  document is built by ``_schema_message``.
 * **RECORD** — :func:`record_json_expr` only: ``to_json(struct(...))``
   evaluated on the executors.  Every sink takes its lines from it:
   :func:`write_singer_stdout` streams them to the driver through
   ``toLocalIterator`` (one partition resident at a time) for tap-parity
   CLI use, and :func:`write_singer_files` has each task write its own
-  partition's lines.
+  partition's lines through Spark's text committer, then writes the
+  stream's SCHEMA line to ``_schema.singer`` beside the ``part-*``
+  files.  The leading ``_`` hides it from Spark and Hadoop readers (as
+  with ``_SUCCESS``); ``cat _schema.singer part-*`` is a complete Singer
+  stream.
 * **Bookmarks** — :func:`render_column` renders a cursor value by the
   rule that renders a top-level RECORD field, so a sink commits the
   string its RECORD lines carry.
@@ -40,6 +45,7 @@ from typing import Any, IO
 
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
+from .fsutil import write_text
 from .schema import struct_to_json_schema
 
 __all__ = [
@@ -97,6 +103,16 @@ def singer_message(message: dict[str, Any]) -> str:
     return json.dumps(coerce_value(message), sort_keys=True, separators=(",", ":"))
 
 
+def _schema_message(schema: T.StructType, stream: str,
+                   key_properties: list[str] | None = None) -> dict[str, Any]:
+    """The stream's Singer SCHEMA message."""
+    return {
+        "type": "SCHEMA", "stream": stream,
+        "schema": struct_to_json_schema(schema),
+        "key_properties": key_properties or [],
+    }
+
+
 def render_column(c: Column, dtype: T.DataType) -> Column:
     """Render ``c`` the way a top-level RECORD field carries it.  Bookmarks
     use the same rule: ``render_column(F.max(c), dtype)`` is the largest
@@ -143,11 +159,8 @@ def write_singer_stdout(
     same loop: an ``Observation`` never fires under ``toLocalIterator``.
     """
     out = out or sys.stdout
-    out.write(singer_message({
-        "type": "SCHEMA", "stream": stream,
-        "schema": struct_to_json_schema(df.schema),
-        "key_properties": key_properties or [],
-    }) + "\n")
+    out.write(singer_message(
+        _schema_message(df.schema, stream, key_properties)) + "\n")
     cols = [record_json_expr(df, stream)]
     if cursor:
         cols.append(render_column(F.col(cursor), df.schema[cursor].dataType))
@@ -162,7 +175,18 @@ def write_singer_stdout(
     return n, cursor_max
 
 
-def write_singer_files(df: DataFrame, stream: str, path: str, mode: str = "append") -> None:
-    """Distributed Singer RECORD sink: every task writes its own partition
-    as JSONL text.  The scale path — no driver funnel, no collect."""
+def write_singer_files(
+    df: DataFrame,
+    stream: str,
+    path: str,
+    mode: str = "append",
+    key_properties: list[str] | None = None,
+) -> None:
+    """Distributed Singer sink: every task writes its own partition's
+    RECORD lines as text (no driver funnel, no collect); once the job has
+    committed, the driver writes the SCHEMA line to
+    ``{path}/_schema.singer``.  A failed append leaves no new visible
+    file; a failed overwrite leaves no ``part-*`` file."""
     df.select(record_json_expr(df, stream)).write.mode(mode).text(path)
+    write_text(df.sparkSession, f"{path}/_schema.singer", singer_message(
+        _schema_message(df.schema, stream, key_properties)) + "\n")

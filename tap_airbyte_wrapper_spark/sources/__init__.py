@@ -5,13 +5,7 @@ from . import changelog as _changelog  # noqa: F401 - registration side effect
 from . import files as _files  # noqa: F401
 from . import jdbc as _jdbc    # noqa: F401
 from . import rest as _rest    # noqa: F401
-from .datasource import (
-    HttpJsonDataSource,
-    SingerJsonlDataSource,
-    register_http_json,
-    register_singer_jsonl,
-)
+from .datasource import HttpJsonDataSource, register_http_json
 
 __all__ = ["Source", "SourceError", "get_source", "list_sources", "register",
-           "HttpJsonDataSource", "register_http_json",
-           "SingerJsonlDataSource", "register_singer_jsonl"]
+           "HttpJsonDataSource", "register_http_json"]

@@ -110,195 +110,3 @@ def register_http_json(spark) -> None:
     """Register the format on a session (idempotent)."""
     spark.dataSource.register(HttpJsonDataSource)
 
-
-# ---------------------------------------------------------------------
-# Singer JSONL *writer* — the write half of the Python Data Source API
-# ---------------------------------------------------------------------
-
-from dataclasses import dataclass as _dataclass
-
-from pyspark.sql.datasource import DataSourceWriter, WriterCommitMessage
-
-
-@_dataclass
-class _SingerCommit(WriterCommitMessage):
-    tmp_file: str
-    records: int
-
-
-class SingerJsonlWriter(DataSourceWriter):
-    """Distributed Singer RECORD sink with an ATOMIC commit protocol —
-    what the plain text-sink emitter (``singer_io.write_singer_files``)
-    cannot give: each task writes to a hidden temp file and reports it
-    in its commit message; only when EVERY task succeeded does the
-    driver rename the temp files to ``part-{job}-{N}.jsonl`` (the job
-    token keeps append jobs from clobbering earlier output; append
-    also merges the prior manifest), write the SCHEMA message and a
-    ``_SUCCESS`` manifest (file -> record counts).  A
-    failed job leaves no visible partial output (``abort`` deletes the
-    temps), so downstream loaders can key off ``_SUCCESS`` exactly as
-    they do for parquet.
-
-    Local/shared-filesystem paths (the Data Source API runs this Python
-    code on executors; rename-on-commit assumes a posix-rename target —
-    on object storage the commit step would copy instead).
-    """
-
-    def __init__(self, schema, options, overwrite: bool):
-        import uuid as _uuid
-
-        self.schema = schema
-        self.path = options.get("path")
-        self.stream = options.get("stream", "stream")
-        kp = options.get("key_properties", "")
-        self.key_properties = [k for k in kp.split(",") if k]
-        self.overwrite = overwrite
-        # job-unique token in the part names: append jobs must not
-        # clobber a previous job's part-00000 (silent data loss), and
-        # the manifest must accumulate across appends
-        self.job = _uuid.uuid4().hex[:12]
-        if not self.path:
-            raise ValueError("singer_jsonl writer needs option 'path'")
-
-    def write(self, iterator) -> _SingerCommit:
-        import os
-        import uuid as _uuid
-
-        from ..singer_io import singer_message
-
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, f"._tmp-{_uuid.uuid4().hex}.jsonl")
-        n = 0
-        with open(tmp, "w") as f:
-            for row in iterator:
-                f.write(singer_message({
-                    "type": "RECORD", "stream": self.stream,
-                    "record": row.asDict(recursive=True)}) + "\n")
-                n += 1
-        return _SingerCommit(tmp_file=tmp, records=n)
-
-    def commit(self, messages) -> None:
-        import json as _json
-        import os
-
-        from ..schema import struct_to_json_schema
-        from ..singer_io import singer_message
-
-        manifest = {}
-        if self.overwrite:
-            for name in os.listdir(self.path):
-                if name.startswith("part-") or name in (
-                        "_SUCCESS", "schema.singer"):
-                    os.remove(os.path.join(self.path, name))
-        else:  # append: carry the previous jobs' manifest forward
-            prev = os.path.join(self.path, "_SUCCESS")
-            if os.path.exists(prev):
-                with open(prev) as f:
-                    manifest = _json.load(f).get("files", {})
-        for i, m in enumerate(messages):
-            if m is None:
-                continue
-            dst = os.path.join(
-                self.path, f"part-{self.job}-{i:05d}.jsonl")
-            os.replace(m.tmp_file, dst)
-            manifest[os.path.basename(dst)] = m.records
-        with open(os.path.join(self.path, "schema.singer"), "w") as f:
-            f.write(singer_message({
-                "type": "SCHEMA", "stream": self.stream,
-                "schema": struct_to_json_schema(self.schema),
-                "key_properties": self.key_properties}) + "\n")
-        tmp = os.path.join(self.path, "._success")
-        with open(tmp, "w") as f:
-            _json.dump({"records": sum(manifest.values()),
-                        "files": manifest}, f, sort_keys=True)
-        os.replace(tmp, os.path.join(self.path, "_SUCCESS"))
-
-    def abort(self, messages) -> None:
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_file):
-                os.remove(m.tmp_file)
-
-
-class SingerJsonlDataSource(DataSource):
-    @classmethod
-    def name(cls) -> str:
-        return "singer_jsonl"
-
-    def writer(self, schema, overwrite: bool) -> SingerJsonlWriter:
-        return SingerJsonlWriter(schema, self.options, overwrite)
-
-    def streamWriter(self, schema, overwrite: bool):
-        return SingerJsonlStreamWriter(schema, self.options)
-
-
-def register_singer_jsonl(spark) -> None:
-    """Register the writer format on a session (idempotent)."""
-    spark.dataSource.register(SingerJsonlDataSource)
-
-
-from pyspark.sql.datasource import DataSourceStreamWriter
-
-
-class SingerJsonlStreamWriter(DataSourceStreamWriter):
-    """Streaming micro-batch Singer sink with EXACTLY-ONCE output files.
-
-    Part names are deterministic in (batchId, task index): a replayed
-    micro-batch (restart between sink write and checkpoint commit —
-    Structured Streaming's at-least-once window) overwrites the same
-    ``part-b{batch}-{task}.jsonl`` files instead of appending
-    duplicates, so the visible output converges to exactly-once.  Each
-    batch's commit also rewrites ``batch-{id}._manifest`` with the
-    file -> record counts; temps from failed batches are removed by
-    ``abort`` and never visible.
-    """
-
-    def __init__(self, schema, options):
-        self.schema = schema
-        self.path = options.get("path")
-        self.stream = options.get("stream", "stream")
-        if not self.path:
-            raise ValueError("singer_jsonl stream writer needs option 'path'")
-
-    def write(self, iterator) -> _SingerCommit:
-        import os
-        import uuid as _uuid
-
-        from ..singer_io import singer_message
-
-        os.makedirs(self.path, exist_ok=True)
-        tmp = os.path.join(self.path, f"._tmp-{_uuid.uuid4().hex}.jsonl")
-        n = 0
-        with open(tmp, "w") as f:
-            for row in iterator:
-                f.write(singer_message({
-                    "type": "RECORD", "stream": self.stream,
-                    "record": row.asDict(recursive=True)}) + "\n")
-                n += 1
-        return _SingerCommit(tmp_file=tmp, records=n)
-
-    def commit(self, messages, batchId: int) -> None:
-        import json as _json
-        import os
-
-        manifest = {}
-        for i, m in enumerate(messages):
-            if m is None:
-                continue
-            dst = os.path.join(self.path, f"part-b{batchId}-{i:05d}.jsonl")
-            os.replace(m.tmp_file, dst)
-            manifest[os.path.basename(dst)] = m.records
-        tmp = os.path.join(self.path, f"._manifest-{batchId}")
-        with open(tmp, "w") as f:
-            _json.dump({"batch": batchId,
-                        "records": sum(manifest.values()),
-                        "files": manifest}, f, sort_keys=True)
-        os.replace(tmp, os.path.join(self.path, f"batch-{batchId}._manifest"))
-
-    def abort(self, messages, batchId: int) -> None:
-        import os
-
-        for m in messages:
-            if m is not None and os.path.exists(m.tmp_file):
-                os.remove(m.tmp_file)

@@ -74,8 +74,18 @@ class Engine:
           "flattening_enabled": false, "flattening_max_depth": 10,
           "state_path": "state.json",
           "parallelism": 4,                 # concurrent stream jobs (file sinks)
-          "sink": {"type": "stdout" | "files" | "parquet" | "json",
+          "sink": {"type": "stdout" | "files" | "parquet" | "json"
+                           | "merge" | "jdbc",
                    "path": ..., "mode": "append"},
+          # per-sink keys read by Engine._write (all optional unless noted):
+          #   files:   RECORD lines in {path}/{stream}/part-*, the stream's
+          #            SCHEMA line in {path}/{stream}/_schema.singer
+          #   parquet: "sort_by" ("cursor" or [cols]), "partition_by"
+          #   merge:   "order_col" (default: the cursor), "delete_col",
+          #            "keep_versions" (2), "n_buckets"
+          #   jdbc:    "url" (required; no "path"), "table_prefix",
+          #            "driver", "user", "password", "batchsize",
+          #            "isolationLevel"
           # declarative data-quality gate, evaluated BEFORE the write:
           "expectations": {"events": [
               {"column": "event_id", "kind": "not_null"},
@@ -349,17 +359,31 @@ class Engine:
         if kind == "stdout":
             return write_singer_stdout(df, stream_name, pks, cursor, out)
 
+        path = sink.get("path")
+        mode = sink.get("mode", "append")
         observed = [F.count(F.lit(1)).alias("n")]
         if cursor:
             observed.append(render_column(
                 F.max(F.col(cursor)), df.schema[cursor].dataType
             ).alias("cursor_max"))
+        sort_by = sink.get("sort_by") if kind == "parquet" else None
+        if sort_by == "cursor":
+            sort_by = [cursor] if cursor else None
+        if sort_by:
+            # cursor/range-sorted layout: disjoint row-group ranges so the
+            # NEXT incremental read's bookmark predicate prunes files
+            # instead of scanning them (sinks.py write_pruned_layout
+            # rationale; INT96 timestamps carry no footer stats, hence
+            # MICROS for the write).  The observation below attaches
+            # ABOVE the range exchange: the partitioner's
+            # boundary-sampling pass re-executes the subtree BELOW it,
+            # and an observe placed there counts every row twice.
+            n = df.sparkSession.sparkContext.defaultParallelism
+            df = df.repartitionByRange(
+                n, *[F.col(c) for c in sort_by]).sortWithinPartitions(*sort_by)
         obs = Observation()
-        plain = df
         df = df.observe(obs, *observed)
 
-        path = sink.get("path")
-        mode = sink.get("mode", "append")
         if kind == "merge":
             # CDC apply: upsert the batch onto a versioned parquet
             # snapshot (sinks.py).  Default recency = the stream cursor,
@@ -373,40 +397,16 @@ class Engine:
                 keep_versions=int(sink.get("keep_versions", 2)),
                 n_buckets=sink.get("n_buckets"),
             )
-            got = obs.get
-            return int(got["n"]), got.get("cursor_max")
-        if kind == "files":
-            write_singer_files(df, stream_name, f"{path}/{stream_name}", mode)
+        elif kind == "files":
+            write_singer_files(df, stream_name, f"{path}/{stream_name}", mode,
+                               pks)
         elif kind == "parquet":
-            out_df, sort_obs = df, None
-            sort_by = sink.get("sort_by")
-            if sort_by == "cursor":
-                sort_by = [cursor] if cursor else None
-            if sort_by:
-                # cursor/range-sorted layout: disjoint row-group ranges
-                # so the NEXT incremental read's bookmark predicate
-                # prunes files instead of scanning them (sinks.py
-                # write_pruned_layout rationale; INT96 timestamps carry
-                # no footer stats, hence MICROS for the write).  The
-                # observation attaches ABOVE the range exchange: the
-                # partitioner's boundary-sampling pass re-executes the
-                # subtree BELOW it, and an observe placed there counts
-                # every row twice.
-                spark = df.sparkSession
-                n = spark.sparkContext.defaultParallelism
-                sort_obs = Observation()
-                out_df = plain.repartitionByRange(
-                    n, *[F.col(c) for c in sort_by]
-                ).sortWithinPartitions(*sort_by).observe(sort_obs, *observed)
-            w = out_df.write.mode(mode)
+            w = df.write.mode(mode)
             if sink.get("partition_by"):
                 w = w.partitionBy(*sink["partition_by"])
             with scoped_conf(df.sparkSession,
                              MICROS_TIMESTAMPS if sort_by else {}):
                 w.parquet(f"{path}/{stream_name}")
-            if sort_obs is not None:
-                got = sort_obs.get
-                return int(got["n"]), got.get("cursor_max")
         elif kind == "json":
             df.write.mode(mode).json(f"{path}/{stream_name}")
         elif kind == "jdbc":

@@ -1,4 +1,4 @@
-import json, glob
+import json
 def test_http_json_datasource(spark, tmp_path):
     from tap_airbyte_wrapper_spark.sources import register_http_json
     pages = []
@@ -75,117 +75,3 @@ def test_binary_file_source_feeds_real_png_decode(spark, tmp_path):
     out = decode_image(media, "media_bundle").collect()
     assert [(r.width, r.height, r.channels) for r in out] == [(3, 4, 3)]
 
-
-def test_singer_jsonl_writer_atomic_commit(spark, tmp_path):
-    """df.write.format('singer_jsonl'): RECORD part files + SCHEMA +
-    _SUCCESS manifest appear only after a successful job, and the
-    messages parse as Singer with the engine's coercions."""
-    from tap_airbyte_wrapper_spark.sources import register_singer_jsonl
-
-    register_singer_jsonl(spark)
-    out = str(tmp_path / "singer_out")
-    df = spark.createDataFrame(
-        [(1, "a", 1.5), (2, "b", 2.5), (3, "c", None)],
-        "id long, name string, score double").repartition(3)
-    (df.write.format("singer_jsonl")
-       .option("path", out).option("stream", "items")
-       .option("key_properties", "id").mode("append").save())
-
-    manifest = json.load(open(out + "/_SUCCESS"))
-    assert manifest["records"] == 3
-    parts = sorted(glob.glob(out + "/part-*.jsonl"))
-    assert parts and not glob.glob(out + "/._tmp-*")
-    recs = []
-    for p in parts:
-        for line in open(p):
-            m = json.loads(line)
-            assert m["type"] == "RECORD" and m["stream"] == "items"
-            recs.append(m["record"])
-    assert sorted(r["id"] for r in recs) == [1, 2, 3]
-    assert sum(manifest["files"].values()) == 3
-
-    schema_msg = json.loads(open(out + "/schema.singer").read())
-    assert schema_msg["type"] == "SCHEMA"
-    assert schema_msg["key_properties"] == ["id"]
-    assert set(schema_msg["schema"]["properties"]) == {"id", "name", "score"}
-
-
-def test_singer_jsonl_writer_overwrite(spark, tmp_path):
-    from tap_airbyte_wrapper_spark.sources import register_singer_jsonl
-
-    register_singer_jsonl(spark)
-    out = str(tmp_path / "s2")
-    df1 = spark.createDataFrame([(1,)], "id long")
-    df1.write.format("singer_jsonl").option("path", out) \
-       .option("stream", "t").mode("append").save()
-    df2 = spark.createDataFrame([(7,), (8,)], "id long").repartition(2)
-    df2.write.format("singer_jsonl").option("path", out) \
-       .option("stream", "t").mode("overwrite").save()
-    manifest = json.load(open(out + "/_SUCCESS"))
-    assert manifest["records"] == 2
-    ids = [json.loads(l)["record"]["id"]
-           for p in glob.glob(out + "/part-*.jsonl") for l in open(p)]
-    assert sorted(ids) == [7, 8]
-
-
-def test_singer_jsonl_stream_writer_exactly_once_names(spark, tmp_path):
-    """Streaming micro-batches land as deterministic part-b{batch}-{task}
-    files with per-batch manifests; a second drain of new data appends a
-    new batch without touching the first batch's files."""
-    import os
-
-    from tap_airbyte_wrapper_spark.sources import register_singer_jsonl
-    from tap_airbyte_wrapper_spark.streaming import (
-        run_available_now,
-        stream_source,
-    )
-
-    register_singer_jsonl(spark)
-    src = str(tmp_path / "landing")
-    out = str(tmp_path / "singer_stream")
-    ckpt = str(tmp_path / "ckpt")
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    df1.coalesce(1).write.mode("append").parquet(src)
-
-    def drain():
-        stream = stream_source(spark, src, df1.schema)
-        q = (stream.writeStream.format("singer_jsonl")
-             .option("path", out).option("stream", "t")
-             .option("checkpointLocation", ckpt)
-             .trigger(availableNow=True).start())
-        run_available_now(q)
-
-    drain()
-    first = sorted(f for f in os.listdir(out) if f.startswith("part-"))
-    assert first and all(f.startswith("part-b0-") for f in first)
-    m0 = json.load(open(out + "/batch-0._manifest"))
-    assert m0["records"] == 2
-
-    spark.createDataFrame([(3, "c")], "id long, v string") \
-        .coalesce(1).write.mode("append").parquet(src)
-    drain()
-    names = sorted(f for f in os.listdir(out) if f.startswith("part-"))
-    assert [f for f in names if f.startswith("part-b0-")] == first
-    assert any(f.startswith("part-b1-") for f in names)
-    recs = [json.loads(l)["record"]["id"]
-            for f in names for l in open(os.path.join(out, f))]
-    assert sorted(recs) == [1, 2, 3]
-    assert not [f for f in os.listdir(out) if f.startswith("._tmp")]
-
-
-def test_singer_jsonl_writer_append_accumulates(spark, tmp_path):
-    """Two append jobs must coexist: job-unique part names, manifest
-    merged — the reviewer-found clobbering regression."""
-    from tap_airbyte_wrapper_spark.sources import register_singer_jsonl
-
-    register_singer_jsonl(spark)
-    out = str(tmp_path / "s3")
-    for vals in ([(1,), (2,)], [(3,), (4,)]):
-        spark.createDataFrame(vals, "id long") \
-            .write.format("singer_jsonl").option("path", out) \
-            .option("stream", "t").mode("append").save()
-    manifest = json.load(open(out + "/_SUCCESS"))
-    assert manifest["records"] == 4
-    ids = [json.loads(l)["record"]["id"]
-           for p in glob.glob(out + "/part-*.jsonl") for l in open(p)]
-    assert sorted(ids) == [1, 2, 3, 4]

@@ -12,6 +12,7 @@ import os
 import struct
 import zlib
 
+import numpy as np
 import pytest
 
 from pyspark.sql import functions as F
@@ -21,7 +22,7 @@ from tap_airbyte_wrapper_spark.functions import (
     bm25_index_append, bm25_index_search, bm25_index_write,
     fingerprint_dedup_delta, fingerprint_index_append,
     fingerprint_index_write, index_compact, index_delete, ivf_append,
-    ivf, ivf_build, ivf_load, knn_topk, media_dedup_delta,
+    ivf, ivf_build, ivf_load, ivf_staleness, knn_topk, media_dedup_delta,
     media_sig_index_append, media_sig_index_write, minhash_dedup_delta,
     minhash_index_append, minhash_index_write, novelty_index_append,
     novelty_index_write, novelty_probe, simhash_dedup_delta,
@@ -340,3 +341,115 @@ def test_no_index_lifecycle_outside_the_store():
     assert offenders == [], "go through functions/index_store.py"
     for rel in owners:
         assert _lifecycle_uses(os.path.join(pkg, rel)) != []
+
+
+# ------------------------------------- IVF append, staleness, compaction
+
+
+def _axis_vec(direction, dim=8, eps=0.0):
+    v = [0.0] * dim
+    v[direction] = 1.0
+    if eps:
+        v[(direction + 1) % dim] = eps
+    return v
+
+
+def test_ivf_append_and_staleness(spark, tmp_path):
+    """ivf_append folds a delta into the cell-partitioned layout with
+    the EXISTING centroids; searches then find the appended vectors;
+    staleness reports the append ratio."""
+    idx = str(tmp_path / "ivf")
+    corpus = spark.createDataFrame(
+        [(100 + d, _axis_vec(d)) for d in range(4)],
+        "vec_id long, embedding array<float>")
+    ivf_build(corpus, n_clusters=2, path=idx)
+
+    delta = spark.createDataFrame(
+        [(200, _axis_vec(0, eps=0.05)), (201, _axis_vec(4))],
+        "vec_id long, embedding array<float>")
+    index = ivf_append(spark, idx, delta)
+    assert index.assigned.count() == 6
+
+    st = ivf_staleness(spark, idx)
+    assert st["built_rows"] == 4 and st["appended_rows"] == 2
+    assert st["append_ratio"] == 0.5 and not st["needs_retrain"]
+    assert ivf_staleness(spark, idx, retrain_factor=0.4)["needs_retrain"]
+
+    # a fresh load sees the appended vectors; full-probe search finds
+    # the appended near-copy of direction 0
+    loaded = ivf_load(spark, idx)
+    q = spark.createDataFrame([(300, _axis_vec(0, eps=0.01))],
+                              "vec_id long, embedding array<float>")
+    hits = knn_topk(loaded.assigned, q, k=3,
+                    candidates=ivf(loaded, n_probe=2)).collect()
+    ids = {r["vec_id"] for r in hits}
+    assert {100, 200} <= ids
+
+
+def test_ivf_compact_preserves_cells_and_search(spark, tmp_path):
+    src = str(tmp_path / "ivf")
+    corpus = spark.createDataFrame(
+        [(i, _axis_vec(i % 8)) for i in range(16)],
+        "vec_id long, embedding array<float>")
+    ivf_build(corpus, n_clusters=4, path=src)
+    for j in range(3):
+        ivf_append(spark, src, spark.createDataFrame(
+            [(100 + 10 * j + d, _axis_vec(d % 8, eps=0.01 * (j + 1)))
+             for d in range(4)], "vec_id long, embedding array<float>"))
+
+    dst = str(tmp_path / "ivf_c")
+    stats = index_compact(spark, src, dst)
+    assert stats["files_out"] < stats["files_in"]
+    # cell partition dirs survive (file-level pruning intact)
+    vdirs = [d for d in os.listdir(f"{dst}/vectors")
+             if d.startswith("__cell=")]
+    assert vdirs
+
+    q = spark.createDataFrame([(999, _axis_vec(2, eps=0.005))],
+                              "vec_id long, embedding array<float>")
+    def search(path):
+        idx = ivf_load(spark, path)
+        return {r["vec_id"] for r in knn_topk(
+            idx.assigned, q, k=3, candidates=ivf(idx, n_probe=4)).collect()}
+
+    want, got = search(src), search(dst)
+    assert got == want and got
+
+
+def test_ivf_replace_and_delete(spark, tmp_path):
+    """A replace (delete the id, then append its new vector) swaps a
+    vector in-place: queries near the NEW vector find the id at ~1.0
+    similarity, the OLD vector is unfindable, and compaction folds the
+    tombstones with unchanged search output."""
+    rng = np.random.default_rng(8)
+    dim = 16
+    base = [(i, (rng.normal(size=dim) / 10
+                 + np.eye(dim)[i % dim]).tolist())
+            for i in range(60)]
+    corpus = spark.createDataFrame(base, "vec_id long, embedding array<double>")
+    path = str(tmp_path / "ivf")
+    ivf_build(corpus, n_clusters=4, train_sample=60, path=path)
+
+    new_vec = (np.eye(dim)[3] * 5).tolist()
+    edited = spark.createDataFrame([(7, new_vec)],
+                                   "vec_id long, embedding array<double>")
+    index_delete(spark, path, edited.select("vec_id"))
+    ivf_append(spark, path, edited)
+    idx = ivf_load(spark, path)
+    q = spark.createDataFrame([(999, new_vec)],
+                              "vec_id long, embedding array<double>")
+    def search(idx, k):
+        return knn_topk(idx.assigned, q, k=k,
+                        candidates=ivf(idx, n_probe=4)).collect()
+
+    hits = search(idx, 3)
+    assert hits[0].vec_id == 7 and hits[0].cos_sim == pytest.approx(1.0)
+    # the id appears exactly once (old generation dead, not duplicated)
+    assert sum(1 for r in search(idx, 60) if r.vec_id == 7) == 1
+
+    stats = index_compact(spark, path, str(tmp_path / "ivf2"))
+    assert stats["files_out"] <= stats["files_in"]
+    assert not exists(spark, str(tmp_path / "ivf2") + "/tombstones")
+    idx2 = ivf_load(spark, str(tmp_path / "ivf2"))
+    got2 = search(idx2, 3)
+    assert [r.vec_id for r in got2] == [r.vec_id for r in hits]

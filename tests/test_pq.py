@@ -1,7 +1,8 @@
 """Product quantization: encode/ADC numpy-reference equivalence,
-planted-cluster retrieval exactness, rerank-vs-bruteforce agreement
-(``knn_topk`` over ``pq`` / ``ivfpq`` candidates), model persistence
-round-trip."""
+planted-cluster retrieval exactness, model persistence round-trip,
+k-means, residual and OPQ codebooks.  The PQ / IVF-PQ search contracts
+(``knn_topk`` over ``pq`` / ``ivfpq`` candidates) are in
+``test_topk.py``."""
 
 import numpy as np
 import pytest
@@ -92,20 +93,6 @@ def test_pq_planted_clusters_retrieval_is_exact(spark):
         assert r.vec_id in got_sets[r.query_id], (r.query_id, r.vec_id)
 
 
-def test_pq_rerank_recovers_exact_cosine(spark):
-    mat = _clusters()
-    df = _vec_df(spark, mat)
-    model = pq_train(df, m=4, ks=4, train_sample=1000, seed=3)
-    codes = pq_encode(df, model)
-    queries = df.filter(F.col("vec_id") < 2)
-    got = knn_topk(df, queries, k=5, candidates=pq(
-        model, codes, shortlist=len(mat) - 1)).collect()
-    want = knn_topk(df, queries, k=5).collect()
-    gs = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in got)
-    ws = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in want)
-    assert gs == ws  # full-corpus shortlist => exact equality
-
-
 def test_pq_train_validates_params(spark):
     df = _vec_df(spark, np.eye(6))
     with pytest.raises(ValueError):
@@ -182,44 +169,6 @@ def test_semantic_dedup_clustered_collapses_planted_dups(spark):
     assert all(i in out for i in (0, 5, 10, 15))
 
 
-# ------------------------------------------------------------------ IVF-PQ
-
-def test_ivfpq_full_width_equals_brute_force(spark):
-    """With n_probe = all cells and shortlist = corpus, the three
-    approximations are each disabled — the composite must equal exact
-    brute-force cosine top-k."""
-    from tap_airbyte_wrapper_spark.functions import ivf_build, ivfpq
-
-    mat = _clusters(n_per=8)
-    df = _vec_df(spark, mat)
-    index = ivf_build(df, n_clusters=4, train_sample=1000)
-    model = pq_train(df, m=4, ks=8, train_sample=1000)
-    queries = df.filter(F.col("vec_id") < 2)
-    got = knn_topk(df, queries, k=5, candidates=ivfpq(
-        index, model, n_probe=4, shortlist=len(mat))).collect()
-    want = knn_topk(df, queries, k=5).collect()
-    gs = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in got)
-    ws = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in want)
-    assert gs == ws
-
-
-def test_ivfpq_probe_pruning_respects_per_query_cells(spark):
-    """n_probe=1 on well-separated clusters: each query's candidates
-    come only from its own cluster's cell."""
-    from tap_airbyte_wrapper_spark.functions import ivf_build, ivfpq
-
-    mat = _clusters(n_per=8)
-    df = _vec_df(spark, mat)
-    index = ivf_build(df, n_clusters=4, train_sample=1000)
-    model = pq_train(df, m=4, ks=8, train_sample=1000)
-    queries = df.filter(F.col("vec_id").isin(0, 8, 16, 24))
-    out = knn_topk(df, queries, k=7, candidates=ivfpq(
-        index, model, n_probe=1, shortlist=50)).collect()
-    for r in out:
-        # same planted cluster: ids 0-7 / 8-15 / 16-23 / 24-31
-        assert r.vec_id // 8 == r.query_id // 8, r
-
-
 def test_semantic_dedup_clustered_lsh_route_matches_exact(spark):
     """Forcing the mega-cluster LSH route on the planted-dup corpus
     must drop exactly the same near-copies as the exact path: at
@@ -247,27 +196,7 @@ def test_semantic_dedup_clustered_lsh_route_matches_exact(spark):
     assert auto == exact
 
 
-def test_ivfpq_residual_full_width_equals_brute_force(spark):
-    """Residual encoding changes the codes and the ADC arithmetic but
-    not the widened-to-exact contract: full probes + corpus-wide
-    shortlist + exact rerank must still equal brute force."""
-    from tap_airbyte_wrapper_spark.functions import (
-        ivf_build, ivfpq, ivfpq_train_residual,
-    )
-
-    mat = _clusters(n_per=8)
-    df = _vec_df(spark, mat)
-    index = ivf_build(df, n_clusters=4, train_sample=1000)
-    model = ivfpq_train_residual(index, m=4, ks=8, train_sample=1000)
-    queries = df.filter(F.col("vec_id") < 2)
-    got = knn_topk(df, queries, k=5, candidates=ivfpq(
-        index, model, n_probe=4, shortlist=len(mat),
-        residual=True)).collect()
-    want = knn_topk(df, queries, k=5).collect()
-    gs = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in got)
-    ws = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in want)
-    assert gs == ws
-
+# ------------------------------------------------ residual codebooks
 
 def test_residual_codebooks_reconstruct_better_on_clustered_data(spark):
     """The point of residual encoding: on cluster-structured data the

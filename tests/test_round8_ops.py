@@ -975,51 +975,6 @@ def test_fingerprint_index_delete_readmits_content(spark, tmp_path):
         dup, "fpr8", "doc_id", "text").collect()] == [100]
 
 
-def test_ivf_replace_and_delete(spark, tmp_path):
-    """A replace (delete the id, then append its new vector) swaps a
-    vector in-place: queries near the NEW vector find the id at ~1.0
-    similarity, the OLD vector is unfindable, and compaction folds the
-    tombstones with unchanged search output."""
-    import numpy as np
-
-    from tap_airbyte_wrapper_spark.functions import (
-        index_compact, index_delete, ivf, ivf_append, ivf_build, ivf_load,
-        knn_topk)
-
-    rng = np.random.default_rng(8)
-    dim = 16
-    base = [(i, (rng.normal(size=dim) / 10
-                 + np.eye(dim)[i % dim]).tolist())
-            for i in range(60)]
-    corpus = spark.createDataFrame(base, "vec_id long, embedding array<double>")
-    path = str(tmp_path / "ivf")
-    ivf_build(corpus, n_clusters=4, train_sample=60, path=path)
-
-    new_vec = (np.eye(dim)[3] * 5).tolist()
-    edited = spark.createDataFrame([(7, new_vec)],
-                                   "vec_id long, embedding array<double>")
-    index_delete(spark, path, edited.select("vec_id"))
-    ivf_append(spark, path, edited)
-    idx = ivf_load(spark, path)
-    q = spark.createDataFrame([(999, new_vec)],
-                              "vec_id long, embedding array<double>")
-    def search(idx, k):
-        return knn_topk(idx.assigned, q, k=k,
-                        candidates=ivf(idx, n_probe=4)).collect()
-
-    hits = search(idx, 3)
-    assert hits[0].vec_id == 7 and hits[0].cos_sim == pytest.approx(1.0)
-    # the id appears exactly once (old generation dead, not duplicated)
-    assert sum(1 for r in search(idx, 60) if r.vec_id == 7) == 1
-
-    stats = index_compact(spark, path, str(tmp_path / "ivf2"))
-    assert stats["files_out"] <= stats["files_in"]
-    assert not exists(spark, str(tmp_path / "ivf2") + "/tombstones")
-    idx2 = ivf_load(spark, str(tmp_path / "ivf2"))
-    got2 = search(idx2, 3)
-    assert [r.vec_id for r in got2] == [r.vec_id for r in hits]
-
-
 def test_containment_blocking_cols_still_partition_pairs(spark):
     """Blocking keys restrict candidate generation to same-block pairs
     under the prefix-filtered path too."""

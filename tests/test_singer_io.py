@@ -25,6 +25,7 @@ import math
 import os
 import struct
 import time
+from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -32,7 +33,8 @@ import pytest
 from pyspark.sql import functions as F, types as T
 
 from tap_airbyte_wrapper_spark.singer_io import (
-    TS_FORMAT, singer_message, write_singer_files, write_singer_stdout)
+    TS_FORMAT, record_json_expr, singer_message, write_singer_files,
+    write_singer_stdout)
 from tap_airbyte_wrapper_spark.sync import Engine
 
 FLAT_TABLES = ("customer", "documents", "events", "lineitem", "nation",
@@ -225,7 +227,7 @@ def _write_ev(src, instants):
     }), os.path.join(src, "ev.parquet"))
 
 
-def _engine(spark, src, tmp_path, sink, tag):
+def _engine(spark, src, tmp_path, sink, tag, **config):
     return Engine(spark, {
         "source": "dataset_dir",
         "source_config": {"path": src, "cursors": {"ev": "ts"}},
@@ -233,6 +235,7 @@ def _engine(spark, src, tmp_path, sink, tag):
         "replication_method": {"ev": "INCREMENTAL"},
         "state_path": str(tmp_path / f"state_{tag}.json"),
         "sink": sink,
+        **config,
     })
 
 
@@ -282,3 +285,117 @@ def test_stdout_and_files_sinks_commit_equal_bookmarks(spark, tmp_path,
     msgs = [_strict(line) for line in buf.getvalue().splitlines()]
     assert [m["type"] for m in msgs] == ["SCHEMA", "RECORD", "RECORD", "STATE"]
     assert msgs[-1]["value"]["bookmarks"] == {"ev": {"ts": a}}
+
+
+# ------------------------------------------------------------ files sink
+
+
+def _visible(out):
+    """The names a Spark or Hadoop reader sees in ``out`` (no ``_``/``.``
+    files), plus ``_schema.singer``."""
+    return sorted(f for f in os.listdir(out)
+                  if f[0] not in "_." or f == "_schema.singer")
+
+
+def _part_ids(out):
+    return sorted(json.loads(line)["record"]["id"]
+                  for f in os.listdir(out) if f.startswith("part-")
+                  for line in Path(out, f).read_text().splitlines())
+
+
+def test_files_sink_equals_stdout_sink_byte_for_byte(fixture_df, tmp_path,
+                                                     skewed_tz):
+    lines, _, _ = _stdout(fixture_df, "fx", key_properties=["id"])
+    out = str(tmp_path / "fx")
+    write_singer_files(fixture_df, "fx", out, mode="overwrite",
+                       key_properties=["id"])
+    schema = Path(out, "_schema.singer").read_bytes()
+    parts = b"".join(Path(out, p).read_bytes()
+                     for p in os.listdir(out) if p.startswith("part-"))
+    records = sorted(parts.splitlines(keepends=True))
+    expected = [(line + "\n").encode("utf-8") for line in lines]
+    assert [schema] + records == expected[:1] + sorted(expected[1:])
+    assert b'"score":"NaN"' in parts and b'"score":"-Infinity"' in parts
+
+
+def test_files_sink_appends_keep_both_jobs_parts(spark, tmp_path):
+    out = str(tmp_path / "t")
+    write_singer_files(spark.createDataFrame([(1,), (2,)], "id long"), "t", out)
+    first = [f for f in _visible(out) if f.startswith("part-")]
+    write_singer_files(spark.createDataFrame([(3,), (4,)], "id long"), "t", out)
+    names = _visible(out)
+    assert set(first) < set(names) and "_schema.singer" in names
+    assert _part_ids(out) == [1, 2, 3, 4]
+
+
+def _snapshot(out):
+    return {f: Path(out, f).read_bytes() for f in _visible(out)}
+
+
+def test_failed_files_write_leaves_prior_output_and_state(spark, tmp_path):
+    out = str(tmp_path / "t")
+    write_singer_files(spark.createDataFrame([(1,), (2,)], "id long"), "t", out)
+    before = _snapshot(out)
+    boom = spark.range(3).select(
+        F.when(F.col("id") == 1, F.raise_error(F.lit("boom")))
+        .otherwise(F.col("id")).alias("id"),
+        F.lit("x").alias("extra"))
+    with pytest.raises(Exception, match="boom"):
+        write_singer_files(boom, "t", out)
+    assert _snapshot(out) == before
+
+    # through Engine.sync: the bookmark does not move either
+    src = str(tmp_path / "src")
+    _write_ev(src, [T_MAX - dt.timedelta(days=1), T_MAX])
+    sink = {"type": "files", "path": str(tmp_path / "files"),
+            "mode": "append"}
+    assert _engine(spark, src, tmp_path, sink, "f").sync().stream_counts == {
+        "ev": 2}
+    state_file = tmp_path / "state_f.json"
+    state = state_file.read_bytes()
+    synced = _snapshot(str(tmp_path / "files" / "ev"))
+    _write_ev(src, [T_MAX - dt.timedelta(days=1), T_MAX,
+                    T_MAX + dt.timedelta(hours=1)])
+    failing = _engine(spark, src, tmp_path, sink, "f", stream_maps={
+        "ev": {"boom": "if(id = 2, raise_error('boom'), id)"}})
+    with pytest.raises(Exception, match="boom"):
+        failing.sync()
+    assert state_file.read_bytes() == state
+    assert _snapshot(str(tmp_path / "files" / "ev")) == synced
+
+
+def test_streaming_singer_text_sink_is_exactly_once(spark, tmp_path):
+    """Streaming Singer output is ``incremental_sync`` into the text
+    sink: the sink's metadata log makes each drain's files appear once,
+    and a later drain leaves earlier batches' files untouched."""
+    from tap_airbyte_wrapper_spark.streaming import (
+        incremental_sync, run_available_now, stream_source)
+
+    src, out = str(tmp_path / "landing"), str(tmp_path / "singer")
+    schema = T.StructType([T.StructField("id", T.LongType()),
+                           T.StructField("v", T.StringType())])
+
+    def land(rows):
+        spark.createDataFrame(rows, schema).coalesce(1) \
+            .write.mode("append").parquet(src)
+
+    def drain():
+        run_available_now(incremental_sync(
+            stream_source(spark, src, schema), out, str(tmp_path / "ckpt"),
+            transform=lambda d: d.select(record_json_expr(d, "t")),
+            fmt="text"))
+
+    land([(1, "a"), (2, "b")])
+    drain()
+    first = _snapshot(out)
+    assert _part_ids(out) == [1, 2]
+    land([(3, "c")])
+    drain()
+    drain()                          # nothing new to drain
+    assert _part_ids(out) == [1, 2, 3]
+    after = _snapshot(out)
+    assert {f: after[f] for f in first} == first
+    lines = [r.value for r in spark.read.text(out).collect()]
+    assert sorted(json.loads(line)["record"]["id"] for line in lines) == [
+        1, 2, 3]
+    assert all(json.loads(line)["type"] == "RECORD" for line in lines)

@@ -1,7 +1,8 @@
 """The knn top-k plan (``functions.similarity.knn_topk``): every candidate
 generator, widened to full width, reproduces brute-force rows exactly;
 pruned generators keep recall; shortlist cuts never spend a slot on a
-self-match; the many-query scorer's driver-collect guard."""
+self-match; the many-query scorer's driver-collect guard; PQ and IVF-PQ
+search on planted clusters."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -10,12 +11,14 @@ from tap_airbyte_wrapper_spark.functions import (
     ivf,
     ivf_build,
     ivfpq,
+    ivfpq_train_residual,
     knn_topk,
     lsh,
     pq,
     pq_encode,
     pq_train,
 )
+from test_pq import _clusters, _vec_df
 
 
 @pytest.fixture(scope="module")
@@ -135,3 +138,70 @@ def test_score_queries_guard_raises(spark):
     ok = _best_k(_cosine_score_queries(corpus, queries.limit(3), "vec_id",
                                        "embedding", "__q"), "__q", "vec_id", 2)
     assert ok.count() == 6
+
+
+# ------------------------------------- PQ / IVF-PQ on planted clusters
+
+
+def test_pq_rerank_recovers_exact_cosine(spark):
+    mat = _clusters()
+    df = _vec_df(spark, mat)
+    model = pq_train(df, m=4, ks=4, train_sample=1000, seed=3)
+    codes = pq_encode(df, model)
+    queries = df.filter(F.col("vec_id") < 2)
+    got = knn_topk(df, queries, k=5, candidates=pq(
+        model, codes, shortlist=len(mat) - 1)).collect()
+    want = knn_topk(df, queries, k=5).collect()
+    gs = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in got)
+    ws = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in want)
+    assert gs == ws  # full-corpus shortlist => exact equality
+
+
+def test_ivfpq_full_width_equals_brute_force(spark):
+    """With n_probe = all cells and shortlist = corpus, the three
+    approximations are each disabled — the composite must equal exact
+    brute-force cosine top-k."""
+    mat = _clusters(n_per=8)
+    df = _vec_df(spark, mat)
+    index = ivf_build(df, n_clusters=4, train_sample=1000)
+    model = pq_train(df, m=4, ks=8, train_sample=1000)
+    queries = df.filter(F.col("vec_id") < 2)
+    got = knn_topk(df, queries, k=5, candidates=ivfpq(
+        index, model, n_probe=4, shortlist=len(mat))).collect()
+    want = knn_topk(df, queries, k=5).collect()
+    gs = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in got)
+    ws = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in want)
+    assert gs == ws
+
+
+def test_ivfpq_probe_pruning_respects_per_query_cells(spark):
+    """n_probe=1 on well-separated clusters: each query's candidates
+    come only from its own cluster's cell."""
+    mat = _clusters(n_per=8)
+    df = _vec_df(spark, mat)
+    index = ivf_build(df, n_clusters=4, train_sample=1000)
+    model = pq_train(df, m=4, ks=8, train_sample=1000)
+    queries = df.filter(F.col("vec_id").isin(0, 8, 16, 24))
+    out = knn_topk(df, queries, k=7, candidates=ivfpq(
+        index, model, n_probe=1, shortlist=50)).collect()
+    for r in out:
+        # same planted cluster: ids 0-7 / 8-15 / 16-23 / 24-31
+        assert r.vec_id // 8 == r.query_id // 8, r
+
+
+def test_ivfpq_residual_full_width_equals_brute_force(spark):
+    """Residual encoding changes the codes and the ADC arithmetic but
+    not the widened-to-exact contract: full probes + corpus-wide
+    shortlist + exact rerank must still equal brute force."""
+    mat = _clusters(n_per=8)
+    df = _vec_df(spark, mat)
+    index = ivf_build(df, n_clusters=4, train_sample=1000)
+    model = ivfpq_train_residual(index, m=4, ks=8, train_sample=1000)
+    queries = df.filter(F.col("vec_id") < 2)
+    got = knn_topk(df, queries, k=5, candidates=ivfpq(
+        index, model, n_probe=4, shortlist=len(mat),
+        residual=True)).collect()
+    want = knn_topk(df, queries, k=5).collect()
+    gs = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in got)
+    ws = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in want)
+    assert gs == ws
