@@ -41,6 +41,8 @@ import time
 
 from pyspark.sql import SparkSession
 
+from tap_airbyte_wrapper_spark import cli
+
 _GROUPS = [
     ("tpch", re.compile(r"^q\d+_")),
     ("scan_sync", re.compile(
@@ -74,17 +76,10 @@ def _group_of(name: str) -> str:
 
 
 def build_spark(cpus: str) -> SparkSession:
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("tap-airbyte-wrapper-spark-bench")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", str(max(int(cpus) * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    return cli.build_spark(f"local[{cpus}]", {
+        "spark.sql.shuffle.partitions": str(max(int(cpus) * 2, 8)),
+        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        "spark.ui.enabled": "false"})
 
 
 def main() -> int:

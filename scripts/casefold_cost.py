@@ -67,12 +67,12 @@ def _jvm_pid() -> str:
 
 def _child(impl: str, text: str, n: int, reps: int) -> dict:
     sys.path.insert(0, ROOT)
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
     from tap_airbyte_wrapper_spark.casefold import lower
+    from tap_airbyte_wrapper_spark.cli import build_spark
 
-    spark = (SparkSession.builder.master("local[1]")
-             .config("spark.ui.enabled", "false").getOrCreate())
+    spark = build_spark("local[1]", {"spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
     pid, tck = _jvm_pid(), os.sysconf("SC_CLK_TCK")
 

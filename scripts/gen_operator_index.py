@@ -20,7 +20,7 @@ SECTIONS = [
                         "singer_io.py", "sync.py", "cli.py", "sinks.py"]),
     ("Sources", ["sources/base.py", "sources/files.py", "sources/jdbc.py",
                  "sources/rest.py", "sources/http.py",
-                 "sources/changelog.py", "sources/datasource.py"]),
+                 "sources/changelog.py"]),
     ("Relational operators", ["operators/joins.py", "operators/aggregates.py",
                               "operators/windows.py", "operators/setops.py",
                               "operators/merge.py", "operators/timeseries.py",

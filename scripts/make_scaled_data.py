@@ -22,10 +22,11 @@ from __future__ import annotations
 import os
 import sys
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tap_airbyte_wrapper_spark.cli import build_spark  # noqa: E402
 from tap_airbyte_wrapper_spark.sources.files import load_parquet  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
@@ -62,16 +63,10 @@ def main() -> int:
     out_dir = sys.argv[2]
     only = set(sys.argv[3:])  # empty = all tables
     k = max(1, round(target_sf / BASE_SF))
-    spark = (
-        SparkSession.builder.master(
-            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-        .appName("make-scaled-data")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "16g")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = build_spark(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
+                        {"spark.sql.shuffle.partitions": "32",
+                         "spark.driver.memory": "16g",
+                         "spark.ui.enabled": "false"})
     spark.sparkContext.setLogLevel("ERROR")
 
     strides = {

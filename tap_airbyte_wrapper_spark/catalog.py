@@ -158,21 +158,3 @@ class Catalog:
 
     def to_dict(self) -> dict[str, Any]:
         return {"streams": [s.to_dict() for s in self._streams.values()]}
-
-    @classmethod
-    def from_dict(cls, doc: dict[str, Any]) -> "Catalog":
-        cat = cls()
-        for s in doc.get("streams", []):
-            entry = StreamEntry(
-                name=s["name"],
-                schema=json_schema_to_struct(s.get("json_schema", {})),
-                primary_keys=s.get("primary_keys", []),
-                replication_key=s.get("replication_key"),
-                supported_sync_modes=s.get(
-                    "supported_sync_modes", [SyncMode.FULL_REFRESH]
-                ),
-                selected=s.get("selected", True),
-                sync_mode=s.get("sync_mode"),
-            )
-            cat.add(entry)
-        return cat

@@ -36,14 +36,23 @@ def _load_config(paths: list[str]) -> dict[str, Any]:
     return cfg
 
 
-def build_spark(app: str = "tap-airbyte-wrapper-spark") -> SparkSession:
-    return (
-        SparkSession.builder.appName(app)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .getOrCreate()
-    )
+def build_spark(master: str | None = None,
+                conf: dict[str, str] | None = None) -> SparkSession:
+    """The engine's SparkSession, the one session builder.
+
+    It applies the engine's settings (session time zone UTC, adaptive
+    execution with partition coalescing), then the caller's ``conf``,
+    which wins on a shared key, then ``master`` if given.
+    ``build_spark()`` is the CLI's session; tests, ``bench.py`` and the
+    scripts pass their master, memory and shuffle settings here."""
+    builder = SparkSession.builder.appName("tap-airbyte-wrapper-spark").config(
+        map={"spark.sql.session.timeZone": "UTC",
+             "spark.sql.adaptive.enabled": "true",
+             "spark.sql.adaptive.coalescePartitions.enabled": "true",
+             **(conf or {})})
+    if master is not None:
+        builder = builder.master(master)
+    return builder.getOrCreate()
 
 
 def print_spec_as_config(spec: dict[str, Any]) -> None:

@@ -72,11 +72,6 @@ def _let(value: Column, body) -> Column:
     return F.element_at(F.transform(F.array(value), body), 1)
 
 
-def _marker_hits(col: Column, words: list[str]) -> Column:
-    pattern = r"\b(" + "|".join(words) + r")\b"
-    return F.size(F.regexp_extract_all(lower(col), F.lit(pattern), 1))
-
-
 def _all_marker_matches(col: Column) -> Column:
     """ONE combined regex scan extracting every marker word of every
     language.  Both :func:`language_id` and :func:`quality_score` build on

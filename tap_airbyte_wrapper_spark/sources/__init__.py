@@ -5,7 +5,5 @@ from . import changelog as _changelog  # noqa: F401 - registration side effect
 from . import files as _files  # noqa: F401
 from . import jdbc as _jdbc    # noqa: F401
 from . import rest as _rest    # noqa: F401
-from .datasource import HttpJsonDataSource, register_http_json
 
-__all__ = ["Source", "SourceError", "get_source", "list_sources", "register",
-           "HttpJsonDataSource", "register_http_json"]
+__all__ = ["Source", "SourceError", "get_source", "list_sources", "register"]

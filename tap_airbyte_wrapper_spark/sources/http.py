@@ -3,9 +3,9 @@
 The reference exercises authed HTTPS file sources and a paginated REST
 API through connectors (reference tests/test_syncs.py:83-124, 183-235);
 the connector handles credentials and rate limits.  Spark-native, the
-fetches run executor-side (``rest.py`` mapInPandas / ``datasource.py``
-partitions), so this module is deliberately dependency-free stdlib code
-that serializes cleanly into tasks:
+fetches run executor-side (``rest.py`` mapInPandas), so this module is
+deliberately dependency-free stdlib code that serializes cleanly into
+tasks:
 
 * auth schemes (Airbyte-style config)::
 

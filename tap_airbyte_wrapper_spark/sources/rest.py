@@ -13,11 +13,6 @@ Offline testability: ``records`` (inline fixtures) and ``file://`` URLs
 work without network; http(s) uses stdlib urllib (no extra deps).
 Auth (bearer/basic/header) and 429/5xx retry-with-backoff live in
 ``sources/http.py`` and apply per fetch — also executor-side.
-
-See also ``sources/datasource.py`` for the Spark 4 Python Data Source
-form of the same capability (``spark.read.format("http_json")``) where
-the page list IS the partition list — preferred when the consumer wants
-a first-class reader instead of the Source/Catalog lifecycle.
 """
 
 from __future__ import annotations

@@ -1,24 +1,17 @@
 import os
 
 import pytest
-from pyspark.sql import SparkSession
+
+from tap_airbyte_wrapper_spark.cli import build_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("tap-airbyte-wrapper-spark-tests")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
-    )
-    yield s
+    yield build_spark("local[4]", {"spark.sql.shuffle.partitions": "8",
+                                   "spark.ui.enabled": "false",
+                                   "spark.driver.memory": "4g"})
 
 
 @pytest.fixture(scope="session")

@@ -78,13 +78,12 @@ def test_lower_argument_evaluated_once_in_a_projection(spark):
 
 _FRESH_JVM = r"""
 import json
-from pyspark.sql import SparkSession
+from tap_airbyte_wrapper_spark.cli import build_spark
 from tap_airbyte_wrapper_spark.functions import exact_dedup
 from tap_airbyte_wrapper_spark.sources.changelog import normalize_changes
 
-spark = (SparkSession.builder.master("local[1]")
-         .config("spark.ui.enabled", "false")
-         .config("spark.driver.memory", "512m").getOrCreate())
+spark = build_spark("local[1]", {"spark.ui.enabled": "false",
+                                 "spark.driver.memory": "512m"})
 jvm = spark._jvm
 unsafe_field = jvm.java.lang.Class.forName(
     "sun.misc.Unsafe").getDeclaredField("theUnsafe")

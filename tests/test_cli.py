@@ -1,8 +1,13 @@
 """CLI flag parity tests (reference tap.py:211-311, 498-522)."""
 
 import json
+import os
+import pathlib
+import re
 
 from tap_airbyte_wrapper_spark.cli import main, print_spec_as_config
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_version(capsys):
@@ -158,3 +163,26 @@ def test_cli_backfill_unknown_ref_stream_is_friendly(tmp_path, capsys):
     assert rc == 1
     err = capsys.readouterr().err
     assert "no_such_stream" in err and "Traceback" not in err
+
+
+def test_cli_build_spark_is_the_only_session_builder():
+    """Every session outside the benchmark harness comes from
+    ``cli.build_spark``, so the engine's settings live in one place."""
+    builder = re.compile(r"SparkSession\s*\.\s*builder")
+    found = []
+    for dirpath, dirs, files in os.walk(ROOT):
+        dirs[:] = [d for d in dirs
+                   if not d.startswith(".") and d != "perfbench"]
+        for name in files:
+            path = os.path.join(dirpath, name)
+            if name.endswith(".py") and builder.search(
+                    pathlib.Path(path).read_text(encoding="utf-8")):
+                found.append(os.path.relpath(path, ROOT))
+    assert found == [os.path.join("tap_airbyte_wrapper_spark", "cli.py")]
+
+
+def test_spark_fixture_carries_the_test_settings(spark):
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    assert spark.sparkContext.master == "local[4]"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == "4g"

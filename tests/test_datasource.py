@@ -1,22 +1,3 @@
-import json
-def test_http_json_datasource(spark, tmp_path):
-    from tap_airbyte_wrapper_spark.sources import register_http_json
-    pages = []
-    for p in range(3):
-        f = tmp_path / f"page{p}.json"
-        f.write_text(json.dumps({"results": [
-            {"id": p * 10 + i, "name": f"r{p}-{i}"} for i in range(4)]}))
-        pages.append(f"file://{f}")
-    register_http_json(spark)
-    df = (spark.read.format("http_json")
-          .schema("id BIGINT, name STRING")
-          .option("urls", ",".join(pages))
-          .option("records_key", "results").load())
-    assert df.rdd.getNumPartitions() == 3      # one task per page
-    rows = sorted((r.id, r.name) for r in df.collect())
-    assert len(rows) == 12 and rows[0] == (0, "r0-0") and rows[-1] == (23, "r2-3")
-
-
 # ---------------------------------------------------------------- binaryFile
 
 

@@ -143,19 +143,3 @@ def test_rest_source_wrong_creds_surface_as_source_error(spark, server):
     })
     with pytest.raises(SourceError, match="HTTP 401"):
         src.discover(spark)
-
-
-def test_http_json_datasource_auth_options(spark, server):
-    from tap_airbyte_wrapper_spark.sources import register_http_json
-
-    register_http_json(spark)
-    df = (spark.read.format("http_json")
-          .schema("id BIGINT, page BIGINT")
-          .option("base_url", f"{server}/data?page={{page}}")
-          .option("pages", "2")
-          .option("records_key", "results")
-          .option("auth_type", "bearer")
-          .option("auth_token", TOKEN)
-          .load())
-    assert {(r.id, r.page) for r in df.collect()} == {
-        (p * 10 + i, p) for p in range(2) for i in range(3)}
