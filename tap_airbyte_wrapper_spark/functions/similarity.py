@@ -83,8 +83,7 @@ def cosine_pairs(a: Column, b: Column) -> Column:
 
     @pandas_udf("double")
     def _cos(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        ma = np.stack(xs.to_numpy()).astype("float64")
-        mb = np.stack(ys.to_numpy()).astype("float64")
+        ma, mb = _stack(xs), _stack(ys)
         num = np.einsum("ij,ij->i", ma, mb)
         den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
         return pd.Series(num / den)
@@ -258,12 +257,12 @@ def _cosine_score_queries(
             "explicitly.")
     q_rows = queries.select(id_col, vec_col).collect()
     q_ids = [r[0] for r in q_rows]
-    qm = np.stack([np.asarray(r[1], dtype="float64") for r in q_rows])
+    qm = _stack([r[1] for r in q_rows])
     qm /= np.linalg.norm(qm, axis=1, keepdims=True)
 
     @pandas_udf("array<double>")
     def cos_all(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype("float64")
+        m = _stack(vecs)
         m /= np.linalg.norm(m, axis=1, keepdims=True)
         return pd.Series(list(m @ qm.T))
 
@@ -418,8 +417,7 @@ def hyperplane_signature(vec_col: str, planes, bands: int = 4) -> Column:
 
     @pandas_udf("array<long>")
     def sig(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy()).astype("float64")      # n x dim
-        return pd.Series(_pack_signatures(mat, plane_mat, bands))
+        return pd.Series(_pack_signatures(_stack(vecs), plane_mat, bands))
 
     return sig(F.col(vec_col))
 
@@ -515,7 +513,7 @@ def embedding_near_dup_pairs(
 
     pdf = df.select(id_col, vec_col).toPandas()
     ids = pdf[id_col].to_numpy()
-    mat = np.stack(pdf[vec_col].to_numpy()).astype("float64")
+    mat = _stack(pdf[vec_col])
     mat /= np.linalg.norm(mat, axis=1, keepdims=True)
     bc = df.sparkSession.sparkContext.broadcast((ids, mat))
 
@@ -524,7 +522,7 @@ def embedding_near_dup_pairs(
         for p in batches:
             if not len(p):
                 continue
-            m = np.stack(p[vec_col].to_numpy()).astype("float64")
+            m = _stack(p[vec_col])
             m /= np.linalg.norm(m, axis=1, keepdims=True)
             sims = m @ b_mat.T                      # batch x corpus
             rows, cols = np.nonzero(
@@ -545,6 +543,89 @@ def _planes(bits: int, dim: int, seed: int) -> np.ndarray:
     return rng.standard_normal((bits, dim))
 
 
+# ---------------------------------------------------------------------------
+# The vector kernel.  Every IVF / PQ / IVF-PQ / OPQ / k-means site builds,
+# assigns and encodes through these helpers: one row normalization, one
+# training sample, one codeword assignment, one PQ encoder.
+# ---------------------------------------------------------------------------
+
+def _stack(vecs) -> "np.ndarray":
+    """Vectors (a pandas Series of arrays, or a list of them) as one
+    float64 ``(n, d)`` matrix."""
+    return np.stack(vecs).astype("float64")
+
+
+def _unit_rows(mat: "np.ndarray") -> "np.ndarray":
+    """The one row-normalization rule: each row over its L2 norm, and a
+    zero row stays zero.  Every model-building, assignment and probing
+    path uses it — a zero vector divided by its norm would be a NaN row,
+    and one NaN centroid sends every row to one IVF cell.
+
+    The scoring sites return a cosine, so their zero-vector output is
+    part of their result and they keep their own norm (a zero vector
+    scores NaN): :func:`cosine_pairs`, :func:`_cosine_score_queries`
+    and :func:`embedding_near_dup_pairs` (exact path)."""
+    norms = np.linalg.norm(mat, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    return mat / norms
+
+
+def _renormalize(cent: "np.ndarray", c: int, v: "np.ndarray") -> None:
+    """Spherical k-means' centroid update: centroid ``c`` becomes ``v``
+    scaled to unit length; a zero ``v`` keeps the previous centroid."""
+    n = np.linalg.norm(v)
+    if n > 0:
+        cent[c] = v / n
+
+
+def _hash_sample(corpus: DataFrame, id_col: str, cols: list, n: int,
+                 seed: int) -> list:
+    """The one training sample: the ``n`` rows of ``corpus`` with the
+    smallest ``xxhash64(id, seed)``, as rows of ``cols`` in hash order.
+
+    A bare ``limit()`` pulls whole partitions in layout order, which at
+    100 TB means one source/time-range trains every centroid.  Hash
+    order is uniform over the corpus whatever the partition layout,
+    deterministic across restarts (content-keyed, the discipline of
+    sampling.py's md5-bucket splits), and plans as
+    TakeOrderedAndProject (per-partition top-k + driver merge), not a
+    global sort.  The top-k runs over (id, hash) ONLY — carrying the
+    vectors through the per-partition heaps copies dim floats per
+    comparison (measured ~3x ivf_build wall at sf0.1); the winners'
+    rows come back via a broadcast semi-join on the sampled ids, and
+    are re-sorted by hash because k-means init reads rows by
+    position."""
+    hk = F.xxhash64(F.col(id_col), F.lit(seed)).alias("__hk")
+    ids = (corpus.select(F.col(id_col), hk).orderBy("__hk").limit(n)
+           .select(id_col))
+    return (corpus.join(F.broadcast(ids), on=id_col, how="left_semi")
+            .select(*cols, hk).orderBy("__hk").select(*cols).collect())
+
+
+def _nearest_cells(unit: "np.ndarray", cent: "np.ndarray",
+                   n: int) -> "np.ndarray":
+    """The one probe order: per unit row, the ``n`` cells whose
+    centroids score highest, best first."""
+    return np.argsort(-(unit @ cent.T), axis=1)[:, :n]
+
+
+def _nearest_codes(sub: "np.ndarray", books: "np.ndarray") -> "np.ndarray":
+    """The one codeword assignment: per row of ``sub``, the index of the
+    L2-nearest row of ``books``, by the expanded form
+    ``|x|^2 - 2 x.c + |c|^2`` (one matmul per call)."""
+    d2 = ((sub ** 2).sum(1, keepdims=True)
+          - 2 * sub @ books.T + (books ** 2).sum(1))
+    return np.argmin(d2, axis=1)
+
+
+def _pq_codes(mat: "np.ndarray", books: "np.ndarray") -> "np.ndarray":
+    """``(n, m)`` int16 codes: each row's nearest codeword in each of the
+    ``m`` sub-spaces of ``books`` (``m x ks x dsub``)."""
+    dsub = books.shape[2]
+    return np.stack([_nearest_codes(mat[:, j * dsub:(j + 1) * dsub], books[j])
+                     for j in range(len(books))], axis=1).astype("int16")
+
+
 def _kmeans_centroids(mat: "np.ndarray", k: int, iters: int, seed: int):
     """Plain Lloyd's k-means on a (sampled) matrix — centroids are tiny
     (k x dim), so training is a driver-side numpy loop by design."""
@@ -555,10 +636,7 @@ def _kmeans_centroids(mat: "np.ndarray", k: int, iters: int, seed: int):
         for c in range(len(cent)):
             members = mat[assign == c]
             if len(members):
-                m = members.mean(axis=0)
-                n = np.linalg.norm(m)
-                if n > 0:
-                    cent[c] = m / n
+                _renormalize(cent, c, members.mean(axis=0))
     return cent
 
 
@@ -598,9 +676,8 @@ def _centroid_df(spark, cent: "np.ndarray") -> DataFrame:
 def _cell_udf(cent: "np.ndarray"):
     @pandas_udf("int")
     def cell_of(vecs: pd.Series) -> pd.Series:
-        m = np.stack(vecs.to_numpy()).astype("float64")
-        m /= np.linalg.norm(m, axis=1, keepdims=True)
-        return pd.Series(np.argmax(m @ cent.T, axis=1).astype("int32"))
+        return pd.Series(np.argmax(_unit_rows(_stack(vecs)) @ cent.T,
+                                   axis=1).astype("int32"))
 
     return cell_of
 
@@ -620,40 +697,11 @@ def ivf_build(
     vector to its nearest cell (one numpy matmul per Arrow batch).
     With ``path``, persist the centroids next to a cell-partitioned
     ``ivf`` index of the store (``index_store``: delete and compact
-    are the shared ``index_delete`` / ``index_compact``).
-
-    The training sample is the ``train_sample`` rows with the smallest
-    ``xxhash64(id, seed)`` — a bare ``limit()`` pulls whole partitions
-    in layout order, which at 100 TB means one source/time-range trains
-    every centroid (round-4 advice).  Hash order is uniform over the
-    corpus regardless of partition layout, deterministic across
-    restarts (content-keyed, same discipline as sampling.py's
-    md5-bucket splits), and plans as TakeOrderedAndProject
-    (per-partition top-k + driver merge), not a global sort.  The
-    top-k runs over (id, hash) ONLY — carrying the vector through the
-    per-partition heaps copies dim floats per comparison (measured
-    ~3x ivf_build wall at sf0.1); the winners' vectors come back via a
-    broadcast semi-join on the sampled ids instead."""
+    are the shared ``index_delete`` / ``index_compact``).  The
+    training sample is :func:`_hash_sample`'s ``train_sample`` rows."""
     corpus = corpus.filter(F.col(vec_col).isNotNull())
-    sampled_ids = (
-        corpus.select(F.col(id_col),
-                      F.xxhash64(F.col(id_col), F.lit(seed)).alias("__hk"))
-        .orderBy("__hk")
-        .limit(train_sample)
-        .select(id_col)
-    )
-    sample = (
-        corpus.join(F.broadcast(sampled_ids), on=id_col, how="left_semi")
-        .select(F.col(vec_col),
-                F.xxhash64(F.col(id_col), F.lit(seed)).alias("__hk"))
-        # k-means init reads rows by position: re-sort the (small)
-        # sample so training is row-order deterministic across layouts
-        .orderBy("__hk")
-        .select(vec_col)
-        .toPandas()
-    )
-    mat = np.stack(sample[vec_col].to_numpy()).astype("float64")
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    rows = _hash_sample(corpus, id_col, [vec_col], train_sample, seed)
+    mat = _unit_rows(_stack([r[0] for r in rows]))
     cent = _kmeans_centroids(mat, n_clusters, kmeans_iters, seed)
     assigned = corpus.select(
         F.col(id_col), F.col(vec_col),
@@ -781,9 +829,7 @@ def ivf(index: IvfIndex, n_probe: int = 4):
     def candidates(corpus, queries, c):
         @pandas_udf("array<int>")
         def probes_of(vecs: pd.Series) -> pd.Series:
-            m = np.stack(vecs.to_numpy()).astype("float64")
-            m /= np.linalg.norm(m, axis=1, keepdims=True)
-            order = np.argsort(-(m @ cent.T), axis=1)[:, :n_probe]
+            order = _nearest_cells(_unit_rows(_stack(vecs)), cent, n_probe)
             return pd.Series(list(order.astype("int32")))
 
         q = queries.filter(F.col(c.vec).isNotNull()).select(
@@ -833,7 +879,7 @@ def lsh(bits: int = 32, bands: int = 4, seed: int = 42):
             return corpus.select(
                 F.lit(None).cast(qid_type).alias(c.qid), c.id, c.vec,
                 F.lit(None).cast(qvec_type).alias("__qvec")).limit(0)
-        qmat = np.stack(qpdf[c.vec].to_numpy()).astype("float64")
+        qmat = _stack(qpdf[c.vec])
         planes = _planes(bits, qmat.shape[1], seed)
         qsigs = _pack_signatures(qmat, planes, bands)
         spark = corpus.sparkSession
@@ -1085,9 +1131,8 @@ def pq_train(
     seed: int = 42,
 ) -> PqModel:
     """Train the ``m`` sub-quantizers on a bounded, hash-ordered sample
-    (same unbiased-sampling discipline as :func:`ivf_build`: smallest
-    ``xxhash64(id, seed)`` wins — partition-layout-independent,
-    restart-deterministic, plans as TakeOrderedAndProject).  Training
+    (:func:`_hash_sample`: smallest ``xxhash64(id, seed)`` wins —
+    partition-layout-independent, restart-deterministic).  Training
     is driver-side numpy by design: the model is ``m * ks * dsub``
     floats (bounded by parameters, never by the corpus), and each
     sub-quantizer is a standard Lloyd's k-means over the sample's
@@ -1095,25 +1140,9 @@ def pq_train(
     summed sub-space inner products approximate full cosine."""
     if m < 1 or ks < 2 or ks > 256:
         raise ValueError(f"need m >= 1 and 2 <= ks <= 256, got m={m} ks={ks}")
-    corpus = corpus.filter(F.col(vec_col).isNotNull())
-    sampled_ids = (
-        corpus.select(F.col(id_col),
-                      F.xxhash64(F.col(id_col), F.lit(seed)).alias("__hk"))
-        .orderBy("__hk")
-        .limit(train_sample)
-        .select(id_col)
-    )
-    rows = (
-        corpus.join(F.broadcast(sampled_ids), on=id_col, how="left_semi")
-        .select(F.col(vec_col),
-                F.xxhash64(F.col(id_col), F.lit(seed)).alias("__hk"))
-        .orderBy("__hk")
-        .collect()
-    )
-    mat = np.stack([np.asarray(r[0], dtype="float64") for r in rows])
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    mat = mat / norms
+    rows = _hash_sample(corpus.filter(F.col(vec_col).isNotNull()), id_col,
+                        [vec_col], train_sample, seed)
+    mat = _unit_rows(_stack([r[0] for r in rows]))
     return PqModel(codebooks=_train_codebooks(mat, m, ks, kmeans_iters, seed))
 
 
@@ -1133,11 +1162,9 @@ def _train_codebooks(mat: "np.ndarray", m: int, ks: int,
         cent = sub[rng.choice(len(sub), size=min(ks, len(sub)),
                               replace=False)].copy()
         for _ in range(kmeans_iters):
-            # L2 assignment via the expanded form; sub-space means are
-            # NOT re-normalized (PQ codewords live in the sub-space)
-            d2 = ((sub ** 2).sum(1, keepdims=True)
-                  - 2 * sub @ cent.T + (cent ** 2).sum(1))
-            assign = np.argmin(d2, axis=1)
+            # sub-space means are NOT re-normalized (PQ codewords live
+            # in the sub-space)
+            assign = _nearest_codes(sub, cent)
             for c in range(len(cent)):
                 members = sub[assign == c]
                 if len(members):
@@ -1159,25 +1186,31 @@ def pq_encode(
     Encoding is stateless given the model, so a growing corpus appends
     by encoding just the delta — no index maintenance machinery needed
     (contrast :func:`ivf_append`, which must respect cell layout)."""
+    return df.select(F.col(id_col),
+                     _pq_encoder(model)(F.col(vec_col)).alias(out_col))
+
+
+def _pq_encoder(model: PqModel, centroids: "np.ndarray | None" = None):
+    """The one PQ encoder UDF: unit-normalize each vector and emit its
+    nearest codeword per sub-space as ``array<smallint>``.  With
+    ``centroids`` (residual IVF-PQ) the UDF also takes the ``__cell``
+    column and encodes ``unit(v) - centroids[cell]``."""
     books = model.codebooks.copy()
-    msub, dsub = model.m, model.dsub
+    if centroids is None:
+        @pandas_udf("array<smallint>")
+        def enc(vecs: pd.Series) -> pd.Series:
+            return pd.Series(list(_pq_codes(_unit_rows(_stack(vecs)),
+                                            books)))
+
+        return enc
 
     @pandas_udf("array<smallint>")
-    def enc(vecs: pd.Series) -> pd.Series:
-        matv = np.stack(vecs.to_numpy()).astype("float64")
-        n = np.linalg.norm(matv, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        matv = matv / n
-        codes = np.empty((len(matv), msub), dtype="int16")
-        for j in range(msub):
-            sub = matv[:, j * dsub:(j + 1) * dsub]
-            cent = books[j]
-            d2 = ((sub ** 2).sum(1, keepdims=True)
-                  - 2 * sub @ cent.T + (cent ** 2).sum(1))
-            codes[:, j] = np.argmin(d2, axis=1).astype("int16")
-        return pd.Series(list(codes))
+    def enc_residual(vecs: pd.Series, cells: pd.Series) -> pd.Series:
+        res = (_unit_rows(_stack(vecs))
+               - centroids[cells.to_numpy().astype("int64")])
+        return pd.Series(list(_pq_codes(res, books)))
 
-    return df.select(F.col(id_col), enc(F.col(vec_col)).alias(out_col))
+    return enc_residual
 
 
 def _adc_kernel(queries: DataFrame, id_col: str, vec_col: str,
@@ -1190,10 +1223,7 @@ def _adc_kernel(queries: DataFrame, id_col: str, vec_col: str,
     table ``LUT[q, j, code]`` (inner product of query sub-vector ``j``
     with each codeword) is built driver-side and rides the closure."""
     qrows = queries.select(F.col(id_col), F.col(vec_col)).collect()
-    qmat = np.stack([np.asarray(r[1], dtype="float64") for r in qrows])
-    qn = np.linalg.norm(qmat, axis=1, keepdims=True)
-    qn[qn == 0] = 1.0
-    qmat = qmat / qn
+    qmat = _unit_rows(_stack([r[1] for r in qrows]))
     books, dsub = model.codebooks, model.dsub
     lut = np.stack([qmat[:, j * dsub:(j + 1) * dsub] @ books[j].T
                     for j in range(model.m)], axis=1)     # (nq, m, ks)
@@ -1302,24 +1332,14 @@ def kmeans_fit(
     collects ``k * (d + 1)`` doubles (same dimension-bounded contract
     as ``fit_pca``).  Initialization is a driver k-means on the
     hash-ordered unbiased sample (``ivf_build`` discipline) so the
-    distributed loop starts from a reasonable partition.  Empty
-    clusters keep their previous centroid.
+    distributed loop starts from a reasonable partition.  Rows are
+    unit-normalized by :func:`_unit_rows` (a zero row stays zero).
+    Empty clusters keep their previous centroid.
     """
     corpus = df.filter(F.col(vec_col).isNotNull())
-    sampled_ids = (
-        corpus.select(F.col(id_col),
-                      F.xxhash64(F.col(id_col), F.lit(seed)).alias("__hk"))
-        .orderBy("__hk").limit(init_sample).select(id_col)
-    )
-    rows = (
-        corpus.join(F.broadcast(sampled_ids), on=id_col, how="left_semi")
-        .select(F.col(vec_col),
-                F.xxhash64(F.col(id_col), F.lit(seed)).alias("__hk"))
-        .orderBy("__hk").collect()
-    )
-    mat = np.stack([np.asarray(r[0], dtype="float64") for r in rows])
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-    cent = _kmeans_centroids(mat, k, iters=3, seed=seed)
+    rows = _hash_sample(corpus, id_col, [vec_col], init_sample, seed)
+    cent = _kmeans_centroids(_unit_rows(_stack([r[0] for r in rows])), k,
+                             iters=3, seed=seed)
 
     d = cent.shape[1]
     for _ in range(iters):
@@ -1331,9 +1351,7 @@ def kmeans_fit(
             for pdf in batches:
                 if not len(pdf):
                     continue
-                m = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-                m /= np.maximum(
-                    np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+                m = _unit_rows(_stack(pdf[vec_col]))
                 assign = np.argmax(m @ books.T, axis=1)
                 np.add.at(sums, assign, m)
                 np.add.at(counts, assign, 1)
@@ -1363,10 +1381,7 @@ def kmeans_fit(
                 sums[r["cell"], r["idx"]] = r["v"]
         for c in range(len(cent)):
             if counts[c] > 0:
-                v = sums[c] / counts[c]
-                n = np.linalg.norm(v)
-                if n > 0:
-                    cent[c] = v / n
+                _renormalize(cent, c, sums[c] / counts[c])
     return cent
 
 
@@ -1502,22 +1517,12 @@ def ivfpq_train_residual(
     on the fine structure the coarse cells can't express (measured
     here: ~1.5-1.8x lower reconstruction error on the planted-cluster
     fixture, tests/test_pq.py — the gap widens as cluster count
-    outgrows the codebook budget).  Sampling follows :func:`pq_train`'s
-    hash-ordered unbiased discipline; the sample collect is bounded by
-    ``train_sample``."""
-    rows = (
-        index.assigned.select(
-            F.col(index.vec_col), F.col("__cell"),
-            F.xxhash64(F.col(index.id_col), F.lit(seed)).alias("__hk"))
-        .orderBy("__hk")
-        .limit(train_sample)
-        .collect()
-    )
-    mat = np.stack([np.asarray(r[0], dtype="float64") for r in rows])
+    outgrows the codebook budget).  The sample is
+    :func:`_hash_sample`'s, bounded by ``train_sample``."""
+    rows = _hash_sample(index.assigned, index.id_col,
+                        [index.vec_col, "__cell"], train_sample, seed)
     cells = np.array([r[1] for r in rows], dtype="int64")
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    res = mat / norms - index.centroids[cells]
+    res = _unit_rows(_stack([r[0] for r in rows])) - index.centroids[cells]
     return PqModel(codebooks=_train_codebooks(
         res, m, ks, kmeans_iters, seed))
 
@@ -1537,44 +1542,14 @@ def ivfpq_encode(
     ``residual=True`` encodes ``normalized(v) - centroid[cell]`` with a
     residual-trained model (:func:`ivfpq_train_residual`) — pass the
     SAME flag to :func:`ivfpq` so the ADC adds the coarse term
-    back."""
-    books = model.codebooks.copy()
-    msub, dsub = model.m, model.dsub
-    cent_mat = index.centroids if residual else None
-
-    def _encode_mat(matv: "np.ndarray") -> "np.ndarray":
-        codes = np.empty((len(matv), msub), dtype="int16")
-        for j in range(msub):
-            sub = matv[:, j * dsub:(j + 1) * dsub]
-            cb = books[j]
-            d2 = ((sub ** 2).sum(1, keepdims=True)
-                  - 2 * sub @ cb.T + (cb ** 2).sum(1))
-            codes[:, j] = np.argmin(d2, axis=1).astype("int16")
-        return codes
-
+    back.  ``residual=False`` encodes exactly as :func:`pq_encode`."""
     if residual:
-        @pandas_udf("array<smallint>")
-        def enc_res(vecs: pd.Series, cell_s: pd.Series) -> pd.Series:
-            matv = np.stack(vecs.to_numpy()).astype("float64")
-            n = np.linalg.norm(matv, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            matv = matv / n - cent_mat[cell_s.to_numpy().astype("int64")]
-            return pd.Series(list(_encode_mat(matv)))
-
-        code_expr = enc_res(F.col(index.vec_col), F.col("__cell"))
+        code = _pq_encoder(model, index.centroids)(
+            F.col(index.vec_col), F.col("__cell"))
     else:
-        @pandas_udf("array<smallint>")
-        def enc(vecs: pd.Series) -> pd.Series:
-            matv = np.stack(vecs.to_numpy()).astype("float64")
-            n = np.linalg.norm(matv, axis=1, keepdims=True)
-            n[n == 0] = 1.0
-            return pd.Series(list(_encode_mat(matv / n * 1.0)))
-
-        code_expr = enc(F.col(index.vec_col))
-
+        code = _pq_encoder(model)(F.col(index.vec_col))
     return index.assigned.select(
-        F.col(index.id_col), F.col("__cell"),
-        code_expr.alias(code_col))
+        F.col(index.id_col), F.col("__cell"), code.alias(code_col))
 
 
 def ivfpq(
@@ -1604,8 +1579,7 @@ def ivfpq(
         coded = (codes if codes is not None
                  else ivfpq_encode(index, model, residual=residual))
         qmat, qid_arr, adc = _adc_kernel(queries, c.id, c.vec, model)
-        sims = qmat @ cent.T
-        probes = np.argsort(-sims, axis=1)[:, :n_probe]   # (nq, n_probe)
+        probes = _nearest_cells(qmat, cent, n_probe)      # (nq, n_probe)
         all_cells = sorted({int(x) for row in probes for x in row})
         # per-query probe sets as a literal map: query index -> cells
         probe_map = F.array(*[
@@ -1628,6 +1602,7 @@ def ivfpq(
             # the residual term, so add back the per-(query, cell)
             # coarse dot product — an nq x n_clusters literal lookup,
             # JVM-side
+            sims = qmat @ cent.T
             coarse = F.array(*[
                 F.array(*[F.lit(round(float(sims[i, j]), 6))
                           for j in range(len(cent))])
@@ -1668,7 +1643,7 @@ def opq_train(
     candidates score rotated queries.
 
     Training is the paper's alternating minimization on the bounded
-    hash-ordered sample (the :func:`pq_train` discipline): fix R ->
+    :func:`_hash_sample` (as :func:`pq_train`): fix R ->
     k-means each sub-space; fix codebooks -> R from the SVD of
     ``X^T Y`` (Procrustes solution, X = data, Y = reconstructions).
     All driver-side numpy on ``train_sample`` rows; the model is
@@ -1676,35 +1651,21 @@ def opq_train(
     corpus-bounded.  Verified in tests: rotated-space reconstruction
     error is never worse than plain PQ (equal when data is already
     axis-aligned), and full-width search stays exact-by-construction."""
-    rows = (
-        corpus.filter(F.col(vec_col).isNotNull())
-        .select(F.col(vec_col),
-                F.xxhash64(F.col(id_col), F.lit(seed)).alias("__hk"))
-        .orderBy("__hk")
-        .limit(train_sample)
-        .collect()
-    )
-    mat = np.stack([np.asarray(r[0], dtype="float64") for r in rows])
-    norms = np.linalg.norm(mat, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    mat = mat / norms
+    rows = _hash_sample(corpus.filter(F.col(vec_col).isNotNull()), id_col,
+                        [vec_col], train_sample, seed)
+    mat = _unit_rows(_stack([r[0] for r in rows]))
     d = mat.shape[1]
     if d % m:
         raise ValueError(f"dim {d} not divisible by m={m}")
-    dsub = d // m
     R = np.eye(d)
     books = None
     for _ in range(opq_iters):
         rot = mat @ R
         books = _train_codebooks(rot, m, ks, kmeans_iters, seed)
         # reconstruction in rotated space
-        recon = np.empty_like(rot)
-        for j in range(m):
-            sub = rot[:, j * dsub:(j + 1) * dsub]
-            cb = books[j]
-            d2 = ((sub ** 2).sum(1, keepdims=True)
-                  - 2 * sub @ cb.T + (cb ** 2).sum(1))
-            recon[:, j * dsub:(j + 1) * dsub] = cb[np.argmin(d2, axis=1)]
+        codes = _pq_codes(rot, books)
+        recon = np.concatenate([books[j][codes[:, j]] for j in range(m)],
+                               axis=1)
         # Procrustes: R = argmin ||X R - recon||_F over orthonormal R
         u, _, vt = np.linalg.svd(mat.T @ recon)
         R = u @ vt
@@ -1729,10 +1690,7 @@ def opq_rotate(
 
     @pandas_udf("array<double>")
     def apply_rot(vecs: pd.Series) -> pd.Series:
-        matv = np.stack(vecs.to_numpy()).astype("float64")
-        n = np.linalg.norm(matv, axis=1, keepdims=True)
-        n[n == 0] = 1.0
-        return pd.Series(list(matv / n @ rot))
+        return pd.Series(list(_unit_rows(_stack(vecs)) @ rot))
 
     return df.select(F.col(id_col), apply_rot(F.col(vec_col)).alias(out_col))
 

@@ -46,17 +46,19 @@ from pyspark.sql import DataFrame, functions as F
 __all__ = ["pagerank", "degrees", "triangle_count", "label_propagation"]
 
 def degrees(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
-    """(node, out_deg, in_deg) over the DISTINCT edge set."""
+    """(node, out_deg, in_deg) over the DISTINCT edge set.
+
+    Each edge adds ``(src, out=1)`` and ``(dst, in=1)``, so ONE group-by
+    on the node yields both degrees: no per-side aggregate and no full
+    outer join."""
     e = edges.select(F.col(src_col).alias("src"),
                      F.col(dst_col).alias("dst")).distinct()
-    out = e.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("out_deg"))
-    inn = e.groupBy(F.col("dst").alias("node")).agg(
-        F.count(F.lit(1)).alias("in_deg"))
-    return (out.join(inn, "node", "full")
-            .select("node",
-                    F.coalesce("out_deg", F.lit(0)).alias("out_deg"),
-                    F.coalesce("in_deg", F.lit(0)).alias("in_deg")))
+    ends = (e.select(F.col("src").alias("node"), F.lit(1).alias("o"),
+                     F.lit(0).alias("i"))
+            .unionByName(e.select(F.col("dst").alias("node"),
+                                  F.lit(0).alias("o"), F.lit(1).alias("i"))))
+    return ends.groupBy("node").agg(F.sum("o").alias("out_deg"),
+                                    F.sum("i").alias("in_deg"))
 
 
 def pagerank(

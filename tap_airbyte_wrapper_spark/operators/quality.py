@@ -27,6 +27,7 @@ stop — never a scan per column.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
@@ -247,9 +248,9 @@ def validate_expectations(
     if not aggs and not fk_rules:
         raise ValueError("no expectations given")
     all_rules = row_rules + uniq_rules + tbl_rules
+    frames = []
     if aggs:
-        wide = df.agg(*aggs)
-        stacked = wide.select(
+        frames.append(df.agg(*aggs).select(
             F.expr(
                 "stack({n}, {args}) as (expectation, n_violations)".format(
                     n=len(all_rules),
@@ -257,12 +258,9 @@ def validate_expectations(
                         f"'{e.name}', `__v_{e.name}`" for e in all_rules),
                 )
             )
-        )
-    else:
-        stacked = df.sparkSession.createDataFrame(
-            [], "expectation string, n_violations long")
+        ))
     for e in fk_rules:
-        viol = (
+        frames.append(
             df.select(F.col(e.column).alias("__k"))
             .filter(F.col("__k").isNotNull())
             .join(e.ref.select(F.col(e.ref_col).alias("__k")).distinct(),
@@ -271,7 +269,7 @@ def validate_expectations(
             .select(F.lit(e.name).alias("expectation"),
                     F.col("n_violations"))
         )
-        stacked = stacked.unionByName(viol)
+    stacked = reduce(DataFrame.unionByName, frames)
     kinds = F.split(F.col("expectation"), ":")
     return stacked.select(
         "expectation",

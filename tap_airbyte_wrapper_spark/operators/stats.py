@@ -1278,61 +1278,7 @@ def icc_2_1(df: DataFrame, item_col: str, rater_col: str,
     no collect beyond the final scalars.  Output: ONE row
     ``(n_items, k_raters, n_dropped, bms, jms, ems, icc)`` (nulls when
     fewer than 2 items/raters survive or the grid degenerates)."""
-    from pyspark.sql import Window
-
-    spark = df.sparkSession
-    cells = (df.filter(F.col(item_col).isNotNull()
-                       & F.col(rater_col).isNotNull()
-                       & F.col(score_col).isNotNull())
-             .groupBy(F.col(item_col).alias("__it"),
-                      F.col(rater_col).alias("__r"))
-             .agg(F.avg(F.col(score_col).cast("double")).alias("__x"))
-             # item x rater-bounded; the k/item-count aggregate and the
-             # completeness window BOTH consume it — unmaterialized,
-             # each action re-ran the input scan + union + cell
-             # aggregate (round 14: 3 input scans -> 1)
-             .localCheckpoint(eager=True))
-    # duplicates per (item, rater) collapse to their mean, so the
-    # completeness window-count below counts RATERS, not rows; the
-    # total distinct-item count rides the same action (it only feeds
-    # n_dropped, and saves the third scan the standalone count paid)
-    card = cells.agg(F.countDistinct("__r").alias("k"),
-                     F.countDistinct("__it").alias("it")).first()
-    k = int(card["k"] or 0)
-    total_items = int(card["it"] or 0)
-    kept = (cells
-            .withColumn("__cnt", F.count(F.lit(1)).over(
-                Window.partitionBy("__it")))
-            .filter(F.col("__cnt") == k).drop("__cnt")
-            .localCheckpoint(eager=True))
-    tot = kept.agg(F.count(F.lit(1)).alias("cells"),
-                   F.avg("__x").alias("m"),
-                   F.countDistinct("__it").alias("n")).first()
-    n = int(tot["n"] or 0)
-    dropped = total_items - n if k > 0 else 0
-    null_row = (
-        f"SELECT CAST({n} AS BIGINT) AS n_items, "
-        f"CAST({k} AS BIGINT) AS k_raters, "
-        f"CAST({dropped} AS BIGINT) AS n_dropped, "
-        "CAST(NULL AS DOUBLE) AS bms, CAST(NULL AS DOUBLE) AS jms, "
-        "CAST(NULL AS DOUBLE) AS ems, CAST(NULL AS DOUBLE) AS icc")
-    if n < 2 or k < 2:
-        return spark.sql(null_row)
-    bms, jms, ems, _wms = _icc_mean_squares(kept, n, k,
-                                            float(tot["m"]))
-    denom = bms + (k - 1) * ems + k * (jms - ems) / n
-    icc = (bms - ems) / denom if denom != 0 else None
-
-    def _d(x):
-        return ("CAST(NULL AS DOUBLE)" if x is None
-                else f"round(CAST({x!r} AS DOUBLE), 6)")
-
-    return spark.sql(
-        f"SELECT CAST({n} AS BIGINT) AS n_items, "
-        f"CAST({k} AS BIGINT) AS k_raters, "
-        f"CAST({dropped} AS BIGINT) AS n_dropped, "
-        f"{_d(bms)} AS bms, {_d(jms)} AS jms, {_d(ems)} AS ems, "
-        f"{_d(icc)} AS icc")
+    return _icc_form(df, item_col, rater_col, score_col, form="2,1")
 
 
 def _icc_mean_squares(kept: DataFrame, n: int, k: int,
@@ -1421,10 +1367,10 @@ def icc_all_forms(df: DataFrame, item_col: str, rater_col: str,
 
 def _icc_form(df: DataFrame, item_col: str, rater_col: str,
               score_col: str, form: str) -> DataFrame:
-    """Shared grid construction + dispatch for ICC(1,1)/ICC(3,1)/all
-    (:func:`icc_2_1` keeps its original three-mean-square output
-    contract; the single-form wrappers report the pair of mean squares
-    their formula actually uses)."""
+    """The one ICC plan behind ICC(1,1)/(2,1)/(3,1)/all: the complete-case
+    grid, its ANOVA partials and one output row.  Each single form
+    reports the mean squares its formula uses (ICC(2,1) all three of
+    BMS/JMS/EMS); ``all`` reports the three ICCs."""
     from pyspark.sql import Window
 
     spark = df.sparkSession
@@ -1434,8 +1380,15 @@ def _icc_form(df: DataFrame, item_col: str, rater_col: str,
              .groupBy(F.col(item_col).alias("__it"),
                       F.col(rater_col).alias("__r"))
              .agg(F.avg(F.col(score_col).cast("double")).alias("__x"))
-             # see icc_2_1: one materialization, three consumers
+             # item x rater-bounded; the k/item-count aggregate and the
+             # completeness window BOTH consume it — unmaterialized,
+             # each action re-ran the input scan + union + cell
+             # aggregate (round 14: 3 input scans -> 1)
              .localCheckpoint(eager=True))
+    # duplicates per (item, rater) collapse to their mean, so the
+    # completeness window-count below counts RATERS, not rows; the
+    # total distinct-item count rides the same action (it only feeds
+    # n_dropped, and saves the third scan a standalone count paid)
     card = cells.agg(F.countDistinct("__r").alias("k"),
                      F.countDistinct("__it").alias("it")).first()
     k = int(card["k"] or 0)
@@ -1452,17 +1405,12 @@ def _icc_form(df: DataFrame, item_col: str, rater_col: str,
     head = (f"SELECT CAST({n} AS BIGINT) AS n_items, "
             f"CAST({k} AS BIGINT) AS k_raters, "
             f"CAST({dropped} AS BIGINT) AS n_dropped, ")
-    if form == "all":
-        null_tail = ("CAST(NULL AS DOUBLE) AS icc11, "
-                     "CAST(NULL AS DOUBLE) AS icc21, "
-                     "CAST(NULL AS DOUBLE) AS icc31")
-    else:
-        ms_name = "wms" if form == "1,1" else "ems"
-        null_tail = (f"CAST(NULL AS DOUBLE) AS bms, "
-                     f"CAST(NULL AS DOUBLE) AS {ms_name}, "
-                     "CAST(NULL AS DOUBLE) AS icc")
+    cols = {"1,1": ("bms", "wms", "icc"), "2,1": ("bms", "jms", "ems", "icc"),
+            "3,1": ("bms", "ems", "icc"),
+            "all": ("icc11", "icc21", "icc31")}[form]
     if n < 2 or k < 2:
-        return spark.sql(head + null_tail)
+        return spark.sql(head + ", ".join(
+            f"CAST(NULL AS DOUBLE) AS {c}" for c in cols))
     bms, jms, ems, wms = _icc_mean_squares(kept, n, k,
                                            float(tot["m"]))
 
@@ -1473,20 +1421,14 @@ def _icc_form(df: DataFrame, item_col: str, rater_col: str,
         return ("CAST(NULL AS DOUBLE)" if x is None
                 else f"round(CAST({x!r} AS DOUBLE), 6)")
 
-    if form == "all":
-        icc11 = _ratio(bms - wms, bms + (k - 1) * wms)
-        icc21 = _ratio(bms - ems,
-                       bms + (k - 1) * ems + k * (jms - ems) / n)
-        icc31 = _ratio(bms - ems, bms + (k - 1) * ems)
-        return spark.sql(
-            head + f"{_d(icc11)} AS icc11, {_d(icc21)} AS icc21, "
-            f"{_d(icc31)} AS icc31")
-    ms = wms if form == "1,1" else ems
-    icc = _ratio(bms - ms, bms + (k - 1) * ms)
-    return spark.sql(
-        head + f"{_d(bms)} AS bms, {_d(ms)} AS {ms_name}, "
-        f"{_d(icc)} AS icc")
-
+    icc = {"1,1": _ratio(bms - wms, bms + (k - 1) * wms),
+           "2,1": _ratio(bms - ems,
+                         bms + (k - 1) * ems + k * (jms - ems) / n),
+           "3,1": _ratio(bms - ems, bms + (k - 1) * ems)}
+    vals = {"bms": bms, "jms": jms, "ems": ems, "wms": wms,
+            "icc": icc.get(form), "icc11": icc["1,1"],
+            "icc21": icc["2,1"], "icc31": icc["3,1"]}
+    return spark.sql(head + ", ".join(f"{_d(vals[c])} AS {c}" for c in cols))
 
 
 def _multi_cumsum(counts: DataFrame) -> DataFrame:

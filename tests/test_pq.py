@@ -296,3 +296,62 @@ def test_opq_reconstruction_not_worse_and_search_exact(spark):
     gs = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in got)
     ws = sorted((r.query_id, r.vec_id, round(r.cos_sim, 6)) for r in want)
     assert gs == ws
+
+
+# ------------------------------------------------------ vector kernel
+
+def test_ivf_build_zero_vector_initial_centroid_is_not_nan(spark):
+    """A zero vector picked as an initial centroid stays a zero row, so
+    it neither leaves a NaN centroid nor pulls every row into one cell
+    (a NaN column wins every argmax)."""
+    from tap_airbyte_wrapper_spark.functions import ivf_build
+
+    n, k, seed = 200, 4, 42
+    # the training sample is hash-ordered; k-means init picks positions
+    order = [r.id for r in spark.range(n).select(
+        "id", F.xxhash64("id", F.lit(seed)).alias("h")).orderBy("h")
+        .collect()]
+    picked = np.random.RandomState(seed).choice(n, size=k, replace=False)
+    mat = np.random.RandomState(47).normal(size=(n, 8))
+    mat[order[picked[0]]] = 0.0
+    index = ivf_build(_vec_df(spark, mat), n_clusters=k, seed=seed)
+    assert np.isfinite(index.centroids).all()
+    cells = index.assigned.select("__cell").distinct().count()
+    assert cells > 1
+
+
+def test_pq_encode_equals_ivfpq_encode_without_residual(spark):
+    from tap_airbyte_wrapper_spark.functions import ivf_build, ivfpq_encode
+
+    df = _vec_df(spark, _clusters(n_per=16))
+    index = ivf_build(df, n_clusters=4, train_sample=1000)
+    model = pq_train(df, m=4, ks=4, train_sample=1000)
+    flat = {r.vec_id: list(r.pq_code)
+            for r in pq_encode(df, model).collect()}
+    coarse = {r.vec_id: list(r.pq_code)
+              for r in ivfpq_encode(index, model).collect()}
+    assert flat == coarse and len(flat) == 64
+
+
+def test_similarity_norms_only_in_kernel_and_scoring_sites():
+    """``np.linalg.norm`` in similarity.py lives in the kernel helpers
+    and in the cosine-returning scoring sites ``_unit_rows`` names —
+    every other path normalizes through ``_unit_rows``."""
+    import ast
+    import inspect
+    import re
+
+    from tap_airbyte_wrapper_spark.functions import similarity
+
+    scoring = set(re.findall(r":func:`(\w+)`", similarity._unit_rows.__doc__))
+    assert scoring == {"cosine_pairs", "_cosine_score_queries",
+                       "embedding_near_dup_pairs"}
+    allowed = {"_unit_rows", "_renormalize"} | scoring
+    tree = ast.parse(inspect.getsource(similarity))
+    users = set()
+    for fn in tree.body:
+        for node in ast.walk(fn):
+            if (isinstance(node, ast.Attribute) and node.attr == "norm"
+                    and ast.unparse(node.value) == "np.linalg"):
+                users.add(getattr(fn, "name", "<module>"))
+    assert users and users <= allowed, users - allowed

@@ -191,6 +191,26 @@ def test_foreign_key_expectation(spark, sf_dir):
     assert by["o_orderkey:not_null"]["passed"]
 
 
+def test_foreign_key_only_rules_one_row_per_rule(spark):
+    # FK-only gates union the anti-join frames alone (no seed frame)
+    child = spark.createDataFrame(
+        [(1, 10, "x"), (2, 11, "y"), (3, 12, "z"), (4, None, "w")],
+        "id long, fk long, tag string")
+    ref = spark.createDataFrame([(10, "x"), (11, "q")], "k long, t string")
+    got = validate_expectations(child, [
+        Expectation("fk", "foreign_key", ref=ref, ref_col="k"),
+        Expectation("tag", "foreign_key", ref=ref, ref_col="t")])
+    assert [(f.name, f.dataType.simpleString()) for f in got.schema] == [
+        ("expectation", "string"), ("column", "string"),
+        ("kind", "string"), ("n_violations", "bigint"),
+        ("passed", "boolean")]
+    rows = sorted(tuple(r) for r in got.collect())
+    # fk 12 is missing (null passes); tags y/z/w are missing
+    assert rows == [
+        ("fk:foreign_key", "fk", "foreign_key", 1, False),
+        ("tag:foreign_key", "tag", "foreign_key", 3, False)]
+
+
 def test_foreign_key_expectation_requires_ref(spark, sf_dir):
     from tap_airbyte_wrapper_spark.operators import (
         Expectation, validate_expectations)
